@@ -21,6 +21,7 @@ from __future__ import annotations
 
 import json
 import os
+import uuid
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -101,6 +102,10 @@ def append_manifest(rows: DataFrame, out_dir: str) -> None:
 
 
 def write_stats_json(out_dir: str, stats: dict) -> None:
+    """Write stats.json with a fresh ``version`` (also set in ``stats``):
+    every commit writes it here, so a plan cached on the version never
+    outlives the files it lists, even when the other stats are unchanged."""
+    stats["version"] = uuid.uuid4().hex
     with open(os.path.join(out_dir, "stats.json"), "w") as f:
         json.dump(stats, f, indent=2, sort_keys=True)
 

@@ -340,7 +340,8 @@ def build_index(
       out_dir/term_df/     global term dictionary (term, df)
       out_dir/postings/    block rows (BLOCKS_SCHEMA) — parquet by shard
       out_dir/_manifest/   per-shard lineage + metrics (checkpoint.py)
-      out_dir/stats.json   n_docs, avgdl, config echo
+      out_dir/stats.json   n_docs, avgdl, config echo, and ``version``:
+                           a fresh id per commit (plan-cache key)
 
     Returns the stats dict.
     """

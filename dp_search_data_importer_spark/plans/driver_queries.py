@@ -16,6 +16,7 @@ The flagship is ``bm25_topk`` — the end-to-end slice from SURVEY.md §7 step 1
 
 from __future__ import annotations
 
+import functools
 from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession
@@ -26,6 +27,7 @@ from dp_search_data_importer_spark.config import EngineConfig
 from dp_search_data_importer_spark.functions.tokenize import tokenize_expr
 from dp_search_data_importer_spark.operators import bm25 as bm25_ops
 from dp_search_data_importer_spark.operators import postings as postings_ops
+from dp_search_data_importer_spark.session import cached_plan
 from dp_search_data_importer_spark.sources.tables import load_table
 
 CFG = EngineConfig()
@@ -562,55 +564,15 @@ QUERIES = rotated(QUERIES)
 ORACLES = {k: ORACLES[k] for k in QUERIES if k in ORACLES}
 
 
-# ---------------------------------------------------------------------------
-# analyzed-plan memo for repeated identical requests
-#
-# Each PySpark DataFrame operation is an eager py4j round-trip plus a
-# Catalyst analysis pass, so CONSTRUCTING a contract frame costs 0.1-0.3 s
-# of single-threaded driver time (measured with tools/explain_headline.py:
-# build_min vs count_min) — paid again on every repeat of the same request.
-# A real engine compiles a repeated query once (prepared statements, ES
-# query caching); the twin of that here is memoizing the constructed
-# DataFrame per (application, sf_dir, query): a DataFrame is an immutable
-# analyzed PLAN — executing it always recomputes from the parquet inputs,
-# nothing materialized is reused (same defense as the ``local_df`` /
-# ``load_table`` plan memos in session.py / plans/query.py).
-#
-# Opt-in allowlist, not blanket: a construction that runs driver-side
-# collects (bm25_topk_page2's page-1 cursor, pack_sequences' bucket
-# boundaries, bpe_tokenize's merge table) embeds collected DATA in the
-# plan, and memoizing it would reuse those values instead of recomputing
-# them — exactly the result-caching this bench forbids. The allowlist is
-# the audited set whose construction triggers zero data-dependent Spark
-# jobs (verified with SparkStatusTracker job-group counts; table-schema
-# footer reads are schema-only and already memoized by load_table).
-_PLAN_MEMO_SAFE = frozenset({
-    "doc_term_freqs", "term_df", "bm25_topk", "ingest_normalize",
-    "pricing_summary", "revenue_by_nation", "top_orders_per_cust",
-    "events_hourly", "phrase_search", "language_id", "bool_search",
-    "span_near_search", "percolate_matches", "multi_index_dfs",
-})
-_PLAN_MEMO: dict[tuple, DataFrame] = {}
-
-
-def _plan_memoized(name: str, fn):
+def _cached(name: str, fn):
+    """``fn`` with its plan cached by ``session.cached_plan`` on
+    (sf_dir, name)."""
+    @functools.wraps(fn)
     def wrapped(spark: SparkSession, sf_dir: str) -> DataFrame:
-        try:
-            app_id = spark.sparkContext.applicationId
-        except Exception:
-            return fn(spark, sf_dir)
-        key = (app_id, sf_dir, name)
-        hit = _PLAN_MEMO.get(key)
-        if hit is None:
-            if len(_PLAN_MEMO) > 512:
-                _PLAN_MEMO.clear()
-            hit = _PLAN_MEMO[key] = fn(spark, sf_dir)
-        return hit
+        return cached_plan(spark, ("driver_query", sf_dir, name),
+                           lambda: fn(spark, sf_dir))
 
-    wrapped.__name__ = getattr(fn, "__name__", name)
-    wrapped.__doc__ = fn.__doc__
     return wrapped
 
 
-QUERIES = {k: (_plan_memoized(k, fn) if k in _PLAN_MEMO_SAFE else fn)
-           for k, fn in QUERIES.items()}
+QUERIES = {k: _cached(k, fn) for k, fn in QUERIES.items()}

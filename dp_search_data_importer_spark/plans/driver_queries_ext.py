@@ -2474,9 +2474,12 @@ def q_termvectors_export(spark: SparkSession, sf_dir: str) -> DataFrame:
     """ES ``_termvectors`` twin: per-doc term vectors (tf + 0-based
     positions) for five docs, with the ``term_statistics`` corpus df/ttf
     joined from the memoized frames (one broadcast). Oracle replays the
-    positional tokenization and the stats join."""
-    return _dsl_planner(spark, sf_dir).termvectors(
+    positional tokenization and the stats join. Positions are joined into
+    one ``,``-separated string, ascending, so every row is hashable."""
+    tv = _dsl_planner(spark, sf_dir).termvectors(
         doc_ids=[1, 2, 3, 4, 5], term_statistics=True)
+    return tv.withColumn("positions", F.array_join(
+        F.col("positions").cast("array<string>"), ","))
 
 
 SPAN_UNORD_BODY = {"query": {"span_near": {
@@ -3616,7 +3619,8 @@ EXT_ORACLES = {
         WITH {_SPAN_CORPUS_SQL},
         tv AS (
           SELECT doc_id, term, count(*)::BIGINT AS tf,
-                 list((p - 1)::INT ORDER BY p) AS positions
+                 array_to_string(list((p - 1)::INT ORDER BY p), ',')
+                   AS positions
           FROM tok2 WHERE doc_id IN (1, 2, 3, 4, 5)
           GROUP BY doc_id, term
         ),

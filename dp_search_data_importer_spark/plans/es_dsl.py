@@ -3499,12 +3499,22 @@ def _qs_indexed_bool(spec: dict) -> dict:
     return out
 
 
-def _bool_term_spec(spec: dict, has_filter: bool):
+def _index_tokens(out_dir: str, text) -> list[str]:
+    """The distinct tokens of ``text`` under the stored index's analyzer
+    (stats.json ``code_aware``), sorted."""
+    from dp_search_data_importer_spark.checkpoint import read_stats_json
+    from dp_search_data_importer_spark.plans import query as q
+
+    code_aware = read_stats_json(out_dir).get("code_aware", False)
+    return [t for _, t in q._query_term_pairs([(0, str(text))], code_aware)]
+
+
+def _bool_term_spec(spec: dict, has_filter: bool, out_dir: str):
     """bool body with TERM-level scoring clauses → BoolSpec. Each
     must/should entry must be a ``term`` query on the indexed text field
     or a single-token ``match`` (an ES match clause with several tokens
     is an embedded OR, which BoolSpec's per-term clauses cannot
-    express)."""
+    express). Clause text goes through the index's analyzer."""
     from dp_search_data_importer_spark.operators.bm25 import BoolSpec
 
     def one_term(node):
@@ -3516,7 +3526,7 @@ def _bool_term_spec(spec: dict, has_filter: bool):
             if isinstance(v, dict):
                 boost = float(v.get("boost", boost))
                 v = v.get("value", v.get("query"))
-            toks = [t for t in str(v).lower().split() if t]
+            toks = _index_tokens(out_dir, v)
             if len(toks) != 1:
                 raise EsDslError(
                     "stored-index bool needs single-token clauses, got "
@@ -3663,8 +3673,7 @@ def search_indexed(spark: SparkSession, out_dir: str, body: dict,
                 raise EsDslError("search_after with match operator/"
                                  "minimum_should_match is unsupported "
                                  "on the stored path")
-            toks = sorted({t for t in str(mp.get("query", _mv))
-                           .lower().split() if t})
+            toks = _index_tokens(out_dir, mp.get("query", _mv))
             if mop == "and":
                 bs = BoolSpec(0, must=[(t, 1.0) for t in toks])
             else:
@@ -3778,7 +3787,8 @@ def search_indexed(spark: SparkSession, out_dir: str, body: dict,
             else:
                 hits = q.exact_topk(spark, out_dir, mq, cfg, k=size)
         else:
-            bs = _bool_term_spec(spec, has_filter=pred is not None)
+            bs = _bool_term_spec(spec, has_filter=pred is not None,
+                                 out_dir=out_dir)
             hits = q.bool_topk_indexed(spark, out_dir, [bs], cfg, k=size,
                                        doc_filter=pred)
     else:

@@ -36,6 +36,8 @@ from dp_search_data_importer_spark.plans.build_index import (
     BLOCKS_SCHEMA,
     TERM_DF_SCHEMA,
 )
+from dp_search_data_importer_spark.session import cached_plan
+from dp_search_data_importer_spark.sources.tables import footer_schema
 
 # a query batch: (query_id, query_text) rows, as a frame or held on the
 # driver (the stored paths tokenize on the driver either way)
@@ -77,19 +79,12 @@ def load_docs(spark: SparkSession, out_dir: str) -> DataFrame:
     its Spark schema — read on the driver, not by a schema-inference
     job — plus the ``shard`` partition column."""
     import glob
-    import json
-
-    import pyarrow.parquet as pq
-    from pyspark.sql.types import StructType
 
     path = os.path.join(out_dir, "docs")
-    files = glob.glob(os.path.join(path, "shard=*", "*.parquet"))
-    if not files:
+    if not glob.glob(os.path.join(path, "shard=*", "*.parquet")):
         return spark.read.parquet(path)
-    meta = pq.read_metadata(files[0]).metadata
-    schema = StructType.fromJson(json.loads(
-        meta[b"org.apache.spark.sql.parquet.row.metadata"]))
-    return spark.read.schema(schema.add("shard", "integer")).parquet(path)
+    return spark.read.schema(footer_schema(path).add("shard", "integer")) \
+        .parquet(path)
 
 
 def decompress_blocks(blocks: DataFrame,
@@ -196,18 +191,6 @@ def _indexed_scores(spark: SparkSession, out_dir: str,
                        pairs, load_term_df(spark, out_dir, terms), stats, cfg)
 
 
-# analyzed-plan memo for repeated identical exact-path requests (same
-# defense as the driver_queries plan memo: a DataFrame is an immutable
-# analyzed plan; executing it recomputes from the index parquet). The key
-# pins the INDEX VERSION via stats.json identity — every index commit
-# (build, upsert, delete) swaps stats.json last, so a mutated index always
-# misses and re-plans against the new file set; the memo is also checked
-# only after read_stats_json's crash-recovery roll-forward. wand_topk is
-# deliberately NOT memoized: its construction collects term_df rows
-# (corpus-derived idf values), which a memo would pin instead of recompute.
-_EXACT_PLAN_MEMO: dict[tuple, DataFrame] = {}
-
-
 def exact_topk(spark: SparkSession, out_dir: str, queries: Queries,
                cfg: EngineConfig | None = None, k: int | None = None,
                after: dict[int, tuple[float, int]] | None = None) -> DataFrame:
@@ -215,28 +198,22 @@ def exact_topk(spark: SparkSession, out_dir: str, queries: Queries,
     index's recorded analyzer (stats.json code_aware) — analyzer symmetry.
     ``after`` paginates (ES ``search_after`` twin — see
     ``operators.bm25.topk``): the cursor predicate applies before the
-    window, so page n never re-materializes pages 1..n−1."""
+    window, so page n never re-materializes pages 1..n−1. The plan is
+    cached on the index ``version``; an index without one is not cached."""
     cfg = cfg or EngineConfig()
+    k = k or cfg.k
     stats = read_stats_json(out_dir)
-    try:
-        st = os.stat(os.path.join(out_dir, "stats.json"))
-        key = (spark.sparkContext.applicationId, out_dir,
-               st.st_mtime_ns, st.st_size,
-               queries.semanticHash() if isinstance(queries, DataFrame)
-               else repr(queries),
-               repr(cfg), k, repr(sorted((after or {}).items())))
-    except Exception:
-        key = None
-    if key is not None and key in _EXACT_PLAN_MEMO:
-        return _EXACT_PLAN_MEMO[key]
     pairs = _query_term_pairs(queries, stats.get("code_aware", False))
-    out = topk(_indexed_scores(spark, out_dir, pairs, stats, cfg),
-               k or cfg.k, after=after)
-    if key is not None:
-        if len(_EXACT_PLAN_MEMO) > 512:
-            _EXACT_PLAN_MEMO.clear()
-        _EXACT_PLAN_MEMO[key] = out
-    return out
+
+    def build():
+        return topk(_indexed_scores(spark, out_dir, pairs, stats, cfg), k,
+                    after=after)
+
+    if "version" not in stats:
+        return build()
+    return cached_plan(spark, ("exact_topk", out_dir, stats["version"],
+                               tuple(pairs), repr(cfg), k,
+                               repr(sorted((after or {}).items()))), build)
 
 
 def wand_topk(spark: SparkSession, out_dir: str, queries: Queries,

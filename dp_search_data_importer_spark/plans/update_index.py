@@ -59,6 +59,7 @@ from dp_search_data_importer_spark.checkpoint import (
     MANIFEST_SCHEMA,
     manifest_rows,
     read_stats_json,
+    write_stats_json,
 )
 from dp_search_data_importer_spark.operators.ingest import normalize_repo_files
 from dp_search_data_importer_spark.plans.build_index import (
@@ -298,8 +299,7 @@ def _stage_stats(out_dir: str, stats: dict, shard_counts: dict[int, int],
     new_stats = {**stats, "n_docs": n_docs, "sum_dl": sum_dl,
                  "avgdl": float(sum_dl / n_docs) if n_docs else 0.0,
                  "shard_docs": shard_docs}
-    with open(os.path.join(_stage_dir(out_dir), "stats.json"), "w") as f:
-        json.dump(new_stats, f, indent=2, sort_keys=True)
+    write_stats_json(_stage_dir(out_dir), new_stats)
     return new_stats
 
 

@@ -8,8 +8,10 @@ with these conf keys supplied externally.
 from __future__ import annotations
 
 import os
+import threading
+from collections import OrderedDict
 
-from pyspark.sql import SparkSession
+from pyspark.sql import DataFrame, SparkSession
 
 
 def _default_driver_memory() -> str:
@@ -92,7 +94,47 @@ def get_spark(
     return spark
 
 
-_LOCAL_DF_CACHE: dict[tuple, object] = {}
+_PLAN_CACHE: OrderedDict[tuple, DataFrame] = OrderedDict()
+_PLAN_CACHE_SIZE = 512
+_PLAN_CACHE_LOCK = threading.Lock()
+
+
+def cached_plan(spark: SparkSession, key: tuple, build) -> DataFrame:
+    """The driver's one plan cache: ``build()`` once per (application,
+    ``key``), LRU past 512 plans. A cached plan skips construction, not
+    execution, so ``key`` names the inputs: an index ``version``, a path.
+    A plan is admitted only if its build ran no Spark job in the caller's
+    job group (collected values — a page cursor, bucket boundaries, idf
+    rows — would be pinned, not recomputed) and it reads nothing persisted.
+    Any other plan is returned uncached."""
+    sc = spark.sparkContext
+    key = (sc.applicationId, *key)
+    with _PLAN_CACHE_LOCK:
+        plan = _PLAN_CACHE.get(key)
+        if plan is not None:
+            _PLAN_CACHE.move_to_end(key)
+            return plan
+    group = sc.getLocalProperty("spark.jobGroup.id")
+    before = _group_jobs(sc, group)
+    plan = build()
+    if _group_jobs(sc, group) != before or (
+            not spark._jsparkSession.sharedState().cacheManager().isEmpty()
+            and "InMemoryRelation" in
+            plan._jdf.queryExecution().withCachedData().toString()):
+        return plan
+    with _PLAN_CACHE_LOCK:
+        _PLAN_CACHE[key] = plan
+        if len(_PLAN_CACHE) > _PLAN_CACHE_SIZE:
+            _PLAN_CACHE.popitem(last=False)
+    return plan
+
+
+def _group_jobs(sc, group: str | None) -> tuple:
+    """(count, first, last) of the sorted job ids in ``group``: a new job
+    changes an end, and py4j reads an array one round trip per element."""
+    ids = sc._jsc.statusTracker().getJobIdsForGroup(group)
+    n = len(ids)
+    return (n, ids[0], ids[n - 1]) if n else (0,)
 
 
 def local_df(spark: SparkSession, rows: list[tuple], schema: str):
@@ -103,31 +145,15 @@ def local_df(spark: SparkSession, rows: list[tuple], schema: str):
     per slice (measured ~20 s of pure worker boot on local[32] right after a
     heavy job). The pandas route converts once through Arrow into a JVM
     ``LocalTableScan``: no Python at execution time, one partition.
-
-    The constructed frame is memoized per (session, schema, rows): these
-    are immutable literal PLANS (a LocalTableScan is its data), and query
-    paths rebuild the same few literal tables (query sets, cursors)
-    on every call — the pandas→Arrow→py4j conversion was ~0.1 s of driver
-    time per build (guide §1.2 step 2). Bounded: distinct literal tables
-    per process are a handful; keys use ``repr`` so list-valued cells
-    hash fine.
+    The frame is cached by :func:`cached_plan` on (schema, rows).
     """
     import pandas as pd
     from pyspark.sql.types import _parse_datatype_string
 
-    try:
-        app_id = spark.sparkContext.applicationId
-    except Exception:
-        app_id = None
-    key = (app_id, schema, repr(rows)) if app_id else None
-    if key is not None and key in _LOCAL_DF_CACHE:
-        return _LOCAL_DF_CACHE[key]
-    st = _parse_datatype_string(schema)
-    names = [f.name for f in st.fields]
-    pdf = pd.DataFrame.from_records(list(rows), columns=names)
-    out = spark.createDataFrame(pdf, schema=st)
-    if key is not None:
-        if len(_LOCAL_DF_CACHE) > 256:
-            _LOCAL_DF_CACHE.clear()
-        _LOCAL_DF_CACHE[key] = out
-    return out
+    def build():
+        st = _parse_datatype_string(schema)
+        names = [f.name for f in st.fields]
+        pdf = pd.DataFrame.from_records(list(rows), columns=names)
+        return spark.createDataFrame(pdf, schema=st)
+
+    return cached_plan(spark, ("local_df", schema, repr(rows)), build)

@@ -9,9 +9,13 @@ is a drop-in when the runtime jar is present (SURVEY.md §7 hard part c).
 
 from __future__ import annotations
 
+import json
 import os
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.types import StructType
+
+from dp_search_data_importer_spark.session import cached_plan
 
 TABLES = (
     "region", "nation", "customer", "supplier", "part",
@@ -21,31 +25,30 @@ TABLES = (
 DEFAULT_SF_DIR = "/root/testdata/sf0.001"
 
 
-_TABLE_CACHE: dict[tuple, DataFrame] = {}
-
-
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     """Load one testdata table. Column pruning + predicate pushdown reach the
     parquet scan because this returns the raw declarative reader result.
-
-    The reader PLAN is memoized per (session, path): every call otherwise
-    re-reads the footer for schema inference and re-lists the directory
-    (~0.05–0.1 s of driver time per table per query). The testdata dirs
-    are immutable for a session's lifetime; engine-written artifacts
-    (index dirs) do NOT go through this loader."""
+    The reader plan is cached by ``session.cached_plan`` on its path."""
     path = os.path.join(sf_dir, f"{name}.parquet")
-    try:
-        key = (spark.sparkContext.applicationId, path)
-    except Exception:
-        key = None
-    if key is not None and key in _TABLE_CACHE:
-        return _TABLE_CACHE[key]
-    df = spark.read.parquet(path)
-    if key is not None:
-        if len(_TABLE_CACHE) > 256:
-            _TABLE_CACHE.clear()
-        _TABLE_CACHE[key] = df
-    return df
+    return cached_plan(spark, ("load_table", path),
+                       lambda: spark.read.schema(footer_schema(path))
+                       .parquet(path))
+
+
+def footer_schema(path: str) -> StructType:
+    """The schema Spark infers for a parquet table, read from one footer on
+    the driver (Spark's inference runs a job, and a plan whose build runs a
+    job is not cached): the stored Spark schema, else the Parquet schema
+    with zoneless timestamps as ``timestamp_ntz``, as Spark reads them."""
+    import pyarrow.dataset as pads
+    from pyspark.sql.pandas.types import from_arrow_schema
+
+    schema = pads.dataset(path, format="parquet").schema
+    stored = (schema.metadata or {}).get(
+        b"org.apache.spark.sql.parquet.row.metadata")
+    if stored:
+        return StructType.fromJson(json.loads(stored))
+    return from_arrow_schema(schema, prefer_timestamp_ntz=True)
 
 
 def load_documents(spark: SparkSession, sf_dir: str = DEFAULT_SF_DIR) -> DataFrame:

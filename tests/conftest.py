@@ -12,7 +12,7 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 def spark():
     from dp_search_data_importer_spark.session import get_spark
 
-    s = get_spark(master="local[8]", app_name="tests", shuffle_partitions=8)
+    s = get_spark(app_name="tests")
     yield s
 
 

@@ -2395,3 +2395,41 @@ def test_collapse_without_inner_hits_returns_none(planner):
     res2 = planner.search({"query": {"match": {"text": "hash"}},
                            "size": 5})
     assert res2.inner_hits is None
+
+
+def test_indexed_clauses_use_index_analyzer(spark, planner, tmp_path):
+    """Stored match operator=and and stored bool clauses tokenize with the
+    index's analyzer: case and punctuation fold away as they did when the
+    docs were indexed, so the hits equal the dataflow planner's."""
+    from dp_search_data_importer_spark.config import EngineConfig
+    from dp_search_data_importer_spark.plans.build_index import build_index
+
+    docs = planner.docs.filter(F.col("doc_id") < 60).withColumn(
+        "text", F.when(F.col("doc_id") % 3 == 0, F.concat(
+            F.lit("import os\ndef main(): "), F.col("text")))
+        .otherwise(F.col("text")))
+    out = str(tmp_path / "idx")
+    build_index(spark, docs, out, EngineConfig(n_shards=2, block_size=64),
+                code_aware=False, text_col="text", already_normalized=True,
+                waves=1)
+    scan = EsSearchPlanner(spark, docs)
+
+    def match_and(text):
+        return {"query": {"match": {"text": {
+            "query": text, "operator": "and"}}}, "size": 10}
+
+    exp = _ranked(scan.search(match_and("import def")).hits)
+    assert exp
+    for text in ("Import DEF!", "import, def"):
+        assert _ranked(_indexed(spark, out, match_and(text)).hits) == exp, \
+            text
+
+    def bool_body(must, should):
+        return {"query": {"bool": {"must": [{"match": {"text": must}}],
+                                   "should": [{"term": {"text": should}}]}},
+                "size": 10}
+
+    clean = _ranked(_indexed(spark, out, bool_body("def", "main")).hits)
+    assert clean
+    assert _ranked(_indexed(spark, out, bool_body("DEF!", "Main,")).hits) \
+        == clean

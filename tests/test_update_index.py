@@ -942,11 +942,13 @@ def test_update_by_query_script_and_guards(spark, updatable_index):
 
 
 def test_exact_plan_memo_invalidated_by_upsert(spark, tmp_path):
-    """The exact-path analyzed-plan memo serves the SAME immutable plan for
+    """The plan cache serves the SAME immutable exact-path plan for
     repeated identical requests against an unchanged index, and keys out as
-    soon as the index version changes (stats.json is the last artifact
-    every commit swaps) — post-upsert results must reflect the new corpus,
-    never a stale file listing."""
+    soon as the index version changes (every commit writes stats.json with
+    a fresh version) — post-upsert results must reflect the new corpus,
+    never a stale file listing. That holds for a commit that leaves every
+    count, and so stats.json's size, unchanged, and with its old mtime
+    restored."""
     from dp_search_data_importer_spark.session import local_df
 
     idx = str(tmp_path / "idx")
@@ -968,6 +970,18 @@ def test_exact_plan_memo_invalidated_by_upsert(spark, tmp_path):
     # different k / different query set never share an entry
     d = q.exact_topk(spark, idx, queries, CFG, 5)
     assert d is not c
+    # replace a doc with content of the same length: n_docs and Σdl hold
+    stats_path = os.path.join(idx, "stats.json")
+    old = os.stat(stats_path)
+    words = base[0][4].split()
+    same_len = [(*base[0][:4], " ".join(["zebra", *words[1:]]))]
+    upsert_docs(spark, idx, spark.createDataFrame(same_len, SCHEMA))
+    assert os.stat(stats_path).st_size == old.st_size
+    os.utime(stats_path, ns=(old.st_atime_ns, old.st_mtime_ns))
+    e = q.exact_topk(spark, idx, queries, CFG, 10)
+    assert e is not c
+    hits = e.collect()  # the new zebra doc plus the rewritten one
+    assert len(hits) == 2 and rows[0]["doc_id"] in {r["doc_id"] for r in hits}
 
 
 # ---------------------------------------------------------------------------
