@@ -51,20 +51,21 @@ def dedup_exact(df: DataFrame, text_col: str = "text",
     return df.join(keep.select(id_col), id_col, "left_semi")
 
 
-def _shingles(toks: Column, n: int) -> Column:
-    """Token array → distinct n-gram shingle strings, pure Catalyst:
-    transform over a sequence of start offsets + slice + concat_ws.
-    Guarded: Spark's sequence(1, 0) DESCENDS, so short docs need an explicit
-    empty-array branch, not a clamped bound."""
+def _grams(toks: Column, n: int) -> Column:
+    """Token array → its n-token windows as space-joined strings, in order:
+    the zip of n shifted slices. A lambda that slices ``toks`` would
+    evaluate the ``toks`` expression (the tokenizer) once per window.
+    Only defined when ``toks`` has at least n tokens: guard the call."""
     m = F.size(toks) - (n - 1)
+    return F.transform(
+        F.arrays_zip(*[F.slice(toks, k + 1, m) for k in range(n)]),
+        lambda g: F.concat_ws(" ", *[g[str(k)] for k in range(n)]))
+
+
+def _shingles(toks: Column, n: int) -> Column:
+    """Token array → distinct n-gram shingle strings, pure Catalyst."""
     return F.when(
-        m >= 1,
-        F.array_distinct(
-            F.transform(
-                F.sequence(F.lit(1), m),
-                lambda i: F.concat_ws(" ", F.slice(toks, i, n)),
-            )
-        ),
+        F.size(toks) >= n, F.array_distinct(_grams(toks, n)),
     ).otherwise(F.array().cast("array<string>"))
 
 
@@ -414,15 +415,12 @@ def duplicate_spans(df: DataFrame, text_col: str = "text",
     from pyspark.sql.window import Window
 
     toks = tokenize_expr(text_col)
-    m = F.size(toks) - (n - 1)
     pos_sh = F.when(
-        m >= 1,
+        F.size(toks) >= n,
         F.transform(
-            F.sequence(F.lit(1), m),
-            lambda i: F.struct(
-                (i - 1).cast("long").alias("pos"),
-                F.xxhash64(F.concat_ws(" ", F.slice(toks, i, n))).alias("sh"),
-            ),
+            _grams(toks, n),
+            lambda g, i: F.struct(i.cast("long").alias("pos"),
+                                  F.xxhash64(g).alias("sh")),
         ),
     ).otherwise(F.array().cast("array<struct<pos:long,sh:long>>"))
     shingles = (

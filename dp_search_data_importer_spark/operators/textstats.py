@@ -155,12 +155,8 @@ def langid_expr(text: Column) -> Column:
     """Round-1 fallback: best-scoring language by 10-marker hits over the
     ascii analyzer; 'und' when nothing matches."""
     toks = tokenize_expr(text)
-    score_cols = [(lang, _hits(toks, ws)) for lang, ws in LANG_MARKERS.items()]
-    m = F.greatest(*[s for _, s in score_cols])
-    out = F.lit("und")
-    for lang, s in reversed(score_cols):
-        out = F.when((s == m) & (m > 0), F.lit(lang)).otherwise(out)
-    return out
+    return _argmax_lang([(lang, _hits(toks, ws))
+                         for lang, ws in LANG_MARKERS.items()])
 
 
 def langid_expr_full(text: Column) -> Column:
@@ -176,11 +172,7 @@ def langid_expr_full(text: Column) -> Column:
         if chars:
             s = s + F.regexp_count(lowered, F.lit(f"[{chars}]"))
         score_cols.append((lang, s))
-    m = F.greatest(*[s for _, s in score_cols])
-    out = F.lit("und")
-    for lang, s in reversed(score_cols):
-        out = F.when((s == m) & (m > 0), F.lit(lang)).otherwise(out)
-    return out
+    return _argmax_lang(score_cols)
 
 
 def script_class_regex(ranges: tuple[tuple[int, int], ...]) -> str:
@@ -214,17 +206,22 @@ def _langid_v3_scores(text: Column) -> list[tuple[str, Column]]:
     return score_cols
 
 
-def _langid_argmax(score_of) -> Column:
-    """Declaration-order argmax with 'und' on zero evidence, built over
-    ``score_of(lang)`` columns. Shared by the inline-expression and the
-    two-stage forms — identical arithmetic."""
-    langs = list(LANG_PROFILES_V3)
-    m = F.greatest(*[score_of(lang) for lang in langs])
-    out = F.lit("und")
-    for lang in reversed(langs):
-        out = F.when((score_of(lang) == m) & (m > 0),
-                     F.lit(lang)).otherwise(out)
-    return out
+def _argmax_lang(score_cols: list[tuple[str, Column]]) -> Column:
+    """The first language, in declaration order, with the highest score;
+    'und' unless that score is > 0 (a null score, from null text, is 0).
+    A fold over (score, lang) pairs that takes only a strictly higher
+    score, so each score subtree appears once. A when-chain against
+    ``greatest`` repeats every score in every branch: for v3 inlined,
+    ~27k nodes that the optimizer walks on each of its passes."""
+    pairs = F.array(*[
+        F.struct(F.coalesce(s, F.lit(0)).cast("long").alias("s"),
+                 F.lit(lang).alias("lang"))
+        for lang, s in score_cols])
+    return F.aggregate(
+        pairs,
+        F.struct(F.lit(0).cast("long").alias("s"), F.lit("und").alias("lang")),
+        lambda best, x: F.when(x["s"] > best["s"], x).otherwise(best),
+        lambda best: best["lang"])
 
 
 def langid_expr_v3(text: Column) -> Column:
@@ -234,8 +231,7 @@ def langid_expr_v3(text: Column) -> Column:
     tie-break; 'und' on zero evidence. Handles CJK (zh/ja split on kana),
     Korean, Arabic vs Persian (distinctive letters), Hebrew, Cyrillic
     (ru/uk), Greek, Devanagari, Thai, and 14 Latin-script languages."""
-    scores = dict(_langid_v3_scores(text))
-    return _langid_argmax(lambda lang: scores[lang])
+    return _argmax_lang(_langid_v3_scores(text))
 
 
 # Constructed langid Columns, keyed by (profile, text column name). The
@@ -255,32 +251,10 @@ def language_id(df: DataFrame, text_col: str = "text",
     """(doc_id, lang_guess). ``profile="v3"`` (default) scores 25 languages
     incl. CJK/Arabic/Hebrew/Cyrillic/Greek/Devanagari/Thai via script +
     marker + function-word evidence; ``"full"`` is the round-2 8-language
-    Latin profile; ``"markers"`` the round-1 4×10-marker fallback.
-
-    The v3 path is TWO stacked projections — named per-language score
-    columns, then the argmax over column references — not one inline
-    expression: inlined, each score subtree and the 25-way ``greatest``
-    are duplicated into every branch of the tie-break chain (~27k
-    analyzer nodes, measured ~0.85 s of eager per-call analysis for a
-    0.17 s execution). Same arithmetic, ~20× smaller tree."""
-    if profile == "v3":
-        key = ("v3-scores", text_col)
-        if key not in _LANGID_EXPR_CACHE:
-            _LANGID_EXPR_CACHE[key] = [
-                (lang, s.alias(f"_s_{lang}"))
-                for lang, s in _langid_v3_scores(F.col(text_col))
-            ]
-            _LANGID_EXPR_CACHE[("v3-argmax", text_col)] = _langid_argmax(
-                lambda lang: F.col(f"_s_{lang}"))
-        staged = df.select(F.col(id_col).alias("doc_id"),
-                           *[c for _, c in _LANGID_EXPR_CACHE[key]])
-        return staged.select(
-            "doc_id",
-            _LANGID_EXPR_CACHE[("v3-argmax", text_col)]
-            .alias("lang_guess"))
+    Latin profile; ``"markers"`` the round-1 4×10-marker fallback."""
     key = (profile, text_col)
     if key not in _LANGID_EXPR_CACHE:
-        expr = {"full": langid_expr_full,
+        expr = {"v3": langid_expr_v3, "full": langid_expr_full,
                 "markers": langid_expr}[profile]
         _LANGID_EXPR_CACHE[key] = expr(F.col(text_col))
     return df.select(F.col(id_col).alias("doc_id"),

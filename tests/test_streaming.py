@@ -262,11 +262,13 @@ def test_dedup_stream_ttl_suppresses_within_window(spark, tmp_path):
 
     def drain():
         stream = spark.readStream.schema(EVENT_SCHEMA).json(str(src))
+        # one batch: with a processing-time timeout every batch asks for a
+        # no-data batch after it, so availableNow would never terminate
         q = (dedup_stream(stream, ttl="10 minutes")
              .writeStream.format("parquet")
              .outputMode("append")
              .option("checkpointLocation", ckpt)
-             .option("path", out_dir).trigger(availableNow=True).start())
+             .option("path", out_dir).trigger(once=True).start())
         q.awaitTermination(120)
 
     with open(src / "b1.json", "w") as f:
@@ -298,10 +300,11 @@ def test_dedup_stream_ttl_bounds_state(spark, tmp_path):
 
     def drain():
         stream = spark.readStream.schema(EVENT_SCHEMA).json(str(src))
+        # one batch, as in test_dedup_stream_ttl_suppresses_within_window
         q = (dedup_stream(stream, ttl=1000).writeStream.format("parquet")
              .outputMode("append")
              .option("checkpointLocation", ckpt)
-             .option("path", out_dir).trigger(availableNow=True).start())
+             .option("path", out_dir).trigger(once=True).start())
         q.awaitTermination(120)
 
     with open(src / "b1.json", "w") as f:
