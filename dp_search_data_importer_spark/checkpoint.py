@@ -12,9 +12,9 @@ deterministic build makes re-execution of incomplete waves idempotent —
 the same effectively-once result.
 
 Metrics mirror A9's accounting (``handler/handler.go:96-128`` counts
-documents_received / documents_inserted): per shard we record docs, postings,
-blocks, compressed bytes, plus an order-independent content fingerprint
-(bit_xor of block hashes) used by the kill-and-resume identity test.
+documents_received / documents_inserted): per shard we record docs, postings
+and distinct terms, plus an order-independent content fingerprint (bit_xor
+of postings-row hashes) used by the kill-and-resume identity test.
 """
 
 from __future__ import annotations
@@ -26,9 +26,12 @@ import uuid
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-MANIFEST_SCHEMA = ("shard int, n_docs long, n_postings long, n_blocks long, "
-                   "bytes_compressed long, content_fingerprint long, "
-                   "n_terms long")
+MANIFEST_SCHEMA = ("shard int, n_docs long, n_postings long, "
+                   "content_fingerprint long, n_terms long")
+# stats.json records the postings layout it was written with; an index
+# without this record holds an older layout and is refused, never read
+# as null columns
+POSTINGS_FORMAT = "rows"
 
 
 def manifest_path(out_dir: str) -> str:
@@ -51,25 +54,16 @@ def completed_shards(spark: SparkSession, out_dir: str) -> set[int]:
     return {r["shard"] for r in m.select("shard").distinct().collect()}
 
 
-def shard_metrics(blocks: DataFrame) -> DataFrame:
-    """Aggregate written block rows into per-shard manifest rows. Runs on the
-    *read-back* of what landed on disk, so the manifest certifies disk state,
-    not intent."""
-    # xxhash64 skips null inputs, so including poss keeps position-free
-    # indexes' fingerprints unchanged while certifying position bytes when
-    # the index is positional
-    block_hash = F.xxhash64(
-        "term", "first_doc_id", "doc_gaps", "tfs", "dls", "poss"
-    )
-    return blocks.groupBy("shard").agg(
-        F.sum("n_docs").cast("long").alias("n_postings"),
-        F.count(F.lit(1)).alias("n_blocks"),
-        (
-            F.sum(F.length("doc_gaps")) + F.sum(F.length("tfs"))
-            + F.sum(F.length("dls"))
-            + F.coalesce(F.sum(F.length("poss")), F.lit(0))
-        ).cast("long").alias("bytes_compressed"),
-        F.bit_xor(block_hash).alias("content_fingerprint"),
+def shard_metrics(rows: DataFrame) -> DataFrame:
+    """Aggregate written postings rows into per-shard manifest rows. Runs on
+    the *read-back* of what landed on disk, so the manifest certifies disk
+    state, not intent."""
+    # xxhash64 skips null inputs, so a position-free index hashes
+    # (term, doc_id, tf, dl) and a positional one certifies positions too
+    row_hash = F.xxhash64("term", "doc_id", "tf", "dl", "positions")
+    return rows.groupBy("shard").agg(
+        F.count(F.lit(1)).alias("n_postings"),
+        F.bit_xor(row_hash).alias("content_fingerprint"),
         F.count_distinct("term").alias("n_terms"),
     )
 
@@ -77,13 +71,15 @@ def shard_metrics(blocks: DataFrame) -> DataFrame:
 def manifest_rows(spark: SparkSession, postings_dir: str,
                   shard_docs: dict[int, int]) -> DataFrame:
     """Manifest rows (``MANIFEST_SCHEMA``) for the shards keyed in
-    ``shard_docs``, from a read-back of the blocks under ``postings_dir``;
-    each row's ``n_docs`` is that shard's doc count. A shard with no blocks
-    gets no row, as its build emits none. The blocks are read with their
-    known schema, so the read-back runs no schema-inference job."""
-    from dp_search_data_importer_spark.plans.build_index import BLOCKS_SCHEMA
+    ``shard_docs``, from a read-back of the postings under ``postings_dir``;
+    each row's ``n_docs`` is that shard's doc count. A shard with no
+    postings gets no row, as its build emits none. The rows are read with
+    their known schema, so the read-back runs no schema-inference job."""
+    from dp_search_data_importer_spark.plans.build_index import (
+        POSTINGS_SCHEMA,
+    )
 
-    written = spark.read.schema(BLOCKS_SCHEMA).parquet(postings_dir).filter(
+    written = spark.read.schema(POSTINGS_SCHEMA).parquet(postings_dir).filter(
         F.col("shard").isin(list(shard_docs)))
     n_docs = F.coalesce(
         *[F.when(F.col("shard") == s, F.lit(int(n)))
@@ -92,8 +88,7 @@ def manifest_rows(spark: SparkSession, postings_dir: str,
     )
     return shard_metrics(written).select(
         "shard", n_docs.cast("long").alias("n_docs"),
-        "n_postings", "n_blocks", "bytes_compressed",
-        "content_fingerprint", "n_terms",
+        "n_postings", "content_fingerprint", "n_terms",
     )
 
 
@@ -122,4 +117,9 @@ def read_stats_json(out_dir: str) -> dict:
 
     recover_for_read(out_dir)
     with open(os.path.join(out_dir, "stats.json")) as f:
-        return json.load(f)
+        stats = json.load(f)
+    if stats.get("postings_format") != POSTINGS_FORMAT:
+        raise ValueError(
+            f"index at {out_dir} holds postings in an older format; rebuild "
+            "it with build_index(..., resume=False)")
+    return stats

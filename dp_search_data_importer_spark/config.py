@@ -15,11 +15,6 @@ from dataclasses import dataclass, field
 BM25_K1 = 1.2
 BM25_B = 0.75
 
-# Posting-list block size (docs per block) for delta-gap+varint compression and
-# block-max WAND metadata. 128 is the classic block size from Ding & Suel,
-# "Faster Top-k Document Retrieval Using Block-Max Indexes" (SIGIR 2011).
-BLOCK_SIZE = 128
-
 # Code-aware stopwords: English stopwords plus keywords so common in source
 # code they carry no signal. BASELINE.json north_star calls out 'import'/'def'
 # as hot terms — they stay *indexable* (queries may ask for them); stopword
@@ -43,7 +38,6 @@ class EngineConfig:
 
     k1: float = BM25_K1
     b: float = BM25_B
-    block_size: int = BLOCK_SIZE
     # Number of doc-shards for the index. Each shard holds the full
     # term->postings map for its slice of docs (Elasticsearch-style document
     # partitioning): queries fan out to all shards, each returns a local

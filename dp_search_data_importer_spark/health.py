@@ -94,7 +94,7 @@ def index_health(spark: SparkSession, out_dir: str) -> dict:
     postings_dir = os.path.join(out_dir, "postings")
     missing = sorted(
         int(r["shard"]) for r in rows
-        if int(r["n_blocks"]) > 0
+        if int(r["n_postings"]) > 0
         and not os.path.isdir(os.path.join(postings_dir,
                                            f"shard={int(r['shard'])}"))
     )

@@ -7,8 +7,7 @@ k1=1.2, b=0.75:
     idf(t)  = ln(1 + (N - df + 0.5) / (df + 0.5))
     score   = Σ_t idf(t) · tf·(k1+1) / (tf + k1·(1 - b + b·dl/avgdl))
 
-This exact path is the engine's permanent correctness oracle (the block-max
-WAND fast path in ``operators/wand.py`` must be rank-identical to it). It is
+This exact path is the engine's one BM25 scorer, stored index included. It is
 deliberately 100% Catalyst expressions — broadcast joins + whole-stage-codegen
 arithmetic, zero Python on the data path.
 
@@ -698,7 +697,7 @@ def _cross_fields_topk(docs, field_boosts, qt, cfg, k,
     agg; candidates filter to query terms via the broadcast qt join BEFORE
     the per-doc blended-dl join, so the only docs-sized join input is the
     dl frame itself (content-free projection). At stored-index scale the
-    fielded index keeps per-field dl in blocks and this join disappears —
+    fielded index keeps per-field dl in its postings and this join disappears —
     this is the dataflow form."""
     from dp_search_data_importer_spark.functions.tokenize import (
         tokenize_code_expr,

@@ -4,9 +4,9 @@ The reference's Elasticsearch index stores term positions and answers
 phrase queries by verifying adjacency; this module is the Spark-native
 equivalent. Positions live in two layouts (``load_positions`` routes):
 
-  - IN the postings blocks (round 3, ``build_index(positions=True)``,
-    the primary): each block carries a ``poss`` varint stream decoded by
-    the same term-pruned scan BM25 uses;
+  - IN the postings rows (``build_index(positions=True)``, the primary):
+    each row carries its ``positions`` array, read by the same
+    term-pruned scan BM25 uses;
   - a ``positions/`` sidecar table (round 2, kept as the oracle twin):
     (shard, term, doc_id, positions array<int>, dl), parquet partitioned
     by shard, term filter pushed into the scan.
@@ -94,7 +94,7 @@ def doc_positions(docs: DataFrame, *, code_aware: bool = False,
                   terms: list[str] | None = None) -> DataFrame:
     """(doc_id, term, positions array<int>, dl) — sorted 0-based token
     positions per (doc, term), dl alongside so phrase scoring never joins
-    the docs table (same discipline as the postings blocks).
+    the docs table (same discipline as the postings rows).
 
     ``terms`` restricts the OUTPUT to that term set with the filter pushed
     BELOW the collect_list aggregation: phrase/span/percolate consumers
@@ -380,20 +380,14 @@ def phrase_topk(spark: SparkSession, out_dir: str,
 def load_positions(spark: SparkSession, out_dir: str,
                    terms: list[str] | None = None) -> DataFrame:
     """(doc_id, term, positions, dl) for phrase evaluation. Positional
-    indexes (stats.json ``positions: true``) decode positions straight
-    from the postings blocks (term filter pushed into the same scan the
+    indexes (stats.json ``positions: true``) read positions straight
+    from the postings rows (term filter pushed into the same scan the
     BM25 path uses — no sidecar, no duplicated keys); otherwise the
     round-2 ``positions/`` sidecar is read, kept as the oracle twin."""
     from dp_search_data_importer_spark.checkpoint import read_stats_json
 
-    stats_path = os.path.join(out_dir, "stats.json")
-    in_blocks = False
-    if os.path.exists(stats_path):
-        try:
-            in_blocks = bool(read_stats_json(out_dir).get("positions"))
-        except (OSError, ValueError):
-            in_blocks = False
-    if in_blocks:
+    if (os.path.exists(os.path.join(out_dir, "stats.json"))
+            and read_stats_json(out_dir).get("positions")):
         from dp_search_data_importer_spark.plans.query import (
             decompress_blocks,
             load_blocks,

@@ -8,37 +8,44 @@ built internally:
   repo_files ──normalize (A3-A6: key filter, doc_id, sha256)──▶ docs
     docs ──code tokenizer, map-side (term, tf, dl) [Arrow]──▶ tf pairs
       tf ──repartition(shard) + sortWithinPartitions(shard, term, doc_id)──▶
-         sorted runs ──mapInPandas block compressor (delta+varint, impacts,
-         optional positions)──▶ postings blocks, parquet dir-partitioned
-         by shard + per-shard manifest (lineage/metrics, resume)
-    postings block metadata ──per-shard partial agg──▶ term_df, Σdl
+         postings rows (term, doc_id, tf, dl[, positions]), parquet
+         dir-partitioned by shard, one term-sorted file per shard
+         + per-shard manifest (lineage/metrics, resume)
+    postings rows ──per-term count(*)/sum(tf), map-side partial──▶ term_df, Σdl
     docs ──observed partitioned write──▶ docs/, N, per-shard doc counts
 
 One dataflow: each wave tokenizes its own disjoint doc slice straight into
 the single wide shuffle, so the tf rows (the build's largest intermediate)
 never round-trip storage and no doc is tokenized twice. term_df and Σdl
-derive from the written blocks' metadata after the last wave.
+derive from the written rows after the last wave.
 :func:`write_postings` is the one postings writer — the build waves,
 ``update_index`` (upsert/delete) and ``reindex`` all go through it, and
 ``checkpoint.manifest_rows`` is the one manifest-row read-back.
+
+The postings are plain rows, not a hand-rolled codec: parquet's dictionary
+and RLE encodings compress the sorted ``term``/``tf``/``dl`` columns, and
+row-group/page min/max statistics on the term-sorted ``term`` column do the
+pruning posting blocks used to do. Every read is a JVM parquet scan with
+the query's ``term IN (...)`` pushed down — no Python decoder on any path.
 
 Scale design (the part that must survive 10^12 files / 1000 executors):
 
 - the ONLY wide shuffle over postings-sized data is the single shard
   repartition — tf pairs are already pre-aggregated map-side, so shuffle
   volume is O(distinct (doc,term)) not O(tokens);
-- sharding on hash(doc_id) is the structural skew answer for block building:
+- sharding on hash(doc_id) is the structural skew answer for the write:
   tasks are whole shards and shard sizes are uniform by construction, so a
   hot term ('import' ≈ every doc) cannot skew any task — its postings are
-  striped evenly across all shards, emitted as independent bounded blocks
-  (no collect_list anywhere; within-shard volume is bounded by corpus/n_shards
-  and n_shards scales with the cluster);
-- term_df aggregates block metadata, pre-aggregated per (shard, term): the
-  map-side partial runs per shard, so even a term in every document sends
-  at most n_shards partial rows to its reducer — no salting needed;
+  striped evenly across all shards (no collect_list anywhere; within-shard
+  volume is bounded by corpus/n_shards and n_shards scales with the
+  cluster);
+- term_df aggregates the written rows with a map-side partial agg per
+  scan split, and a split never spans shards, so even a term in every
+  document sends at most one partial row per split to its reducer — no
+  salting needed;
 - shards (doc-space hash partitions, Elasticsearch-style) give query-time
   fan-out/merge parallelism and are the unit of checkpoint/resume;
-- doc lengths are embedded in the blocks, so query-time scoring never joins
+- doc lengths are stored on every row, so query-time scoring never joins
   the docs table.
 """
 
@@ -47,15 +54,13 @@ from __future__ import annotations
 import os
 import shutil
 import time
-from collections.abc import Iterator
 from concurrent.futures import ThreadPoolExecutor
 
-import numpy as np
-import pandas as pd
 from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
 from dp_search_data_importer_spark.checkpoint import (
+    POSTINGS_FORMAT,
     append_manifest,
     completed_shards,
     manifest_rows,
@@ -67,205 +72,47 @@ from dp_search_data_importer_spark.functions.tokenize import (
     code_term_freqs,
     simple_term_freqs,
 )
-from dp_search_data_importer_spark.operators.codec import (
-    encode_blocks_batch,
-)
 from dp_search_data_importer_spark.operators.ingest import normalize_repo_files
 from dp_search_data_importer_spark.operators.postings import hot_terms
 
-BLOCKS_SCHEMA = (
-    "shard int, term string, block_id long, first_doc_id long, n_docs long, "
-    "doc_gaps binary, tfs binary, dls binary, "
-    "imp_tfs array<bigint>, imp_dls array<bigint>, poss binary, sum_tf long"
-)
+POSTINGS_SCHEMA = ("shard int, term string, doc_id long, tf long, dl long, "
+                   "positions array<int>")
 TERM_DF_SCHEMA = "term string, df long"
 
 
-def block_impacts(tfs: np.ndarray, dls: np.ndarray) -> tuple[list[int], list[int]]:
-    """Per-block IMPACTS (Lucene-style): the Pareto frontier of (tf, dl)
-    pairs — tf↑ is better, dl↓ is better, so keep, scanning dl ascending,
-    only pairs whose tf strictly exceeds every smaller-dl pair's tf. The
-    query-time upper bound is max over pairs of tf·(k1+1)/(tf+k1·(1−b+
-    b·dl/avgdl)) with the CURRENT avgdl — blocks carry no corpus statistic,
-    so incremental upserts never invalidate other shards' bounds (the
-    round-1 ``max_tf_norm`` baked the build-time avgdl into every block)."""
-    order = np.lexsort((-tfs, dls))  # dl asc, tf desc within equal dl
-    out_tf: list[int] = []
-    out_dl: list[int] = []
-    best = -1
-    for i in order:
-        t = int(tfs[i])
-        if t > best:
-            out_tf.append(t)
-            out_dl.append(int(dls[i]))
-            best = t
-    return out_tf, out_dl
-
-
-def _compress_runs(
-    batches: Iterator[pd.DataFrame], block_size: int,
-    with_positions: bool = False,
-) -> Iterator[pd.DataFrame]:
-    """Consume doc_id-sorted (shard, term, doc_id, tf, dl[, positions]) runs;
-    emit compressed blocks. Runs may span Arrow batches within a partition,
-    so a partial tail is carried over until the (shard, term) key changes.
-
-    Each block carries its impact pairs (see :func:`block_impacts`); the
-    build needs NO corpus statistics and no join against the term
-    dictionary — WAND bounds assemble at query time from (impacts, idf,
-    avgdl). With ``with_positions`` each block additionally carries a
-    ``poss`` varint stream (per-posting delta-encoded token positions,
-    lengths given by the decoded tfs — Lucene .prx-style); without it,
-    ``poss`` is null.
-    """
-    from dp_search_data_importer_spark.operators.codec import encode_positions
-
-    # carry = column arrays of a run's (< block_size) tail awaiting the
-    # next batch: (shard, term, doc_ids, tfs, dls, plists)
-    carry: tuple | None = None
-    out_cols = ("shard", "term", "block_id", "first_doc_id", "n_docs",
-                "doc_gaps", "tfs", "dls", "imp_tfs", "imp_dls", "poss",
-                "sum_tf")
-
-    def flush(shard: int, term, doc_ids, tfs, dls, plists, rows: list, *,
-              final: bool) -> int:
-        """Emit full blocks from the array slices; return the number of
-        rows consumed (a multiple of block_size unless final). All of a
-        run's blocks varint-encode in ONE vectorized pass
-        (``encode_blocks_batch``, byte-identical to per-block
-        ``encode_block`` by the codec equivalence test) — the per-block
-        numpy dispatch was ~60% of this kernel's time (guide §1.2 step 2)."""
-        n = len(doc_ids)
-        n_full_end = n if final else (n // block_size) * block_size
-        if n_full_end == 0:
-            return 0
-        starts = np.arange(0, n_full_end, block_size)
-        g_all, t_all, d_all = encode_blocks_batch(
-            doc_ids, tfs, dls, starts, n_full_end)
-        sum_tfs = np.add.reduceat(tfs[:n_full_end], starts)
-        for bi, start in enumerate(starts.tolist()):
-            end = min(start + block_size, n_full_end)
-            tfs_b, dls_b = tfs[start:end], dls[start:end]
-            imp_tf, imp_dl = block_impacts(tfs_b, dls_b)
-            if with_positions:
-                flat = (
-                    np.concatenate(
-                        [np.asarray(x, dtype=np.int64)
-                         for x in plists[start:end]])
-                    if end > start else np.empty(0, dtype=np.int64)
-                )
-                p = encode_positions(flat, tfs_b)
-            else:
-                p = None
-            rows.append(
-                (shard, term, bi, int(doc_ids[start]), end - start,
-                 g_all[bi], t_all[bi], d_all[bi], imp_tf, imp_dl, p,
-                 int(sum_tfs[bi]))
-            )
-        return n_full_end
-
-    def to_pdf(rows: list) -> pd.DataFrame:
-        return pd.DataFrame(rows, columns=out_cols)
-
-    for pdf in batches:
-        if pdf.empty and carry is None:
-            continue
-        # column arrays once per batch — the earlier per-run DataFrame
-        # slicing and a string-concat run key cost seconds per task at
-        # millions of tf rows (guide §1.2 step 2: per-task work)
-        sh = pdf["shard"].to_numpy()
-        tm = pdf["term"].to_numpy()
-        doc_ids = pdf["doc_id"].to_numpy(dtype=np.int64)
-        tfs = pdf["tf"].to_numpy(dtype=np.int64)
-        dls = pdf["dl"].to_numpy(dtype=np.int64)
-        plists = pdf["positions"].to_numpy() if with_positions else None
-        if carry is not None:
-            c_sh, c_tm, c_ids, c_tfs, c_dls, c_pl = carry
-            sh = np.concatenate((np.full(len(c_ids), c_sh), sh))
-            tm = np.concatenate((np.full(len(c_ids), c_tm, dtype=object), tm))
-            doc_ids = np.concatenate((c_ids, doc_ids))
-            tfs = np.concatenate((c_tfs, tfs))
-            dls = np.concatenate((c_dls, dls))
-            if with_positions:
-                plists = np.concatenate((c_pl, plists))
-            carry = None
-        n = len(doc_ids)
-        if n == 0:
-            continue
-        # contiguous (shard, term) runs within the batch
-        change = np.flatnonzero(
-            (sh[1:] != sh[:-1]) | (tm[1:] != tm[:-1])) + 1
-        bounds = np.concatenate(([0], change, [n]))
-        rows: list = []
-        for i in range(len(bounds) - 1):
-            lo, hi = int(bounds[i]), int(bounds[i + 1])
-            is_last_run = i == len(bounds) - 2
-            used = flush(int(sh[lo]), tm[lo], doc_ids[lo:hi], tfs[lo:hi],
-                         dls[lo:hi], None if plists is None
-                         else plists[lo:hi], rows, final=not is_last_run)
-            if is_last_run and lo + used < hi:
-                s = lo + used
-                carry = (int(sh[lo]), tm[lo], doc_ids[s:hi], tfs[s:hi],
-                         dls[s:hi],
-                         None if plists is None else plists[s:hi])
-        if rows:
-            yield to_pdf(rows)
-    if carry is not None:
-        c_sh, c_tm, c_ids, c_tfs, c_dls, c_pl = carry
-        rows = []
-        flush(c_sh, c_tm, c_ids, c_tfs, c_dls, c_pl, rows, final=True)
-        yield to_pdf(rows)
-
-
-def write_postings(tf: DataFrame, shards: list[int], path: str,
-                   block_size: int, *, positions: bool) -> None:
+def write_postings(tf: DataFrame, shards: list[int], path: str, *,
+                   positions: bool) -> None:
     """The one postings writer: (shard, doc_id, term, tf, dl[, positions])
-    rows of ``shards`` → doc_id-sorted (shard, term) runs → compressed
-    blocks → one sorted file per ``shard=k`` dir under ``path``.
-
-    The sort+compress stage uses ALL task slots (guide §2.5): with fewer
-    shards than cores, one-task-per-shard leaves (par − n_shards) cores
-    idle. Each shard is sub-bucketed by a deterministic term hash — every
-    (shard, term) run stays whole inside one task (bucket is a function of
-    term), so block numbering and compression are byte-identical. Bucket
-    count is ~4× the task count so the hash spreads evenly (guide §2.5:
-    use many more distinct key values than partitions). When bucketed,
-    the compressed blocks gather back to one task per shard before the
-    write: leaving sub² files per shard dir measured 2.3× slower
-    exact-query reads (115 vs 16 files at the bench index). The gather
-    shuffles BLOCK rows (compressed bytes, far smaller than tf) and only
-    exists in the shards<cores regime — at scale shards ≥ parallelism,
-    sub=1, and neither extra shuffle happens.
+    rows of ``shards`` → one ``(term, doc_id)``-sorted file per
+    ``shard=k`` dir under ``path``, with the column types of
+    ``POSTINGS_SCHEMA`` (a non-positional index stores no ``positions``
+    column; the reader sees it as null and never asks for it).
 
     Dynamic partition overwrite, NOT append, and as a write option, never
     session conf (that would leak into the caller's later writes): only
     the written shards' dirs are replaced, so a resumed wave replaces
-    blocks a crash left un-manifested instead of appending duplicates
-    (duplicated postings would double exact scores and inflate WAND)."""
-    par = max(1, tf.sparkSession.sparkContext.defaultParallelism)
-    n_sh = len(shards)
-    sub = max(1, min(8, (4 * par) // max(1, n_sh)))
-    if sub > 1:
-        runs = (
-            tf.withColumn(
-                "_tb", F.pmod(F.xxhash64("term"), F.lit(sub)).cast("int"))
-            .repartition(min(par, n_sh * sub), "shard", "_tb")
-            .sortWithinPartitions("shard", "term", "doc_id")
-            .drop("_tb")
-        )
-    else:
-        runs = tf.repartition(n_sh, "shard").sortWithinPartitions(
-            "shard", "term", "doc_id")
-    blocks = runs.mapInPandas(
-        lambda it: _compress_runs(it, block_size, with_positions=positions),
-        schema=BLOCKS_SCHEMA,
-    )
-    if sub > 1:
-        blocks = blocks.repartition(n_sh, "shard").sortWithinPartitions(
-            "shard", "term", "block_id")
-    (blocks.write.mode("overwrite")
+    rows a crash left un-manifested instead of appending duplicates
+    (duplicated postings would double exact scores)."""
+    cols = [F.col("shard").cast("int"), "term",
+            F.col("doc_id").cast("long"), F.col("tf").cast("long"),
+            F.col("dl").cast("long")]
+    if positions:
+        cols.append(F.col("positions").cast("array<int>"))
+    (tf.select(*cols).repartition(len(shards), "shard")
+     .sortWithinPartitions("shard", "term", "doc_id")
+     .write.mode("overwrite")
      .option("partitionOverwriteMode", "dynamic")
      .partitionBy("shard").parquet(path))
+
+
+def signed_counts(rows: DataFrame, sign: int = 1) -> DataFrame:
+    """(term, df, sum_tf) contributions of postings ``rows``, times
+    ``sign``, to be summed per term: a posting row is one (doc, term), so
+    it adds 1 to its term's df and its tf to Σdl. The build sums them over
+    the written rows; an upsert sums the affected shards' staged rows
+    against their live rows at ``sign=-1`` — one rule for both."""
+    return rows.select("term", F.lit(sign).cast("long").alias("df"),
+                       (F.col("tf") * sign).alias("sum_tf"))
 
 
 def tokenize_docs(docs: DataFrame, *, code_aware: bool = True,
@@ -322,26 +169,27 @@ def build_index(
     positions: bool = False,
     verbose: bool = False,
 ) -> dict:
-    """Build (or resume) the sharded compressed index under ``out_dir``.
+    """Build (or resume) the sharded index under ``out_dir``.
 
     ``waves=None`` (default) sizes the wave count adaptively: one wave when
     the cluster has at least one task slot per shard (the common case —
     serial waves would leave slots idle), more only when shards exceed
     parallelism. Pass an explicit ``waves`` to pin the resume granularity.
 
-    ``positions=True`` builds a POSITIONAL index: each block carries a
-    varint position stream (``poss``) and phrase queries decode positions
-    straight from the postings — no sidecar, no duplicated keys. ~Half the
-    positional storage of the round-2 sidecar (measured, BENCH/ANALYSIS.md).
+    ``positions=True`` builds a POSITIONAL index: each postings row
+    carries its token positions and phrase queries read them straight
+    from the postings — no sidecar, no duplicated keys.
 
     Layout:
       out_dir/docs/        doc map (doc_id, repo, path, commit, lang,
                            content_sha256, shard) — parquet by shard
       out_dir/term_df/     global term dictionary (term, df)
-      out_dir/postings/    block rows (BLOCKS_SCHEMA) — parquet by shard
+      out_dir/postings/    postings rows (POSTINGS_SCHEMA) — parquet by
+                           shard, one (term, doc_id)-sorted file per shard
       out_dir/_manifest/   per-shard lineage + metrics (checkpoint.py)
-      out_dir/stats.json   n_docs, avgdl, config echo, and ``version``:
-                           a fresh id per commit (plan-cache key)
+      out_dir/stats.json   n_docs, avgdl, config echo, ``postings_format``
+                           and ``version``: a fresh id per commit
+                           (plan-cache key)
 
     Returns the stats dict.
     """
@@ -360,7 +208,7 @@ def build_index(
     if not resume:
         # a fresh build into an existing out_dir must not inherit stale
         # postings/manifest rows (re-run with resume=False used to APPEND
-        # postings on top of committed blocks — duplicated scores). The
+        # postings on top of committed rows — duplicated scores). The
         # positions sidecar belongs to the previous corpus too.
         for sub in ("postings", "_manifest", "docs", "term_df", "positions"):
             shutil.rmtree(os.path.join(out_dir, sub), ignore_errors=True)
@@ -433,7 +281,7 @@ def build_index(
     # docs straight into the one wide shuffle: waves partition DOCS
     # disjointly, so per-wave tokenization does zero duplicate work, and
     # the map stage (Python tokenizer) overlaps the reduce stage's
-    # sort/compress/write across tasks inside one job.
+    # sort/write across tasks inside one job.
     par = max(1, spark.sparkContext.defaultParallelism)
     if waves is None:
         # adaptive: serial waves only when shards exceed task slots —
@@ -467,9 +315,9 @@ def build_index(
             ).withColumn(
                 "shard",
                 F.pmod(F.col("doc_id"), F.lit(cfg.n_shards)).cast("int"))
-            write_postings(tf, wave_shards, postings_dir, cfg.block_size,
+            write_postings(tf, wave_shards, postings_dir,
                            positions=positions)
-            _mark(f"wave{i}_tokenize_compress_write")
+            _mark(f"wave{i}_tokenize_sort_write")
             shard_counts = docs_fut.result()
 
             def _manifest_job(ws=wave_shards, idx=i) -> None:
@@ -481,46 +329,41 @@ def build_index(
 
             if i == len(wave_lists) - 1:
                 # final wave: the manifest read-back and the
-                # metadata-derived term_df/stats below both read the
+                # row-derived term_df/stats below both read the
                 # now-committed postings — independent jobs, overlap them
                 manifest_fut = pool.submit(_manifest_job)
             else:
                 _manifest_job()
         shard_counts = docs_fut.result()
 
-        # ---- term dictionary + corpus stats from block METADATA
-        # (read-back: certifies disk, like the manifest). Block rows are
-        # pre-aggregated per (shard, term): df(term) = Σ n_docs,
-        # Σdl = Σ sum_tf — a column-pruned scan of (term, n_docs, sum_tf)
-        # that never touches the compressed binary columns. Skew is handled
-        # STRUCTURALLY: the map-side partial agg runs per shard partition,
-        # so even a term present in every document contributes at most
-        # n_shards partial rows to the final shuffle — no salting needed.
+        # ---- term dictionary + corpus stats from the written rows
+        # (read-back: certifies disk, like the manifest): df(term) = rows
+        # of the term, Σdl = Σ tf, both summed in one pass whose Σ is
+        # observed on the term_df write. Skew is handled STRUCTURALLY: the
+        # map-side partial agg runs per scan split, so even a term present
+        # in every document sends one partial row per split to the final
+        # shuffle — no salting needed.
         n_docs_total = sum(shard_counts.values())
         if os.path.exists(postings_dir):
-            # known schema: a resumed build can keep shards written by an
-            # older engine whose blocks predate the sum_tf column; those
-            # read it as null, which would undercount sum_dl (skewing
-            # avgdl/BM25), so fail LOUDLY on any null sum_tf instead of
-            # serving wrong stats. (A build that wrote no block reads an
-            # empty frame.)
-            meta = spark.read.schema(BLOCKS_SCHEMA).parquet(postings_dir)
-            meta.groupBy("term").agg(
-                F.sum("n_docs").cast("long").alias("df")
-            ).write.mode("overwrite").parquet(os.path.join(out_dir, "term_df"))
-            agg = meta.agg(
-                F.sum("sum_tf").alias("s"),
-                F.sum(F.when(F.col("sum_tf").isNull(), 1).otherwise(0))
-                .alias("n_null"),
-            ).collect()[0]
-            if int(agg["n_null"] or 0) > 0:
+            # known schema: a resumed build can keep shards written in the
+            # older block format, whose rows read tf as null; fail LOUDLY
+            # on them instead of counting blocks as postings
+            rows = spark.read.schema(POSTINGS_SCHEMA).parquet(postings_dir)
+            obs = Observation()
+            (signed_counts(rows).groupBy("term")
+             .agg(F.sum("df").alias("df"), F.sum("sum_tf").alias("sum_tf"),
+                  F.sum(F.col("sum_tf").isNull().cast("long"))
+                  .alias("n_null"))
+             .observe(obs, F.sum("sum_tf").alias("sum_dl"),
+                      F.sum("n_null").alias("n_null"))
+             .select("term", "df")
+             .write.mode("overwrite").parquet(os.path.join(out_dir, "term_df")))
+            if int(obs.get["n_null"] or 0) > 0:
                 raise ValueError(
-                    f"{int(agg['n_null'])} block rows under {postings_dir} "
-                    "have null sum_tf (mixed-schema postings: some shards "
-                    "predate the sum_tf column); rebuild those shards "
-                    "(resume=False) before trusting metadata-derived stats"
-                )
-            sum_dl_total = int(agg["s"] or 0)
+                    f"postings under {postings_dir} hold rows of an older "
+                    "postings format (null tf); rebuild the index with "
+                    "resume=False")
+            sum_dl_total = int(obs.get["sum_dl"] or 0)
         else:  # corpus tokenized to nothing at all
             from dp_search_data_importer_spark.session import local_df
 
@@ -536,7 +379,8 @@ def build_index(
             "avgdl": (float(sum_dl_total / n_docs_total)
                       if n_docs_total else 0.0),
             "k1": cfg.k1, "b": cfg.b,
-            "block_size": cfg.block_size, "n_shards": cfg.n_shards,
+            "n_shards": cfg.n_shards,
+            "postings_format": POSTINGS_FORMAT,
             "code_aware": code_aware,
             "positions": positions,
             "shard_docs": {int(s): int(n) for s, n in shard_counts.items()},

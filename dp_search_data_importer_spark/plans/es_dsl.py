@@ -64,7 +64,7 @@ context applies as broadcast-or-shuffle semi-joins that never touch
 scores; ranking reuses the salted/two-phase top-k machinery. Aggregations
 run over the hit SET (doc_id frame), exactly the ES execution model. At
 stored-index scale the same request compiles against ``plans/query``
-(load_blocks/WAND) — this dataflow form is the semantics reference and
+(``load_blocks``) — this dataflow form is the semantics reference and
 the streaming-ingest side's query twin."""
 from __future__ import annotations
 
@@ -3543,20 +3543,18 @@ def _bool_term_spec(spec: dict, has_filter: bool, out_dir: str):
 
 
 def search_indexed(spark: SparkSession, out_dir: str, body: dict,
-                   cfg: EngineConfig | None = None,
-                   use_wand: bool = False) -> SearchResult:
+                   cfg: EngineConfig | None = None) -> SearchResult:
     """Compile an ES ``_search`` body against the STORED index under
     ``out_dir`` — the scale path: candidates come from term-pruned
-    compressed postings (``plans/query``), never a corpus scan, and the
+    postings rows (``plans/query``), never a corpus scan, and the
     analyzer follows the index's recorded ``code_aware`` flag (analyzer
     symmetry).
 
     Supported subset (each routes to the corresponding ``plans/query``
-    entry): ``match`` (OR; optionally WAND when neither pagination nor
-    rescoring needs exhaustive scores), top-level ``prefix`` / ``fuzzy``
+    entry): ``match`` (OR), top-level ``prefix`` / ``fuzzy``
     / ``wildcard`` / ``regexp``, ``match_phrase`` (+slop) and the
-    span/intervals family — both decode positions straight from the
-    COMPRESSED positional postings blocks (``load_positions``: the same
+    span/intervals family — both read positions straight from the
+    positional postings rows (``load_positions``: the same
     term-pruned scan BM25 uses), ``bool`` — a single must-``match``
     clause with filter context routes to ``filtered_topk``; term-level
     clause sets route to ``bool_topk_indexed`` — plus ``sort`` by a
@@ -3684,12 +3682,8 @@ def search_indexed(spark: SparkSession, out_dir: str, body: dict,
                                        k=size)
         else:
             cur = {0: (float(after[0]), int(after[1]))} if after else None
-            if use_wand and cur is None:
-                hits = q.wand_topk(spark, out_dir, match_queries(spec),
-                                   cfg, k=size)
-            else:
-                hits = q.exact_topk(spark, out_dir, match_queries(spec),
-                                    cfg, k=size, after=cur)
+            hits = q.exact_topk(spark, out_dir, match_queries(spec),
+                                cfg, k=size, after=cur)
     elif kind in ("prefix", "wildcard", "regexp", "fuzzy"):
         pairs = [(k, v) for k, v in spec.items() if k != "boost"]
         (field, v), = pairs
@@ -3713,8 +3707,8 @@ def search_indexed(spark: SparkSession, out_dir: str, body: dict,
                            slop=slop)
     elif kind in ("span_term", "span_or", "span_near", "span_first",
                   "span_not", "intervals"):
-        # spans over the COMPRESSED positional postings: the same
-        # term-pruned block scan phrase queries use (load_positions),
+        # spans over the positional postings rows: the same
+        # term-pruned scan phrase queries use (load_positions),
         # the same batch fold as the dataflow planner — the span tree
         # parses through a docs-free planner shim (pure driver-side)
         from dp_search_data_importer_spark.checkpoint import (

@@ -1,24 +1,20 @@
 """Query engine over the built index (SURVEY.md §3.1 query lifecycle).
 
-Two paths, rank-identical by construction and by test:
-
-- **exact** — decompress candidate blocks → Catalyst BM25 expressions →
-  windowed top-k. The permanent correctness oracle (SURVEY.md §7 step 5).
-- **wand**  — block-max WAND inside mapInPandas per shard → local top-k →
-  global merge. The fast path: decodes only the blocks it cannot skip.
-
-Both share the same physical reading pattern, which is what scales:
-parquet scan of ``postings/`` with ``term IN (query terms)`` pushed down
-(PushedFilters; blocks are term-sorted within files so row-group min/max
-stats prune), shard-dir layout prunes nothing for queries (all shards hold
-all terms) but gives the fan-out axis; ``docs/`` is touched only to resolve
-the final ≤ k·|queries| winners back to (repo, path, commit) — never joined
-against postings-sized data.
+Every stored path reads postings through ONE reader, :func:`load_blocks`:
+a parquet scan of ``postings/`` rows (term, doc_id, tf, dl[, positions])
+with the known schema and ``term IN (query terms)`` pushed down
+(PushedFilters). Rows are (term, doc_id)-sorted within each shard's file,
+so row-group and page min/max statistics on ``term`` skip what the query
+does not ask for; the shard-dir layout prunes nothing for queries (all
+shards hold all terms) but gives the fan-out axis. Scoring is Catalyst
+BM25 expressions over those rows → windowed top-k: no Python worker runs
+on any stored read path. ``docs/`` is touched only to resolve the final
+≤ k·|queries| winners back to (repo, path, commit) — never joined against
+postings-sized data.
 """
 
 from __future__ import annotations
 
-import math
 import os
 
 from pyspark.sql import DataFrame, SparkSession
@@ -31,9 +27,8 @@ from dp_search_data_importer_spark.operators.bm25 import (
     topk,
     with_query_ids,
 )
-from dp_search_data_importer_spark.operators.wand import wand_partition
 from dp_search_data_importer_spark.plans.build_index import (
-    BLOCKS_SCHEMA,
+    POSTINGS_SCHEMA,
     TERM_DF_SCHEMA,
 )
 from dp_search_data_importer_spark.session import cached_plan
@@ -46,15 +41,15 @@ Queries = DataFrame | list[tuple[int, str]]
 
 def load_blocks(spark: SparkSession, out_dir: str,
                 terms: list[str] | None = None) -> DataFrame:
-    # a crash mid-commit of an incremental upsert must not serve a MIXED
-    # pre/post index from the read path: roll the staged commit forward
-    # first (one os.path.exists in the common case — see update_index)
-    from dp_search_data_importer_spark.plans.update_index import (
-        recover_for_read,
-    )
-
-    recover_for_read(out_dir)
-    df = spark.read.schema(BLOCKS_SCHEMA).parquet(
+    """The one postings reader: ``POSTINGS_SCHEMA`` rows of the index at
+    ``out_dir``, read with their known schema (no schema-inference job);
+    ``terms`` pushes a ``term IN (...)`` filter into the scan. An index
+    whose stats.json records no current postings format is refused
+    (``read_stats_json``), which also rolls an interrupted upsert commit
+    forward first, so the read path never serves a MIXED pre/post
+    index."""
+    read_stats_json(out_dir)
+    df = spark.read.schema(POSTINGS_SCHEMA).parquet(
         os.path.join(out_dir, "postings"))
     if terms is not None:
         df = df.filter(F.col("term").isin(terms))
@@ -87,53 +82,12 @@ def load_docs(spark: SparkSession, out_dir: str) -> DataFrame:
         .parquet(path)
 
 
-def decompress_blocks(blocks: DataFrame,
+def decompress_blocks(rows: DataFrame,
                       include_positions: bool = False) -> DataFrame:
-    """(shard, term, blocks…) → (doc_id, term, tf, dl[, positions]) rows via
-    the numpy codec in Arrow batches. Used by the exact path and by
-    index-integrity tests (round-trip vs the original tf pairs).
-    ``include_positions`` decodes each posting's token positions from the
-    block's ``poss`` stream (positional indexes only). Only the columns
-    the decoder reads cross the Arrow hop."""
-    import numpy as np
-    import pandas as pd
-
-    from dp_search_data_importer_spark.operators.codec import (
-        decode_block,
-        decode_positions,
-    )
-
-    def gen(batches):
-        for pdf in batches:
-            ids_all, terms_all, tfs_all, dls_all = [], [], [], []
-            pos_all: list = []
-            cols = zip(pdf["term"], pdf["doc_gaps"], pdf["tfs"], pdf["dls"],
-                       pdf["poss"] if include_positions else pdf["term"])
-            for term, g, t, d, p in cols:
-                ids, tfs, dls = decode_block(g, t, d)
-                ids_all.append(ids)
-                terms_all.extend([term] * len(ids))
-                tfs_all.append(tfs)
-                dls_all.append(dls)
-                if include_positions:
-                    flat = decode_positions(p, tfs)
-                    pos_all.extend(np.split(flat, np.cumsum(tfs)[:-1]))
-            if not ids_all:
-                continue
-            out = {"doc_id": np.concatenate(ids_all),
-                   "term": terms_all,
-                   "tf": np.concatenate(tfs_all),
-                   "dl": np.concatenate(dls_all)}
-            if include_positions:
-                out["positions"] = pos_all
-            yield pd.DataFrame(out)
-
-    schema = "doc_id long, term string, tf long, dl long"
-    if include_positions:
-        schema += ", positions array<int>"
-    keep = ["term", "doc_gaps", "tfs", "dls"] + (
-        ["poss"] if include_positions else [])
-    return blocks.select(*keep).mapInPandas(gen, schema=schema)
+    """Postings rows → (doc_id, term, tf, dl[, positions]): a projection,
+    so the scan below it reads only these columns."""
+    return rows.select("doc_id", "term", "tf", "dl",
+                       *(["positions"] if include_positions else []))
 
 
 def _query_term_pairs(queries: Queries,
@@ -162,7 +116,7 @@ def _query_term_pairs(queries: Queries,
 def _candidates(spark: SparkSession, out_dir: str, terms: list[str],
                 stats: dict, doc_filter=None,
                 broadcast_limit: int = 2_000_000) -> DataFrame:
-    """Decoded (doc_id, term, tf, dl) postings of ``terms``, semi-joined
+    """(doc_id, term, tf, dl) postings of ``terms``, semi-joined
     to the docs matching ``doc_filter`` when one is given. The broadcast
     hint is gated on size: |allowed| ≤ n_docs, so a small corpus needs no
     count job at all; only a big corpus pays one count over the pushed
@@ -194,12 +148,12 @@ def _indexed_scores(spark: SparkSession, out_dir: str,
 def exact_topk(spark: SparkSession, out_dir: str, queries: Queries,
                cfg: EngineConfig | None = None, k: int | None = None,
                after: dict[int, tuple[float, int]] | None = None) -> DataFrame:
-    """Exact path over the compressed index. The query analyzer follows the
+    """Exact path over the stored index. The query analyzer follows the
     index's recorded analyzer (stats.json code_aware) — analyzer symmetry.
     ``after`` paginates (ES ``search_after`` twin — see
     ``operators.bm25.topk``): the cursor predicate applies before the
     window, so page n never re-materializes pages 1..n−1. The plan is
-    cached on the index ``version``; an index without one is not cached."""
+    cached on the index ``version``."""
     cfg = cfg or EngineConfig()
     k = k or cfg.k
     stats = read_stats_json(out_dir)
@@ -209,8 +163,6 @@ def exact_topk(spark: SparkSession, out_dir: str, queries: Queries,
         return topk(_indexed_scores(spark, out_dir, pairs, stats, cfg), k,
                     after=after)
 
-    if "version" not in stats:
-        return build()
     return cached_plan(spark, ("exact_topk", out_dir, stats["version"],
                                tuple(pairs), repr(cfg), k,
                                repr(sorted((after or {}).items()))), build)
@@ -218,33 +170,10 @@ def exact_topk(spark: SparkSession, out_dir: str, queries: Queries,
 
 def wand_topk(spark: SparkSession, out_dir: str, queries: Queries,
               cfg: EngineConfig | None = None, k: int | None = None) -> DataFrame:
-    """Block-max WAND path over the compressed index."""
-    cfg = cfg or EngineConfig()
-    k = k or cfg.k
-    stats = read_stats_json(out_dir)
-    pairs = _query_term_pairs(queries, stats.get("code_aware", False))
-    qmap: dict[int, list[str]] = {}
-    for qid, t in pairs:
-        qmap.setdefault(qid, []).append(t)
-    terms = sorted({t for ts in qmap.values() for t in ts})
-    if not terms:
-        from dp_search_data_importer_spark.session import local_df
-
-        return local_df(spark, [], "query_id long, doc_id long, score double")
-    n, avgdl = stats["n_docs"], stats["avgdl"]
-    df_rows = load_term_df(spark, out_dir, terms).collect()
-    idfs = {
-        r["term"]: math.log(1.0 + (n - r["df"] + 0.5) / (r["df"] + 0.5))
-        for r in df_rows
-    }
-    blocks = load_blocks(spark, out_dir, terms)
-    # the WAND kernel needs every block of a shard in one task: hash-partition
-    # by shard (shards ≈ parallelism axis; each task runs 1+ whole shards)
-    local = blocks.repartition(stats["n_shards"], "shard").mapInPandas(
-        lambda it: wand_partition(it, qmap, idfs, k, cfg, avgdl),
-        schema="query_id long, doc_id long, score double",
-    )
-    return topk(local, k)
+    """The former block-max WAND entry point, kept for its callers: the
+    postings hold no blocks to skip, and the block-max kernel never beat
+    the exact path it had to match, so this is :func:`exact_topk`."""
+    return exact_topk(spark, out_dir, queries, cfg, k)
 
 
 def expand_terms(spark: SparkSession, out_dir: str, pattern: str,
@@ -393,7 +322,7 @@ def bool_topk_indexed(spark: SparkSession, out_dir: str, specs,
                       k: int | None = None, doc_filter=None,
                       broadcast_limit: int = 2_000_000) -> DataFrame:
     """ES ``bool`` query over the STORED index: same operator as
-    :func:`operators.bm25.bool_topk`, fed from the compressed postings
+    :func:`operators.bm25.bool_topk`, fed from the stored postings
     with the full clause term set (must + should + must_not — the
     not-clauses need their postings too, to flag exclusions) pushed into
     the scan as a term filter.
@@ -606,7 +535,7 @@ def explain_score(spark: SparkSession, out_dir: str, text: str,
     tf_norm, contribution), contributions summing to the document's
     ``exact_topk`` score (same formula, same statistics). The plan is the
     standard term-pruned postings scan PLUS a doc_id pushdown, so the
-    explain of one doc reads only the blocks holding (query term, that
+    explain of one doc reads only the row groups holding (query term, that
     doc) — never the hit set."""
     from dp_search_data_importer_spark.operators.bm25 import bm25_term_score
 

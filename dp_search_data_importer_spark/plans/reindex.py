@@ -5,15 +5,15 @@ In ES, changing an index's shard count (or copying a filtered subset)
 means `_reindex`: re-reading every source document through the full
 analysis chain. This engine can do better because the postings ALREADY
 hold everything analysis produced (term, tf, dl, positions): re-sharding
-is decompress → reassign shard = pmod(doc_id, n') → recompress, one
+is scan → reassign shard = pmod(doc_id, n') → sort and write, one
 shuffle over postings-sized data, with the raw text never touched. At
 10^12 files that is the difference between re-running the tokenizer over
 the whole corpus and a single postings-table repartition — the text is
 orders of magnitude larger than the index.
 
 The output is ARTIFACT-IDENTICAL to a fresh build of the same corpus at
-the new layout (property-tested on per-shard content fingerprints):
-recompression uses the same (shard, term, doc_id) sort and block codec,
+the new layout (property-tested on per-shard content fingerprints): the
+rewrite uses the same writer and (shard, term, doc_id) sort as a build,
 term_df / corpus stats are carried over exactly (or exactly recounted
 for a query-filtered subset), and ``hot_terms`` re-derives from the
 destination dictionary, as a fresh build's stats.json records it.
@@ -32,6 +32,7 @@ from pyspark.sql import SparkSession
 from pyspark.sql import functions as F
 
 from dp_search_data_importer_spark.checkpoint import (
+    POSTINGS_FORMAT,
     manifest_rows,
     read_stats_json,
     write_stats_json,
@@ -51,14 +52,14 @@ from dp_search_data_importer_spark.plans.update_index import (
 
 
 def reindex(spark: SparkSession, src_dir: str, dst_dir: str, *,
-            n_shards: int | None = None, block_size: int | None = None,
+            n_shards: int | None = None,
             query: str | None = None, operator: str = "or") -> dict:
-    """Copy ``src_dir``'s index into ``dst_dir`` with a new shard count
-    and/or block size, optionally restricted to the full hit set of a
+    """Copy ``src_dir``'s index into ``dst_dir`` with a new shard count,
+    optionally restricted to the full hit set of a
     ``match`` query (``query``/``operator`` — the ES `_reindex` body's
     ``source.query``). Returns the destination stats dict.
 
-    No re-tokenization: postings decompress, reassign, and recompress.
+    No re-tokenization: postings rows are read, reassigned and rewritten.
     The analyzer (``code_aware``), BM25 parameters, and — for the
     unfiltered form — the exact corpus statistics and term dictionary all
     carry over; the filtered form recounts df / N / Σdl exactly from the
@@ -70,9 +71,7 @@ def reindex(spark: SparkSession, src_dir: str, dst_dir: str, *,
     stats = read_stats_json(src_dir)
     has_pos = bool(stats.get("positions", False))
     n_new = int(n_shards or stats["n_shards"])
-    bs_new = int(block_size or stats["block_size"])
-    cfg = EngineConfig(n_shards=n_new, block_size=bs_new,
-                       k1=stats["k1"], b=stats["b"])
+    cfg = EngineConfig(n_shards=n_new, k1=stats["k1"], b=stats["b"])
 
     tf = decompress_blocks(load_blocks(spark, src_dir),
                            include_positions=has_pos)
@@ -106,7 +105,7 @@ def reindex(spark: SparkSession, src_dir: str, dst_dir: str, *,
     tf = tf.withColumn(
         "shard", F.pmod(F.col("doc_id"), F.lit(n_new)).cast("int"))
     write_postings(tf, list(range(n_new)), os.path.join(dst_dir, "postings"),
-                   bs_new, positions=has_pos)
+                   positions=has_pos)
 
     docs_out = docs_store.withColumn(
         "shard", F.pmod(F.col("doc_id"), F.lit(n_new)).cast("int"))
@@ -131,7 +130,8 @@ def reindex(spark: SparkSession, src_dir: str, dst_dir: str, *,
         "sum_dl": sum_dl,
         "avgdl": float(sum_dl / n_docs) if n_docs else 0.0,
         "k1": cfg.k1, "b": cfg.b,
-        "block_size": bs_new, "n_shards": n_new,
+        "n_shards": n_new,
+        "postings_format": POSTINGS_FORMAT,
         "code_aware": bool(stats.get("code_aware", False)),
         "positions": has_pos,
         "shard_docs": shard_docs,

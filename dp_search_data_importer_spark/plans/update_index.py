@@ -11,23 +11,21 @@ sharded postings WITHOUT touching unaffected shards.
 Design (all shard-local, batch-proportional):
 
 1. new docs hash to shards exactly like the build; only those shards'
-   postings are read back (decompress_blocks), once, inside the postings
-   writer's map stage — the rest of the index is never scanned;
+   postings rows are read back (shard-dir pruned scan), once, inside the
+   postings writer's map stage — the rest of the index is never scanned;
 2. replaced docs' rows are dropped (keyed last-writer-wins, like
    ``doc_as_upsert``), the batch's tf rows union in, and the affected
-   shards recompress deterministically — the SAME sort + block layout as a
-   fresh build, so the result is byte-identical to rebuilding the merged
-   corpus from scratch (property-tested);
-3. corpus statistics update by exact integer deltas taken from block
-   METADATA, one rule with the build: per term, the new df is the old df
-   minus Σ ``n_docs`` over the affected shards' live blocks plus Σ
-   ``n_docs`` over their staged blocks, and Σdl moves by the same
-   difference of ``sum_tf`` — a column-pruned scan that never touches a
-   compressed column. n_docs and per-shard doc counts are observed on the
-   staged docs write. Block metadata is avgdl-free (impacts — see
-   ``build_index.block_impacts``), so a drifting avgdl never invalidates
-   bounds baked into untouched shards; queries always score with the
-   CURRENT stats, exactly like Lucene applying norms at search time;
+   shards are rewritten with the SAME (term, doc_id) sort as a fresh
+   build, so the result is row-identical to rebuilding the merged corpus
+   from scratch (property-tested on shard fingerprints);
+3. corpus statistics update by exact integer deltas, one rule with the
+   build (``build_index.signed_counts``): per term, the new df is the old
+   df minus the affected shards' live rows plus their staged rows, and
+   Σdl moves by the same difference of ``tf`` — a scan of two columns.
+   n_docs and per-shard doc counts are observed on the staged docs write.
+   Postings carry no corpus statistic, so a drifting avgdl never
+   invalidates untouched shards; queries always score with the CURRENT
+   stats, exactly like Lucene applying norms at search time;
 4. **crash-atomic multi-artifact commit**: every new artifact (postings
    shard dirs, docs shard dirs, term_df, manifest, stats.json) is STAGED
    under ``_upsert_stage/`` while the live index is only read; a
@@ -42,7 +40,7 @@ Design (all shard-local, batch-proportional):
 A shard whose merged content tokenizes to zero terms is handled explicitly:
 its live ``postings/shard=k`` dir is DELETED during the swap (recorded in
 the commit marker), matching a fresh rebuild where the shard would simply
-emit no blocks — dynamic partition overwrite alone would have left the
+emit no rows — dynamic partition overwrite alone would have left the
 stale dir searchable.
 """
 
@@ -63,7 +61,8 @@ from dp_search_data_importer_spark.checkpoint import (
 )
 from dp_search_data_importer_spark.operators.ingest import normalize_repo_files
 from dp_search_data_importer_spark.plans.build_index import (
-    BLOCKS_SCHEMA,
+    POSTINGS_SCHEMA,
+    signed_counts,
     tokenize_docs,
     write_postings,
 )
@@ -210,16 +209,15 @@ def _apply_commit(out_dir: str, meta: dict) -> None:
 
 
 def _stage_postings(spark: SparkSession, out_dir: str, tf: DataFrame,
-                    affected: list[int], block_size: int,
+                    affected: list[int],
                     positions: bool) -> tuple[list[int], list[int]]:
-    """Recompress the affected shards' merged tf rows into the stage with
-    the SAME sort + block layout as a fresh build (byte-identical result).
-    Returns (shards staged, affected shards left with no postings): a
-    shard with no rows stages no dir, and its live dir must be deleted —
-    dynamic partition overwrite alone would leave it searchable."""
+    """Rewrite the affected shards' merged tf rows into the stage with the
+    SAME sort as a fresh build (row-identical result). Returns (shards
+    staged, affected shards left with no postings): a shard with no rows
+    stages no dir, and its live dir must be deleted — dynamic partition
+    overwrite alone would leave it searchable."""
     staged_postings = os.path.join(_stage_dir(out_dir), "postings")
-    write_postings(tf, affected, staged_postings, block_size,
-                   positions=positions)
+    write_postings(tf, affected, staged_postings, positions=positions)
     staged = {int(d.split("=", 1)[1]) for d in os.listdir(staged_postings)
               if d.startswith("shard=")}
     return sorted(staged), sorted(set(affected) - staged)
@@ -227,45 +225,28 @@ def _stage_postings(spark: SparkSession, out_dir: str, tf: DataFrame,
 
 def _stage_term_df(spark: SparkSession, out_dir: str,
                    affected: list[int]) -> int:
-    """Stage term_df updated from block METADATA, the build's rule applied
-    as a difference: df(term) moves by Σ n_docs over the staged blocks
-    minus Σ n_docs over the affected shards' live blocks. Returns the Σdl
-    delta (the same difference of ``sum_tf``), observed on the term_df
-    write. Blocks are read with their known schema, so a file that
-    predates ``sum_tf`` reads it as null, and any null fails loudly before
-    anything is committed."""
+    """Stage term_df updated by the build's rule applied as a difference:
+    df(term) moves by the staged rows of the term minus the affected
+    shards' live rows of it. Returns the Σdl delta (the same difference
+    of ``tf``), observed on the term_df write."""
     stage = _stage_dir(out_dir)
     live = load_blocks(spark, out_dir).filter(F.col("shard").isin(affected))
-    staged = spark.read.schema(BLOCKS_SCHEMA).parquet(
+    staged = spark.read.schema(POSTINGS_SCHEMA).parquet(
         os.path.join(stage, "postings"))
     old_df = load_term_df(spark, out_dir)
 
-    def signed(blocks: DataFrame, sign: int) -> DataFrame:
-        return blocks.select(
-            "term", (F.col("n_docs") * sign).alias("df"),
-            (F.col("sum_tf") * sign).alias("sum_tf"),
-            F.col("sum_tf").isNull().cast("long").alias("n_null"))
-
     obs = Observation()
-    (old_df.select("term", "df", F.lit(0).cast("long").alias("sum_tf"),
-                   F.lit(0).cast("long").alias("n_null"))
-     .unionByName(signed(live, -1)).unionByName(signed(staged, 1))
+    (old_df.select("term", "df", F.lit(0).cast("long").alias("sum_tf"))
+     .unionByName(signed_counts(live, -1))
+     .unionByName(signed_counts(staged, 1))
      .groupBy("term")
-     .agg(F.sum("df").alias("df"), F.sum("sum_tf").alias("sum_tf"),
-          F.sum("n_null").alias("n_null"))
+     .agg(F.sum("df").alias("df"), F.sum("sum_tf").alias("sum_tf"))
      # observed above the shuffle: adaptive execution drops a metric
      # computed inside a stage it replaces for producing no rows
-     .observe(obs, F.sum("sum_tf").alias("sum_dl"),
-              F.sum("n_null").alias("n_null"))
+     .observe(obs, F.sum("sum_tf").alias("sum_dl"))
      .filter(F.col("df") > 0).select("term", "df")
      .write.mode("overwrite").parquet(os.path.join(stage, "term_df")))
-    got = obs.get
-    if int(got["n_null"] or 0) > 0:
-        raise ValueError(
-            f"{int(got['n_null'])} block rows of shards {affected} under "
-            f"{out_dir} have null sum_tf (postings that predate the sum_tf "
-            "column); rebuild the index (resume=False) before updating it")
-    return int(got["sum_dl"] or 0)
+    return int(obs.get["sum_dl"] or 0)
 
 
 def _stage_docs(docs: DataFrame, out_dir: str,
@@ -308,7 +289,7 @@ def _stage_manifest(spark: SparkSession, out_dir: str, affected: list[int],
                     shard_docs: dict[int, int]) -> None:
     """Stage the manifest: the live rows of unaffected shards plus a
     read-back of the staged postings. A deleted (zero-term) shard gets no
-    row, exactly like a fresh build where it emits no blocks."""
+    row, exactly like a fresh build where it emits no postings."""
     staged = spark.read.schema(MANIFEST_SCHEMA).parquet(
         os.path.join(out_dir, "_manifest")).filter(
         ~F.col("shard").isin(affected))
@@ -409,7 +390,7 @@ def upsert_docs(
     """
     recover_index(out_dir)
     stats = read_stats_json(out_dir)
-    n_shards, block_size = stats["n_shards"], stats["block_size"]
+    n_shards = stats["n_shards"]
     code_aware = bool(stats.get("code_aware", False))
     has_pos = bool(stats.get("positions", False))
 
@@ -442,10 +423,11 @@ def upsert_docs(
         received = int(raw_obs.get["n"])
         new_ids = batch.select("doc_id")
 
-        # ---- recompress ONLY the affected shards: their live rows minus
-        # the replaced docs, plus the batch's tf rows. Decode and tokenize
-        # run once, inside the writer's map stage (live postings are only
-        # read: nothing live is mutated until the commit marker lands)
+        # ---- rewrite ONLY the affected shards: their live rows minus
+        # the replaced docs, plus the batch's tf rows. The scan and the
+        # tokenizer run once, inside the writer's map stage (live postings
+        # are only read: nothing live is mutated until the commit marker
+        # lands)
         kept_tf = decompress_blocks(
             load_blocks(spark, out_dir).filter(F.col("shard").isin(affected)),
             include_positions=has_pos,
@@ -458,7 +440,7 @@ def upsert_docs(
             spark, out_dir,
             kept_tf.unionByName(new_tf).withColumn(
                 "shard", F.pmod(F.col("doc_id"), F.lit(n_shards)).cast("int")),
-            affected, block_size, has_pos)
+            affected, has_pos)
         sum_dl_delta = _stage_term_df(spark, out_dir, affected)
 
         # ---- docs/: replaced rows out, batch rows in (affected shards only)
@@ -512,7 +494,7 @@ def delete_docs(spark: SparkSession, out_dir: str, ids: DataFrame, *,
     ``_delete_by_query`` lands here after matching; direct id deletes are
     the ES ``DELETE /index/_doc/{id}`` twin). Same staged-commit protocol
     as :func:`upsert_docs`: only the shards holding deleted docs are read
-    back and recompressed; corpus stats update by exact integer deltas;
+    back and rewritten; corpus stats update by exact integer deltas;
     a crash at any point leaves the pre- or post-delete index, never a
     mix. Unknown ids are ignored (idempotent redelivery). A shard whose
     LAST doc is deleted loses its postings dir, docs dir and manifest row,
@@ -561,7 +543,7 @@ def delete_docs(spark: SparkSession, out_dir: str, ids: DataFrame, *,
             "shard",
             F.pmod(F.col("doc_id"), F.lit(stats["n_shards"])).cast("int"))
         replace_postings, delete_postings = _stage_postings(
-            spark, out_dir, kept_tf, affected, stats["block_size"], has_pos)
+            spark, out_dir, kept_tf, affected, has_pos)
         sum_dl_delta = _stage_term_df(spark, out_dir, affected)
 
         # docs/: survivors only; a shard with no survivors stages no dir,

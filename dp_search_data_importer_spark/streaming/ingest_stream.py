@@ -334,7 +334,14 @@ def dedup_stream(events: DataFrame, key_col: str = "uid",
     (Kafka Streams / Flink dedup TTLs make the same one): a key
     re-arriving AFTER expiry is emitted again — exact dedup within the
     window, at-least-once beyond it, which composes safely with the
-    idempotent keyed sink. ``ttl=None`` keeps exact forever-dedup."""
+    idempotent keyed sink. ``ttl=None`` keeps exact forever-dedup.
+
+    Draining a ``ttl`` stream: its processing-time timeout makes Spark
+    plan a no-data batch after every batch (to sweep expired keys), so a
+    query started with ``trigger(availableNow=True)`` never terminates —
+    ``awaitTermination()`` waits for ever. Drain it with
+    ``trigger(once=True)`` (one batch, then the query ends), or with
+    ``processAllAvailable()`` followed by ``stop()``."""
     import pandas as pd
     from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 

@@ -9,7 +9,7 @@ for semantics and crash-safety):
   delete-by-query  --index DIR --query "terms" [--operator or|and]
   update-by-query  --index DIR --query "terms" --set col=value ...
                    [--set-script col='painless' ] [--operator or|and]
-  reindex          --src DIR --dst DIR [--shards N] [--block-size N]
+  reindex          --src DIR --dst DIR [--shards N]
                    [--query "terms" [--operator or|and]]
   alias-create     --alias DIR [--max-docs N] [--plain-analyzer]
   alias-write      --alias DIR --parquet FILE  (batch of repo files)
@@ -75,7 +75,6 @@ def main(argv=None) -> int:
     p.add_argument("--src", required=True)
     p.add_argument("--dst", required=True)
     p.add_argument("--shards", type=int)
-    p.add_argument("--block-size", type=int)
     p.add_argument("--query")
     p.add_argument("--operator", default="or", choices=["or", "and"])
 
@@ -169,8 +168,7 @@ def main(argv=None) -> int:
         from dp_search_data_importer_spark.plans.reindex import reindex
 
         _emit(reindex(spark, a.src, a.dst, n_shards=a.shards,
-                      block_size=a.block_size, query=a.query,
-                      operator=a.operator))
+                      query=a.query, operator=a.operator))
     elif a.cmd == "alias-write":
         from dp_search_data_importer_spark.plans.rollover import write_batch
 

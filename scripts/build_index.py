@@ -28,7 +28,6 @@ def main() -> None:
     ap.add_argument("--out", required=True)
     ap.add_argument("--shards", type=int, default=32)
     ap.add_argument("--waves", type=int, default=2)
-    ap.add_argument("--block-size", type=int, default=128)
     ap.add_argument("--simple-tokenizer", action="store_true",
                     help="plain analyzer instead of code-aware")
     ap.add_argument("--no-resume", action="store_true")
@@ -56,7 +55,7 @@ def main() -> None:
     else:
         src = spark.read.parquet(args.source)
 
-    cfg = EngineConfig(n_shards=args.shards, block_size=args.block_size)
+    cfg = EngineConfig(n_shards=args.shards)
     stats = build_index(
         spark, src, args.out, cfg,
         code_aware=not args.simple_tokenizer,

@@ -6,8 +6,7 @@
 
 Query families (mirroring the library's full ES-parity surface):
 
-- default: OR-semantics BM25 (``--path exact`` for the Catalyst oracle
-  scorer; default block-max WAND, rank-identical).
+- default: OR-semantics BM25 (the exact Catalyst scorer).
 - ``--phrase "exact phrase"`` [``--slop N``]: match_phrase over the
   positional index (slop = ordered sloppy matching).
 - ``--must/--should/--must-not`` [``--msm N``]: one ES bool compound
@@ -48,7 +47,6 @@ def main() -> None:
     ap.add_argument("--filter-lang", dest="filter_lang", default=None)
     ap.add_argument("--pages", type=int, default=1)
     ap.add_argument("--k", type=int, default=10)
-    ap.add_argument("--path", default="wand", choices=["wand", "exact"])
     ap.add_argument("--body", default=None,
                     help="ES _search JSON body (stored-index execution)")
     ap.add_argument("--body-file", dest="body_file", default=None)
@@ -76,8 +74,7 @@ def main() -> None:
 
         body = json.loads(args.body if args.body
                           else open(args.body_file).read())
-        res = search_indexed(spark, args.index, body, cfg,
-                             use_wand=args.path == "wand")
+        res = search_indexed(spark, args.index, body, cfg)
         hits = res.hits
         if "score" not in hits.columns:  # field-sorted bodies
             hits = hits.withColumn("score", F.lit(0.0))
@@ -143,8 +140,7 @@ def main() -> None:
                     "query_id long, doc_id long, score double"))
                 cursor = {**(cursor or {}), **page_cursor(rows)}
         else:
-            fn = qp.wand_topk if args.path == "wand" else qp.exact_topk
-            pages = [fn(spark, args.index, queries, cfg, args.k)]
+            pages = [qp.exact_topk(spark, args.index, queries, cfg, args.k)]
 
     for page_no, res in enumerate(pages, 1):
         out = qp.resolve_docs(spark, args.index, res)

@@ -73,7 +73,7 @@ def test_full_pipeline_curate_dedup_index_search(spark, tmp_path):
         synthetic_repo_files,
     )
 
-    cfg = EngineConfig(n_shards=4, block_size=32)
+    cfg = EngineConfig(n_shards=4)
     src = synthetic_repo_files(spark, n_docs=120, seed=7)
     from dp_search_data_importer_spark.operators.ingest import (
         normalize_repo_files,

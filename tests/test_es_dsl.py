@@ -18,7 +18,10 @@ def planner(spark, sf_dir):
 
     docs = load_table(spark, sf_dir, "documents").cache()
     docs.count()
-    return EsSearchPlanner(spark, docs)
+    yield EsSearchPlanner(spark, docs)
+    # load_table shares this frame through the plan cache: a persisted
+    # copy left behind would make every later plan over it uncacheable
+    docs.unpersist()
 
 
 def _ranked(df):
@@ -305,7 +308,7 @@ def doc_index(spark, planner, tmp_path_factory):
 
     out = str(tmp_path_factory.mktemp("dsl_idx"))
     build_index(spark, planner.docs, out,
-                EngineConfig(n_shards=4, block_size=64),
+                EngineConfig(n_shards=4),
                 code_aware=False, text_col="text",
                 already_normalized=True, waves=1)
     return out
@@ -322,8 +325,10 @@ def test_indexed_match_equals_dataflow(spark, planner, doc_index):
     got = _ranked(_indexed(spark, doc_index, body).hits)
     exp = _ranked(planner.search(body).hits)
     assert got == exp
-    # WAND route: same ranking, exhaustive-scan-free
-    wand = _ranked(_indexed(spark, doc_index, body, use_wand=True).hits)
+    # the WAND entry point: same ranking
+    from dp_search_data_importer_spark.plans import query as q
+
+    wand = _ranked(q.wand_topk(spark, doc_index, [(0, "hash join")], k=10))
     assert wand == exp
 
 
@@ -1501,7 +1506,7 @@ def pos_index(spark, planner, tmp_path_factory):
 
     out = str(tmp_path_factory.mktemp("dsl_pos_idx"))
     build_index(spark, planner.docs, out,
-                EngineConfig(n_shards=4, block_size=64),
+                EngineConfig(n_shards=4),
                 code_aware=False, text_col="text",
                 already_normalized=True, waves=1, positions=True)
     return out
@@ -2409,7 +2414,7 @@ def test_indexed_clauses_use_index_analyzer(spark, planner, tmp_path):
             F.lit("import os\ndef main(): "), F.col("text")))
         .otherwise(F.col("text")))
     out = str(tmp_path / "idx")
-    build_index(spark, docs, out, EngineConfig(n_shards=2, block_size=64),
+    build_index(spark, docs, out, EngineConfig(n_shards=2),
                 code_aware=False, text_col="text", already_normalized=True,
                 waves=1)
     scan = EsSearchPlanner(spark, docs)

@@ -1,4 +1,4 @@
-"""End-to-end index build + query: exact ≡ WAND rank identity, codec
+"""End-to-end index build + query: exact ≡ WAND rank identity, postings
 round-trip through the real index, and kill-and-resume identity
 (SURVEY.md §5 invariants, north_rule resumability)."""
 
@@ -16,7 +16,7 @@ from dp_search_data_importer_spark.operators.ingest import normalize_repo_files
 from dp_search_data_importer_spark.plans.build_index import build_index, tokenize_docs
 from dp_search_data_importer_spark.plans import query as q
 
-CFG = EngineConfig(n_shards=4, block_size=16)  # small blocks → many boundaries
+CFG = EngineConfig(n_shards=4)
 
 QUERIES = [
     (1, "import def"),            # hot terms
@@ -49,7 +49,7 @@ def _ranked(rows):
 
 
 def test_index_roundtrip_matches_tf(spark, corpus, built):
-    """Decompressing every block reproduces the original (doc,term,tf,dl)."""
+    """The stored postings rows reproduce the original (doc,term,tf,dl)."""
     out, _ = built
     docs = normalize_repo_files(corpus)
     expected = tokenize_docs(docs, code_aware=True, text_col="content")
@@ -100,7 +100,7 @@ def test_manifest_metrics(spark, built):
     rows = m.collect()
     assert {r["shard"] for r in rows} == set(range(CFG.n_shards))
     assert sum(r["n_docs"] for r in rows) == stats["n_docs"]
-    assert all(r["bytes_compressed"] > 0 for r in rows)
+    assert all(r["n_postings"] > 0 for r in rows)
 
 
 def test_resume_skips_completed_and_is_identical(spark, corpus, built, tmp_path):
@@ -245,7 +245,7 @@ def test_build_leaves_session_conf_unchanged(spark, tmp_path):
         [("r", "a.py", "c1", "def foo"), ("r", "b.py", "c1", "import os")],
         "repo string, path string, commit string, content string")
     build_index(spark, src, str(tmp_path / "idx"),
-                EngineConfig(n_shards=2, block_size=16), waves=2)
+                EngineConfig(n_shards=2), waves=2)
     assert spark.conf.get(key) == "static"
 
 
@@ -261,7 +261,7 @@ def test_zero_token_docs_counted_in_stats(spark, tmp_path):
     ]
     src = spark.createDataFrame(rows, "repo string, path string, commit string, content string")
     out = str(tmp_path / "idx_empty")
-    cfg = EngineConfig(n_shards=2, block_size=16)
+    cfg = EngineConfig(n_shards=2)
     stats = build_index(spark, src, out, cfg, code_aware=True, waves=1)
     assert stats["n_docs"] == 3
     # avgdl divides the total token count by ALL 3 docs
@@ -281,46 +281,45 @@ def test_build_with_every_row_dropped(spark, tmp_path):
     rows = [("r", "", "c1", f"def f{i}(): pass") for i in range(3)]
     src = spark.createDataFrame(
         rows, "repo string, path string, commit string, content string")
-    cfg = EngineConfig(n_shards=2, block_size=16)
+    cfg = EngineConfig(n_shards=2)
     stats = build_index(spark, src, str(tmp_path / "idx"), cfg, waves=1)
     assert stats["n_docs"] == 0
     assert stats["shard_docs"] == {0: 0, 1: 0}
 
 
-def test_queries_read_postings_without_sum_tf_and_poss(spark, corpus,
-                                                      tmp_path):
-    """Postings are read with their known schema, so files written before
-    the ``sum_tf`` and ``poss`` columns existed read them as nulls: the
-    exact, bool and prefix paths return the same hits as on the current
-    format."""
-    import pyarrow.parquet as pq
+def test_old_format_index_is_refused(spark, corpus, tmp_path):
+    """An index whose stats.json records no current postings format holds
+    postings in an older layout: every stored read path and every writer
+    refuses it with an error that says to rebuild, instead of reading the
+    missing columns as nulls."""
+    import json
 
     from dp_search_data_importer_spark.operators.bm25 import BoolSpec
-    from dp_search_data_importer_spark.session import _PLAN_CACHE
+    from dp_search_data_importer_spark.operators.phrase import phrase_topk
+    from dp_search_data_importer_spark.plans.update_index import upsert_docs
 
     out = str(tmp_path / "idx")
-    build_index(spark, corpus.limit(60), out, CFG, code_aware=True, waves=1)
-    queries = spark.createDataFrame(QUERIES, "query_id long, query_text string")
+    build_index(spark, corpus.limit(60), out, CFG, code_aware=True, waves=1,
+                positions=True)
+    assert q.exact_topk(spark, out, QUERIES, CFG, 10).collect()
+    stats_path = os.path.join(out, "stats.json")
+    with open(stats_path) as f:
+        stats = json.load(f)
+    del stats["postings_format"]
+    with open(stats_path, "w") as f:
+        json.dump(stats, f)
     spec = [BoolSpec(1, must=["import"], should=["def"], must_not=["merge"])]
-
-    def answers():
-        _PLAN_CACHE.clear()  # the rewrite keeps the index version
-        return [sorted(map(tuple, df.collect())) for df in (
-            q.exact_topk(spark, out, queries, CFG, 10),
-            q.bool_topk_indexed(spark, out, spec, CFG, 10),
-            q.prefix_topk(spark, out, ["imp"], CFG, 10))]
-
-    before = answers()
-    assert all(before)
-    for dirpath, _, files in os.walk(os.path.join(out, "postings")):
-        for name in files:
-            path = os.path.join(dirpath, name)
-            if name.endswith(".crc"):
-                os.remove(path)  # checksums of the rewritten files
-            elif name.endswith(".parquet"):
-                table = pq.ParquetFile(path).read()
-                pq.write_table(table.drop(["sum_tf", "poss"]), path)
-    assert answers() == before
+    calls = [
+        lambda: q.exact_topk(spark, out, QUERIES, CFG, 10),
+        lambda: q.bool_topk_indexed(spark, out, spec, CFG, 10),
+        lambda: q.prefix_topk(spark, out, ["imp"], CFG, 10),
+        lambda: q.load_blocks(spark, out, ["import"]),
+        lambda: phrase_topk(spark, out, [(1, "import def")], CFG),
+        lambda: upsert_docs(spark, out, corpus.limit(2)),
+    ]
+    for call in calls:
+        with pytest.raises(ValueError, match="rebuild"):
+            call()
 
 
 def test_doc_id_collision_check(spark):
@@ -351,13 +350,13 @@ def test_hot_term_stripes_uniformly_across_shards(spark, tmp_path):
     src = spark.createDataFrame(
         rows, "repo string, path string, commit string, lang string, content string")
     out = str(tmp_path / "skew_idx")
-    cfg = EngineConfig(n_shards=8, block_size=32)
+    cfg = EngineConfig(n_shards=8)
     build_index(spark, src, out, cfg, waves=1)
     per_shard = {
         r["shard"]: r["n"]
         for r in spark.read.parquet(os.path.join(out, "postings"))
         .filter(F.col("term") == "universal")
-        .groupBy("shard").agg(F.sum("n_docs").alias("n")).collect()
+        .groupBy("shard").agg(F.count(F.lit(1)).alias("n")).collect()
     }
     assert len(per_shard) == cfg.n_shards  # the hot term hits every shard
     assert sum(per_shard.values()) == 2000
@@ -505,11 +504,11 @@ def test_phrase_batch_single_token_and_repeats(spark):
     assert got[(4, 1)] == 1
 
 
-def test_positional_index_blocks_vs_sidecar(spark, corpus, tmp_path):
-    """Round 3: positions fold INTO the postings blocks (positions=True).
-    Phrase results from block-decoded positions must equal the sidecar
-    twin's, and the in-block position stream must be smaller than the
-    sidecar it replaces (it stores no duplicate keys)."""
+def test_positional_index_blocks_vs_sidecar(spark, corpus, built, tmp_path):
+    """Positions fold INTO the postings rows (positions=True). Phrase
+    results from the stored positions must equal the sidecar twin's, and
+    the bytes positions add to the postings must be fewer than the
+    sidecar they replace (it stores no duplicate keys)."""
     import os as _os
 
     from dp_search_data_importer_spark.operators import phrase as ph
@@ -536,14 +535,19 @@ def test_positional_index_blocks_vs_sidecar(spark, corpus, tmp_path):
     assert from_blocks == from_sidecar
     assert 1 in from_blocks
 
-    # storage: Σ poss bytes < sidecar parquet bytes (no duplicated keys)
-    poss_bytes = spark.read.parquet(_os.path.join(out, "postings")).agg(
-        F.sum(F.length("poss"))).collect()[0][0]
-    sidecar_bytes = sum(
-        _os.path.getsize(_os.path.join(dp, f))
-        for dp, _, fs in _os.walk(_os.path.join(out, "positions"))
-        for f in fs if f.endswith(".parquet"))
-    assert poss_bytes and poss_bytes < sidecar_bytes, (poss_bytes, sidecar_bytes)
+    # storage: what positions add to the postings < the sidecar parquet
+    # bytes (no duplicated keys); the non-positional twin is ``built``,
+    # the same corpus and shard count
+    def parquet_bytes(path):
+        return sum(
+            _os.path.getsize(_os.path.join(dp, f))
+            for dp, _, fs in _os.walk(path)
+            for f in fs if f.endswith(".parquet"))
+
+    poss_bytes = (parquet_bytes(_os.path.join(out, "postings"))
+                  - parquet_bytes(_os.path.join(built[0], "postings")))
+    sidecar_bytes = parquet_bytes(_os.path.join(out, "positions"))
+    assert 0 < poss_bytes < sidecar_bytes, (poss_bytes, sidecar_bytes)
 
     # BM25 paths are unaffected by the extra stream
     queries = spark.createDataFrame(

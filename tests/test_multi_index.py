@@ -25,7 +25,7 @@ from dp_search_data_importer_spark.plans import query as q
 from dp_search_data_importer_spark.plans.build_index import build_index
 from dp_search_data_importer_spark.plans.multi_index import search_indices
 
-CFG = EngineConfig(n_shards=2, block_size=16)
+CFG = EngineConfig(n_shards=2)
 SCHEMA = "repo string, path string, commit string, lang string, content string"
 
 WORDS = ["import", "def", "merge", "hash", "join", "scan", "sort", "window",

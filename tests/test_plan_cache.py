@@ -3,10 +3,6 @@ what it refuses, and its bound."""
 
 from __future__ import annotations
 
-import os
-
-import pytest
-
 from dp_search_data_importer_spark.plans.driver_queries import QUERIES
 from dp_search_data_importer_spark.session import (
     _PLAN_CACHE,
@@ -22,29 +18,18 @@ AUDITED = ("doc_term_freqs", "term_df", "bm25_topk", "ingest_normalize",
            "span_near_search", "percolate_matches", "multi_index_dfs")
 
 
-@pytest.fixture(scope="module")
-def own_sf_dir(sf_dir, tmp_path_factory):
-    """The sf0.001 tables under a path of this module's own. Another module
-    may persist a testdata table (a planner over a cached ``documents``),
-    and a plan that reads a persisted relation is never cached; a path no
-    other module reads keeps these plans free of that."""
-    link = str(tmp_path_factory.mktemp("cache") / "sf")
-    os.symlink(sf_dir, link)
-    return link
-
-
-def test_collecting_construction_is_refused(spark, own_sf_dir):
+def test_collecting_construction_is_refused(spark, sf_dir):
     # page 2 collects page 1's cursor while it is built
     page2 = QUERIES["bm25_topk_page2"]
-    assert page2(spark, own_sf_dir) is not page2(spark, own_sf_dir)
+    assert page2(spark, sf_dir) is not page2(spark, sf_dir)
     top = QUERIES["bm25_topk"]
-    assert top(spark, own_sf_dir) is top(spark, own_sf_dir)
+    assert top(spark, sf_dir) is top(spark, sf_dir)
 
 
-def test_audited_queries_are_admitted(spark, own_sf_dir):
+def test_audited_queries_are_admitted(spark, sf_dir):
     refused = [name for name in AUDITED
-               if QUERIES[name](spark, own_sf_dir)
-               is not QUERIES[name](spark, own_sf_dir)]
+               if QUERIES[name](spark, sf_dir)
+               is not QUERIES[name](spark, sf_dir)]
     assert refused == []
 
 

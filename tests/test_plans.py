@@ -41,9 +41,9 @@ def test_exact_bm25_broadcasts_small_sides(spark, idx):
     assert "BroadcastHashJoin" in plan
     assert "SortMergeJoin" not in plan  # postings side must never sort-merge
     assert "PushedFilters: [In(term," in plan
-    # only the decoder's columns are read (pruned before the Arrow hop)
+    # only the scorer's columns are read (pruned in the scan)
     postings_scan = plan.split("ReadSchema: ")[1].splitlines()[0]
-    assert "doc_gaps" in postings_scan and "imp_tfs" not in postings_scan
+    assert "tf:bigint" in postings_scan and "positions" not in postings_scan
 
 
 def _broadcasts_local_table(plan: str) -> bool:
@@ -94,6 +94,55 @@ def test_stored_request_job_count_bounded(spark, idx, kind, body, max_jobs):
     # 8 and 10); the slack of 1 absorbs an adaptive-execution choice
     assert len(jobs) <= max_jobs + 1, (len(jobs), stage_names)
     assert not _broadcasts_local_table(_explain(res.hits))
+
+
+@pytest.fixture(scope="module")
+def pos_idx(spark, tmp_path_factory):
+    out = str(tmp_path_factory.mktemp("planposidx"))
+    build_index(spark, synthetic_repo_files(spark, 200, seed=1), out, CFG,
+                resume=False, positions=True)
+    return out
+
+
+_PYTHON_EXECS = ("MapInPandas", "ArrowEvalPython", "BatchEvalPython")
+_STORED_BODIES = {
+    "match": {"query": {"match": {"text": "import def"}}},
+    "match_and": {"query": {"match": {"text": {
+        "query": "import def", "operator": "and"}}}},
+    "bool": {"query": {"bool": {
+        "must": [{"term": {"text": "import"}}],
+        "should": [{"term": {"text": "def"}}],
+        "must_not": [{"term": {"text": "zzznope"}}]}}},
+    "prefix": {"query": {"prefix": {"text": "imp"}}},
+    "aggs": {"query": {"match": {"text": "import def"}},
+             "aggs": {"langs": {"terms": {"field": "lang"}}}},
+    "match_phrase": {"query": {"match_phrase": {"text": "import def"}}},
+}
+
+
+@pytest.mark.parametrize("kind,positional", [
+    *[(k, False) for k in sorted(_STORED_BODIES) if k != "match_phrase"],
+    *[(k, True) for k in sorted(_STORED_BODIES)],
+])
+def test_stored_read_path_runs_no_python(spark, idx, pos_idx, kind,
+                                         positional):
+    """Every stored request class executes as JVM operators only: no
+    Python UDF or pandas map in the executed plan, and the postings scan
+    has the query's term set pushed down. ``match_phrase`` needs stored
+    positions, so it runs on the positional index only."""
+    import re
+
+    from dp_search_data_importer_spark.plans.es_dsl import search_indexed
+
+    res = search_indexed(spark, pos_idx if positional else idx,
+                         _STORED_BODIES[kind], CFG)
+    frames = [res.hits, *res.aggregations.values()]
+    pushed = re.compile(r"PushedFilters: \[[^\]]*\bIn\(term,")
+    for df in frames:
+        assert df.collect(), kind
+        plan = df._jdf.queryExecution().executedPlan().toString()
+        assert not [p for p in _PYTHON_EXECS if p in plan], (kind, plan)
+        assert pushed.search(_explain(df)), (kind, _explain(df))
 
 
 def test_resolution_reads_pruned_docs(spark, idx):

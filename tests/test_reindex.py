@@ -21,8 +21,8 @@ from dp_search_data_importer_spark.plans import query as q
 from dp_search_data_importer_spark.plans.build_index import build_index
 from dp_search_data_importer_spark.plans.reindex import reindex
 
-CFG4 = EngineConfig(n_shards=4, block_size=16)
-CFG8 = EngineConfig(n_shards=8, block_size=16)
+CFG4 = EngineConfig(n_shards=4)
+CFG8 = EngineConfig(n_shards=8)
 SCHEMA = "repo string, path string, commit string, lang string, content string"
 
 WORDS = ["import", "def", "merge", "hash", "join", "scan", "sort", "window",
@@ -50,7 +50,7 @@ def _term_df(spark, d):
 def _assert_same_index(spark, d_a, d_b):
     s_a, s_b = read_stats_json(d_a), read_stats_json(d_b)
     for k in ("n_docs", "sum_dl", "avgdl", "shard_docs", "n_shards",
-              "block_size", "positions", "code_aware"):
+              "postings_format", "positions", "code_aware"):
         assert s_a[k] == s_b[k], k
     assert _fingerprints(spark, d_a) == _fingerprints(spark, d_b)
     assert _term_df(spark, d_a) == _term_df(spark, d_b)

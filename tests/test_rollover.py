@@ -19,7 +19,7 @@ from dp_search_data_importer_spark.plans.rollover import (
     write_batch,
 )
 
-CFG = EngineConfig(n_shards=2, block_size=16)
+CFG = EngineConfig(n_shards=2)
 SCHEMA = "repo string, path string, commit string, lang string, content string"
 
 WORDS = ["import", "def", "merge", "hash", "join", "scan", "sort", "window",

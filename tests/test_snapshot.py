@@ -16,7 +16,7 @@ from dp_search_data_importer_spark.plans.snapshot import (
     verify_snapshot,
 )
 
-CFG = EngineConfig(n_shards=2, block_size=16)
+CFG = EngineConfig(n_shards=2)
 SCHEMA = "repo string, path string, commit string, lang string, content string"
 
 WORDS = ["import", "def", "merge", "hash", "join", "scan", "sort", "window"]

@@ -8,6 +8,7 @@ the reference's doc_as_upsert effectively-once semantics."""
 
 from __future__ import annotations
 
+import json
 import os
 
 import pytest
@@ -19,7 +20,7 @@ from dp_search_data_importer_spark.plans import query as q
 from dp_search_data_importer_spark.plans.build_index import build_index
 from dp_search_data_importer_spark.plans.update_index import upsert_docs
 
-CFG = EngineConfig(n_shards=4, block_size=16)
+CFG = EngineConfig(n_shards=4)
 SCHEMA = "repo string, path string, commit string, lang string, content string"
 
 WORDS = ["import", "def", "merge", "hash", "join", "scan", "sort", "window",
@@ -97,10 +98,10 @@ def test_upsert_accounting_dedup_dropped_and_mixed(spark, tmp_path):
 def test_shard_fingerprints_match_fresh_build(spark, upserted_vs_fresh):
     d_inc, d_fresh, _ = upserted_vs_fresh
     inc = {r["shard"]: (r["content_fingerprint"], r["n_postings"],
-                        r["n_blocks"], r["n_docs"])
+                        r["n_terms"], r["n_docs"])
            for r in read_manifest(spark, d_inc).collect()}
     fresh = {r["shard"]: (r["content_fingerprint"], r["n_postings"],
-                          r["n_blocks"], r["n_docs"])
+                          r["n_terms"], r["n_docs"])
              for r in read_manifest(spark, d_fresh).collect()}
     assert inc == fresh
 
@@ -236,7 +237,7 @@ def test_run_index_stream_end_to_end(spark, tmp_path):
 
 def _fingerprints(spark, d):
     return {r["shard"]: (r["content_fingerprint"], r["n_postings"],
-                         r["n_blocks"])
+                         r["n_terms"])
             for r in read_manifest(spark, d).collect()}
 
 
@@ -1001,28 +1002,24 @@ def _tree_digest(root):
     return out
 
 
-def test_upsert_refuses_postings_without_sum_tf(spark, tmp_path):
-    """term_df and Σdl deltas come from block metadata, so blocks without
-    ``sum_tf`` (written before the column existed) must stop the upsert
-    before its commit marker: a ValueError, and every live file left
+def test_upsert_refuses_old_format_index(spark, tmp_path):
+    """An index whose stats.json records no current postings format holds
+    an older postings layout: the upsert must stop before its commit
+    marker with an error that says to rebuild, every live file left
     byte-identical."""
-    import pyarrow.parquet as pq
-
     d = str(tmp_path / "idx")
     build_index(spark, spark.createDataFrame(_rows(20), SCHEMA), d, CFG,
                 code_aware=True, waves=1)
-    for dirpath, _, files in os.walk(os.path.join(d, "postings")):
-        for name in files:
-            path = os.path.join(dirpath, name)
-            if name.endswith(".crc"):
-                os.remove(path)  # checksums of the rewritten files
-            elif name.endswith(".parquet"):
-                table = pq.ParquetFile(path).read()
-                pq.write_table(table.drop(["sum_tf"]), path)
+    stats_path = os.path.join(d, "stats.json")
+    with open(stats_path) as f:
+        stats = json.load(f)
+    del stats["postings_format"]
+    with open(stats_path, "w") as f:
+        json.dump(stats, f)
     before = _tree_digest(d)
 
     batch = [("r1", "src/f2.py", "c1", "py", "stale metadata walrus")]
-    with pytest.raises(ValueError, match="null sum_tf"):
+    with pytest.raises(ValueError, match="rebuild"):
         upsert_docs(spark, d, spark.createDataFrame(batch, SCHEMA))
     assert _tree_digest(d) == before
 

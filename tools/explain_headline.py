@@ -84,9 +84,11 @@ def main() -> None:
     out: dict[str, dict] = {}
     for name in names:
         if name.startswith("index_"):
-            fn_q = qp.exact_topk if name == "index_exact_query" else qp.wand_topk
-            mk = lambda: fn_q(spark, idx_dir, queries,
-                              EngineConfig(n_shards=max(8, cpus // 2)), 10)
+            # both bench leaves run the exact path over the postings rows
+            # (wand_topk is exact_topk)
+            mk = lambda: qp.exact_topk(spark, idx_dir, queries,
+                                       EngineConfig(n_shards=max(8, cpus // 2)),
+                                       10)
         else:
             mk = lambda: dq.QUERIES[name](spark, sf_dir)
         spark.sparkContext.setJobDescription(name)

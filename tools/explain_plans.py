@@ -52,11 +52,12 @@ def main() -> None:
     print("== exact BM25 over the index")
     print(explain_str(qp.exact_topk(spark, out, queries, cfg, 10)))
     print("=" * 70)
-    print("== term-pruned postings scan")
-    print(explain_str(qp.load_blocks(spark, out, ["import", "def"])))
+    print("== term-pruned postings rows scan")
+    print(explain_str(qp.decompress_blocks(
+        qp.load_blocks(spark, out, ["import", "def"]))))
     print("=" * 70)
     print("== winner resolution (broadcast)")
-    res = qp.wand_topk(spark, out, queries, cfg, 10)
+    res = qp.exact_topk(spark, out, queries, cfg, 10)
     print(explain_str(qp.resolve_docs(spark, out, res)))
 
     # round 4: the composed ES query surface
