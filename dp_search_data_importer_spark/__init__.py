@@ -9,7 +9,7 @@ engine builds the index and answers queries inside Spark itself:
 - ``sources``     — table loaders + deterministic synthetic ``repo_files`` corpus
                     (the reference's test producer, ``cmd/producer/main.go``, re-imagined)
 - ``functions``   — tokenizers (Catalyst + code-aware Arrow UDF), text analysis
-- ``operators``   — ingest/normalize, postings build, codec, BM25, WAND, dedup,
+- ``operators``   — ingest/normalize, postings build, BM25, dedup,
                     similarity search, reference-projection parity
 - ``plans``       — end-to-end build-index / query pipelines (sharded index)
 - ``streaming``   — Structured Streaming ingestion twin of the reference's

@@ -156,7 +156,7 @@ def _term_freq_pos_batches(
     """Positions-carrying twin of :func:`_term_freq_batches`: each (doc,
     term) row additionally carries the ascending 0-based token positions
     (len == tf). Used by positions-enabled index builds so phrase queries
-    decode positions straight from the postings blocks."""
+    read positions straight from the postings rows."""
     tok = _code_tokens_py if code_aware else _simple_tokens_py
     for pdf in batches:
         ids: list[int] = []

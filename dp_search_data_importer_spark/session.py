@@ -82,9 +82,10 @@ def get_spark(
         .config("spark.ui.showConsoleProgress", "false")
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
         # note: zstd for parquet/shuffle was measured on this host and was
-        # noise-neutral vs snappy/lz4 (varint-compressed blocks + short-string
-        # columns don't gain enough to beat the extra CPU in python-contended
-        # stages); defaults kept. On cluster object stores revisit zstd.
+        # noise-neutral vs snappy/lz4 with the block postings of the time
+        # (short-string columns didn't gain enough to beat the extra CPU in
+        # python-contended stages); defaults kept. On cluster object stores
+        # revisit zstd.
     )
     if extra_conf:
         for k, v in extra_conf.items():

@@ -4,10 +4,11 @@ the postings take on disk.
 
 The index is built once and cached under the temp dir (keyed by
 n_docs/shards and the postings format); each query runs as its own job so
-the numbers are per-query latencies, not one batched fan-out. Results
-land in BENCH/rows_<n>k.json. The block-max WAND kernel this tool once
-measured against the exact path is gone (it measured 0.69–1.09× of exact,
-BENCH/wand_120k.json); ``wand_topk`` is now the exact path.
+the numbers are per-query latencies, not one batched fan-out, and the
+plan cache is cleared before each, so a repeat plans and shuffles anew.
+Results land in BENCH/rows_<n>k.json. The block-max WAND kernel this tool
+once measured against the exact path is gone (it measured 0.69–1.09× of
+exact, BENCH/wand_120k.json); ``wand_topk`` is now the exact path.
 
 Run:  taskset -c 0-(N-1) python tools/bench_wand.py [n_docs] [cpus] [reps] [bursty]
 
@@ -52,7 +53,11 @@ def main() -> None:
     from dp_search_data_importer_spark.config import EngineConfig
     from dp_search_data_importer_spark.plans import query as qp
     from dp_search_data_importer_spark.plans.build_index import build_index
-    from dp_search_data_importer_spark.session import get_spark, local_df
+    from dp_search_data_importer_spark.session import (
+        _PLAN_CACHE,
+        get_spark,
+        local_df,
+    )
     from dp_search_data_importer_spark.sources.repo_files import (
         synthetic_repo_files,
     )
@@ -85,6 +90,8 @@ def main() -> None:
         qdf = local_df(spark, [(qid, qtext)], "query_id long, query_text string")
         ts = []
         for _ in range(reps):
+            # a cached plan would re-run with its shuffle output reused
+            _PLAN_CACHE.clear()
             t0 = time.time()
             qp.exact_topk(spark, out, qdf, cfg, 10).collect()
             ts.append(time.time() - t0)
