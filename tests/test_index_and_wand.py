@@ -287,6 +287,48 @@ def test_build_with_every_row_dropped(spark, tmp_path):
     assert stats["shard_docs"] == {0: 0, 1: 0}
 
 
+def test_queries_read_postings_without_sum_tf_and_poss(spark, corpus,
+                                                      tmp_path):
+    """Postings are plain rows read with their known schema: the files
+    hold no block-metadata columns (``sum_tf``, ``poss``), and rewritten
+    by another writer (pyarrow: no Spark schema metadata, row groups of
+    its own size) they give the exact, bool and prefix paths the same
+    hits as before."""
+    import pyarrow.parquet as pq
+
+    from dp_search_data_importer_spark.operators.bm25 import BoolSpec
+    from dp_search_data_importer_spark.session import _PLAN_CACHE
+
+    out = str(tmp_path / "idx")
+    build_index(spark, corpus.limit(60), out, CFG, code_aware=True, waves=1)
+    queries = spark.createDataFrame(QUERIES, "query_id long, query_text string")
+    spec = [BoolSpec(1, must=["import"], should=["def"], must_not=["merge"])]
+
+    def answers():
+        _PLAN_CACHE.clear()  # the rewrite keeps the index version
+        return [sorted(map(tuple, df.collect())) for df in (
+            q.exact_topk(spark, out, queries, CFG, 10),
+            q.bool_topk_indexed(spark, out, spec, CFG, 10),
+            q.prefix_topk(spark, out, ["imp"], CFG, 10))]
+
+    before = answers()
+    assert all(before)
+    n_files = 0
+    for dirpath, _, files in os.walk(os.path.join(out, "postings")):
+        for name in files:
+            path = os.path.join(dirpath, name)
+            if name.endswith(".crc"):
+                os.remove(path)  # checksums of the rewritten files
+            elif name.endswith(".parquet"):
+                table = pq.ParquetFile(path).read()
+                assert table.column_names == ["term", "doc_id", "tf", "dl"]
+                pq.write_table(table.replace_schema_metadata(None), path,
+                               row_group_size=16)
+                n_files += 1
+    assert n_files == CFG.n_shards
+    assert answers() == before
+
+
 def test_old_format_index_is_refused(spark, corpus, tmp_path):
     """An index whose stats.json records no current postings format holds
     postings in an older layout: every stored read path and every writer

@@ -1002,6 +1002,51 @@ def _tree_digest(root):
     return out
 
 
+def test_upsert_refuses_postings_without_sum_tf(spark, tmp_path):
+    """Postings without ``sum_tf`` are blocks of the layout before it, in
+    an index whose stats.json records no postings format. The upsert must
+    not read them as rows with null columns: it stops before its commit
+    marker with an error that says to rebuild, every live file left
+    byte-identical."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    d = str(tmp_path / "idx")
+    build_index(spark, spark.createDataFrame(_rows(20), SCHEMA), d, CFG,
+                code_aware=True, waves=1)
+    for dirpath, _, files in os.walk(os.path.join(d, "postings")):
+        for name in files:
+            path = os.path.join(dirpath, name)
+            if name.endswith(".crc"):
+                os.remove(path)  # checksums of the rewritten files
+            elif name.endswith(".parquet"):
+                per_term = pq.ParquetFile(path).read().group_by("term").aggregate(
+                    [("doc_id", "min"), ("doc_id", "count")])
+                n = per_term.num_rows
+                pq.write_table(pa.table({
+                    "term": per_term.column("term"),
+                    "block_id": pa.array([0] * n, pa.int64()),
+                    "first_doc_id": per_term.column("doc_id_min"),
+                    "n_docs": per_term.column("doc_id_count"),
+                    "doc_gaps": pa.array([b""] * n, pa.binary()),
+                    "tfs": pa.array([b""] * n, pa.binary()),
+                    "dls": pa.array([b""] * n, pa.binary()),
+                    "poss": pa.array([None] * n, pa.binary()),
+                }), path)
+    stats_path = os.path.join(d, "stats.json")
+    with open(stats_path) as f:
+        stats = json.load(f)
+    del stats["postings_format"]
+    with open(stats_path, "w") as f:
+        json.dump(stats, f)
+    before = _tree_digest(d)
+
+    batch = [("r1", "src/f2.py", "c1", "py", "stale metadata walrus")]
+    with pytest.raises(ValueError, match="rebuild"):
+        upsert_docs(spark, d, spark.createDataFrame(batch, SCHEMA))
+    assert _tree_digest(d) == before
+
+
 def test_upsert_refuses_old_format_index(spark, tmp_path):
     """An index whose stats.json records no current postings format holds
     an older postings layout: the upsert must stop before its commit
