@@ -34,17 +34,33 @@ from dp_search_data_importer_spark.config import EngineConfig
 from dp_search_data_importer_spark.functions.tokenize import tokenize_expr
 
 
-def bm25_term_score(tf: Column, dl: Column, df: Column, n_docs: Column,
-                    avgdl: Column, cfg: EngineConfig) -> Column:
-    """Per-(term, doc) BM25 contribution as a Catalyst expression."""
-    idf = F.log(
-        F.lit(1.0) + (n_docs - df + F.lit(0.5)) / (df + F.lit(0.5))
-    )
-    tf_d = tf.cast("double")
-    norm = tf_d + F.lit(cfg.k1) * (
-        F.lit(1.0 - cfg.b) + F.lit(cfg.b) * dl.cast("double") / avgdl
-    )
-    return idf * tf_d * F.lit(cfg.k1 + 1.0) / norm
+def sql_number(x) -> str:
+    """A driver-side number (config constant or index statistic, never a
+    request value) as a typed SQL literal: ``int`` → BIGINT, ``float`` →
+    DOUBLE. ``repr`` round-trips a double exactly."""
+    if isinstance(x, int) and not isinstance(x, bool):
+        return f"{x}L"
+    return f"{float(x)!r}D"
+
+
+def bm25_term_sql(cfg: EngineConfig, tf: str = "tf", dl: str = "dl",
+                  df: str = "df", n_docs: str = "n_docs",
+                  avgdl: str = "avgdl") -> str:
+    """The per-(term, doc) BM25 contribution as SQL text over the named
+    expressions — the one text of the formula, shared by the stored-index
+    statements (``plans/query.py``) and the DataFrame operators."""
+    return (f"ln(1.0D + ({n_docs} - {df} + 0.5D) / ({df} + 0.5D))"
+            f" * CAST({tf} AS DOUBLE) * {sql_number(cfg.k1 + 1.0)}"
+            f" / (CAST({tf} AS DOUBLE) + {sql_number(float(cfg.k1))}"
+            f" * ({sql_number(1.0 - cfg.b)} + {sql_number(float(cfg.b))}"
+            f" * CAST({dl} AS DOUBLE) / {avgdl}))")
+
+
+def bm25_term_score(tf: str, dl: str, df: str, n_docs: str, avgdl: str,
+                    cfg: EngineConfig) -> Column:
+    """Per-(term, doc) BM25 contribution as a Catalyst expression over the
+    named columns or SQL expressions (:func:`bm25_term_sql`)."""
+    return F.expr(bm25_term_sql(cfg, tf, dl, df, n_docs, avgdl))
 
 
 def query_terms(queries: DataFrame, text_col: str = "query_text",
@@ -62,31 +78,6 @@ def query_terms(queries: DataFrame, text_col: str = "query_text",
     )
 
 
-def _literal(value, ddl: str) -> Column:
-    """A driver-side value as ONE plan literal of type ``ddl``: JSON parsed
-    by ``from_json``, which constant-folds — one Column however many
-    entries it holds (each Column costs milliseconds of driver time)."""
-    return F.from_json(F.lit(json.dumps(value)), ddl)
-
-
-def with_query_ids(rows: DataFrame, pairs: list[tuple[int, str]]) -> DataFrame:
-    """Attach ``query_id`` to term-keyed rows from driver-side (query_id,
-    term) pairs, as plan literals instead of a broadcast table: rows of
-    other terms drop; one query's id is a literal, and a batch fans out by
-    ``explode(element_at(<term → query ids map>, term))``."""
-    by_term: dict[str, list[int]] = {}
-    for q, t in sorted(pairs):
-        by_term.setdefault(t, []).append(int(q))
-    qids = {q for q, _ in pairs}
-    if len(qids) > 1:
-        qid = F.explode(F.element_at(
-            _literal(by_term, "map<string, array<bigint>>"), F.col("term")))
-    else:
-        qid = F.lit(next(iter(qids), None)).cast("long")
-    return rows.filter(F.col("term").isin(sorted(by_term))) \
-        .withColumn("query_id", qid)
-
-
 def _with_stats(rows: DataFrame, stats: DataFrame | dict) -> DataFrame:
     """Attach (n_docs, avgdl): literals from a stats.json dict, or a
     broadcast 1-row cross join of an in-plan stats frame."""
@@ -99,7 +90,7 @@ def _with_stats(rows: DataFrame, stats: DataFrame | dict) -> DataFrame:
 
 def bm25_scores(
     tf: DataFrame,
-    qterms: DataFrame | list[tuple[int, str]],
+    qterms: DataFrame,
     dfs: DataFrame | None,
     stats: DataFrame | dict,
     cfg: EngineConfig | None = None,
@@ -107,10 +98,9 @@ def bm25_scores(
 ) -> DataFrame:
     """(query_id, doc_id, score) for every candidate doc.
 
-    ``tf``: (doc_id, term, tf, dl); ``qterms``: (query_id, term) frame or
-    driver-side pairs (literals, :func:`with_query_ids`; need ``dfs``);
-    ``dfs``: (term, df); ``stats``: 1-row (n_docs, avgdl) frame or the
-    stats.json dict (literals).
+    ``tf``: (doc_id, term, tf, dl); ``qterms``: (query_id, term) frame;
+    ``dfs``: (term, df); ``stats``: 1-row (n_docs, avgdl) frame or a dict
+    of the two (literals).
 
     ``dfs=None`` computes df IN-PLAN as a window count over the tf frame
     (one row per (doc, term), so count-per-term ≡ df) — removing the
@@ -131,10 +121,7 @@ def bm25_scores(
     ``None``/≤1 keeps the plan byte-identical to the OR form.
     """
     cfg = cfg or EngineConfig()
-    if isinstance(qterms, list):
-        # df rows are the one broadcast; query ids are literals
-        cand = with_query_ids(tf.join(F.broadcast(dfs), "term"), qterms)
-    elif dfs is None:
+    if dfs is None:
         w = Window.partitionBy("term")
         cand = (tf.withColumn("df", F.count(F.lit(1)).over(w))
                 .join(F.broadcast(qterms), "term", "inner"))
@@ -143,8 +130,7 @@ def bm25_scores(
         cand = tf.join(F.broadcast(qdf), "term", "inner")
     scored = _with_stats(cand, stats).withColumn(
         "term_score",
-        bm25_term_score(F.col("tf"), F.col("dl"), F.col("df"),
-                        F.col("n_docs"), F.col("avgdl"), cfg),
+        bm25_term_score("tf", "dl", "df", "n_docs", "avgdl", cfg),
     )
     if min_match is None or min_match <= 1:
         return scored.groupBy("query_id", "doc_id").agg(
@@ -156,11 +142,63 @@ def bm25_scores(
             .filter(F.col("_nm") >= int(min_match)).drop("_nm"))
 
 
+# The round-then-rank top-k as SQL text: the stored-index statements
+# (plans/query.py) and :func:`topk` compose these same pieces.
+RANK_SQL = ("row_number() OVER (PARTITION BY query_id "
+            "ORDER BY score DESC, doc_id ASC)")
+# a search_after cursor per query: (c_score, c_doc) looked up by query_id
+# in a driver-side [(query_id, (c_score, c_doc))] list, null where absent
+CURSOR_DDL = ("array<struct<query_id: bigint, "
+              "page_end: struct<c_score: double, c_doc: bigint>>>")
+
+
+def cursor_sql(cursor_json: str) -> str:
+    """The per-row cursor lookup over a ``CURSOR_DDL`` JSON value."""
+    return (f"try_element_at(map_from_entries(from_json({cursor_json}, "
+            f"'{CURSOR_DDL}')), query_id)")
+
+
+def after_sql(cursor: str) -> str:
+    """Strict-after predicate on the total order (rounded score desc,
+    doc_id asc) against the struct ``cursor`` (true where it is null)."""
+    return (f"({cursor} IS NULL OR score < {cursor}.c_score OR "
+            f"(score = {cursor}.c_score AND doc_id > {cursor}.c_doc))")
+
+
+def cursor_rows(after: dict[int, tuple[float, int]],
+                round_digits: int = 4) -> list[dict]:
+    """``after`` as ``CURSOR_DDL`` rows, scores rounded like the ranking."""
+    return [{"query_id": int(q), "page_end": {
+        "c_score": round(float(sc), round_digits), "c_doc": int(d)}}
+        for q, (sc, d) in sorted(after.items())]
+
+
+def round_sql(round_digits: int = 4) -> str:
+    return f"round(score, {int(round_digits)})"
+
+
+def topk_sql(scores: str, k: str, round_digits: int = 4,
+             cursor_json: str | None = None) -> str:
+    """Per-query top-k as SQL text over the query ``scores`` (query_id,
+    doc_id, score): round, drop what is not strictly after the cursor,
+    rank, keep ``rn <= k``. ``k`` and ``cursor_json`` are SQL expressions
+    (parameter markers on the stored path)."""
+    cur = (f", {cursor_sql(cursor_json)} AS page_end"
+           if cursor_json is not None else "")
+    where = (f" WHERE {after_sql('page_end')}"
+             if cursor_json is not None else "")
+    return (f"SELECT query_id, doc_id, score FROM (SELECT query_id, doc_id, "
+            f"score, {RANK_SQL} AS rn FROM (SELECT query_id, doc_id, "
+            f"{round_sql(round_digits)} AS score{cur} "
+            f"FROM ({scores})){where}) WHERE rn <= {k}")
+
+
 def topk(scores: DataFrame, k: int, round_digits: int = 4,
          after: dict[int, tuple[float, int]] | None = None) -> DataFrame:
     """Per-query top-k, deterministically ordered by (round(score) desc,
     doc_id asc). Rounding before ranking makes rank stable under float
-    summation-order differences between engines/paths.
+    summation-order differences between engines/paths. Other columns of
+    ``scores`` pass through.
 
     ``after`` is the ES ``search_after`` cursor twin: per query_id, the
     (rounded score, doc_id) of the LAST hit of the previous page. The
@@ -169,36 +207,19 @@ def topk(scores: DataFrame, k: int, round_digits: int = 4,
     (rounded score, then doc_id), cursor pagination is exact: page n+1 is
     precisely ranks nk+1..nk+k of the unpaginated ranking, with no
     skipped or duplicated hits, and unlike from+size the query never
-    materializes earlier pages. The cursor rows broadcast as a literal
-    frame; queries absent from ``after`` paginate from the top."""
-    rounded = scores.withColumn("score", F.round(F.col("score"), round_digits))
+    materializes earlier pages. The cursor is one constant-folded plan
+    literal looked up per query_id; queries absent from ``after``
+    paginate from the top. Same SQL text as :func:`topk_sql`."""
+    rounded = scores.withColumn("score", F.expr(round_sql(round_digits)))
     if after:
-        from dp_search_data_importer_spark.session import local_df
-
-        cur = local_df(
-            rounded.sparkSession,
-            [(int(qid), round(float(s), round_digits), int(d))
-             for qid, (s, d) in after.items()],
-            "query_id long, c_score double, c_doc long",
-        )
         rounded = (
-            rounded.join(F.broadcast(cur), "query_id", "left")
-            .filter(
-                F.col("c_score").isNull()
-                | (F.col("score") < F.col("c_score"))
-                | ((F.col("score") == F.col("c_score"))
-                   & (F.col("doc_id") > F.col("c_doc")))
-            )
-            .drop("c_score", "c_doc")
-        )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("score").desc(), F.col("doc_id").asc()
-    )
-    return (
-        rounded.withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") <= k)
-        .drop("rn")
-    )
+            rounded.withColumn("_cursor_json", F.lit(json.dumps(
+                cursor_rows(after, round_digits))))
+            .withColumn("_cursor", F.expr(cursor_sql("_cursor_json")))
+            .filter(F.expr(after_sql("_cursor")))
+            .drop("_cursor_json", "_cursor"))
+    return (rounded.withColumn("rn", F.expr(RANK_SQL))
+            .filter(F.col("rn") <= k).drop("rn"))
 
 
 def more_like_this_terms(tf: DataFrame, dfs: DataFrame, stats: DataFrame,
@@ -547,6 +568,34 @@ def bool_topk(
     default (:meth:`BoolSpec.effective_msm`).
     """
     cfg = cfg or EngineConfig()
+    clauses = bool_clauses(specs, has_filter)
+    args = {f"t{i}": t for i, t in enumerate(sorted(clauses))}
+    args.update(clauses=json.dumps(clauses), k=int(k))
+    frames = {"tf": tf}
+    if dfs is not None:
+        frames["dfs"] = dfs
+    if isinstance(stats, dict):
+        n_docs = sql_number(int(stats["n_docs"]))
+        avgdl = sql_number(float(stats["avgdl"]))
+    else:
+        frames["stats"] = stats
+        n_docs, avgdl = "s.n_docs", "s.avgdl"
+    text = topk_sql(bool_scores_sql(
+        cfg, "{tf}", "{dfs}" if dfs is not None else None,
+        ", ".join(f":t{i}" for i in range(len(clauses))), ":clauses",
+        n_docs, avgdl, "{stats}" if "stats" in frames else None), ":k")
+    return tf.sparkSession.sql(text, args, **frames)
+
+
+# one bool clause: the fan-out row each of its term's tf rows carries
+CLAUSES_DDL = ("map<string, array<struct<query_id: bigint, clause_id: int, "
+               "role: string, boost: double, n_must: int, msm: int>>>")
+
+
+def bool_clauses(specs: list[BoolSpec],
+                 has_filter: bool = False) -> dict[str, list[dict]]:
+    """term → the clauses naming it (``CLAUSES_DDL``), with the clause's
+    query's must count and effective msm."""
     clauses: dict[str, list[dict]] = {}
     for s in specs:
         roles = ([(t, "must", b) for t, b in s.must_clauses]
@@ -557,46 +606,45 @@ def bool_topk(
                 "query_id": s.query_id, "clause_id": cid, "role": role,
                 "boost": float(b), "n_must": len(s.must_clauses),
                 "msm": s.effective_msm(has_filter)})
-    terms = sorted(clauses)
+    return clauses
+
+
+def bool_scores_sql(cfg: EngineConfig, tf: str, dfs: str | None,
+                    terms: str, clauses: str, n_docs: str, avgdl: str,
+                    stats: str | None = None) -> str:
+    """SQL text of :func:`bool_topk`'s kept (query_id, doc_id, score) rows
+    before ranking, over the relations ``tf`` (doc_id, term, tf, dl) and
+    ``dfs`` (term, df; ``None``: an in-plan window count over the
+    term-pruned tf). ``terms`` is the clause term list, ``clauses`` a
+    ``CLAUSES_DDL`` JSON value; ``stats`` an optional 1-row relation that
+    ``n_docs``/``avgdl`` read as ``s``."""
     if dfs is None:
-        # df in-plan as a window count — ONLY for term-pruned tf (see
-        # bm25_scores); unseen clause terms simply have no tf rows, the
-        # same drop the dfs join performs
-        j = (tf.filter(F.col("term").isin(terms)).withColumn(
-            "df", F.count(F.lit(1)).over(Window.partitionBy("term"))))
-    else:  # unseen terms drop at the df join, as in ES
-        j = tf.join(F.broadcast(dfs.filter(F.col("term").isin(terms))),
-                    "term")
-    cmap = _literal(clauses, "map<string, array<struct<query_id: bigint, "
-                    "clause_id: int, role: string, boost: double, "
-                    "n_must: int, msm: int>>>")
-    scored = _with_stats(
-        j.select("*", F.inline(F.element_at(cmap, F.col("term")))), stats,
-    ).withColumn(
-        "term_score",
-        F.when(
-            F.col("role") != "not",
-            F.col("boost") * bm25_term_score(
-                F.col("tf"), F.col("dl"), F.col("df"),
-                F.col("n_docs"), F.col("avgdl"), cfg),
-        ).otherwise(F.lit(0.0)),
-    )
-    agg = scored.groupBy("query_id", "doc_id").agg(
-        F.sum("term_score").alias("score"),
-        F.count(F.when(F.col("role") == "must", F.col("clause_id")))
-        .alias("nm"),
-        F.count(F.when(F.col("role") == "should", F.col("clause_id")))
-        .alias("ns"),
-        F.max((F.col("role") == "not").cast("int")).alias("has_not"),
-        F.max("n_must").alias("n_must"), F.max("msm").alias("msm"),
-    )
-    keep = (
-        agg.filter((F.col("nm") == F.col("n_must"))
-                   & (F.col("ns") >= F.col("msm"))
-                   & (F.col("has_not") == 0))
-        .select("query_id", "doc_id", "score")
-    )
-    return topk(keep, k)
+        src = (f"(SELECT doc_id, term, tf, dl, count(1) OVER (PARTITION BY "
+               f"term) AS df FROM {tf} WHERE term IN ({terms})) t")
+        df, hints = "t.df", []
+    else:
+        src = (f"(SELECT * FROM {tf} WHERE term IN ({terms})) t JOIN "
+               f"(SELECT term, df FROM {dfs} WHERE term IN ({terms})) d "
+               f"ON t.term = d.term")
+        df, hints = "d.df", ["BROADCAST(d)"]
+    if stats is not None:
+        src += f" CROSS JOIN {stats} s"
+        hints.append("BROADCAST(s)")
+    hint = f"/*+ {', '.join(hints)} */ " if hints else ""
+    score = bm25_term_sql(cfg, "t.tf", "t.dl", df, n_docs, avgdl)
+    return (
+        "SELECT query_id, doc_id, score FROM (SELECT query_id, doc_id, "
+        "sum(term_score) AS score, "
+        "count(CASE WHEN role = 'must' THEN clause_id END) AS nm, "
+        "count(CASE WHEN role = 'should' THEN clause_id END) AS ns, "
+        "max(CAST(role = 'not' AS INT)) AS has_not, "
+        "max(n_must) AS n_must, max(msm) AS msm FROM ("
+        f"SELECT {hint}t.doc_id, c.query_id, c.clause_id, c.role, "
+        "c.n_must, c.msm, CASE WHEN c.role <> 'not' "
+        f"THEN c.boost * ({score}) ELSE 0.0D END AS term_score "
+        f"FROM {src} LATERAL VIEW inline(element_at(from_json({clauses}, "
+        f"'{CLAUSES_DDL}'), t.term)) c) GROUP BY query_id, doc_id) "
+        "WHERE nm = n_must AND ns >= msm AND has_not = 0")
 
 
 def multi_match_topk(
@@ -737,8 +785,7 @@ def _cross_fields_topk(docs, field_boosts, qt, cfg, k,
             .join(F.broadcast(stats)))
     scored = cand.withColumn(
         "term_score",
-        bm25_term_score(F.col("tf"), F.col("dl"), F.col("df"),
-                        F.col("n_docs"), F.col("avgdl"), cfg))
+        bm25_term_score("tf", "dl", "df", "n_docs", "avgdl", cfg))
     out = scored.groupBy("query_id", "doc_id").agg(
         F.sum("term_score").alias("score"))
     return topk(out, k or cfg.k)

@@ -87,8 +87,7 @@ def federated_scores(tf: DataFrame, qterms: DataFrame, dfs: DataFrame,
         raise ValueError(f"unknown search mode: {mode!r}")
     return (cand.withColumn(
         "term_score",
-        bm25_term_score(F.col("tf"), F.col("dl"), F.col("df"),
-                        F.col("n_docs"), F.col("avgdl"), cfg))
+        bm25_term_score("tf", "dl", "df", "n_docs", "avgdl", cfg))
         .groupBy("query_id", INDEX_COL, "doc_id")
         .agg(F.sum("term_score").alias("score")))
 

@@ -51,6 +51,7 @@ Scale design (the part that must survive 10^12 files / 1000 executors):
 
 from __future__ import annotations
 
+import json
 import os
 import shutil
 import time
@@ -80,6 +81,48 @@ POSTINGS_SCHEMA = ("shard int, term string, doc_id long, tf long, dl long, "
 TERM_DF_SCHEMA = "term string, df long"
 
 
+def _spark_hash_int(value: int, seed: int = 42) -> int:
+    """Spark's ``hash()`` of one INT value: Murmur3 x86_32 with seed 42,
+    the hash ``repartition(n, col)`` places rows by."""
+    mask = 0xFFFFFFFF
+
+    def rotl(x: int, r: int) -> int:
+        return ((x << r) | (x >> (32 - r))) & mask
+
+    k = rotl((value & mask) * 0xCC9E2D51 & mask, 15) * 0x1B873593 & mask
+    h = (rotl((seed & mask) ^ k, 13) * 5 + 0xE6546B64) & mask
+    h ^= 4
+    h = (h ^ (h >> 16)) * 0x85EBCA6B & mask
+    h = (h ^ (h >> 13)) * 0xC2B2AE35 & mask
+    h ^= h >> 16
+    return h - (1 << 32) if h >> 31 else h
+
+
+def shard_partition_keys(shards: list[int]) -> dict[int, int]:
+    """shard → an INT key that hash partitioning into ``len(shards)``
+    partitions sends to that shard's own partition (its rank in sorted
+    order). Found on the driver by trying keys 0, 1, 2, …: no sample, no
+    job. Hashing the shard ids themselves collides (8 shards land in 5
+    partitions, 16 in 10)."""
+    n = len(shards)
+    by_partition: dict[int, int] = {}
+    key = 0
+    while len(by_partition) < n:
+        by_partition.setdefault(_spark_hash_int(key) % n, key)
+        key += 1
+    return {s: by_partition[i] for i, s in enumerate(sorted(shards))}
+
+
+def repartition_by_shard(df: DataFrame, shards: list[int]) -> DataFrame:
+    """``df`` in ``len(shards)`` partitions with each shard's rows alone
+    in its own one, so a partitioned write runs one task per shard."""
+    keys = F.from_json(F.lit(json.dumps(
+        {str(s): k for s, k in shard_partition_keys(shards).items()})),
+        "map<string, int>")
+    return df.repartition(len(shards), F.try_element_at(
+        keys, F.col("shard").cast("string")))
+
+
 def write_postings(tf: DataFrame, shards: list[int], path: str, *,
                    positions: bool) -> None:
     """The one postings writer: (shard, doc_id, term, tf, dl[, positions])
@@ -98,7 +141,7 @@ def write_postings(tf: DataFrame, shards: list[int], path: str, *,
             F.col("dl").cast("long")]
     if positions:
         cols.append(F.col("positions").cast("array<int>"))
-    (tf.select(*cols).repartition(len(shards), "shard")
+    (repartition_by_shard(tf.select(*cols), shards)
      .sortWithinPartitions("shard", "term", "doc_id")
      .write.mode("overwrite")
      .option("partitionOverwriteMode", "dynamic")
@@ -256,7 +299,7 @@ def build_index(
                     F.sum((F.col("shard") == s).cast("long")).alias(f"s{s}")
                     for s in range(cfg.n_shards)
                 ])
-            (to_write.repartition(cfg.n_shards, "shard")
+            (repartition_by_shard(to_write, list(range(cfg.n_shards)))
              .write.mode("overwrite").partitionBy("shard")
              .parquet(os.path.join(out_dir, "docs")))
             _mark("docs_write")

@@ -6146,6 +6146,7 @@ def q_explain_search(spark: SparkSession, sf_dir: str) -> DataFrame:
     from dp_search_data_importer_spark.operators.bm25 import (
         bm25_term_score,
         query_terms,
+        sql_number,
     )
     from dp_search_data_importer_spark.session import local_df
 
@@ -6177,8 +6178,9 @@ def q_explain_search(spark: SparkSession, sf_dir: str) -> DataFrame:
                     F.round(idf, 6).alias("idf"),
                     F.round(tf_norm, 6).alias("tf_norm"),
                     F.round(bm25_term_score(
-                        F.col("tf"), F.col("dl"), F.col("df"),
-                        n_docs, avgdl, cfg), 6).alias("contribution")))
+                        "tf", "dl", "df", sql_number(int(stats["n_docs"])),
+                        sql_number(float(stats["avgdl"])), cfg),
+                        6).alias("contribution")))
 
 
 EXT_QUERIES["explain_search"] = q_explain_search

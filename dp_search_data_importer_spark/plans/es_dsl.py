@@ -226,17 +226,30 @@ class EsSearchPlanner:
                      min_match: int | None = None) -> DataFrame:
         """BM25 OR-score a literal term set against one field;
         ``min_match`` gates on distinct matched terms (same single agg —
-        the ES match operator=and / minimum_should_match path)."""
+        the ES match operator=and / minimum_should_match path). The tf
+        rows are term-pruned below their aggregation, df is a
+        ``groupBy("term")`` count over that pruned tf (partial count
+        before its exchange, no term-keyed window), and (n_docs, avgdl)
+        are literals from the memoized :meth:`stats_row`."""
         from dp_search_data_importer_spark.operators.bm25 import bm25_scores
+        from dp_search_data_importer_spark.operators.postings import (
+            doc_freqs,
+            term_freqs_sql,
+        )
         from dp_search_data_importer_spark.session import local_df
 
         if not terms:
             return local_df(self.spark, [], "doc_id long, score double")
+        terms = sorted(set(terms))
         qid = self._next_qid()
-        qt = local_df(self.spark, [(qid, t) for t in sorted(set(terms))],
+        qt = local_df(self.spark, [(qid, t) for t in terms],
                       "query_id long, term string")
-        s = bm25_scores(self.tf(field), qt, self.dfs(field),
-                        self.stats(field), self.cfg,
+        tf = term_freqs_sql(self.docs, id_col=self.id_col, text_col=field,
+                            terms=terms)
+        n_docs, avgdl = self.stats_row(field)
+        # an empty table's avgdl is null, and it has no tf rows to score
+        s = bm25_scores(tf, qt, doc_freqs(tf),
+                        {"n_docs": n_docs, "avgdl": avgdl or 0.0}, self.cfg,
                         min_match=min_match).drop("query_id")
         if boost != 1.0:
             s = s.withColumn("score", F.col("score") * F.lit(float(boost)))
@@ -3458,6 +3471,53 @@ def _meta_predicate(node: dict):
                      "the stored index")
 
 
+def _meta_filter(nodes: list[dict]):
+    """Filter-context leaves → one ``plans.query.SqlFilter`` over the
+    index ``docs/`` columns: the semantics of :func:`_meta_predicate` as
+    SQL text, ANDed, with every value a named parameter marker (``f0``,
+    ``f1``, …) and every field a quoted identifier — nothing from the
+    request is spliced into the text."""
+    from dp_search_data_importer_spark.plans.query import SqlFilter
+
+    args: dict = {}
+
+    def val(v) -> str:
+        name = f"f{len(args)}"
+        args[name] = v
+        return f":{name}"
+
+    def col(field) -> str:
+        return "`" + str(field).replace("`", "``") + "`"
+
+    def pred(node: dict) -> str:
+        (kind, spec), = node.items()
+        if kind == "__not__":
+            return f"NOT ({pred(spec)})"
+        if kind == "range":
+            (field, params), = [(k, v) for k, v in spec.items()
+                                if k != "boost"]
+            return " AND ".join(["TRUE", *[
+                f"{col(field)} {sym} {val(params[op])}"
+                for op, sym in (("gte", ">="), ("gt", ">"), ("lte", "<="),
+                                ("lt", "<")) if op in params]])
+        if kind == "term":
+            (field, v), = [(k, v) for k, v in spec.items() if k != "boost"]
+            if isinstance(v, dict):
+                v = v["value"]
+            return f"{col(field)} = {val(v)}"
+        if kind == "terms":
+            (field, vs), = [(k, v) for k, v in spec.items() if k != "boost"]
+            vs = list(vs)
+            return (f"{col(field)} IN ({', '.join(val(v) for v in vs)})"
+                    if vs else "FALSE")
+        if kind == "exists":
+            return f"{col(spec['field'])} IS NOT NULL"
+        raise EsDslError(f"unsupported filter-context query {kind!r} "
+                         "against the stored index")
+
+    return SqlFilter(" AND ".join(f"({pred(n)})" for n in nodes), args)
+
+
 _META_LEAF_KINDS = ("range", "terms", "exists", "term")
 
 
@@ -3548,7 +3608,10 @@ def search_indexed(spark: SparkSession, out_dir: str, body: dict,
     ``out_dir`` — the scale path: candidates come from term-pruned
     postings rows (``plans/query``), never a corpus scan, and the
     analyzer follows the index's recorded ``code_aware`` flag (analyzer
-    symmetry).
+    symmetry). The match, bool, filter and expansion routes each compile
+    to one parameterized SQL statement (``plans/query``); request values,
+    filter values included (:func:`_meta_filter`), reach it as parameter
+    markers, never as SQL text.
 
     Supported subset (each routes to the corresponding ``plans/query``
     entry): ``match`` (OR), top-level ``prefix`` / ``fuzzy``
@@ -3568,6 +3631,7 @@ def search_indexed(spark: SparkSession, out_dir: str, body: dict,
     ``EsDslError``: the dataflow planner (:class:`EsSearchPlanner`) is
     the semantics reference with full coverage; this is its stored-index
     twin for the operators the index accelerates."""
+    from dp_search_data_importer_spark.checkpoint import read_stats_json
     from dp_search_data_importer_spark.plans import query as q
 
     cfg = cfg or EngineConfig()
@@ -3711,9 +3775,6 @@ def search_indexed(spark: SparkSession, out_dir: str, body: dict,
         # term-pruned scan phrase queries use (load_positions),
         # the same batch fold as the dataflow planner — the span tree
         # parses through a docs-free planner shim (pure driver-side)
-        from dp_search_data_importer_spark.checkpoint import (
-            read_stats_json,
-        )
         from dp_search_data_importer_spark.operators.phrase import (
             load_positions,
             phrase_score_batch,
@@ -3765,10 +3826,7 @@ def search_indexed(spark: SparkSession, out_dir: str, body: dict,
             stats["n_docs"], stats["avgdl"], cfg), size)
     elif kind == "bool":
         filters = _as_list(spec.get("filter", []))
-        pred = None
-        for f_node in filters:
-            p = _meta_predicate(f_node)
-            pred = p if pred is None else (pred & p)
+        pred = _meta_filter(filters) if filters else None
         must = _as_list(spec.get("must", []))
         simple = (len(must) == 1 and not spec.get("should")
                   and not spec.get("must_not")
@@ -3803,7 +3861,8 @@ def search_indexed(spark: SparkSession, out_dir: str, body: dict,
         # code path for both planners
         hits_all = hits_full if hits_full is not None else q._match_hits(
             spark, out_dir, match_queries(spec)).select("doc_id")
-        docs_meta = q.load_docs(spark, out_dir)
+        docs_meta = spark.table(q.index_view(
+            spark, out_dir, "docs", read_stats_json(out_dir)))
         shim = EsSearchPlanner(spark, docs_meta, cfg)
         aggregations = shim.assemble_aggs(aggs, hits_all)
     return SearchResult(hits=hits, aggregations=aggregations,

@@ -1,21 +1,41 @@
 """Query engine over the built index (SURVEY.md §3.1 query lifecycle).
 
-Every stored path reads postings through ONE reader, :func:`load_blocks`:
+Every stored read goes through ONE postings reader, :func:`load_blocks`:
 a parquet scan of ``postings/`` rows (term, doc_id, tf, dl[, positions])
-with the known schema and ``term IN (query terms)`` pushed down
-(PushedFilters). Rows are (term, doc_id)-sorted within each shard's file,
-so row-group and page min/max statistics on ``term`` skip what the query
-does not ask for; the shard-dir layout prunes nothing for queries (all
-shards hold all terms) but gives the fan-out axis. Scoring is Catalyst
-BM25 expressions over those rows → windowed top-k: no Python worker runs
-on any stored read path. ``docs/`` is touched only to resolve the final
-≤ k·|queries| winners back to (repo, path, commit) — never joined against
-postings-sized data.
+with the known schema. Rows are (term, doc_id)-sorted within each shard's
+file, so row-group and page min/max statistics on ``term`` skip what the
+query does not ask for; the shard-dir layout prunes nothing for queries
+(all shards hold all terms) but gives the fan-out axis.
+
+Each stored request compiles to ONE parameterized Spark SQL statement
+(:class:`_Statement`): the entry points ``search_indexed`` reaches
+(:func:`exact_topk`, :func:`filtered_topk`, :func:`bool_topk_indexed`,
+the prefix/wildcard/regexp/fuzzy expansions and :func:`_match_hits`)
+write SQL text over the index's ``postings``, ``term_df`` and ``docs``
+readers, which are registered as temp views once per index ``version``
+under one view name per index path (a new version replaces the view set,
+so the catalog stays bounded across an ingest stream). No request value
+is spliced into the text: terms, patterns, filter values, cursors and
+bool clause maps (JSON) are named parameter markers, bound as literals
+before optimization, so ``term IN (:t0, …)`` still pushes into both
+parquet scans (PushedFilters). Building a plan is then one parse and
+one analysis on the JVM instead of ~20 eagerly analyzed DataFrame calls.
+The BM25 term formula and the round-then-rank top-k are SQL text shared
+with the DataFrame operators (``operators/bm25.py``). Scoring is Catalyst
+expressions over the pruned rows → windowed top-k: no Python worker runs
+on any stored read path. ``docs/`` is touched only for filter context and
+to resolve the final ≤ k·|queries| winners back to (repo, path, commit) —
+never joined against postings-sized data.
 """
 
 from __future__ import annotations
 
+import hashlib
+import json
 import os
+import threading
+import weakref
+from typing import NamedTuple
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -23,9 +43,12 @@ from pyspark.sql import functions as F
 from dp_search_data_importer_spark.checkpoint import read_stats_json
 from dp_search_data_importer_spark.config import EngineConfig
 from dp_search_data_importer_spark.operators.bm25 import (
-    bm25_scores,
-    topk,
-    with_query_ids,
+    bm25_term_sql,
+    bool_clauses,
+    bool_scores_sql,
+    cursor_rows,
+    sql_number,
+    topk_sql,
 )
 from dp_search_data_importer_spark.plans.build_index import (
     POSTINGS_SCHEMA,
@@ -97,10 +120,10 @@ def _query_term_pairs(queries: Queries,
     ``phrase_topk``): the query batch is a driver-sized frame by contract
     (interactive query sets), so collecting it and tokenizing in Python
     replaces a Spark job (explode+distinct+collect) per request with
-    driver work. The pairs enter the plan as literals: the term list
-    pushes into the postings and term_df scans, and query ids attach
-    through :func:`operators.bm25.with_query_ids`, so no query-term table
-    is broadcast."""
+    driver work. The pairs enter the statement as parameter markers: the
+    term list pushes into the postings and term_df scans, and query ids
+    attach by a term → query ids map, so no query-term table is
+    broadcast."""
     from dp_search_data_importer_spark.functions.tokenize import (
         _code_tokens_py,
         _simple_tokens_py,
@@ -113,36 +136,153 @@ def _query_term_pairs(queries: Queries,
                    for t in tok(text or "")})
 
 
-def _candidates(spark: SparkSession, out_dir: str, terms: list[str],
-                stats: dict, doc_filter=None,
-                broadcast_limit: int = 2_000_000) -> DataFrame:
-    """(doc_id, term, tf, dl) postings of ``terms``, semi-joined
-    to the docs matching ``doc_filter`` when one is given. The broadcast
-    hint is gated on size: |allowed| ≤ n_docs, so a small corpus needs no
-    count job at all; only a big corpus pays one count over the pushed
-    predicate on the content-free docs table."""
-    tf = decompress_blocks(load_blocks(spark, out_dir, terms))
+# ---------------------------------------------------------------------------
+# the compiled statement
+
+# session → {(index path, table): the reader frame its view holds}: one
+# entry per index path and table
+_VIEWS: weakref.WeakKeyDictionary = weakref.WeakKeyDictionary()
+_VIEWS_LOCK = threading.Lock()
+_READERS = {"postings": load_blocks, "term_df": load_term_df,
+            "docs": load_docs}
+
+
+def index_view(spark: SparkSession, out_dir: str, table: str,
+               stats: dict) -> str:
+    """The temp view over the ``table`` reader (postings, term_df, docs)
+    of the index at ``out_dir``: one name per index path. The reader is a
+    :func:`cached_plan` keyed on the index ``version``, and the view is
+    (re)registered only when that cached reader changes — once per
+    version, while it stays cached — so a new version replaces the view,
+    and plans built on the old one keep their own analyzed reader."""
+    path = os.path.abspath(out_dir)
+    name = (f"fts_{hashlib.sha1(path.encode()).hexdigest()[:16]}"
+            f"_{table}")
+    reader = cached_plan(spark, ("index_view", path, table,
+                                 stats["version"]),
+                         lambda: _READERS[table](spark, out_dir))
+    with _VIEWS_LOCK:
+        views = _VIEWS.setdefault(spark, {})
+        if views.get((path, table)) is not reader:
+            reader.createOrReplaceTempView(name)
+            views[(path, table)] = reader
+    return name
+
+
+class SqlFilter(NamedTuple):
+    """A predicate over the stored ``docs`` columns as SQL text whose
+    values are the named parameter markers of ``args`` (ES filter context
+    on the stored path; marker names start with ``f``)."""
+    sql: str
+    args: dict
+
+
+class _Statement:
+    """One stored request's parameters: ``bind`` names a value as a
+    marker, and ``run`` hands the finished SQL text and the markers to
+    ``spark.sql`` in one call."""
+
+    def __init__(self, spark: SparkSession):
+        self.spark = spark
+        self.args: dict = {}
+        self.frames: dict[str, DataFrame] = {}
+
+    def bind(self, prefix: str, value) -> str:
+        name = f"{prefix}{len(self.args)}"
+        self.args[name] = value
+        return f":{name}"
+
+    def terms(self, terms: list[str]) -> str:
+        return ", ".join(self.bind("t", t) for t in terms)
+
+    def run(self, text: str) -> DataFrame:
+        return self.spark.sql(text, self.args, **self.frames)
+
+
+def _in(col: str, markers: str) -> str:
+    return f"{col} IN ({markers})" if markers else "FALSE"
+
+
+def _query_id_sql(st: _Statement, pairs: list[tuple[int, str]],
+                  term: str) -> str:
+    """query_id of a ``term`` row: one query's id, or a batch's fan-out
+    ``explode(<term → query ids map>[term])``."""
+    qids = sorted({q for q, _ in pairs})
+    if len(qids) <= 1:
+        return (f"CAST({st.bind('q', qids[0])} AS BIGINT)" if qids
+                else "CAST(NULL AS BIGINT)")
+    by_term: dict[str, list[int]] = {}
+    for q, t in sorted(pairs):
+        by_term.setdefault(t, []).append(int(q))
+    qmap = st.bind("qids", json.dumps(by_term))
+    return (f"explode(element_at(from_json({qmap}, "
+            f"'map<string, array<bigint>>'), {term}))")
+
+
+def _postings_sql(st: _Statement, out_dir: str, stats: dict,
+                  doc_filter=None, broadcast_limit: int = 2_000_000) -> str:
+    """The postings relation of a statement: the index view, semi-joined
+    to the docs matching ``doc_filter`` when one is given — a
+    :class:`SqlFilter` over the docs view, or a Column filter entering as
+    a frame. The broadcast hint is gated on size: |allowed| ≤ n_docs, so
+    a small corpus needs no count job at all; only a big corpus pays one
+    count over the pushed predicate on the content-free docs table."""
+    postings = index_view(st.spark, out_dir, "postings", stats)
     if doc_filter is None:
-        return tf
-    allowed = load_docs(spark, out_dir).filter(doc_filter).select("doc_id")
-    small = stats.get("n_docs", 0) <= broadcast_limit
-    if not small:
-        small = allowed.count() <= broadcast_limit
-    return tf.join(F.broadcast(allowed) if small else allowed, "doc_id",
-                   "left_semi")
+        return postings
+    if isinstance(doc_filter, SqlFilter):
+        st.args.update(doc_filter.args)
+        allowed = (f"(SELECT doc_id FROM "
+                   f"{index_view(st.spark, out_dir, 'docs', stats)} "
+                   f"WHERE {doc_filter.sql})")
+    else:
+        st.frames["allowed"] = load_docs(st.spark, out_dir) \
+            .filter(doc_filter).select("doc_id")
+        allowed = "{allowed}"
+    small = stats.get("n_docs", 0) <= broadcast_limit or st.run(
+        f"SELECT count(1) FROM {allowed}").collect()[0][0] <= broadcast_limit
+    hint = "/*+ BROADCAST(a) */ " if small else ""
+    return (f"(SELECT {hint}p.* FROM {postings} p LEFT SEMI JOIN {allowed} "
+            f"a ON p.doc_id = a.doc_id)")
 
 
-def _indexed_scores(spark: SparkSession, out_dir: str,
-                    pairs: list[tuple[int, str]], stats: dict,
-                    cfg: EngineConfig, **filter_kw) -> DataFrame:
-    """BM25 (query_id, doc_id, score) over the stored index for driver-side
-    (query_id, term) pairs: the term set pushes into the postings and
-    term_df scans, the df rows are the one broadcast, and the query terms
-    and corpus stats are plan literals. ``filter_kw`` goes to
-    :func:`_candidates`."""
-    terms = sorted({t for _, t in pairs})
-    return bm25_scores(_candidates(spark, out_dir, terms, stats, **filter_kw),
-                       pairs, load_term_df(spark, out_dir, terms), stats, cfg)
+def _scores_sql(st: _Statement, out_dir: str, stats: dict,
+                pairs: list[tuple[int, str]], cfg: EngineConfig,
+                postings: str | None = None) -> str:
+    """SQL text of BM25 (query_id, doc_id, score) over the stored index
+    for driver-side (query_id, term) pairs: the term markers push into
+    the postings and term_df scans, the df rows are the one broadcast,
+    and the corpus stats are literals. ``postings`` is the candidate
+    relation (:func:`_postings_sql`; default: the whole postings view)."""
+    postings = postings or index_view(st.spark, out_dir, "postings", stats)
+    tin = st.terms(sorted({t for _, t in pairs}))
+    score = bm25_term_sql(cfg, "p.tf", "p.dl", "d.df",
+                          sql_number(int(stats["n_docs"])),
+                          sql_number(float(stats["avgdl"])))
+    return (
+        f"SELECT query_id, doc_id, sum(term_score) AS score FROM (SELECT "
+        f"/*+ BROADCAST(d) */ p.doc_id, "
+        f"{_query_id_sql(st, pairs, 'p.term')} AS query_id, "
+        f"{score} AS term_score FROM {postings} p "
+        f"JOIN (SELECT term, df FROM "
+        f"{index_view(st.spark, out_dir, 'term_df', stats)} "
+        f"WHERE {_in('term', tin)}) d ON p.term = d.term "
+        f"WHERE {_in('p.term', tin)}) GROUP BY query_id, doc_id")
+
+
+def _topk_statement(spark: SparkSession, out_dir: str, stats: dict,
+                    pairs: list[tuple[int, str]], cfg: EngineConfig,
+                    k: int, after: dict | None = None, doc_filter=None,
+                    broadcast_limit: int = 2_000_000) -> DataFrame:
+    """The statement behind the OR-scored entry points: BM25 scores →
+    round-then-rank top-k, with an optional cursor and filter."""
+    st = _Statement(spark)
+    scores = _scores_sql(st, out_dir, stats, pairs, cfg, _postings_sql(
+        st, out_dir, stats, doc_filter, broadcast_limit))
+    cursor = (st.bind("after", json.dumps(cursor_rows(after)))
+              if after else None)
+    return st.run(topk_sql(scores, st.bind("k", int(k)),
+                           cursor_json=cursor))
 
 
 def exact_topk(spark: SparkSession, out_dir: str, queries: Queries,
@@ -160,8 +300,7 @@ def exact_topk(spark: SparkSession, out_dir: str, queries: Queries,
     pairs = _query_term_pairs(queries, stats.get("code_aware", False))
 
     def build():
-        return topk(_indexed_scores(spark, out_dir, pairs, stats, cfg), k,
-                    after=after)
+        return _topk_statement(spark, out_dir, stats, pairs, cfg, k, after)
 
     return cached_plan(spark, ("exact_topk", out_dir, stats["version"],
                                tuple(pairs), repr(cfg), k,
@@ -191,25 +330,26 @@ def expand_terms(spark: SparkSession, out_dir: str, pattern: str,
     )
 
     recover_for_read(out_dir)  # never expand against a mid-commit term_df
-    tdf = load_term_df(spark, out_dir)
+    st = _Statement(spark)
     if mode == "prefix":
-        hits = tdf.filter(F.col("term").startswith(pattern))
+        pred = f"startswith(term, {st.bind('p', pattern)})"
     elif mode == "fuzzy":
-        hits = tdf.filter(
-            (F.length("term") >= F.lit(len(pattern) - max_edits))
-            & (F.length("term") <= F.lit(len(pattern) + max_edits))
-            & (F.levenshtein(F.col("term"), F.lit(pattern)) <= max_edits)
-        )
+        pred = (f"length(term) >= {st.bind('lo', len(pattern) - max_edits)}"
+                f" AND length(term) <= {st.bind('hi', len(pattern) + max_edits)}"
+                f" AND levenshtein(term, {st.bind('p', pattern)})"
+                f" <= {st.bind('e', max_edits)}")
     elif mode == "wildcard":
         # ES wildcard query: * = any run, ? = one char, anchored both ends
-        hits = tdf.filter(F.col("term").rlike(wildcard_to_regex(pattern)))
+        pred = f"term RLIKE {st.bind('p', wildcard_to_regex(pattern))}"
     elif mode == "regexp":
         # ES regexp query is anchored (matches the WHOLE term)
-        hits = tdf.filter(F.col("term").rlike(f"^(?:{pattern})$"))
+        pred = f"term RLIKE {st.bind('p', f'^(?:{pattern})$')}"
     else:  # pragma: no cover
         raise ValueError(f"unknown expansion mode {mode!r}")
-    rows = (hits.orderBy(F.col("df").desc(), F.col("term").asc())
-            .limit(max_expansions).collect())
+    tdf = index_view(spark, out_dir, "term_df", read_stats_json(out_dir))
+    rows = st.run(f"SELECT term FROM {tdf} WHERE {pred} "
+                  f"ORDER BY df DESC, term ASC "
+                  f"LIMIT {st.bind('n', int(max_expansions))}").collect()
     return [r["term"] for r in rows]
 
 
@@ -238,9 +378,8 @@ def _expanded_topk(spark: SparkSession, out_dir: str, tokens: list[str],
         t for tok in tokens
         for t in expand_terms(spark, out_dir, tok, mode, max_edits)
     })
-    scores = _indexed_scores(spark, out_dir, [(1, t) for t in terms],
-                             read_stats_json(out_dir), cfg)
-    return topk(scores, k or cfg.k)
+    return _topk_statement(spark, out_dir, read_stats_json(out_dir),
+                           [(1, t) for t in terms], cfg, k or cfg.k)
 
 
 def expand_synonyms(tokens: list[str],
@@ -278,8 +417,7 @@ def synonym_topk(spark: SparkSession, out_dir: str,
                                         stats.get("code_aware", False))
         for term in expand_synonyms([t], synonyms)
     })
-    return topk(_indexed_scores(spark, out_dir, pairs, stats, cfg),
-                k or cfg.k)
+    return _topk_statement(spark, out_dir, stats, pairs, cfg, k or cfg.k)
 
 
 def prefix_topk(spark: SparkSession, out_dir: str, prefixes: list[str],
@@ -333,19 +471,21 @@ def bool_topk_indexed(spark: SparkSession, out_dir: str, specs,
     composed exactly like :func:`filtered_topk` (size-gated broadcast
     semi-join before the agg), completing the full ES bool surface
     (must + should/msm + must_not + filter) in one call."""
-    from dp_search_data_importer_spark.operators.bm25 import bool_topk
-
     cfg = cfg or EngineConfig()
     stats = read_stats_json(out_dir)
     terms = sorted({
         t for s in specs for t in (s.must + s.should + s.must_not)
     })
-    tf = _candidates(spark, out_dir, terms, stats, doc_filter,
-                     broadcast_limit)
+    st = _Statement(spark)
+    tf = _postings_sql(st, out_dir, stats, doc_filter, broadcast_limit)
     # filter context is known HERE, so the ES msm default resolves here:
     # a should-only spec under a filter defaults to msm=0 (ES 7.10), not 1
-    return bool_topk(tf, specs, load_term_df(spark, out_dir, terms), stats,
-                     cfg, k or cfg.k, has_filter=doc_filter is not None)
+    clauses = bool_clauses(specs, has_filter=doc_filter is not None)
+    scores = bool_scores_sql(
+        cfg, tf, index_view(spark, out_dir, "term_df", stats),
+        st.terms(terms), st.bind("clauses", json.dumps(clauses)),
+        sql_number(int(stats["n_docs"])), sql_number(float(stats["avgdl"])))
+    return st.run(topk_sql(scores, st.bind("k", int(k or cfg.k))))
 
 
 def resolve_docs(spark: SparkSession, out_dir: str, results: DataFrame) -> DataFrame:
@@ -398,20 +538,18 @@ def fielded_topk(spark: SparkSession, out_dir: str, queries: Queries,
     cfg = cfg or EngineConfig()
     with open(os.path.join(out_dir, "fields.json")) as f:
         boosts = json.load(f)["boosts"]
+    st = _Statement(spark)
     per_field = []
     for field, boost in boosts.items():
         fdir = os.path.join(out_dir, "fields", field)
         stats = read_stats_json(fdir)
         pairs = _query_term_pairs(queries, stats.get("code_aware", False))
-        s = _indexed_scores(spark, fdir, pairs, stats, cfg).withColumn(
-            "score", F.col("score") * F.lit(float(boost)))
-        per_field.append(s)
-    union = per_field[0]
-    for s in per_field[1:]:
-        union = union.unionByName(s)
-    summed = union.groupBy("query_id", "doc_id").agg(
-        F.sum("score").alias("score"))
-    return topk(summed, k or cfg.k)
+        per_field.append(
+            f"SELECT query_id, doc_id, score * {sql_number(float(boost))} "
+            f"AS score FROM ({_scores_sql(st, fdir, stats, pairs, cfg)})")
+    summed = (f"SELECT query_id, doc_id, sum(score) AS score FROM "
+              f"({' UNION ALL '.join(per_field)}) GROUP BY query_id, doc_id")
+    return st.run(topk_sql(summed, st.bind("k", int(k or cfg.k))))
 
 
 def filtered_topk(spark: SparkSession, out_dir: str, queries: Queries,
@@ -436,9 +574,9 @@ def filtered_topk(spark: SparkSession, out_dir: str, queries: Queries,
     cfg = cfg or EngineConfig()
     stats = read_stats_json(out_dir)
     pairs = _query_term_pairs(queries, stats.get("code_aware", False))
-    return topk(_indexed_scores(spark, out_dir, pairs, stats, cfg,
-                                doc_filter=doc_filter,
-                                broadcast_limit=broadcast_limit), k or cfg.k)
+    return _topk_statement(spark, out_dir, stats, pairs, cfg, k or cfg.k,
+                           doc_filter=doc_filter,
+                           broadcast_limit=broadcast_limit)
 
 
 def _match_hits(spark: SparkSession, out_dir: str,
@@ -449,9 +587,13 @@ def _match_hits(spark: SparkSession, out_dir: str,
     query is tokenized on the driver, like every other stored path."""
     stats = read_stats_json(out_dir)
     pairs = _query_term_pairs(queries, stats.get("code_aware", False))
-    tf = _candidates(spark, out_dir, sorted({t for _, t in pairs}), stats)
-    return (with_query_ids(tf, pairs)
-            .select("query_id", "doc_id").distinct())
+    st = _Statement(spark)
+    tin = st.terms(sorted({t for _, t in pairs}))
+    return st.run(
+        f"SELECT DISTINCT query_id, doc_id FROM (SELECT doc_id, "
+        f"{_query_id_sql(st, pairs, 'term')} AS query_id FROM "
+        f"{index_view(spark, out_dir, 'postings', stats)} "
+        f"WHERE {_in('term', tin)})")
 
 
 def sorted_topk(spark: SparkSession, out_dir: str, queries: Queries,
@@ -558,6 +700,7 @@ def explain_score(spark: SparkSession, out_dir: str, text: str,
                     F.round(idf, 6).alias("idf"),
                     F.round(tf_norm, 6).alias("tf_norm"),
                     F.round(bm25_term_score(
-                        F.col("tf"), F.col("dl"), F.col("df"),
-                        n_docs, avgdl, cfg), 6).alias("contribution"))
+                        "tf", "dl", "df", sql_number(int(stats["n_docs"])),
+                        sql_number(float(stats["avgdl"])), cfg),
+                        6).alias("contribution"))
             .orderBy("term"))

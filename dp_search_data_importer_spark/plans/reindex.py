@@ -39,7 +39,10 @@ from dp_search_data_importer_spark.checkpoint import (
 )
 from dp_search_data_importer_spark.operators.postings import hot_terms
 from dp_search_data_importer_spark.config import EngineConfig
-from dp_search_data_importer_spark.plans.build_index import write_postings
+from dp_search_data_importer_spark.plans.build_index import (
+    repartition_by_shard,
+    write_postings,
+)
 from dp_search_data_importer_spark.plans.query import (
     decompress_blocks,
     load_blocks,
@@ -109,7 +112,7 @@ def reindex(spark: SparkSession, src_dir: str, dst_dir: str, *,
 
     docs_out = docs_store.withColumn(
         "shard", F.pmod(F.col("doc_id"), F.lit(n_new)).cast("int"))
-    (docs_out.repartition(n_new, "shard")
+    (repartition_by_shard(docs_out, list(range(n_new)))
      .write.mode("overwrite").partitionBy("shard")
      .parquet(os.path.join(dst_dir, "docs")))
     term_df.write.mode("overwrite").parquet(

@@ -62,6 +62,7 @@ from dp_search_data_importer_spark.checkpoint import (
 from dp_search_data_importer_spark.operators.ingest import normalize_repo_files
 from dp_search_data_importer_spark.plans.build_index import (
     POSTINGS_SCHEMA,
+    repartition_by_shard,
     signed_counts,
     tokenize_docs,
     write_postings,
@@ -255,7 +256,7 @@ def _stage_docs(docs: DataFrame, out_dir: str,
     doc count, observed on the write (a shard left with no docs stages no
     dir and counts 0)."""
     obs = Observation()
-    (docs.repartition(len(affected), "shard")
+    (repartition_by_shard(docs, affected)
      .observe(obs, *[F.sum((F.col("shard") == s).cast("long"))
                      .alias(f"s{s}") for s in affected])
      .write.mode("overwrite").partitionBy("shard")
@@ -685,7 +686,7 @@ def update_by_query(spark: SparkSession, out_dir: str, text: str,
                 col, F.when(F.col("_hit") == 1,
                             new_col.cast(dict(upd.dtypes)[col]))
                 .otherwise(F.col(col)))
-        (upd.drop("_hit").repartition(len(affected), "shard")
+        (repartition_by_shard(upd.drop("_hit"), affected)
          .write.mode("overwrite").partitionBy("shard")
          .parquet(os.path.join(stage, "docs")))
 

@@ -2438,3 +2438,52 @@ def test_indexed_clauses_use_index_analyzer(spark, planner, tmp_path):
     assert clean
     assert _ranked(_indexed(spark, out, bool_body("DEF!", "Main,")).hits) \
         == clean
+
+
+def test_indexed_request_values_with_sql_metacharacters(spark, planner,
+                                                        tmp_path):
+    """Request values reach the stored statement as parameter markers,
+    never as SQL text: quotes, backslashes, marker-like ``:t0``,
+    format-like ``{p}`` and comment openers in a match text, a
+    prefix/wildcard/regexp value, a filter ``term`` value and a
+    ``search_after`` cursor parse cleanly and answer exactly as the
+    dataflow planner (Column literals) does over the same documents."""
+    from dp_search_data_importer_spark.config import EngineConfig
+    from dp_search_data_importer_spark.plans.build_index import build_index
+
+    meta = "py' \\ :t0 {p} -- /*"
+    docs = planner.docs.filter(F.col("doc_id") < 80).withColumn(
+        "lang", F.when(F.col("doc_id") % 4 == 0, F.lit(meta))
+        .otherwise(F.col("lang")))
+    out = str(tmp_path / "idx")
+    build_index(spark, docs, out, EngineConfig(n_shards=2),
+                code_aware=False, text_col="text", already_normalized=True,
+                waves=1)
+    scan = EsSearchPlanner(spark, docs)
+    word = docs.select("text").first()["text"].split()[0].lower()
+    bodies = {
+        "match": {"query": {"match": {"text": f"{word} {meta}"}}},
+        "prefix": {"query": {"prefix": {"text": word[:2] + meta}}},
+        "wildcard": {"query": {"wildcard": {"text": f"{word[:1]}*{meta}"}}},
+        "regexp": {"query": {"regexp": {
+            "text": f"{word[:2]}.*|'\\\\ :t0 \\{{p\\}} -- /\\*"}}},
+        "filter": {"query": {"bool": {
+            "must": [{"match": {"text": word}}],
+            "filter": [{"term": {"lang": meta}}]}}},
+        "search_after": {"query": {"match": {"text": word}},
+                         "sort": [{"lang": "asc"}],
+                         "search_after": [meta, 0]},
+    }
+    lang = {r["doc_id"]: r["lang"]
+            for r in docs.select("doc_id", "lang").collect()}
+    for name, body in bodies.items():
+        body = {**body, "size": 50}
+        got, exp = _indexed(spark, out, body).hits, scan.search(body).hits
+        if "sort" in body:
+            got, exp = ([r["doc_id"] for r in h.collect()] for h in (got, exp))
+            assert sorted(got, key=lambda d: (lang[d], d)) == got, name
+        else:
+            got, exp = _ranked(got), _ranked(exp)
+        assert got == exp, name
+        if name in ("match", "regexp", "filter", "search_after"):
+            assert got, name  # a non-empty answer, not two empty ones

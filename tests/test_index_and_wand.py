@@ -966,3 +966,52 @@ def test_facet_counts_stored_index(spark, built, queries_df):
            for r in q.facet_counts(spark, out, queries_df, ["lang"],
                                    top_n=3).collect()}
     assert got == want
+
+
+@pytest.mark.parametrize("shards", [list(range(8)), list(range(16)),
+                                    [1, 5, 6]])
+def test_repartition_by_shard_one_partition_per_shard(spark, shards):
+    """Each shard's rows land alone in their own partition, so a
+    partitioned write runs one task per shard; hashing the shard ids
+    themselves puts 8 shards in 5 partitions and 16 in 10."""
+    from dp_search_data_importer_spark.plans.build_index import (
+        repartition_by_shard,
+    )
+
+    rows = spark.range(40 * len(shards)).select(
+        F.element_at(F.array(*[F.lit(s) for s in shards]),
+                     (F.col("id") % len(shards) + 1).cast("int"))
+        .alias("shard"))
+    parts = {}
+    for r in (repartition_by_shard(rows, shards)
+              .select("shard", F.spark_partition_id().alias("p"))
+              .distinct().collect()):
+        parts.setdefault(r["p"], set()).add(r["shard"])
+    assert len(parts) == len(shards)
+    assert all(len(v) == 1 for v in parts.values())
+    if len(shards) in (8, 16):
+        plain = {r["p"] for r in rows.repartition(len(shards), "shard")
+                 .select(F.spark_partition_id().alias("p")).distinct()
+                 .collect()}
+        assert len(plain) == {8: 5, 16: 10}[len(shards)]
+
+
+def test_shard_keyed_write_keeps_fingerprints(spark, corpus, built,
+                                              tmp_path, monkeypatch):
+    """A build through the shard-keyed writes leaves every shard's
+    manifest row (content fingerprint, postings, terms, docs) exactly as
+    one whose writes hash-partition on the shard id."""
+    from dp_search_data_importer_spark.checkpoint import read_manifest
+    from dp_search_data_importer_spark.plans import build_index as bi
+
+    def rows(d):
+        return {r["shard"]: (r["content_fingerprint"], r["n_postings"],
+                             r["n_terms"], r["n_docs"])
+                for r in read_manifest(spark, d).collect()}
+
+    monkeypatch.setattr(bi, "repartition_by_shard",
+                        lambda df, shards: df.repartition(len(shards),
+                                                          "shard"))
+    out = str(tmp_path / "hashed")
+    build_index(spark, corpus, out, CFG, code_aware=True, waves=2)
+    assert rows(out) == rows(built[0])

@@ -384,3 +384,86 @@ def test_new_aggs_single_power_sum_pass(spark, sf_dir):
             .count("SinglePartition") + 1, kind
         assert "SortMergeJoin" not in plan, kind
         assert "CartesianProduct" not in plan, kind
+
+
+# a fresh body per class, and a second word so the counted request is no
+# verbatim repeat of the warming one (a repeat reuses its cached plan)
+_CONSTRUCT_BODIES = {
+    "match": lambda w: {"query": {"match": {"text": f"import {w}"}}},
+    "match_and": lambda w: {"query": {"match": {"text": {
+        "query": f"import {w}", "operator": "and"}}}},
+    "bool": lambda w: {"query": {"bool": {
+        "must": [{"term": {"text": "import"}}],
+        "should": [{"term": {"text": w}}],
+        "must_not": [{"term": {"text": "zzznope"}}]}}},
+    "prefix": lambda w: {"query": {"prefix": {"text": w[:3]}}},
+    "aggs": lambda w: {"query": {"match": {"text": f"import {w} self"}},
+                       "aggs": {"langs": {"terms": {"field": "lang"}}}},
+}
+
+
+@pytest.mark.parametrize("kind", sorted(_CONSTRUCT_BODIES))
+def test_stored_construct_py4j_budget(spark, idx, kind, monkeypatch):
+    """Building a stored request's hits plan is one parameterized
+    statement: on a warmed index it sends fewer than 100 py4j commands
+    (the DataFrame-built plans sent 662–1,314). The ``aggs`` class's agg
+    frames come from the dataflow agg family that ``EsSearchPlanner``
+    shares, so commands sent inside ``assemble_aggs`` are not counted."""
+    from dp_search_data_importer_spark.plans.es_dsl import (
+        EsSearchPlanner,
+        search_indexed,
+    )
+
+    search_indexed(spark, idx, _CONSTRUCT_BODIES[kind]("def"), CFG)
+    client = spark.sparkContext._gateway._gateway_client
+    send, assemble = client.send_command, EsSearchPlanner.assemble_aggs
+    sent, counting = [0], [True]
+
+    def counted(*a, **kw):
+        sent[0] += counting[0]
+        return send(*a, **kw)
+
+    def uncounted(self, *a, **kw):
+        counting[0] = False
+        try:
+            return assemble(self, *a, **kw)
+        finally:
+            counting[0] = True
+
+    monkeypatch.setattr(client, "send_command", counted)
+    monkeypatch.setattr(EsSearchPlanner, "assemble_aggs", uncounted)
+    res = search_indexed(spark, idx, _CONSTRUCT_BODIES[kind]("return"), CFG)
+    monkeypatch.undo()
+    assert sent[0] < 100, (kind, sent[0])
+    res.hits.collect()
+
+
+def test_dsl_match_scores_term_pruned_tf(spark, sf_dir):
+    """The dataflow planner's term scorer aggregates only the query
+    terms' tf rows (the term filter sits below the tf aggregation), takes
+    df from a two-phase ``groupBy("term")`` count over that pruned tf (no
+    term-keyed window), and reads (n_docs, avgdl) as literals — no
+    cross join against a stats frame."""
+    import re
+
+    from dp_search_data_importer_spark.plans.es_dsl import EsSearchPlanner
+
+    planner = EsSearchPlanner(spark, spark.read.parquet(
+        f"{sf_dir}/documents.parquet"), CFG)
+    hits = planner.search({"query": {"match": {"text": "hash join"}}}).hits
+    assert hits.collect()
+    plan = hits._jdf.queryExecution().executedPlan().toString()
+    assert "Window" not in plan
+    assert "BroadcastNestedLoopJoin" not in plan
+    assert "CartesianProduct" not in plan
+    lines = plan.splitlines()
+    tf_partial = [i for i, ln in enumerate(lines) if re.search(
+        r"HashAggregate\(keys=\[doc_id#\d+L, dl#\d+L, term#\d+\], "
+        r"functions=\[partial_count\(1\)\]", ln)]
+    term_filter = [i for i, ln in enumerate(lines)
+                   if re.search(r"Filter term#\d+ IN \(hash,join\)", ln)]
+    assert tf_partial and term_filter
+    assert term_filter[0] > tf_partial[0]
+    assert re.search(r"HashAggregate\(keys=\[term#\d+\], "
+                     r"functions=\[partial_count\(1\)\]", plan)
+    assert re.search(r"Exchange hashpartitioning\(term#\d+, ", plan)

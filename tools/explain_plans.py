@@ -1,6 +1,11 @@
 """Dump the physical plans of the engine's hot paths (judge artifact +
 regression check for tests/test_plans.py).
 
+Each stored ``_search`` class (match, match with operator and, bool,
+prefix, match + terms agg) is printed as the compiled Spark SQL
+statement(s) its plan was built from — the text and its parameter marker
+names, never their values — next to the physical plan.
+
 What to look for (SURVEY.md §4):
 - postings scan: ``PushedFilters: [In(term, …)]`` — term pruning reaches
   parquet; ``ReadSchema`` excludes unneeded block columns.
@@ -29,6 +34,43 @@ def explain_str(df, mode: str = "formatted") -> str:
     )
 
 
+STORED_BODIES = {
+    "match": {"query": {"match": {"text": "import def"}}},
+    "match_and": {"query": {"match": {"text": {
+        "query": "import def", "operator": "and"}}}},
+    "bool": {"query": {"bool": {
+        "must": [{"term": {"text": "import"}}],
+        "should": [{"term": {"text": "def"}}],
+        "must_not": [{"term": {"text": "zzznope"}}]}}},
+    "prefix": {"query": {"prefix": {"text": "imp"}}},
+    "aggs": {"query": {"match": {"text": "import def"}},
+             "aggs": {"langs": {"terms": {"field": "lang"}}}},
+}
+
+
+def compiled_statements(spark, out: str, body: dict, cfg):
+    """Run ``search_indexed`` on ``body`` while recording every
+    ``spark.sql`` statement it compiles: ([(text, parameter names)],
+    the SearchResult)."""
+    from dp_search_data_importer_spark.plans.es_dsl import search_indexed
+    from dp_search_data_importer_spark.session import _PLAN_CACHE
+
+    _PLAN_CACHE.clear()  # a cached plan would compile nothing
+    seen = []
+    sql = spark.sql
+
+    def recording(text, args=None, **frames):
+        seen.append((text, sorted(args or {})))
+        return sql(text, args, **frames)
+
+    spark.sql = recording
+    try:
+        res = search_indexed(spark, out, body, cfg)
+    finally:
+        del spark.sql
+    return seen, res
+
+
 def main() -> None:
     from dp_search_data_importer_spark.config import EngineConfig
     from dp_search_data_importer_spark.plans import query as qp
@@ -47,6 +89,17 @@ def main() -> None:
 
     queries = local_df(spark, [(1, "import def"), (2, "tokenScore merge")],
                        "query_id long, query_text string")
+
+    for kind, body in STORED_BODIES.items():
+        statements, res = compiled_statements(spark, out, body, cfg)
+        print("=" * 70)
+        print(f"== stored _search class {kind!r}: {len(statements)} "
+              "compiled statement(s)")
+        for text, names in statements:
+            print(f"-- parameters: {', '.join(names) or '(none)'}")
+            print(text)
+        print("-- physical plan of the hits")
+        print(explain_str(res.hits))
 
     print("=" * 70)
     print("== exact BM25 over the index")
