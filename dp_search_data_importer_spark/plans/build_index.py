@@ -98,28 +98,23 @@ def _spark_hash_int(value: int, seed: int = 42) -> int:
     return h - (1 << 32) if h >> 31 else h
 
 
-def shard_partition_keys(shards: list[int]) -> dict[int, int]:
-    """shard → an INT key that hash partitioning into ``len(shards)``
-    partitions sends to that shard's own partition (its rank in sorted
-    order). Found on the driver by trying keys 0, 1, 2, …: no sample, no
-    job. Hashing the shard ids themselves collides (8 shards land in 5
-    partitions, 16 in 10)."""
+def repartition_by_shard(df: DataFrame, shards: list[int]) -> DataFrame:
+    """``df`` in ``len(shards)`` partitions with each shard's rows alone
+    in its own one, so a partitioned write runs one task per shard.
+    Hashing the shard ids themselves collides (8 shards land in 5
+    partitions, 16 in 10), so each shard gets an INT key that hash
+    partitioning sends to the shard's rank in sorted order, found on the
+    driver by trying keys 0, 1, 2, …: no sample, no job."""
     n = len(shards)
     by_partition: dict[int, int] = {}
     key = 0
     while len(by_partition) < n:
         by_partition.setdefault(_spark_hash_int(key) % n, key)
         key += 1
-    return {s: by_partition[i] for i, s in enumerate(sorted(shards))}
-
-
-def repartition_by_shard(df: DataFrame, shards: list[int]) -> DataFrame:
-    """``df`` in ``len(shards)`` partitions with each shard's rows alone
-    in its own one, so a partitioned write runs one task per shard."""
     keys = F.from_json(F.lit(json.dumps(
-        {str(s): k for s, k in shard_partition_keys(shards).items()})),
+        {str(s): by_partition[i] for i, s in enumerate(sorted(shards))})),
         "map<string, int>")
-    return df.repartition(len(shards), F.try_element_at(
+    return df.repartition(n, F.try_element_at(
         keys, F.col("shard").cast("string")))
 
 
