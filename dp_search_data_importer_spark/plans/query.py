@@ -33,8 +33,6 @@ from __future__ import annotations
 import hashlib
 import json
 import os
-import threading
-import weakref
 from typing import NamedTuple
 
 from pyspark.sql import DataFrame, SparkSession
@@ -139,10 +137,6 @@ def _query_term_pairs(queries: Queries,
 # ---------------------------------------------------------------------------
 # the compiled statement
 
-# session → {(index path, table): the reader frame its view holds}: one
-# entry per index path and table
-_VIEWS: weakref.WeakKeyDictionary = weakref.WeakKeyDictionary()
-_VIEWS_LOCK = threading.Lock()
 _READERS = {"postings": load_blocks, "term_df": load_term_df,
             "docs": load_docs}
 
@@ -151,21 +145,20 @@ def index_view(spark: SparkSession, out_dir: str, table: str,
                stats: dict) -> str:
     """The temp view over the ``table`` reader (postings, term_df, docs)
     of the index at ``out_dir``: one name per index path. The reader is a
-    :func:`cached_plan` keyed on the index ``version``, and the view is
-    (re)registered only when that cached reader changes — once per
-    version, while it stays cached — so a new version replaces the view,
-    and plans built on the old one keep their own analyzed reader."""
+    :func:`cached_plan` keyed on the index ``version`` and registers the
+    view when it is built — once per version while it stays cached — so
+    a new version replaces the view, and plans built on the old one keep
+    their own analyzed reader."""
     path = os.path.abspath(out_dir)
     name = (f"fts_{hashlib.sha1(path.encode()).hexdigest()[:16]}"
             f"_{table}")
-    reader = cached_plan(spark, ("index_view", path, table,
-                                 stats["version"]),
-                         lambda: _READERS[table](spark, out_dir))
-    with _VIEWS_LOCK:
-        views = _VIEWS.setdefault(spark, {})
-        if views.get((path, table)) is not reader:
-            reader.createOrReplaceTempView(name)
-            views[(path, table)] = reader
+
+    def build():
+        reader = _READERS[table](spark, out_dir)
+        reader.createOrReplaceTempView(name)
+        return reader
+
+    cached_plan(spark, ("index_view", path, table, stats["version"]), build)
     return name
 
 
