@@ -13,8 +13,12 @@ arithmetic, zero Python on the data path.
 
 Physical plan at scale (what ``.explain`` should show):
 - query term set is tiny → its df rows broadcast: the postings side never
-  shuffles for the join (BroadcastHashJoin). Stored-index query terms and
-  corpus stats ride as plan literals, not as broadcast tables.
+  shuffles for the join (BroadcastHashJoin). Stored-index query terms
+  (parameter markers bound as literals) and corpus stats ride as plan
+  literals, not as broadcast tables.
+- the term formula and the round-then-rank top-k are SQL text here
+  (``bm25_term_sql``, ``topk_sql``), used by the stored statements of
+  ``plans/query.py`` and by the DataFrame operators alike.
 - doc lengths ride inside the postings tuples (see ``operators/postings.py``)
   → no join against the docs table at query time.
 - per-(query,doc) score sum is the only shuffle, over candidate docs only.
@@ -547,7 +551,8 @@ def bool_topk(
     """ES ``bool`` compound query twin — must (AND) + should with
     ``minimum_should_match`` + must_not, over a tf table, in ONE plan.
 
-    Physical shape (the 100 TB shape): the clauses are plan literals — a
+    Physical shape (the 100 TB shape): the clauses are one plan literal
+    (a JSON parameter marker, ``bool_scores_sql``) — a
     term → clause-structs map each tf row fans out through, carrying the
     clause's query's must count and msm — so the postings-sized side
     never shuffles for a join and only the df rows broadcast; per-(query,
@@ -619,10 +624,13 @@ def bool_scores_sql(cfg: EngineConfig, tf: str, dfs: str | None,
     ``CLAUSES_DDL`` JSON value; ``stats`` an optional 1-row relation that
     ``n_docs``/``avgdl`` read as ``s``."""
     if dfs is None:
+        # df in-plan as a window count — ONLY for term-pruned tf (see
+        # bm25_scores); unseen clause terms simply have no tf rows, the
+        # same drop the dfs join performs
         src = (f"(SELECT doc_id, term, tf, dl, count(1) OVER (PARTITION BY "
                f"term) AS df FROM {tf} WHERE term IN ({terms})) t")
         df, hints = "t.df", []
-    else:
+    else:  # unseen terms drop at the df join, as in ES
         src = (f"(SELECT * FROM {tf} WHERE term IN ({terms})) t JOIN "
                f"(SELECT term, df FROM {dfs} WHERE term IN ({terms})) d "
                f"ON t.term = d.term")
