@@ -47,6 +47,12 @@ def sql_number(x) -> str:
     return f"{float(x)!r}D"
 
 
+def sql_in(col: str, markers: str) -> str:
+    """``col IN (markers)``; an empty marker list — a request with no
+    terms — is ``FALSE``, as Spark's grammar has no ``IN ()``."""
+    return f"{col} IN ({markers})" if markers else "FALSE"
+
+
 def bm25_term_sql(cfg: EngineConfig, tf: str = "tf", dl: str = "dl",
                   df: str = "df", n_docs: str = "n_docs",
                   avgdl: str = "avgdl") -> str:
@@ -620,7 +626,8 @@ def bool_scores_sql(cfg: EngineConfig, tf: str, dfs: str | None,
     """SQL text of :func:`bool_topk`'s kept (query_id, doc_id, score) rows
     before ranking, over the relations ``tf`` (doc_id, term, tf, dl) and
     ``dfs`` (term, df; ``None``: an in-plan window count over the
-    term-pruned tf). ``terms`` is the clause term list, ``clauses`` a
+    term-pruned tf). ``terms`` is the clause term list (empty: no rows),
+    ``clauses`` a
     ``CLAUSES_DDL`` JSON value; ``stats`` an optional 1-row relation that
     ``n_docs``/``avgdl`` read as ``s``."""
     if dfs is None:
@@ -628,11 +635,12 @@ def bool_scores_sql(cfg: EngineConfig, tf: str, dfs: str | None,
         # bm25_scores); unseen clause terms simply have no tf rows, the
         # same drop the dfs join performs
         src = (f"(SELECT doc_id, term, tf, dl, count(1) OVER (PARTITION BY "
-               f"term) AS df FROM {tf} WHERE term IN ({terms})) t")
+               f"term) AS df FROM {tf} WHERE {sql_in('term', terms)}) t")
         df, hints = "t.df", []
     else:  # unseen terms drop at the df join, as in ES
-        src = (f"(SELECT * FROM {tf} WHERE term IN ({terms})) t JOIN "
-               f"(SELECT term, df FROM {dfs} WHERE term IN ({terms})) d "
+        src = (f"(SELECT * FROM {tf} WHERE {sql_in('term', terms)}) t "
+               f"JOIN (SELECT term, df FROM {dfs} "
+               f"WHERE {sql_in('term', terms)}) d "
                f"ON t.term = d.term")
         df, hints = "d.df", ["BROADCAST(d)"]
     if stats is not None:

@@ -137,7 +137,10 @@ class EsSearchPlanner:
     ``docs`` must carry ``id_col``; text fields are analyzed with the
     standard tokenizer (``functions/tokenize.py``). One planner instance
     memoizes per-field statistics frames across clauses and requests —
-    they are lazy plans, so nothing executes until the caller acts."""
+    they are lazy plans, so nothing executes until the caller acts, with
+    one exception: the first BM25-scored search on a field runs one job
+    that collects its (n_docs, avgdl) row (:meth:`stats_row`), which every
+    later scored plan on that field carries as literals."""
 
     def __init__(self, spark: SparkSession, docs: DataFrame,
                  cfg: EngineConfig | None = None,
@@ -3471,53 +3474,6 @@ def _meta_predicate(node: dict):
                      "the stored index")
 
 
-def _meta_filter(nodes: list[dict]):
-    """Filter-context leaves → one ``plans.query.SqlFilter`` over the
-    index ``docs/`` columns: the semantics of :func:`_meta_predicate` as
-    SQL text, ANDed, with every value a named parameter marker (``f0``,
-    ``f1``, …) and every field a quoted identifier — nothing from the
-    request is spliced into the text."""
-    from dp_search_data_importer_spark.plans.query import SqlFilter
-
-    args: dict = {}
-
-    def val(v) -> str:
-        name = f"f{len(args)}"
-        args[name] = v
-        return f":{name}"
-
-    def col(field) -> str:
-        return "`" + str(field).replace("`", "``") + "`"
-
-    def pred(node: dict) -> str:
-        (kind, spec), = node.items()
-        if kind == "__not__":
-            return f"NOT ({pred(spec)})"
-        if kind == "range":
-            (field, params), = [(k, v) for k, v in spec.items()
-                                if k != "boost"]
-            return " AND ".join(["TRUE", *[
-                f"{col(field)} {sym} {val(params[op])}"
-                for op, sym in (("gte", ">="), ("gt", ">"), ("lte", "<="),
-                                ("lt", "<")) if op in params]])
-        if kind == "term":
-            (field, v), = [(k, v) for k, v in spec.items() if k != "boost"]
-            if isinstance(v, dict):
-                v = v["value"]
-            return f"{col(field)} = {val(v)}"
-        if kind == "terms":
-            (field, vs), = [(k, v) for k, v in spec.items() if k != "boost"]
-            vs = list(vs)
-            return (f"{col(field)} IN ({', '.join(val(v) for v in vs)})"
-                    if vs else "FALSE")
-        if kind == "exists":
-            return f"{col(spec['field'])} IS NOT NULL"
-        raise EsDslError(f"unsupported filter-context query {kind!r} "
-                         "against the stored index")
-
-    return SqlFilter(" AND ".join(f"({pred(n)})" for n in nodes), args)
-
-
 _META_LEAF_KINDS = ("range", "terms", "exists", "term")
 
 
@@ -3609,9 +3565,10 @@ def search_indexed(spark: SparkSession, out_dir: str, body: dict,
     postings rows (``plans/query``), never a corpus scan, and the
     analyzer follows the index's recorded ``code_aware`` flag (analyzer
     symmetry). The match, bool, filter and expansion routes each compile
-    to one parameterized SQL statement (``plans/query``); request values,
-    filter values included (:func:`_meta_filter`), reach it as parameter
-    markers, never as SQL text.
+    to one parameterized SQL statement (``plans/query``); request values
+    reach it as parameter markers, and a bool ``filter`` as a Column
+    predicate (:func:`_meta_predicate`) over the docs reader — never as
+    SQL text.
 
     Supported subset (each routes to the corresponding ``plans/query``
     entry): ``match`` (OR), top-level ``prefix`` / ``fuzzy``
@@ -3720,13 +3677,16 @@ def search_indexed(spark: SparkSession, out_dir: str, body: dict,
         mp = _mv if isinstance(_mv, dict) else {}
         mop = str(mp.get("operator", "or")).lower()
         msm_v = mp.get("minimum_should_match")
-        if mop == "and" or msm_v is not None:
+        gated = mop == "and" or msm_v is not None
+        toks = _index_tokens(out_dir, mp.get("query", _mv)) if gated else []
+        if toks:
             # ES operator=and / minimum_should_match on the stored
             # path: rewrite to the equivalent per-token bool —
             # BoolSpec counts matched clause ids in the same single
             # agg over the same term-pruned postings scan. Distinct
             # tokens (matching the dataflow planner's documented
-            # distinct-term gate).
+            # distinct-term gate). A text with no tokens takes the OR
+            # path below: no hits, as in ES.
             from dp_search_data_importer_spark.operators.bm25 import (
                 BoolSpec,
             )
@@ -3735,7 +3695,6 @@ def search_indexed(spark: SparkSession, out_dir: str, body: dict,
                 raise EsDslError("search_after with match operator/"
                                  "minimum_should_match is unsupported "
                                  "on the stored path")
-            toks = _index_tokens(out_dir, mp.get("query", _mv))
             if mop == "and":
                 bs = BoolSpec(0, must=[(t, 1.0) for t in toks])
             else:
@@ -3826,7 +3785,10 @@ def search_indexed(spark: SparkSession, out_dir: str, body: dict,
             stats["n_docs"], stats["avgdl"], cfg), size)
     elif kind == "bool":
         filters = _as_list(spec.get("filter", []))
-        pred = _meta_filter(filters) if filters else None
+        pred = None
+        for f_node in filters:
+            p = _meta_predicate(f_node)
+            pred = p if pred is None else (pred & p)
         must = _as_list(spec.get("must", []))
         simple = (len(must) == 1 and not spec.get("should")
                   and not spec.get("must_not")

@@ -15,10 +15,11 @@ write SQL text over the index's ``postings``, ``term_df`` and ``docs``
 readers, which are registered as temp views once per index ``version``
 under one view name per index path (a new version replaces the view set,
 so the catalog stays bounded across an ingest stream). No request value
-is spliced into the text: terms, patterns, filter values, cursors and
-bool clause maps (JSON) are named parameter markers, bound as literals
-before optimization, so ``term IN (:t0, …)`` still pushes into both
-parquet scans (PushedFilters). Building a plan is then one parse and
+is spliced into the text: terms, patterns, cursors and bool clause maps
+(JSON) are named parameter markers, bound as literals before
+optimization, so ``term IN (:t0, …)`` still pushes into both parquet
+scans (PushedFilters); a filter-context Column predicate enters as a
+docs frame. Building a plan is then one parse and
 one analysis on the JVM instead of ~20 eagerly analyzed DataFrame calls.
 The BM25 term formula and the round-then-rank top-k are SQL text shared
 with the DataFrame operators (``operators/bm25.py``). Scoring is Catalyst
@@ -33,7 +34,6 @@ from __future__ import annotations
 import hashlib
 import json
 import os
-from typing import NamedTuple
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -45,6 +45,7 @@ from dp_search_data_importer_spark.operators.bm25 import (
     bool_clauses,
     bool_scores_sql,
     cursor_rows,
+    sql_in,
     sql_number,
     topk_sql,
 )
@@ -162,14 +163,6 @@ def index_view(spark: SparkSession, out_dir: str, table: str,
     return name
 
 
-class SqlFilter(NamedTuple):
-    """A predicate over the stored ``docs`` columns as SQL text whose
-    values are the named parameter markers of ``args`` (ES filter context
-    on the stored path; marker names start with ``f``)."""
-    sql: str
-    args: dict
-
-
 class _Statement:
     """One stored request's parameters: ``bind`` names a value as a
     marker, and ``run`` hands the finished SQL text and the markers to
@@ -192,10 +185,6 @@ class _Statement:
         return self.spark.sql(text, self.args, **self.frames)
 
 
-def _in(col: str, markers: str) -> str:
-    return f"{col} IN ({markers})" if markers else "FALSE"
-
-
 def _query_id_sql(st: _Statement, pairs: list[tuple[int, str]],
                   term: str) -> str:
     """query_id of a ``term`` row: one query's id, or a batch's fan-out
@@ -215,23 +204,16 @@ def _query_id_sql(st: _Statement, pairs: list[tuple[int, str]],
 def _postings_sql(st: _Statement, out_dir: str, stats: dict,
                   doc_filter=None, broadcast_limit: int = 2_000_000) -> str:
     """The postings relation of a statement: the index view, semi-joined
-    to the docs matching ``doc_filter`` when one is given — a
-    :class:`SqlFilter` over the docs view, or a Column filter entering as
-    a frame. The broadcast hint is gated on size: |allowed| ≤ n_docs, so
+    to the docs matching the Column predicate ``doc_filter`` when one is
+    given, which enters the statement as a frame. The broadcast hint is gated on size: |allowed| ≤ n_docs, so
     a small corpus needs no count job at all; only a big corpus pays one
     count over the pushed predicate on the content-free docs table."""
     postings = index_view(st.spark, out_dir, "postings", stats)
     if doc_filter is None:
         return postings
-    if isinstance(doc_filter, SqlFilter):
-        st.args.update(doc_filter.args)
-        allowed = (f"(SELECT doc_id FROM "
-                   f"{index_view(st.spark, out_dir, 'docs', stats)} "
-                   f"WHERE {doc_filter.sql})")
-    else:
-        st.frames["allowed"] = load_docs(st.spark, out_dir) \
-            .filter(doc_filter).select("doc_id")
-        allowed = "{allowed}"
+    st.frames["allowed"] = load_docs(st.spark, out_dir) \
+        .filter(doc_filter).select("doc_id")
+    allowed = "{allowed}"
     small = stats.get("n_docs", 0) <= broadcast_limit or st.run(
         f"SELECT count(1) FROM {allowed}").collect()[0][0] <= broadcast_limit
     hint = "/*+ BROADCAST(a) */ " if small else ""
@@ -259,8 +241,8 @@ def _scores_sql(st: _Statement, out_dir: str, stats: dict,
         f"{score} AS term_score FROM {postings} p "
         f"JOIN (SELECT term, df FROM "
         f"{index_view(st.spark, out_dir, 'term_df', stats)} "
-        f"WHERE {_in('term', tin)}) d ON p.term = d.term "
-        f"WHERE {_in('p.term', tin)}) GROUP BY query_id, doc_id")
+        f"WHERE {sql_in('term', tin)}) d ON p.term = d.term "
+        f"WHERE {sql_in('p.term', tin)}) GROUP BY query_id, doc_id")
 
 
 def _topk_statement(spark: SparkSession, out_dir: str, stats: dict,
@@ -586,7 +568,7 @@ def _match_hits(spark: SparkSession, out_dir: str,
         f"SELECT DISTINCT query_id, doc_id FROM (SELECT doc_id, "
         f"{_query_id_sql(st, pairs, 'term')} AS query_id FROM "
         f"{index_view(spark, out_dir, 'postings', stats)} "
-        f"WHERE {_in('term', tin)})")
+        f"WHERE {sql_in('term', tin)})")
 
 
 def sorted_topk(spark: SparkSession, out_dir: str, queries: Queries,

@@ -186,6 +186,26 @@ def test_bool_topk_semantics(spark):
         BoolSpec(7, must_not=["apple"])
 
 
+def test_bool_topk_without_clause_terms_is_empty(spark):
+    """A bool batch with no clause terms (no specs) scores nothing: the
+    clause term list is empty, which the shared SQL text writes as FALSE
+    (Spark has no ``IN ()``), with the dfs join and with the in-plan df
+    window alike."""
+    from dp_search_data_importer_spark.operators.bm25 import bool_topk
+    from dp_search_data_importer_spark.operators.postings import (
+        doc_freqs,
+        term_freqs_sql,
+    )
+    from dp_search_data_importer_spark.session import local_df
+
+    docs = local_df(spark, [(1, "apple banana"), (2, "banana")],
+                    "doc_id long, text string")
+    tf = term_freqs_sql(docs, id_col="doc_id", text_col="text")
+    stats = {"n_docs": 2, "avgdl": 1.5}
+    assert bool_topk(tf, [], doc_freqs(tf), stats, k=5).collect() == []
+    assert bool_topk(tf, [], None, stats, k=5).collect() == []
+
+
 def test_multi_match_modes(spark):
     """best_fields is DisMax (tb=0 takes the max field; tb=1 ≡
     most_fields); cross_fields blends stats so a query split across

@@ -2442,8 +2442,8 @@ def test_indexed_clauses_use_index_analyzer(spark, planner, tmp_path):
 
 def test_indexed_request_values_with_sql_metacharacters(spark, planner,
                                                         tmp_path):
-    """Request values reach the stored statement as parameter markers,
-    never as SQL text: quotes, backslashes, marker-like ``:t0``,
+    """Request values reach the stored statement as parameter markers (a
+    filter value as a Column literal), never as SQL text: quotes, backslashes, marker-like ``:t0``,
     format-like ``{p}`` and comment openers in a match text, a
     prefix/wildcard/regexp value, a filter ``term`` value and a
     ``search_after`` cursor parse cleanly and answer exactly as the
@@ -2487,3 +2487,18 @@ def test_indexed_request_values_with_sql_metacharacters(spark, planner,
         assert got == exp, name
         if name in ("match", "regexp", "filter", "search_after"):
             assert got, name  # a non-empty answer, not two empty ones
+
+
+def test_indexed_requests_without_clause_terms(spark, planner, doc_index):
+    """Stored requests whose clause term list is empty compile without a
+    SQL parse error: a match with ``operator: and`` or
+    ``minimum_should_match`` whose text has no tokens answers no hits, as
+    the OR match and the dataflow planner do; a filter-only bool is
+    still refused for want of a must or should clause."""
+    for mp in ({"operator": "and"}, {"minimum_should_match": 1}):
+        body = {"query": {"match": {"text": {"query": "!!! --", **mp}}}}
+        assert _indexed(spark, doc_index, body).hits.collect() == [], mp
+        assert planner.search(body).hits.collect() == [], mp
+    with pytest.raises(ValueError, match="must or should"):
+        _indexed(spark, doc_index, {"query": {"bool": {
+            "filter": [{"term": {"lang": "py"}}]}}})
