@@ -409,6 +409,8 @@ def test_stored_construct_py4j_budget(spark, idx, kind, monkeypatch):
     (the DataFrame-built plans sent 726–1,070). The ``aggs`` class's agg
     frames come from the dataflow agg family that ``EsSearchPlanner``
     shares, so commands sent inside ``assemble_aggs`` are not counted."""
+    import threading
+
     from dp_search_data_importer_spark.plans.es_dsl import (
         EsSearchPlanner,
         search_indexed,
@@ -418,9 +420,12 @@ def test_stored_construct_py4j_budget(spark, idx, kind, monkeypatch):
     client = spark.sparkContext._gateway._gateway_client
     send, assemble = client.send_command, EsSearchPlanner.assemble_aggs
     sent, counting = [0], [True]
+    builder = threading.get_ident()
 
     def counted(*a, **kw):
-        sent[0] += counting[0]
+        # py4j's finalizer thread sends the deletes of collected Java
+        # objects, earlier tests' included, through the same client
+        sent[0] += counting[0] and threading.get_ident() == builder
         return send(*a, **kw)
 
     def uncounted(self, *a, **kw):
