@@ -406,7 +406,7 @@ _CONSTRUCT_BODIES = {
 def test_stored_construct_py4j_budget(spark, idx, kind, monkeypatch):
     """Building a stored request's hits plan is one parameterized
     statement: on a warmed index it sends fewer than 100 py4j commands
-    (the DataFrame-built plans sent 726–1,070). The ``aggs`` class's agg
+    (the DataFrame-built plans sent 650–1,070). The ``aggs`` class's agg
     frames come from the dataflow agg family that ``EsSearchPlanner``
     shares, so commands sent inside ``assemble_aggs`` are not counted."""
     import threading
