@@ -57,6 +57,7 @@ import shutil
 import time
 from concurrent.futures import ThreadPoolExecutor
 
+from pyspark import inheritable_thread_target
 from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
@@ -147,8 +148,9 @@ def signed_counts(rows: DataFrame, sign: int = 1) -> DataFrame:
     """(term, df, sum_tf) contributions of postings ``rows``, times
     ``sign``, to be summed per term: a posting row is one (doc, term), so
     it adds 1 to its term's df and its tf to Σdl. The build sums them over
-    the written rows; an upsert sums the affected shards' staged rows
-    against their live rows at ``sign=-1`` — one rule for both."""
+    the written rows; an upsert or delete sums the batch's new rows
+    against the live rows of the docs it removes at ``sign=-1`` — one rule
+    for both."""
     return rows.select("term", F.lit(sign).cast("long").alias("df"),
                        (F.col("tf") * sign).alias("sum_tf"))
 
@@ -339,10 +341,11 @@ def build_index(
     # §2.6). Commit order is unchanged: a wave's manifest lands only after
     # its postings are on disk, and stats.json only after all of it. The
     # pool is joined on every exit, so a failed build leaves no job
-    # running that a resume could overlap.
+    # running that a resume could overlap, and its jobs carry the
+    # caller's job group.
     pool = ThreadPoolExecutor(max_workers=2, thread_name_prefix="build_index")
     try:
-        docs_fut = pool.submit(_docs_job)
+        docs_fut = pool.submit(inheritable_thread_target(spark)(_docs_job))
         manifest_fut = None
         for i, wave_shards in enumerate(wave_lists):
             tf = tokenize_docs(
@@ -369,7 +372,8 @@ def build_index(
                 # final wave: the manifest read-back and the
                 # row-derived term_df/stats below both read the
                 # now-committed postings — independent jobs, overlap them
-                manifest_fut = pool.submit(_manifest_job)
+                manifest_fut = pool.submit(
+                    inheritable_thread_target(spark)(_manifest_job))
             else:
                 _manifest_job()
         shard_counts = docs_fut.result()

@@ -3525,36 +3525,38 @@ def _index_tokens(out_dir: str, text) -> list[str]:
     return [t for _, t in q._query_term_pairs([(0, str(text))], code_aware)]
 
 
-def _bool_term_spec(spec: dict, has_filter: bool, out_dir: str):
-    """bool body with TERM-level scoring clauses → BoolSpec. Each
-    must/should entry must be a ``term`` query on the indexed text field
-    or a single-token ``match`` (an ES match clause with several tokens
-    is an embedded OR, which BoolSpec's per-term clauses cannot
-    express). Clause text goes through the index's analyzer."""
+def _clause_term(node: dict, out_dir: str) -> tuple[str, float]:
+    """(token, boost) of one stored-index bool clause: a ``term`` query on
+    the indexed text field or a single-token ``match`` (an ES match clause
+    with several tokens is an embedded OR, which BoolSpec's per-term
+    clauses cannot express). Clause text goes through the index's
+    analyzer."""
+    (kind, s), = node.items()
+    if kind not in ("term", "match"):
+        raise EsDslError(f"unsupported stored-index bool clause {kind!r}")
+    (field, v), = [(k, v) for k, v in s.items() if k != "boost"]
+    boost = float(s.get("boost", 1.0))
+    if isinstance(v, dict):
+        boost = float(v.get("boost", boost))
+        v = v.get("value", v.get("query"))
+    toks = _index_tokens(out_dir, v)
+    if len(toks) != 1:
+        raise EsDslError(
+            "stored-index bool needs single-token clauses, got "
+            f"{v!r} (multi-token match clauses embed an OR)")
+    return toks[0], boost
+
+
+def _bool_term_spec(spec: dict, out_dir: str):
+    """bool body with TERM-level scoring clauses (:func:`_clause_term`)
+    → BoolSpec."""
     from dp_search_data_importer_spark.operators.bm25 import BoolSpec
 
-    def one_term(node):
-        (kind, s), = node.items()
-        if kind in ("term", "match"):
-            pairs = [(k, v) for k, v in s.items() if k != "boost"]
-            (field, v), = pairs
-            boost = float(s.get("boost", 1.0))
-            if isinstance(v, dict):
-                boost = float(v.get("boost", boost))
-                v = v.get("value", v.get("query"))
-            toks = _index_tokens(out_dir, v)
-            if len(toks) != 1:
-                raise EsDslError(
-                    "stored-index bool needs single-token clauses, got "
-                    f"{v!r} (multi-token match clauses embed an OR)")
-            return toks[0], boost
-        raise EsDslError(
-            f"unsupported stored-index bool clause {kind!r}")
+    def clauses(role):
+        return [_clause_term(n, out_dir) for n in _as_list(spec.get(role, []))]
 
-    must = [one_term(n) for n in _as_list(spec.get("must", []))]
-    should = [one_term(n) for n in _as_list(spec.get("should", []))]
-    must_not = [one_term(n)[0] for n in _as_list(spec.get("must_not", []))]
-    return BoolSpec(0, must=must, should=should, must_not=must_not,
+    return BoolSpec(0, must=clauses("must"), should=clauses("should"),
+                    must_not=[t for t, _ in clauses("must_not")],
                     minimum_should_match=spec.get("minimum_should_match"))
 
 
@@ -3576,7 +3578,8 @@ def search_indexed(spark: SparkSession, out_dir: str, body: dict,
     span/intervals family — both read positions straight from the
     positional postings rows (``load_positions``: the same
     term-pruned scan BM25 uses), ``bool`` — a single must-``match``
-    clause with filter context routes to ``filtered_topk``; term-level
+    clause with filter context routes to ``filtered_topk``; filter
+    context alone (with optional must_not) to ``filter_topk``; term-level
     clause sets route to ``bool_topk_indexed`` — plus ``sort`` by a
     docs-table metadata field, ``search_after`` under both sort orders,
     and ``aggs`` — the FULL dataflow agg family (terms [+sub-aggs],
@@ -3800,9 +3803,14 @@ def search_indexed(spark: SparkSession, out_dir: str, body: dict,
                                        k=size)
             else:
                 hits = q.exact_topk(spark, out_dir, mq, cfg, k=size)
+        elif not must and not spec.get("should") and pred is not None:
+            # filter context only: every filtered doc at score 0
+            hits = q.filter_topk(
+                spark, out_dir, pred, k=size,
+                must_not=[_clause_term(n, out_dir)[0]
+                          for n in _as_list(spec.get("must_not", []))])
         else:
-            bs = _bool_term_spec(spec, has_filter=pred is not None,
-                                 out_dir=out_dir)
+            bs = _bool_term_spec(spec, out_dir)
             hits = q.bool_topk_indexed(spark, out_dir, [bs], cfg, k=size,
                                        doc_filter=pred)
     else:

@@ -554,6 +554,31 @@ def filtered_topk(spark: SparkSession, out_dir: str, queries: Queries,
                            broadcast_limit=broadcast_limit)
 
 
+def filter_topk(spark: SparkSession, out_dir: str, doc_filter, *,
+                k: int, must_not: list[str] = ()) -> DataFrame:
+    """ES ``bool`` with filter context only (no must or should clause):
+    the docs matching the Column predicate ``doc_filter``, less those
+    holding a ``must_not`` term, every one at score 0 — so the top ``k``
+    are the lowest doc ids, as every ranked path breaks ties. A
+    ``ORDER BY … LIMIT`` keeps a per-partition top-k, where a window over
+    one score would put every filtered doc in one task."""
+    stats = read_stats_json(out_dir)
+    st = _Statement(spark)
+    st.frames["allowed"] = load_docs(spark, out_dir) \
+        .filter(doc_filter).select("doc_id")
+    excluded = ""
+    if must_not:
+        excluded = (
+            f" LEFT ANTI JOIN (SELECT doc_id FROM "
+            f"{index_view(spark, out_dir, 'postings', stats)} WHERE "
+            f"{sql_in('term', st.terms(sorted(set(must_not))))}) x "
+            f"ON a.doc_id = x.doc_id")
+    return st.run(
+        f"SELECT CAST(0 AS BIGINT) AS query_id, a.doc_id, "
+        f"CAST(0.0 AS DOUBLE) AS score FROM {{allowed}} a{excluded} "
+        f"ORDER BY a.doc_id LIMIT {st.bind('k', int(k))}")
+
+
 def _match_hits(spark: SparkSession, out_dir: str,
                 queries: Queries) -> DataFrame:
     """Hit set of an ES ``match`` query over the stored index: distinct

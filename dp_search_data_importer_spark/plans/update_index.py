@@ -20,12 +20,15 @@ Design (all shard-local, batch-proportional):
    from scratch (property-tested on shard fingerprints);
 3. corpus statistics update by exact integer deltas, one rule with the
    build (``build_index.signed_counts``): per term, the new df is the old
-   df minus the affected shards' live rows plus their staged rows, and
-   Σdl moves by the same difference of ``tf`` — a scan of two columns.
-   n_docs and per-shard doc counts are observed on the staged docs write.
-   Postings carry no corpus statistic, so a drifting avgdl never
-   invalidates untouched shards; queries always score with the CURRENT
-   stats, exactly like Lucene applying norms at search time;
+   df plus the batch's new tf rows minus the live rows of the docs the
+   batch removes (replaced or deleted), and Σdl moves by the same
+   difference of ``tf``. That is the same integer result as "staged rows
+   minus live rows", but it depends only on the frozen batch and the live
+   index, not on the staged postings. n_docs and per-shard doc counts are
+   observed on the staged docs write. Postings carry no corpus statistic,
+   so a drifting avgdl never invalidates untouched shards; queries always
+   score with the CURRENT stats, exactly like Lucene applying norms at
+   search time;
 4. **crash-atomic multi-artifact commit**: every new artifact (postings
    shard dirs, docs shard dirs, term_df, manifest, stats.json) is STAGED
    under ``_upsert_stage/`` while the live index is only read; a
@@ -35,7 +38,14 @@ Design (all shard-local, batch-proportional):
    exists — every staged artifact lands — and rolls it back (discards the
    stage) when it does not, so the live index is always EITHER the
    pre-batch state or the post-batch state, never a mix with drifted
-   stats. Same discipline as ``streaming.ingest_stream.recover_store``.
+   stats. Same discipline as ``streaming.ingest_stream.recover_store``;
+5. one staging routine (:func:`_stage_batch`) serves upsert and delete:
+   after the batch is frozen under the stage, the postings, docs and
+   term_df jobs run at the same time from a driver pool whose threads
+   inherit the caller's job group and ``streaming.sql.batchId``; the
+   manifest read-back follows once postings and docs have landed. A
+   micro-batch's cost is mostly fixed per-job planning and start-up, so
+   overlapping the three jobs shortens the commit, not just the CPU.
 
 A shard whose merged content tokenizes to zero terms is handled explicitly:
 its live ``postings/shard=k`` dir is DELETED during the swap (recorded in
@@ -49,7 +59,10 @@ from __future__ import annotations
 import json
 import os
 import shutil
+from concurrent.futures import ThreadPoolExecutor
+from contextlib import contextmanager
 
+from pyspark import inheritable_thread_target
 from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
@@ -61,7 +74,6 @@ from dp_search_data_importer_spark.checkpoint import (
 )
 from dp_search_data_importer_spark.operators.ingest import normalize_repo_files
 from dp_search_data_importer_spark.plans.build_index import (
-    POSTINGS_SCHEMA,
     repartition_by_shard,
     signed_counts,
     tokenize_docs,
@@ -71,6 +83,7 @@ from dp_search_data_importer_spark.plans.query import (
     _query_term_pairs,
     decompress_blocks,
     load_blocks,
+    load_docs,
     load_term_df,
 )
 
@@ -209,8 +222,19 @@ def _apply_commit(out_dir: str, meta: dict) -> None:
     shutil.rmtree(stage, ignore_errors=True)
 
 
-def _stage_postings(spark: SparkSession, out_dir: str, tf: DataFrame,
-                    affected: list[int],
+def _freeze(spark: SparkSession, frame: DataFrame, path: str,
+            *metrics) -> tuple[DataFrame, dict]:
+    """Write ``frame`` once under the stage and read it back with its
+    schema, so every consumer sees the same rows (a within-batch dedup
+    picks one row per key; a delete set must not depend on the live docs
+    dir at swap time). Returns the frozen frame and ``metrics``, observed
+    on the write."""
+    obs = Observation()
+    frame.observe(obs, *metrics).write.mode("overwrite").parquet(path)
+    return spark.read.schema(frame.schema).parquet(path), obs.get
+
+
+def _stage_postings(out_dir: str, tf: DataFrame, affected: list[int],
                     positions: bool) -> tuple[list[int], list[int]]:
     """Rewrite the affected shards' merged tf rows into the stage with the
     SAME sort as a fresh build (row-identical result). Returns (shards
@@ -224,29 +248,26 @@ def _stage_postings(spark: SparkSession, out_dir: str, tf: DataFrame,
     return sorted(staged), sorted(set(affected) - staged)
 
 
-def _stage_term_df(spark: SparkSession, out_dir: str,
-                   affected: list[int]) -> int:
+def _stage_term_df(spark: SparkSession, out_dir: str, removed: DataFrame,
+                   new_tf: DataFrame | None) -> int:
     """Stage term_df updated by the build's rule applied as a difference:
-    df(term) moves by the staged rows of the term minus the affected
-    shards' live rows of it. Returns the Σdl delta (the same difference
-    of ``tf``), observed on the term_df write."""
-    stage = _stage_dir(out_dir)
-    live = load_blocks(spark, out_dir).filter(F.col("shard").isin(affected))
-    staged = spark.read.schema(POSTINGS_SCHEMA).parquet(
-        os.path.join(stage, "postings"))
-    old_df = load_term_df(spark, out_dir)
-
+    df(term) moves by the batch's new tf rows of the term minus the live
+    rows of the docs the batch removes. Returns the Σdl delta (the same
+    difference of ``tf``), observed on the term_df write."""
+    counts = load_term_df(spark, out_dir).select(
+        "term", "df", F.lit(0).cast("long").alias("sum_tf")).unionByName(
+        signed_counts(removed, -1))
+    if new_tf is not None:
+        counts = counts.unionByName(signed_counts(new_tf, 1))
     obs = Observation()
-    (old_df.select("term", "df", F.lit(0).cast("long").alias("sum_tf"))
-     .unionByName(signed_counts(live, -1))
-     .unionByName(signed_counts(staged, 1))
-     .groupBy("term")
+    (counts.groupBy("term")
      .agg(F.sum("df").alias("df"), F.sum("sum_tf").alias("sum_tf"))
      # observed above the shuffle: adaptive execution drops a metric
      # computed inside a stage it replaces for producing no rows
      .observe(obs, F.sum("sum_tf").alias("sum_dl"))
      .filter(F.col("df") > 0).select("term", "df")
-     .write.mode("overwrite").parquet(os.path.join(stage, "term_df")))
+     .write.mode("overwrite").parquet(
+         os.path.join(_stage_dir(out_dir), "term_df")))
     return int(obs.get["sum_dl"] or 0)
 
 
@@ -300,6 +321,91 @@ def _stage_manifest(spark: SparkSession, out_dir: str, affected: list[int],
             {s: shard_docs.get(s, 0) for s in replace_postings}))
     staged.write.mode("overwrite").parquet(
         os.path.join(_stage_dir(out_dir), "manifest"))
+
+
+def _stage_batch(spark: SparkSession, out_dir: str, stats: dict,
+                 affected: list[int], gone: DataFrame,
+                 new_tf: DataFrame | None = None,
+                 new_docs: DataFrame | None = None) -> tuple[dict, dict]:
+    """Stage every artifact of a batch that removes the docs ``gone``
+    (a frozen doc_id frame) from the ``affected`` shards and adds the
+    frozen batch's ``new_tf`` tf rows and ``new_docs`` docs rows. Returns
+    (commit marker meta, staged stats).
+
+    Every input is the frozen batch or the live index, so the postings,
+    docs and term_df jobs run at the same time from a driver pool, the
+    postings job (the longest) submitted first; the manifest read-back
+    follows once postings and docs have landed. The pool is joined on
+    every exit, before the caller cleans the stage up."""
+    has_pos = bool(stats.get("positions", False))
+    live = load_blocks(spark, out_dir).filter(F.col("shard").isin(affected))
+    merged_tf = decompress_blocks(live, include_positions=has_pos).join(
+        gone, "doc_id", "left_anti")
+    docs = (load_docs(spark, out_dir).filter(F.col("shard").isin(affected))
+            .join(gone, "doc_id", "left_anti"))
+    if new_docs is not None:
+        merged_tf = merged_tf.unionByName(new_tf)
+        # the docs table keeps its columns that the batch carries
+        cols = [c for c in docs.columns if c in new_docs.columns]
+        docs = docs.select(*cols).unionByName(new_docs.select(*cols))
+    merged_tf = merged_tf.withColumn("shard", F.pmod(
+        F.col("doc_id"), F.lit(stats["n_shards"])).cast("int"))
+
+    # the pool threads run their jobs with the caller's local properties
+    # (job group, streaming.sql.batchId), captured at submission
+    inherit = inheritable_thread_target(spark)
+    pool = ThreadPoolExecutor(max_workers=3,
+                              thread_name_prefix="update_index")
+    try:
+        postings_fut = pool.submit(inherit(_stage_postings),
+                                   out_dir, merged_tf, affected, has_pos)
+        docs_fut = pool.submit(inherit(_stage_docs), docs, out_dir, affected)
+        term_df_fut = pool.submit(
+            inherit(_stage_term_df), spark, out_dir,
+            live.join(gone, "doc_id", "left_semi"), new_tf)
+        replace_postings, delete_postings = postings_fut.result()
+        shard_counts = docs_fut.result()
+        _stage_manifest(spark, out_dir, affected, replace_postings,
+                        shard_counts)
+        sum_dl_delta = term_df_fut.result()
+    finally:
+        pool.shutdown(wait=True, cancel_futures=True)
+    new_stats = _stage_stats(out_dir, stats, shard_counts, sum_dl_delta)
+    meta = {
+        "affected": affected,
+        "replace_postings": replace_postings,
+        "delete_postings": delete_postings,
+        # a delete that empties a shard stages no docs dir for it
+        "delete_docs_shards": [s for s in affected if shard_counts[s] == 0],
+        "drop_positions": os.path.exists(os.path.join(out_dir, "positions")),
+    }
+    return meta, new_stats
+
+
+def _commit(out_dir: str, meta: dict) -> None:
+    """Write the commit marker last, then swap (roll-forward-able from
+    here); the writer contends under the same lock as self-healing
+    readers."""
+    marker = os.path.join(_stage_dir(out_dir), _COMMIT)
+    with open(marker, "w") as f:
+        json.dump(meta, f)
+    apply_commit_locked(out_dir, marker, lambda m: _apply_commit(out_dir, m))
+
+
+@contextmanager
+def _staging(out_dir: str):
+    """A fresh ``_upsert_stage/`` for one batch, removed on exit only if
+    the commit marker never landed (pure staging failure → rollback). A
+    stage WITH a marker must survive so the next upsert's
+    :func:`recover_index` rolls the half-applied commit forward."""
+    stage = _stage_dir(out_dir)
+    shutil.rmtree(stage, ignore_errors=True)
+    os.makedirs(stage)
+    try:
+        yield stage
+    finally:
+        if not os.path.exists(os.path.join(stage, _COMMIT)):
+            shutil.rmtree(stage, ignore_errors=True)
 
 
 def recover_for_read(out_dir: str) -> bool:
@@ -392,101 +498,46 @@ def upsert_docs(
     recover_index(out_dir)
     stats = read_stats_json(out_dir)
     n_shards = stats["n_shards"]
-    code_aware = bool(stats.get("code_aware", False))
-    has_pos = bool(stats.get("positions", False))
 
-    raw_obs, batch_obs = Observation(), Observation()
+    raw_obs = Observation()
     raw = new_docs.observe(raw_obs, F.count(F.lit(1)).alias("n"))
     batch = raw if already_normalized else normalize_repo_files(raw)
     batch = batch.dropDuplicates(["doc_id"]).withColumn(
         "shard", F.pmod(F.col("doc_id"), F.lit(n_shards)).cast("int")
     )
 
-    stage = _stage_dir(out_dir)
-    shutil.rmtree(stage, ignore_errors=True)
-    os.makedirs(stage)
-    try:
-        # freeze the batch once (the within-batch dedup picks one row per
-        # key; every consumer must see the same pick); the write observes
-        # the raw row count, the distinct docs and the shards they hash to
-        batch_tmp = os.path.join(stage, "batch")
-        (batch.observe(batch_obs, F.count(F.lit(1)).alias("n"),
-                       F.collect_set("shard").alias("shards"))
-         .write.mode("overwrite").parquet(batch_tmp))
-        batch = spark.read.schema(batch.schema).parquet(batch_tmp)
-        upserted = int(batch_obs.get["n"])
-        affected = sorted(batch_obs.get["shards"])
+    with _staging(out_dir) as stage:
+        # the freeze observes the distinct docs and the shards they hash
+        # to; the raw row count sits below the dedup
+        batch, got = _freeze(spark, batch, os.path.join(stage, "batch"),
+                             F.count(F.lit(1)).alias("n"),
+                             F.collect_set("shard").alias("shards"))
+        upserted = int(got["n"])
+        affected = sorted(got["shards"])
         if not affected:
             # the raw count sits under the dedup shuffle, whose empty stage
             # adaptive execution replaces together with its metrics
             return {"received": new_docs.count(), "upserted": 0,
                     "replaced": 0, "added": 0, "affected_shards": []}
         received = int(raw_obs.get["n"])
-        new_ids = batch.select("doc_id")
 
-        # ---- rewrite ONLY the affected shards: their live rows minus
-        # the replaced docs, plus the batch's tf rows. The scan and the
-        # tokenizer run once, inside the writer's map stage (live postings
-        # are only read: nothing live is mutated until the commit marker
-        # lands)
-        kept_tf = decompress_blocks(
-            load_blocks(spark, out_dir).filter(F.col("shard").isin(affected)),
-            include_positions=has_pos,
-        ).join(new_ids, "doc_id", "left_anti")
+        # the affected shards only: their live rows minus the replaced
+        # docs, plus the batch's rows (the live index is only read)
         new_tf = tokenize_docs(
-            batch, code_aware=code_aware, text_col=text_col,
-            tokenizer=tokenizer, positions=has_pos,
-        )
-        replace_postings, delete_postings = _stage_postings(
-            spark, out_dir,
-            kept_tf.unionByName(new_tf).withColumn(
-                "shard", F.pmod(F.col("doc_id"), F.lit(n_shards)).cast("int")),
-            affected, has_pos)
-        sum_dl_delta = _stage_term_df(spark, out_dir, affected)
+            batch, code_aware=bool(stats.get("code_aware", False)),
+            text_col=text_col, tokenizer=tokenizer,
+            positions=bool(stats.get("positions", False)))
+        meta, new_stats = _stage_batch(
+            spark, out_dir, stats, affected, batch.select("doc_id"),
+            new_tf=new_tf, new_docs=batch)
+        _commit(out_dir, meta)
 
-        # ---- docs/: replaced rows out, batch rows in (affected shards only)
-        docs_store = spark.read.parquet(os.path.join(out_dir, "docs"))
-        doc_cols = [c for c in docs_store.columns if c != "shard"] + ["shard"]
-        batch_doc_rows = batch.select(
-            *[c for c in doc_cols if c in batch.columns])
-        kept_docs = (docs_store.filter(F.col("shard").isin(affected))
-                     .join(new_ids, "doc_id", "left_anti")
-                     .select(*batch_doc_rows.columns))
-        shard_counts = _stage_docs(kept_docs.unionByName(batch_doc_rows),
-                                   out_dir, affected)
-
-        # ---- stats.json (staged): a replaced doc leaves its shard's count
-        # unchanged, so the replacements are the upserted docs that did
-        # not grow the corpus
-        new_stats = _stage_stats(out_dir, stats, shard_counts, sum_dl_delta)
-        replaced = upserted - (new_stats["n_docs"] - stats["n_docs"])
-
-        _stage_manifest(spark, out_dir, affected, replace_postings,
-                        new_stats["shard_docs"])
-
-        # ---- COMMIT: marker last, then swap (roll-forward-able from here)
-        meta = {
-            "affected": affected,
-            "replace_postings": replace_postings,
-            "delete_postings": delete_postings,
-            "drop_positions": os.path.exists(
-                os.path.join(out_dir, "positions")),
-        }
-        with open(os.path.join(stage, _COMMIT), "w") as f:
-            json.dump(meta, f)
-        # the writer contends under the same lock as self-healing readers
-        apply_commit_locked(out_dir, os.path.join(stage, _COMMIT),
-                            lambda m: _apply_commit(out_dir, m))
-
-        return {"received": received, "upserted": upserted,
-                "replaced": replaced, "added": upserted - replaced,
-                "affected_shards": affected}
-    finally:
-        # clean up only if the commit marker never landed (pure staging
-        # failure → rollback). A stage WITH a marker must survive so the
-        # next upsert's recover_index rolls the half-applied commit forward.
-        if not os.path.exists(os.path.join(stage, _COMMIT)):
-            shutil.rmtree(stage, ignore_errors=True)
+    # a replaced doc leaves its shard's count unchanged, so the
+    # replacements are the upserted docs that did not grow the corpus
+    replaced = upserted - (new_stats["n_docs"] - stats["n_docs"])
+    return {"received": received, "upserted": upserted,
+            "replaced": replaced, "added": upserted - replaced,
+            "affected_shards": affected}
 
 
 def delete_docs(spark: SparkSession, out_dir: str, ids: DataFrame, *,
@@ -494,41 +545,34 @@ def delete_docs(spark: SparkSession, out_dir: str, ids: DataFrame, *,
     """Keyed delete — the removal half of the CRUD surface (ES
     ``_delete_by_query`` lands here after matching; direct id deletes are
     the ES ``DELETE /index/_doc/{id}`` twin). Same staged-commit protocol
-    as :func:`upsert_docs`: only the shards holding deleted docs are read
-    back and rewritten; corpus stats update by exact integer deltas;
-    a crash at any point leaves the pre- or post-delete index, never a
-    mix. Unknown ids are ignored (idempotent redelivery). A shard whose
-    LAST doc is deleted loses its postings dir, docs dir and manifest row,
-    and its shard_docs count drops to 0 — artifact-identical to a fresh
-    build of the surviving corpus (property-tested).
+    and staging routine as :func:`upsert_docs`: only the shards holding
+    deleted docs are read back and rewritten; corpus stats update by exact
+    integer deltas; a crash at any point leaves the pre- or post-delete
+    index, never a mix. Unknown ids are ignored (idempotent redelivery). A
+    shard whose LAST doc is deleted loses its postings dir, docs dir and
+    manifest row, and its shard_docs count drops to 0 — artifact-identical
+    to a fresh build of the surviving corpus (property-tested).
 
     Returns {requested, deleted, not_found, affected_shards}.
     """
     recover_index(out_dir)
     stats = read_stats_json(out_dir)
-    has_pos = bool(stats.get("positions", False))
 
-    req_obs, del_obs = Observation(), Observation()
+    req_obs = Observation()
     ids_df = (ids.select(F.col(id_col).cast("long").alias("doc_id"))
               .dropDuplicates(["doc_id"])
               .observe(req_obs, F.count(F.lit(1)).alias("n")))
-    docs_store = spark.read.parquet(os.path.join(out_dir, "docs"))
 
-    stage = _stage_dir(out_dir)
-    shutil.rmtree(stage, ignore_errors=True)
-    os.makedirs(stage)
-    try:
-        # freeze the delete set's lineage on disk: nothing downstream may
-        # depend on the live docs dir at swap time; the write observes the
-        # requested ids, the present ones and the shards holding them
-        present_tmp = os.path.join(stage, "delete_ids")
-        (docs_store.join(ids_df, "doc_id", "left_semi")
-         .observe(del_obs, F.count(F.lit(1)).alias("n"),
-                  F.collect_set("shard").alias("shards"))
-         .select("doc_id").write.mode("overwrite").parquet(present_tmp))
-        del_ids = spark.read.schema("doc_id long").parquet(present_tmp)
-        n_deleted = int(del_obs.get["n"])
-        affected = sorted(del_obs.get["shards"])
+    with _staging(out_dir) as stage:
+        # the freeze observes the present ids and the shards holding them
+        del_ids, got = _freeze(
+            spark, load_docs(spark, out_dir).join(ids_df, "doc_id",
+                                                  "left_semi")
+            .select("doc_id", "shard"), os.path.join(stage, "delete_ids"),
+            F.count(F.lit(1)).alias("n"),
+            F.collect_set("shard").alias("shards"))
+        n_deleted = int(got["n"])
+        affected = sorted(got["shards"])
         if not affected:
             # as in upsert_docs: with no row past the join, adaptive
             # execution may have dropped the requested-ids metric
@@ -537,47 +581,12 @@ def delete_docs(spark: SparkSession, out_dir: str, ids: DataFrame, *,
                     "not_found": requested, "affected_shards": []}
         requested = int(req_obs.get["n"])
 
-        kept_tf = decompress_blocks(
-            load_blocks(spark, out_dir).filter(F.col("shard").isin(affected)),
-            include_positions=has_pos,
-        ).join(del_ids, "doc_id", "left_anti").withColumn(
-            "shard",
-            F.pmod(F.col("doc_id"), F.lit(stats["n_shards"])).cast("int"))
-        replace_postings, delete_postings = _stage_postings(
-            spark, out_dir, kept_tf, affected, has_pos)
-        sum_dl_delta = _stage_term_df(spark, out_dir, affected)
+        meta, _ = _stage_batch(spark, out_dir, stats, affected,
+                               del_ids.select("doc_id"))
+        _commit(out_dir, meta)
 
-        # docs/: survivors only; a shard with no survivors stages no dir,
-        # and its live dir must go explicitly (as with delete_postings)
-        shard_counts = _stage_docs(
-            docs_store.filter(F.col("shard").isin(affected))
-            .join(del_ids, "doc_id", "left_anti"), out_dir, affected)
-        delete_docs_shards = [s for s in affected if shard_counts[s] == 0]
-
-        new_stats = _stage_stats(out_dir, stats, shard_counts, sum_dl_delta)
-
-        _stage_manifest(spark, out_dir, affected, replace_postings,
-                        new_stats["shard_docs"])
-
-        meta = {
-            "affected": affected,
-            "replace_postings": replace_postings,
-            "delete_postings": delete_postings,
-            "delete_docs_shards": delete_docs_shards,
-            "drop_positions": os.path.exists(
-                os.path.join(out_dir, "positions")),
-        }
-        with open(os.path.join(stage, _COMMIT), "w") as f:
-            json.dump(meta, f)
-        apply_commit_locked(out_dir, os.path.join(stage, _COMMIT),
-                            lambda m: _apply_commit(out_dir, m))
-
-        return {"requested": requested, "deleted": n_deleted,
-                "not_found": requested - n_deleted,
-                "affected_shards": affected}
-    finally:
-        if not os.path.exists(os.path.join(stage, _COMMIT)):
-            shutil.rmtree(stage, ignore_errors=True)
+    return {"requested": requested, "deleted": n_deleted,
+            "not_found": requested - n_deleted, "affected_shards": affected}
 
 
 def match_ids(spark: SparkSession, out_dir: str, text: str, *,
@@ -643,7 +652,7 @@ def update_by_query(spark: SparkSession, out_dir: str, text: str,
     ids = match_ids(spark, out_dir, text, operator=operator)
     if ids is None:
         return {"matched": 0, "updated": 0, "affected_shards": []}
-    docs_store = spark.read.parquet(os.path.join(out_dir, "docs"))
+    docs_store = load_docs(spark, out_dir)
     immutable = {"doc_id", "shard", "repo", "path", "commit",
                  "content_sha256"}
     for col in assignments:
@@ -654,18 +663,14 @@ def update_by_query(spark: SparkSession, out_dir: str, text: str,
         if col not in docs_store.columns:
             raise ValueError(f"unknown docs column: {col!r}")
 
-    stage = _stage_dir(out_dir)
-    shutil.rmtree(stage, ignore_errors=True)
-    os.makedirs(stage)
-    present_tmp = os.path.join(stage, "update_ids")
-    (docs_store.join(ids, "doc_id", "left_semi")
-     .select("doc_id", "shard")
-     .write.mode("overwrite").parquet(present_tmp))
-    present = spark.read.parquet(present_tmp)
-    try:
-        affected = sorted(
-            r["shard"] for r in present.select("shard").distinct().collect())
-        n_matched = present.count()
+    with _staging(out_dir) as stage:
+        present, got = _freeze(
+            spark, docs_store.join(ids, "doc_id", "left_semi")
+            .select("doc_id", "shard"), os.path.join(stage, "update_ids"),
+            F.count(F.lit(1)).alias("n"),
+            F.collect_set("shard").alias("shards"))
+        n_matched = int(got["n"])
+        affected = sorted(got["shards"])
         if not affected:
             return {"matched": 0, "updated": 0, "affected_shards": []}
 
@@ -689,15 +694,7 @@ def update_by_query(spark: SparkSession, out_dir: str, text: str,
         (repartition_by_shard(upd.drop("_hit"), affected)
          .write.mode("overwrite").partitionBy("shard")
          .parquet(os.path.join(stage, "docs")))
-
-        meta = {"replace_postings": [], "delete_postings": [],
-                "affected": affected, "drop_positions": False}
-        with open(os.path.join(stage, _COMMIT), "w") as f:
-            json.dump(meta, f)
-        apply_commit_locked(out_dir, os.path.join(stage, _COMMIT),
-                            lambda m: _apply_commit(out_dir, m))
-        return {"matched": int(n_matched), "updated": int(n_matched),
-                "affected_shards": affected}
-    finally:
-        if not os.path.exists(os.path.join(stage, _COMMIT)):
-            shutil.rmtree(stage, ignore_errors=True)
+        _commit(out_dir, {"replace_postings": [], "delete_postings": [],
+                          "affected": affected, "drop_positions": False})
+    return {"matched": n_matched, "updated": n_matched,
+            "affected_shards": affected}

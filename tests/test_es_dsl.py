@@ -352,6 +352,24 @@ def test_indexed_bool_and_filtered_equal_dataflow(spark, planner,
         _ranked(planner.search(body2).hits)
 
 
+def test_indexed_filter_only_bool_equals_dataflow(spark, planner,
+                                                  doc_index):
+    """A bool with filter context only answers every filtered doc at score
+    0, in the dataflow planner's order; a must_not clause still excludes."""
+    for body in (
+        {"query": {"bool": {"filter": [
+            {"range": {"n_chars": {"gte": 300, "lte": 1500}}}]}},
+         "size": 10},
+        {"query": {"bool": {"filter": [{"term": {"lang": "fr"}}],
+                            "must_not": [{"match": {"text": "hash"}}]}},
+         "size": 10},
+    ):
+        got = _ranked(_indexed(spark, doc_index, body).hits)
+        assert got == _ranked(planner.search(body).hits)
+        assert len(got) == body["size"]
+        assert {score for _, score in got} == {0.0}
+
+
 def test_indexed_sort_and_facets_equal_dataflow(spark, planner,
                                                 doc_index):
     body = {"query": {"match": {"text": "hash"}},
@@ -2493,12 +2511,12 @@ def test_indexed_requests_without_clause_terms(spark, planner, doc_index):
     """Stored requests whose clause term list is empty compile without a
     SQL parse error: a match with ``operator: and`` or
     ``minimum_should_match`` whose text has no tokens answers no hits, as
-    the OR match and the dataflow planner do; a filter-only bool is
-    still refused for want of a must or should clause."""
+    the OR match and the dataflow planner do; so does a filter-only bool
+    whose filter matches no doc."""
     for mp in ({"operator": "and"}, {"minimum_should_match": 1}):
         body = {"query": {"match": {"text": {"query": "!!! --", **mp}}}}
         assert _indexed(spark, doc_index, body).hits.collect() == [], mp
         assert planner.search(body).hits.collect() == [], mp
-    with pytest.raises(ValueError, match="must or should"):
-        _indexed(spark, doc_index, {"query": {"bool": {
-            "filter": [{"term": {"lang": "py"}}]}}})
+    body = {"query": {"bool": {"filter": [{"term": {"lang": "py"}}]}}}
+    assert _indexed(spark, doc_index, body).hits.collect() == []
+    assert planner.search(body).hits.collect() == []

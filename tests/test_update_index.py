@@ -1071,12 +1071,18 @@ def test_upsert_refuses_old_format_index(spark, tmp_path):
 
 def _jobs_in_group(spark, group, fn):
     sc = spark.sparkContext
+    tracker = sc.statusTracker()
+    ungrouped = set(tracker.getJobIdsForGroup(None))
     sc.setJobGroup(group, "write-path job budget")
     try:
         result = fn()
     finally:
         sc.setJobGroup(None, None)
-    return result, len(sc.statusTracker().getJobIdsForGroup(group))
+    # every job the call issued sat in the caller's group: a driver pool
+    # thread that lost the caller's local properties would run its jobs
+    # ungrouped, outside the budget counted below
+    assert set(tracker.getJobIdsForGroup(None)) - ungrouped == set()
+    return result, len(tracker.getJobIdsForGroup(group))
 
 
 def test_upsert_and_delete_job_counts_bounded(spark, tmp_path):
@@ -1103,7 +1109,66 @@ def test_upsert_and_delete_job_counts_bounded(spark, tmp_path):
     acc, n_delete = _jobs_in_group(spark, f"delete-{tag}",
                                    lambda: delete_docs(spark, d, ids))
     assert acc["deleted"] == 2
-    # measured 15 and 16 on local[8] (the previous write path: 49 and
-    # 40); the slack of 2 absorbs an adaptive-execution broadcast choice
+    # measured 14 and 15 on local[4] with the staging jobs in a driver
+    # pool (serial staging: 15 and 16 on local[8]; the write path before
+    # that: 49 and 40); the slack of 2 absorbs an adaptive-execution
+    # broadcast choice
     assert n_upsert <= 15 + 2, n_upsert
     assert n_delete <= 16 + 2, n_delete
+
+
+@pytest.mark.parametrize("failing", ["_stage_docs", "_stage_term_df"])
+def test_pool_staging_failure_rolls_back(spark, tmp_path, monkeypatch,
+                                         failing):
+    """A staging job that fails in a driver pool thread while the postings
+    job is still staging: the pool is joined before the stage is removed,
+    so the live index stays byte-identical, no stage and no running job
+    is left behind, and the redelivered batch applies exactly once."""
+    import threading
+
+    from dp_search_data_importer_spark.plans import update_index as ui
+
+    d = str(tmp_path / "idx")
+    build_index(spark, spark.createDataFrame(_rows(30), SCHEMA), d, CFG,
+                code_aware=True, waves=1)
+    before = _tree_digest(d)
+    batch = [("r1", "src/f3.py", "c1", "py", "poolfail walrus text"),
+             ("r1", "src/poolnew.py", "c1", "py", "poolfail new doc")]
+
+    postings_started, postings_done = threading.Event(), threading.Event()
+    seen = {}
+    real_postings = ui._stage_postings
+
+    def tracked_postings(*a, **k):
+        postings_started.set()
+        try:
+            return real_postings(*a, **k)
+        finally:
+            postings_done.set()
+
+    def dying_stage(*a, **k):
+        assert postings_started.wait(120)
+        seen["postings_in_flight"] = not postings_done.is_set()
+        raise RuntimeError("simulated pool staging failure")
+
+    monkeypatch.setattr(ui, "_stage_postings", tracked_postings)
+    monkeypatch.setattr(ui, failing, dying_stage)
+    with pytest.raises(RuntimeError, match="pool staging failure"):
+        upsert_docs(spark, d, spark.createDataFrame(batch, SCHEMA))
+    monkeypatch.undo()
+
+    assert seen["postings_in_flight"]
+    assert postings_done.is_set()
+    assert not os.path.exists(os.path.join(d, ui._STAGE))
+    tracker = spark.sparkContext.statusTracker()
+    assert list(tracker.getActiveStageIds()) == []
+    assert all(tracker.getJobInfo(j).status != "RUNNING"
+               for j in tracker.getJobIdsForGroup(None))
+    assert _tree_digest(d) == before
+
+    acc = upsert_docs(spark, d, spark.createDataFrame(batch, SCHEMA))
+    assert (acc["replaced"], acc["added"]) == (1, 1)
+    assert read_stats_json(d)["n_docs"] == 31
+    queries = spark.createDataFrame([(1, "poolfail")],
+                                    "query_id long, query_text string")
+    assert len(q.exact_topk(spark, d, queries, CFG, 10).collect()) == 2
