@@ -555,11 +555,11 @@ def filtered_topk(spark: SparkSession, out_dir: str, queries: Queries,
 
 
 def filter_topk(spark: SparkSession, out_dir: str, doc_filter, *,
-                k: int, must_not: list[str] = ()) -> DataFrame:
+                k: int, must_not: list[str] | None = None) -> DataFrame:
     """ES ``bool`` with filter context only (no must or should clause):
     the docs matching the Column predicate ``doc_filter``, less those
     holding a ``must_not`` term, every one at score 0 — so the top ``k``
-    are the lowest doc ids, as every ranked path breaks ties. A
+    are the lowest doc ids, as every ranked path breaks ties. An
     ``ORDER BY … LIMIT`` keeps a per-partition top-k, where a window over
     one score would put every filtered doc in one task."""
     stats = read_stats_json(out_dir)
