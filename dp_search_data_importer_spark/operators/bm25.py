@@ -13,9 +13,10 @@ arithmetic, zero Python on the data path.
 
 Physical plan at scale (what ``.explain`` should show):
 - query term set is tiny → its df rows broadcast: the postings side never
-  shuffles for the join (BroadcastHashJoin). Stored-index query terms
-  (parameter markers bound as literals) and corpus stats ride as plan
-  literals, not as broadcast tables.
+  shuffles for the join (BroadcastHashJoin). On the stored index the
+  query terms, their df (a ``{term: df}`` map, :func:`df_lookup_sql`) and
+  the corpus stats ride as plan literals (parameter markers), so the
+  postings side joins nothing at all.
 - the term formula and the round-then-rank top-k are SQL text here
   (``bm25_term_sql``, ``topk_sql``), used by the stored statements of
   ``plans/query.py`` and by the DataFrame operators alike.
@@ -64,6 +65,13 @@ def bm25_term_sql(cfg: EngineConfig, tf: str = "tf", dl: str = "dl",
             f" / (CAST({tf} AS DOUBLE) + {sql_number(float(cfg.k1))}"
             f" * ({sql_number(1.0 - cfg.b)} + {sql_number(float(cfg.b))}"
             f" * CAST({dl} AS DOUBLE) / {avgdl}))")
+
+
+def df_lookup_sql(dfs_json: str, term: str) -> str:
+    """df of ``term`` looked up in a driver-side ``{term: df}`` JSON value
+    (a parameter marker on the stored path), which constant-folds to one
+    map literal: the scan side joins nothing to learn df."""
+    return f"element_at(from_json({dfs_json}, 'map<string, bigint>'), {term})"
 
 
 def bm25_term_score(tf: str, dl: str, df: str, n_docs: str, avgdl: str,
@@ -377,19 +385,19 @@ def sort_topk(hits: DataFrame, sort_col: str, k: int,
     direction = (v.asc(), F.col("doc_id").asc()) if ascending else \
         (v.desc(), F.col("doc_id").asc())
     if after:
-        spark = hits.sparkSession
-        sort_type = hits.schema[sort_col].dataType.simpleString()
-        cur = spark.createDataFrame(
-            [(int(qid), val, int(d)) for qid, (val, d) in after.items()],
-            f"query_id long, c_v {sort_type}, c_doc long")
-        strict = (v > F.col("c_v")) if ascending else (v < F.col("c_v"))
-        hits = (
-            hits.join(F.broadcast(cur), "query_id", "left")
-            .filter(F.col("c_v").isNull() | strict
-                    | ((v == F.col("c_v"))
-                       & (F.col("doc_id") > F.col("c_doc"))))
-            .drop("c_v", "c_doc")
-        )
+        # the cursors are one constant-folded map literal looked up per
+        # query_id, as in :func:`topk`: no driver-built table to broadcast
+        sort_type = hits.schema[sort_col].dataType
+        cur = F.try_element_at(F.create_map(*[
+            x for qid, (val, d) in sorted(after.items())
+            for x in (F.lit(int(qid)).cast("long"), F.struct(
+                F.lit(val).cast(sort_type).alias("c_v"),
+                F.lit(int(d)).cast("long").alias("c_doc")))]),
+            F.col("query_id").cast("long"))
+        c_v, c_doc = cur.getField("c_v"), cur.getField("c_doc")
+        strict = (v > c_v) if ascending else (v < c_v)
+        hits = hits.filter(cur.isNull() | strict
+                           | ((v == c_v) & (F.col("doc_id") > c_doc)))
     w_pre = Window.partitionBy(
         "query_id", F.pmod(F.xxhash64(F.col("doc_id")), F.lit(n_salts))
     ).orderBy(*direction)
@@ -622,15 +630,22 @@ def bool_clauses(specs: list[BoolSpec],
 
 def bool_scores_sql(cfg: EngineConfig, tf: str, dfs: str | None,
                     terms: str, clauses: str, n_docs: str, avgdl: str,
-                    stats: str | None = None) -> str:
+                    stats: str | None = None,
+                    df_map: str | None = None) -> str:
     """SQL text of :func:`bool_topk`'s kept (query_id, doc_id, score) rows
     before ranking, over the relations ``tf`` (doc_id, term, tf, dl) and
-    ``dfs`` (term, df; ``None``: an in-plan window count over the
-    term-pruned tf). ``terms`` is the clause term list (empty: no rows),
-    ``clauses`` a
-    ``CLAUSES_DDL`` JSON value; ``stats`` an optional 1-row relation that
-    ``n_docs``/``avgdl`` read as ``s``."""
-    if dfs is None:
+    ``dfs`` (term, df). With no ``dfs``, df is looked up in ``df_map``, a
+    driver-side ``{term: df}`` JSON value (:func:`df_lookup_sql`; the
+    stored path), or else counted in-plan by a window over the
+    term-pruned tf. ``terms`` is the clause term list (empty: no rows),
+    ``clauses`` a ``CLAUSES_DDL`` JSON value; ``stats`` an optional 1-row
+    relation that ``n_docs``/``avgdl`` read as ``s``."""
+    if df_map is not None:
+        # ``terms`` holds only terms the dictionary has: an unseen
+        # clause term has no postings, the same drop the dfs join makes
+        src = f"(SELECT * FROM {tf} WHERE {sql_in('term', terms)}) t"
+        df, hints = df_lookup_sql(df_map, "t.term"), []
+    elif dfs is None:
         # df in-plan as a window count — ONLY for term-pruned tf (see
         # bm25_scores); unseen clause terms simply have no tf rows, the
         # same drop the dfs join performs

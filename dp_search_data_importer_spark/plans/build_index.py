@@ -23,10 +23,16 @@ derive from the written rows after the last wave.
 ``checkpoint.manifest_rows`` is the one manifest-row read-back.
 
 The postings are plain rows, not a hand-rolled codec: parquet's dictionary
-and RLE encodings compress the sorted ``term``/``tf``/``dl`` columns, and
-row-group/page min/max statistics on the term-sorted ``term`` column do the
-pruning posting blocks used to do. Every read is a JVM parquet scan with
-the query's ``term IN (...)`` pushed down — no Python decoder on any path.
+and RLE encodings compress the sorted ``term``/``tf``/``dl`` columns. Every
+read is a JVM parquet scan with the query's ``term IN (...)`` pushed down —
+no Python decoder on any path. What that pushdown skips depends on size: a
+shard file of a few thousand docs is one row group whose ``term`` min/max
+spans nearly the whole vocabulary, so statistics skip nothing there, and
+the dictionary filter drops only a shard file holding none of the query
+terms; row-group min/max prunes once a shard spans many row groups.
+``term_df`` is written term-ordered in bounded row groups
+(:func:`write_term_df`), so its files and row groups hold disjoint term
+ranges and a driver lookup of a few terms reads a few row groups.
 
 Scale design (the part that must survive 10^12 files / 1000 executors):
 
@@ -80,6 +86,8 @@ from dp_search_data_importer_spark.operators.postings import hot_terms
 POSTINGS_SCHEMA = ("shard int, term string, doc_id long, tf long, dl long, "
                    "positions array<int>")
 TERM_DF_SCHEMA = "term string, df long"
+# term_df row groups: a driver-side df lookup reads one per query term
+TERM_DF_ROW_GROUP_BYTES = 256 * 1024
 
 
 def _spark_hash_int(value: int, seed: int = 42) -> int:
@@ -142,6 +150,24 @@ def write_postings(tf: DataFrame, shards: list[int], path: str, *,
      .write.mode("overwrite")
      .option("partitionOverwriteMode", "dynamic")
      .partitionBy("shard").parquet(path))
+
+
+def write_term_df(counts: DataFrame, path: str, *observed) -> None:
+    """The one term_df writer: the (term, df) rows of ``counts`` with
+    ``df > 0``, globally ordered by term in row groups of at most
+    ``TERM_DF_ROW_GROUP_BYTES``, so every file and row group holds a
+    disjoint term range that ``plans/query.term_dfs`` can skip by its
+    min/max (a small dictionary stays one file). ``observed`` (an
+    ``Observation`` and its metrics) is computed above the sort's
+    exchange, so the range partitioner's sample job, which runs the plan
+    below it, does not count its rows a second time."""
+    ordered = counts.orderBy("term")
+    if observed:
+        ordered = ordered.observe(*observed)
+    (ordered.filter(F.col("df") > 0).select("term", "df")
+     .write.mode("overwrite")
+     .option("parquet.block.size", TERM_DF_ROW_GROUP_BYTES)
+     .parquet(path))
 
 
 def signed_counts(rows: DataFrame, sign: int = 1) -> DataFrame:
@@ -392,14 +418,15 @@ def build_index(
             # on them instead of counting blocks as postings
             rows = spark.read.schema(POSTINGS_SCHEMA).parquet(postings_dir)
             obs = Observation()
-            (signed_counts(rows).groupBy("term")
-             .agg(F.sum("df").alias("df"), F.sum("sum_tf").alias("sum_tf"),
-                  F.sum(F.col("sum_tf").isNull().cast("long"))
-                  .alias("n_null"))
-             .observe(obs, F.sum("sum_tf").alias("sum_dl"),
-                      F.sum("n_null").alias("n_null"))
-             .select("term", "df")
-             .write.mode("overwrite").parquet(os.path.join(out_dir, "term_df")))
+            write_term_df(
+                signed_counts(rows).groupBy("term")
+                .agg(F.sum("df").alias("df"),
+                     F.sum("sum_tf").alias("sum_tf"),
+                     F.sum(F.col("sum_tf").isNull().cast("long"))
+                     .alias("n_null")),
+                os.path.join(out_dir, "term_df"),
+                obs, F.sum("sum_tf").alias("sum_dl"),
+                F.sum("n_null").alias("n_null"))
             if int(obs.get["n_null"] or 0) > 0:
                 raise ValueError(
                     f"postings under {postings_dir} hold rows of an older "

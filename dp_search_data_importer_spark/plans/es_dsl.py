@@ -233,10 +233,13 @@ class EsSearchPlanner:
         rows are term-pruned below their aggregation, df is a
         ``groupBy("term")`` count over that pruned tf (partial count
         before its exchange, no term-keyed window), and (n_docs, avgdl)
-        are literals from the memoized :meth:`stats_row`."""
+        are literals from the memoized :meth:`stats_row`. The df count
+        reads the ``tf`` column (every row has tf ≥ 1), so column
+        pruning leaves the tf aggregate's exchange whole and the df
+        branch reuses it (``ReusedExchange``): the corpus is tokenized
+        once."""
         from dp_search_data_importer_spark.operators.bm25 import bm25_scores
         from dp_search_data_importer_spark.operators.postings import (
-            doc_freqs,
             term_freqs_sql,
         )
         from dp_search_data_importer_spark.session import local_df
@@ -249,9 +252,11 @@ class EsSearchPlanner:
                       "query_id long, term string")
         tf = term_freqs_sql(self.docs, id_col=self.id_col, text_col=field,
                             terms=terms)
+        dfs = tf.groupBy("term").agg(
+            F.count_if(F.col("tf") > 0).alias("df"))
         n_docs, avgdl = self.stats_row(field)
         # an empty table's avgdl is null, and it has no tf rows to score
-        s = bm25_scores(tf, qt, doc_freqs(tf),
+        s = bm25_scores(tf, qt, dfs,
                         {"n_docs": n_docs, "avgdl": avgdl or 0.0}, self.cfg,
                         min_match=min_match).drop("query_id")
         if boost != 1.0:

@@ -2,24 +2,38 @@
 
 Every stored read goes through ONE postings reader, :func:`load_blocks`:
 a parquet scan of ``postings/`` rows (term, doc_id, tf, dl[, positions])
-with the known schema. Rows are (term, doc_id)-sorted within each shard's
-file, so row-group and page min/max statistics on ``term`` skip what the
-query does not ask for; the shard-dir layout prunes nothing for queries
-(all shards hold all terms) but gives the fan-out axis.
+with the known schema and the query's ``term IN (...)`` pushed down. Rows
+are (term, doc_id)-sorted within each shard's file, but a shard file of a
+few thousand docs is ONE row group whose min/max on ``term`` spans nearly
+the whole vocabulary, so statistics skip nothing at that size: what
+prunes is the dictionary filter, which drops a shard file holding none of
+the query terms. Otherwise the scan reads the shard's rows and the pushed
+filter drops the other terms' rows (measured on a 4k-doc, 8-shard index:
+a hot+rare ``match`` read 318,311 of 342,194 postings rows, and 16–64 KiB
+row groups left the warm execute time unchanged). The shard-dir layout
+prunes nothing for queries (all shards hold all terms) but gives the
+fan-out axis.
+
+Document frequencies never enter a statement as a relation:
+:func:`term_dfs` looks the query terms up on the DRIVER (pyarrow, reading
+only the ``term_df`` row groups whose term range holds a query term), and
+the statement binds them as one ``map<string, bigint>`` parameter, so no
+request runs a job to fetch df.
 
 Each stored request compiles to ONE parameterized Spark SQL statement
 (:class:`_Statement`): the entry points ``search_indexed`` reaches
 (:func:`exact_topk`, :func:`filtered_topk`, :func:`bool_topk_indexed`,
 the prefix/wildcard/regexp/fuzzy expansions and :func:`_match_hits`)
-write SQL text over the index's ``postings``, ``term_df`` and ``docs``
-readers, which are registered as temp views once per index ``version``
-under one view name per index path (a new version replaces the view set,
-so the catalog stays bounded across an ingest stream). No request value
-is spliced into the text: terms, patterns, cursors and bool clause maps
-(JSON) are named parameter markers, bound as literals before
-optimization, so ``term IN (:t0, …)`` still pushes into both parquet
-scans (PushedFilters); a filter-context Column predicate enters as a
-docs frame. Building a plan is then one parse and
+write SQL text over the index's ``postings`` and ``docs`` readers
+(``term_df`` only where the dictionary is enumerated: the expansions),
+which are registered as temp views once per index ``version`` under one
+view name per index path (a new version replaces the view set, so the
+catalog stays bounded across an ingest stream). No request value is
+spliced into the text: terms, patterns, cursors, bool clause maps and
+df maps (JSON) are named parameter markers, bound as literals
+before optimization, so ``term IN (:t0, …)`` still pushes into the
+postings scan (PushedFilters); a filter-context Column predicate enters
+as a docs frame. Building a plan is then one parse and
 one analysis on the JVM instead of ~20 eagerly analyzed DataFrame calls.
 The BM25 term formula and the round-then-rank top-k are SQL text shared
 with the DataFrame operators (``operators/bm25.py``). Scoring is Catalyst
@@ -45,6 +59,7 @@ from dp_search_data_importer_spark.operators.bm25 import (
     bool_clauses,
     bool_scores_sql,
     cursor_rows,
+    df_lookup_sql,
     sql_in,
     sql_number,
     topk_sql,
@@ -90,6 +105,50 @@ def load_term_df(spark: SparkSession, out_dir: str,
     return df
 
 
+def term_dfs(out_dir: str, terms: list[str]) -> dict[str, int]:
+    """{term: df} of the ``terms`` the stored dictionary holds, read on
+    the driver with pyarrow, after any interrupted commit has rolled
+    forward (``recover_for_read``). The term filter pushes into the read:
+    ``term_df`` is written term-ordered with bounded row groups
+    (``build_index.write_term_df``), so each file and row group holds a
+    disjoint term range, and only the row groups whose min/max range
+    holds a query term are read — at most one per distinct term, however
+    large the dictionary."""
+    import bisect
+    import glob
+
+    import pyarrow.compute as pc
+    import pyarrow.parquet as pq
+
+    from dp_search_data_importer_spark.plans.update_index import (
+        recover_for_read,
+    )
+
+    recover_for_read(out_dir)
+    want = sorted(set(terms))
+    found: dict[str, int] = {}
+    if not want:
+        return found
+    for path in sorted(glob.glob(os.path.join(out_dir, "term_df",
+                                              "*.parquet"))):
+        f = pq.ParquetFile(path)
+        col = f.schema_arrow.get_field_index("term")
+        for rg in range(f.metadata.num_row_groups):
+            st = f.metadata.row_group(rg).column(col).statistics
+            lo, hi = ((st.min, st.max) if st is not None and st.has_min_max
+                      else (want[0], want[-1]))
+            # str order is code point order, which is the UTF-8 byte
+            # order parquet's min/max statistics use
+            keys = want[bisect.bisect_left(want, lo):
+                        bisect.bisect_right(want, hi)]
+            if keys:
+                t = f.read_row_group(rg, columns=["term", "df"]).filter(
+                    pc.field("term").isin(keys))
+                found.update(zip(t["term"].to_pylist(),
+                                 t["df"].to_pylist()))
+    return found
+
+
 def load_docs(spark: SparkSession, out_dir: str) -> DataFrame:
     """The stored docs table. Its columns follow the build's input, so
     the schema comes from one file's footer, where the writer recorded
@@ -120,8 +179,8 @@ def _query_term_pairs(queries: Queries,
     (interactive query sets), so collecting it and tokenizing in Python
     replaces a Spark job (explode+distinct+collect) per request with
     driver work. The pairs enter the statement as parameter markers: the
-    term list pushes into the postings and term_df scans, and query ids
-    attach by a term → query ids map, so no query-term table is
+    term list pushes into the postings scan, and query ids attach by a
+    term → query ids map, so no query-term table is
     broadcast."""
     from dp_search_data_importer_spark.functions.tokenize import (
         _code_tokens_py,
@@ -225,24 +284,25 @@ def _scores_sql(st: _Statement, out_dir: str, stats: dict,
                 pairs: list[tuple[int, str]], cfg: EngineConfig,
                 postings: str | None = None) -> str:
     """SQL text of BM25 (query_id, doc_id, score) over the stored index
-    for driver-side (query_id, term) pairs: the term markers push into
-    the postings and term_df scans, the df rows are the one broadcast,
-    and the corpus stats are literals. ``postings`` is the candidate
-    relation (:func:`_postings_sql`; default: the whole postings view)."""
+    for driver-side (query_id, term) pairs: the query terms' df come from
+    :func:`term_dfs` and bind as one map marker, so the postings scan
+    joins nothing; the terms the dictionary holds push into the postings
+    scan (a term it lacks has no postings and drops here, as in ES), and
+    the corpus stats are literals. ``postings`` is the candidate relation
+    (:func:`_postings_sql`; default: the whole postings view)."""
     postings = postings or index_view(st.spark, out_dir, "postings", stats)
-    tin = st.terms(sorted({t for _, t in pairs}))
-    score = bm25_term_sql(cfg, "p.tf", "p.dl", "d.df",
-                          sql_number(int(stats["n_docs"])),
-                          sql_number(float(stats["avgdl"])))
+    dfs = term_dfs(out_dir, [t for _, t in pairs])
+    pairs = [(q, t) for q, t in pairs if t in dfs]
+    score = bm25_term_sql(
+        cfg, "p.tf", "p.dl",
+        df_lookup_sql(st.bind("dfs", json.dumps(dfs)), "p.term"),
+        sql_number(int(stats["n_docs"])), sql_number(float(stats["avgdl"])))
     return (
         f"SELECT query_id, doc_id, sum(term_score) AS score FROM (SELECT "
-        f"/*+ BROADCAST(d) */ p.doc_id, "
-        f"{_query_id_sql(st, pairs, 'p.term')} AS query_id, "
+        f"p.doc_id, {_query_id_sql(st, pairs, 'p.term')} AS query_id, "
         f"{score} AS term_score FROM {postings} p "
-        f"JOIN (SELECT term, df FROM "
-        f"{index_view(st.spark, out_dir, 'term_df', stats)} "
-        f"WHERE {sql_in('term', tin)}) d ON p.term = d.term "
-        f"WHERE {sql_in('p.term', tin)}) GROUP BY query_id, doc_id")
+        f"WHERE {sql_in('p.term', st.terms(sorted(dfs)))}) "
+        f"GROUP BY query_id, doc_id")
 
 
 def _topk_statement(spark: SparkSession, out_dir: str, stats: dict,
@@ -383,7 +443,7 @@ def synonym_topk(spark: SparkSession, out_dir: str,
     per-token synonym expansion → standard OR-set BM25 (each synonym
     scores with its OWN df, the ES synonym-filter OR form). Same plan
     discipline as the other expansions: the expanded term set pushes into
-    the postings scan, df rows broadcast."""
+    the postings scan, df binds as one map marker."""
     cfg = cfg or EngineConfig()
     stats = read_stats_json(out_dir)
     pairs = sorted({
@@ -436,9 +496,10 @@ def bool_topk_indexed(spark: SparkSession, out_dir: str, specs,
                       broadcast_limit: int = 2_000_000) -> DataFrame:
     """ES ``bool`` query over the STORED index: same operator as
     :func:`operators.bm25.bool_topk`, fed from the stored postings
-    with the full clause term set (must + should + must_not — the
-    not-clauses need their postings too, to flag exclusions) pushed into
-    the scan as a term filter.
+    with the clause terms (must + should + must_not — the not-clauses
+    need their postings too, to flag exclusions) that the dictionary
+    holds pushed into the scan as a term filter, and their df bound as
+    one map marker (:func:`term_dfs`).
 
     ``doc_filter`` adds the bool query's FILTER clause (ES filter
     context): a metadata predicate on the docs table that gates
@@ -456,10 +517,12 @@ def bool_topk_indexed(spark: SparkSession, out_dir: str, specs,
     # filter context is known HERE, so the ES msm default resolves here:
     # a should-only spec under a filter defaults to msm=0 (ES 7.10), not 1
     clauses = bool_clauses(specs, has_filter=doc_filter is not None)
+    dfs = term_dfs(out_dir, terms)
     scores = bool_scores_sql(
-        cfg, tf, index_view(spark, out_dir, "term_df", stats),
-        st.terms(terms), st.bind("clauses", json.dumps(clauses)),
-        sql_number(int(stats["n_docs"])), sql_number(float(stats["avgdl"])))
+        cfg, tf, None, st.terms(sorted(dfs)),
+        st.bind("clauses", json.dumps(clauses)),
+        sql_number(int(stats["n_docs"])), sql_number(float(stats["avgdl"])),
+        df_map=st.bind("dfs", json.dumps(dfs)))
     return st.run(topk_sql(scores, st.bind("k", int(k or cfg.k))))
 
 
@@ -675,32 +738,29 @@ def explain_score(spark: SparkSession, out_dir: str, text: str,
     """ES ``GET /index/_explain/{id}`` twin: the per-term BM25 breakdown
     of one document's score for one query — (term, tf, dl, df, idf,
     tf_norm, contribution), contributions summing to the document's
-    ``exact_topk`` score (same formula, same statistics). The plan is the
-    standard term-pruned postings scan PLUS a doc_id pushdown, so the
-    explain of one doc reads only the row groups holding (query term, that
-    doc) — never the hit set."""
-    from dp_search_data_importer_spark.operators.bm25 import bm25_term_score
-
+    ``exact_topk`` score (same formula, same statistics: df from
+    :func:`term_dfs`, bound as one map marker). The plan is the standard
+    term-pruned postings scan PLUS a doc_id pushdown, so the explain of
+    one doc reads only that doc's rows of the query terms — never the
+    hit set."""
     cfg = cfg or EngineConfig()
     stats = read_stats_json(out_dir)
-    terms = sorted({t for _, t in _query_term_pairs(
-        [(0, text)], stats.get("code_aware", False))})
-    tf = decompress_blocks(load_blocks(spark, out_dir, terms)).filter(
-        F.col("doc_id") == int(doc_id))
-    dfs = load_term_df(spark, out_dir, terms)
-    n_docs, avgdl = F.lit(stats["n_docs"]), F.lit(stats["avgdl"])
-    idf = F.log(F.lit(1.0) + (n_docs - F.col("df") + F.lit(0.5))
-                / (F.col("df") + F.lit(0.5)))
-    tf_norm = (F.col("tf").cast("double") * F.lit(cfg.k1 + 1.0)
-               / (F.col("tf").cast("double") + F.lit(cfg.k1)
-                  * (F.lit(1.0 - cfg.b)
-                     + F.lit(cfg.b) * F.col("dl").cast("double") / avgdl)))
-    return (tf.join(F.broadcast(dfs), "term")
-            .select("term", "tf", "dl", "df",
-                    F.round(idf, 6).alias("idf"),
-                    F.round(tf_norm, 6).alias("tf_norm"),
-                    F.round(bm25_term_score(
-                        "tf", "dl", "df", sql_number(int(stats["n_docs"])),
-                        sql_number(float(stats["avgdl"])), cfg),
-                        6).alias("contribution"))
-            .orderBy("term"))
+    dfs = term_dfs(out_dir, [t for _, t in _query_term_pairs(
+        [(0, text)], stats.get("code_aware", False))])
+    st = _Statement(spark)
+    n_docs = sql_number(int(stats["n_docs"]))
+    avgdl = sql_number(float(stats["avgdl"]))
+    idf = f"ln(1.0D + ({n_docs} - df + 0.5D) / (df + 0.5D))"
+    tf_norm = (f"CAST(tf AS DOUBLE) * {sql_number(cfg.k1 + 1.0)} / "
+               f"(CAST(tf AS DOUBLE) + {sql_number(float(cfg.k1))} * "
+               f"({sql_number(1.0 - cfg.b)} + {sql_number(float(cfg.b))} "
+               f"* CAST(dl AS DOUBLE) / {avgdl}))")
+    score = bm25_term_sql(cfg, "tf", "dl", "df", n_docs, avgdl)
+    return st.run(
+        f"SELECT term, tf, dl, df, round({idf}, 6) AS idf, "
+        f"round({tf_norm}, 6) AS tf_norm, round({score}, 6) AS contribution "
+        f"FROM (SELECT term, tf, dl, "
+        f"{df_lookup_sql(st.bind('dfs', json.dumps(dfs)), 'term')} AS df "
+        f"FROM {index_view(spark, out_dir, 'postings', stats)} "
+        f"WHERE {sql_in('term', st.terms(sorted(dfs)))} "
+        f"AND doc_id = {st.bind('d', int(doc_id))}) ORDER BY term")

@@ -42,6 +42,7 @@ from dp_search_data_importer_spark.config import EngineConfig
 from dp_search_data_importer_spark.plans.build_index import (
     repartition_by_shard,
     write_postings,
+    write_term_df,
 )
 from dp_search_data_importer_spark.plans.query import (
     decompress_blocks,
@@ -115,8 +116,7 @@ def reindex(spark: SparkSession, src_dir: str, dst_dir: str, *,
     (repartition_by_shard(docs_out, list(range(n_new)))
      .write.mode("overwrite").partitionBy("shard")
      .parquet(os.path.join(dst_dir, "docs")))
-    term_df.write.mode("overwrite").parquet(
-        os.path.join(dst_dir, "term_df"))
+    write_term_df(term_df, os.path.join(dst_dir, "term_df"))
 
     # zero-doc shards keep an explicit 0 entry, exactly as a fresh
     # build's docs-write observation records them

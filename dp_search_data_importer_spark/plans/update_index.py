@@ -78,6 +78,7 @@ from dp_search_data_importer_spark.plans.build_index import (
     signed_counts,
     tokenize_docs,
     write_postings,
+    write_term_df,
 )
 from dp_search_data_importer_spark.plans.query import (
     _query_term_pairs,
@@ -260,14 +261,13 @@ def _stage_term_df(spark: SparkSession, out_dir: str, removed: DataFrame,
     if new_tf is not None:
         counts = counts.unionByName(signed_counts(new_tf, 1))
     obs = Observation()
-    (counts.groupBy("term")
-     .agg(F.sum("df").alias("df"), F.sum("sum_tf").alias("sum_tf"))
-     # observed above the shuffle: adaptive execution drops a metric
-     # computed inside a stage it replaces for producing no rows
-     .observe(obs, F.sum("sum_tf").alias("sum_dl"))
-     .filter(F.col("df") > 0).select("term", "df")
-     .write.mode("overwrite").parquet(
-         os.path.join(_stage_dir(out_dir), "term_df")))
+    # observed above the shuffles: adaptive execution drops a metric
+    # computed inside a stage it replaces for producing no rows
+    write_term_df(
+        counts.groupBy("term")
+        .agg(F.sum("df").alias("df"), F.sum("sum_tf").alias("sum_tf")),
+        os.path.join(_stage_dir(out_dir), "term_df"),
+        obs, F.sum("sum_tf").alias("sum_dl"))
     return int(obs.get["sum_dl"] or 0)
 
 

@@ -107,7 +107,10 @@ def cached_plan(spark: SparkSession, key: tuple, build) -> DataFrame:
     A plan is admitted only if its build ran no Spark job in the caller's
     job group (collected values — a page cursor, bucket boundaries, idf
     rows — would be pinned, not recomputed) and it reads nothing persisted.
-    Any other plan is returned uncached."""
+    Any other plan is returned uncached. A value the build reads on the
+    driver without a job — a stored index's df map (``plans/query.
+    term_dfs``) — is pinned too, so only a key that names the index
+    ``version`` may cache a plan that holds one."""
     sc = spark.sparkContext
     key = (sc.applicationId, *key)
     with _PLAN_CACHE_LOCK:

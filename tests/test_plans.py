@@ -34,12 +34,15 @@ def test_postings_scan_pushes_term_filter(spark, idx):
     assert "PushedFilters: [In(term," in plan
 
 
-def test_exact_bm25_broadcasts_small_sides(spark, idx):
+def test_exact_bm25_postings_side_joins_nothing(spark, idx):
+    """The stored exact path scores the pruned postings scan alone: df
+    is a bound map literal (``query.term_dfs``), so the plan holds no
+    join at all — neither a term_df broadcast nor a sort-merge."""
     queries = local_df(spark, [(1, "import def")],
                        "query_id long, query_text string")
     plan = _explain(qp.exact_topk(spark, idx, queries, CFG, 10))
-    assert "BroadcastHashJoin" in plan
-    assert "SortMergeJoin" not in plan  # postings side must never sort-merge
+    assert "Join" not in plan  # no join, so never a sort-merge one
+    assert "term_df" not in plan
     assert "PushedFilters: [In(term," in plan
     # only the scorer's columns are read (pruned in the scan)
     postings_scan = plan.split("ReadSchema: ")[1].splitlines()[0]
@@ -59,18 +62,18 @@ def _broadcasts_local_table(plan: str) -> bool:
 
 
 @pytest.mark.parametrize("kind,body,max_jobs", [
-    ("match", {"query": {"match": {"text": "import def"}}}, 3),
+    ("match", {"query": {"match": {"text": "import def"}}}, 2),
     ("bool", {"query": {"bool": {
         "must": [{"term": {"text": "import"}}],
         "should": [{"term": {"text": "def"}}],
-        "must_not": [{"term": {"text": "zzznope"}}]}}}, 4),
+        "must_not": [{"term": {"text": "zzznope"}}]}}}, 3),
 ])
 def test_stored_request_job_count_bounded(spark, idx, kind, body, max_jobs):
     """Cost regression guard for the stored-index read path: a match and a
     bool request each run a fixed number of Spark jobs. Stored tables are
     read with their known schemas (no schema-inference job), and the stats,
-    query terms and bool clauses are plan literals, so no broadcast job
-    ships a driver-built table."""
+    query terms, their df and the bool clauses are plan literals, so no
+    job fetches df and no broadcast job ships a driver-built table."""
     import uuid
 
     from dp_search_data_importer_spark.plans.es_dsl import search_indexed
@@ -90,10 +93,13 @@ def test_stored_request_job_count_bounded(spark, idx, kind, body, max_jobs):
     stage_names = [s.name for s in stages if s is not None]
     assert not [n for n in stage_names if n.startswith("parquet at")], \
         stage_names
-    # measured 3 (match) and 4 (bool) on local[8] (the previous read path:
-    # 8 and 10); the slack of 1 absorbs an adaptive-execution choice
-    assert len(jobs) <= max_jobs + 1, (len(jobs), stage_names)
-    assert not _broadcasts_local_table(_explain(res.hits))
+    # measured 2 (match) and 3 (bool) on local[4]: the postings scan and
+    # the ranking, plus bool's clause-count stage (with a term_df join:
+    # 3 and 4; the DataFrame-built read path: 8 and 10)
+    assert len(jobs) <= max_jobs, (len(jobs), stage_names)
+    plan = _explain(res.hits)
+    assert not _broadcasts_local_table(plan)
+    assert "term_df" not in plan
 
 
 @pytest.fixture(scope="module")
@@ -470,5 +476,34 @@ def test_dsl_match_scores_term_pruned_tf(spark, sf_dir):
     assert tf_partial and term_filter
     assert term_filter[0] > tf_partial[0]
     assert re.search(r"HashAggregate\(keys=\[term#\d+\], "
-                     r"functions=\[partial_count\(1\)\]", plan)
+                     r"functions=\[partial_count\(", plan)
     assert re.search(r"Exchange hashpartitioning\(term#\d+, ", plan)
+    # the df count reuses the tf aggregate's exchange: ``text`` is
+    # scanned and tokenized once
+    final = plan.split("== Initial Plan ==")[0]
+    scans = [ln for ln in final.splitlines() if "FileScan parquet" in ln]
+    assert len(scans) == 1 and "text#" in scans[0], scans
+    assert "ReusedExchange" in final
+
+
+def test_sorted_topk_cursor_is_a_literal(spark, idx):
+    """A paged sort-by-field request binds its ``search_after`` cursor as
+    a constant-folded literal: its plan broadcasts no driver-built table,
+    and page 2 is exactly rows k+1..2k of the one-shot sort."""
+    queries = [(1, "import def")]
+    k = 5
+
+    def ranked(rows):
+        return [(r["path"], r["doc_id"])
+                for r in sorted(rows, key=lambda r: (r["path"], r["doc_id"]))]
+
+    one_shot = ranked(qp.sorted_topk(spark, idx, queries, "path",
+                                     ascending=True, k=2 * k).collect())
+    assert len(one_shot) == 2 * k
+    page1 = ranked(qp.sorted_topk(spark, idx, queries, "path",
+                                  ascending=True, k=k).collect())
+    assert page1 == one_shot[:k]
+    paged = qp.sorted_topk(spark, idx, queries, "path", ascending=True,
+                           k=k, after={1: page1[-1]})
+    assert _broadcasts_local_table(_explain(paged)) is False
+    assert ranked(paged.collect()) == one_shot[k:]

@@ -9,8 +9,9 @@ names, never their values — next to the physical plan.
 What to look for (SURVEY.md §4):
 - postings scan: ``PushedFilters: [In(term, …)]`` — term pruning reaches
   parquet; ``ReadSchema`` excludes unneeded block columns.
-- exact BM25: BroadcastHashJoin for query-terms⨝postings and the 1-row
-  stats join — the postings side never shuffles for a join.
+- stored BM25: no join at all — the query terms, their df (looked up on
+  the driver) and the corpus stats are plan literals, so the postings
+  side never shuffles or broadcasts for a join.
 - docs scan at query time: only the winner-resolution broadcast join reads
   it, with column pruning (no content column anywhere at query time).
 - tf/df aggs: partial_ hash aggregates before the exchange (map-side
