@@ -4,21 +4,16 @@ Every stored read goes through ONE postings reader, :func:`load_blocks`:
 a parquet scan of ``postings/`` rows (term, doc_id, tf, dl[, positions])
 with the known schema and the query's ``term IN (...)`` pushed down. Rows
 are (term, doc_id)-sorted within each shard's file, but a shard file of a
-few thousand docs is ONE row group whose min/max on ``term`` spans nearly
-the whole vocabulary, so statistics skip nothing at that size: what
-prunes is the dictionary filter, which drops a shard file holding none of
-the query terms. Otherwise the scan reads the shard's rows and the pushed
-filter drops the other terms' rows (measured on a 4k-doc, 8-shard index:
-a hot+rare ``match`` read 318,311 of 342,194 postings rows, and 16–64 KiB
-row groups left the warm execute time unchanged). The shard-dir layout
-prunes nothing for queries (all shards hold all terms) but gives the
-fan-out axis.
-
-Document frequencies never enter a statement as a relation:
-:func:`term_dfs` looks the query terms up on the DRIVER (pyarrow, reading
-only the ``term_df`` row groups whose term range holds a query term), and
-the statement binds them as one ``map<string, bigint>`` parameter, so no
-request runs a job to fetch df.
+few thousand docs is ONE row group whose ``term`` min/max spans nearly
+the whole vocabulary, so statistics skip nothing at that size: the
+dictionary filter drops a shard file holding none of the query terms,
+and otherwise the pushed filter drops the other terms' rows after they
+are read (a hot+rare ``match`` on a 4k-doc, 8-shard index read 318,311
+of 342,194 postings rows; 16–64 KiB row groups left its warm execute
+time unchanged). The shard-dir layout prunes nothing for queries (all
+shards hold all terms) but gives the fan-out axis. Document frequencies
+never enter a statement as a relation: :func:`term_dfs` looks them up
+on the driver, so no request runs a job to fetch df.
 
 Each stored request compiles to ONE parameterized Spark SQL statement
 (:class:`_Statement`): the entry points ``search_indexed`` reaches
