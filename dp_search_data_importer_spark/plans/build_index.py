@@ -88,6 +88,8 @@ POSTINGS_SCHEMA = ("shard int, term string, doc_id long, tf long, dl long, "
 TERM_DF_SCHEMA = "term string, df long"
 # term_df row groups: a driver-side df lookup reads one per query term
 TERM_DF_ROW_GROUP_BYTES = 256 * 1024
+# term_df rows per file when a commit rewrites a dictionary of known size
+TERM_DF_FILE_ROWS = 1 << 20
 
 
 def _spark_hash_int(value: int, seed: int = 42) -> int:
@@ -152,19 +154,42 @@ def write_postings(tf: DataFrame, shards: list[int], path: str, *,
      .partitionBy("shard").parquet(path))
 
 
-def write_term_df(counts: DataFrame, path: str, *observed) -> None:
-    """The one term_df writer: the (term, df) rows of ``counts`` with
-    ``df > 0``, globally ordered by term in row groups of at most
-    ``TERM_DF_ROW_GROUP_BYTES``, so every file and row group holds a
-    disjoint term range that ``plans/query.term_dfs`` can skip by its
-    min/max (a small dictionary stays one file). ``observed`` (an
-    ``Observation`` and its metrics) is computed above the sort's
-    exchange, so the range partitioner's sample job, which runs the plan
-    below it, does not count its rows a second time."""
-    ordered = counts.orderBy("term")
+def term_df_files(path: str) -> int:
+    """How many files to write a term dictionary the size of the one at
+    ``path`` into, from its parquet footers (read on the driver, no job):
+    one per ``TERM_DF_FILE_ROWS`` rows."""
+    import glob
+
+    import pyarrow.parquet as pq
+
+    rows = sum(pq.read_metadata(f).num_rows
+               for f in glob.glob(os.path.join(path, "*.parquet")))
+    return max(1, -(-rows // TERM_DF_FILE_ROWS))
+
+
+def write_term_df(counts: DataFrame, path: str, n_files: int | None,
+                  *observed) -> None:
+    """The one term_df writer. ``counts`` holds (term, df, …) rows whose
+    columns sum per term; the terms left with ``df > 0`` are written
+    range-partitioned on term into ``n_files`` files (``None``: ranges
+    sampled from ``counts``, coalesced by adaptive execution) and sorted
+    within each, in row groups of at most ``TERM_DF_ROW_GROUP_BYTES``, so
+    every file and row group holds a disjoint term range that
+    ``plans/query.term_dfs`` skips by its min/max. The sum runs after the
+    range exchange, whose partitioning it needs, so the order costs no
+    second shuffle, and one file needs no sampling job either; a caller
+    with postings-sized rows sums them per term first, for the map-side
+    combine. ``observed`` (an ``Observation`` and its metrics over the
+    summed rows) sits above the exchange, so a sampling job, which runs
+    the plan below it, does not count it twice."""
+    summed = (counts.repartitionByRange(*([n_files] if n_files else []),
+                                        "term")
+              .groupBy("term").agg(*[F.sum(c).alias(c) for c in
+                                     counts.columns if c != "term"]))
     if observed:
-        ordered = ordered.observe(*observed)
-    (ordered.filter(F.col("df") > 0).select("term", "df")
+        summed = summed.observe(*observed)
+    (summed.filter(F.col("df") > 0).select("term", "df")
+     .sortWithinPartitions("term")
      .write.mode("overwrite")
      .option("parquet.block.size", TERM_DF_ROW_GROUP_BYTES)
      .parquet(path))
@@ -424,7 +449,7 @@ def build_index(
                      F.sum("sum_tf").alias("sum_tf"),
                      F.sum(F.col("sum_tf").isNull().cast("long"))
                      .alias("n_null")),
-                os.path.join(out_dir, "term_df"),
+                os.path.join(out_dir, "term_df"), None,
                 obs, F.sum("sum_tf").alias("sum_dl"),
                 F.sum("n_null").alias("n_null"))
             if int(obs.get["n_null"] or 0) > 0:

@@ -41,6 +41,7 @@ from dp_search_data_importer_spark.operators.postings import hot_terms
 from dp_search_data_importer_spark.config import EngineConfig
 from dp_search_data_importer_spark.plans.build_index import (
     repartition_by_shard,
+    term_df_files,
     write_postings,
     write_term_df,
 )
@@ -116,7 +117,9 @@ def reindex(spark: SparkSession, src_dir: str, dst_dir: str, *,
     (repartition_by_shard(docs_out, list(range(n_new)))
      .write.mode("overwrite").partitionBy("shard")
      .parquet(os.path.join(dst_dir, "docs")))
-    write_term_df(term_df, os.path.join(dst_dir, "term_df"))
+    write_term_df(term_df, os.path.join(dst_dir, "term_df"),
+                  None if query is not None
+                  else term_df_files(os.path.join(src_dir, "term_df")))
 
     # zero-doc shards keep an explicit 0 entry, exactly as a fresh
     # build's docs-write observation records them

@@ -76,6 +76,7 @@ from dp_search_data_importer_spark.operators.ingest import normalize_repo_files
 from dp_search_data_importer_spark.plans.build_index import (
     repartition_by_shard,
     signed_counts,
+    term_df_files,
     tokenize_docs,
     write_postings,
     write_term_df,
@@ -261,13 +262,13 @@ def _stage_term_df(spark: SparkSession, out_dir: str, removed: DataFrame,
     if new_tf is not None:
         counts = counts.unionByName(signed_counts(new_tf, 1))
     obs = Observation()
-    # observed above the shuffles: adaptive execution drops a metric
-    # computed inside a stage it replaces for producing no rows
-    write_term_df(
-        counts.groupBy("term")
-        .agg(F.sum("df").alias("df"), F.sum("sum_tf").alias("sum_tf")),
-        os.path.join(_stage_dir(out_dir), "term_df"),
-        obs, F.sum("sum_tf").alias("sum_dl"))
+    # observed above the shuffle: adaptive execution drops a metric
+    # computed inside a stage it replaces for producing no rows. The
+    # rows are the live dictionary (one per term) and batch-sized
+    # deltas, so they need no combine before the writer's exchange.
+    write_term_df(counts, os.path.join(_stage_dir(out_dir), "term_df"),
+                  term_df_files(os.path.join(out_dir, "term_df")),
+                  obs, F.sum("sum_tf").alias("sum_dl"))
     return int(obs.get["sum_dl"] or 0)
 
 

@@ -42,12 +42,14 @@ def _load(spark, d, terms):
 
 @pytest.fixture
 def small_row_groups(spark, monkeypatch):
-    """term_df written as several files of several row groups: no
-    partition coalescing after the writer's sort, 4 KiB row groups."""
+    """term_df written as several files of several row groups: a build
+    keeps every sampled range (no partition coalescing), a commit writes
+    a file per 4 rows of the live dictionary, row groups hold 4 KiB."""
     key = "spark.sql.adaptive.coalescePartitions.enabled"
     before = spark.conf.get(key)
     spark.conf.set(key, "false")
     monkeypatch.setattr(bi, "TERM_DF_ROW_GROUP_BYTES", 4096)
+    monkeypatch.setattr(bi, "TERM_DF_FILE_ROWS", 4)
     yield
     spark.conf.set(key, before)
 
@@ -127,6 +129,7 @@ def test_term_dfs_follows_upserts_and_rolls_forward(spark, tmp_path,
     assert after == _load(spark, d, terms)
     assert after["zebra"] == 7 and after["quokka"] == 1
     assert after["import"] < before["import"]
+    assert len(glob.glob(os.path.join(d, "term_df", "*.parquet"))) > 1
     ranges = _row_group_ranges(d)
     assert all(a[1] < b[0] for a, b in zip(ranges, ranges[1:])), ranges
 
