@@ -26,9 +26,12 @@ ENGLISH_STOPWORDS = frozenset(
     i you we they them his her our your""".split()
 )
 
-# Seed list of heavy-hitter terms for salting (north_star: 'import', 'def').
-# At runtime the build *measures* df and extends this list — a static list
-# alone does not survive corpus drift (SURVEY.md §7 hard part b).
+# Seed list of heavy-hitter terms (north_star: 'import', 'def'), recorded
+# with the measured ones as stats.json ``hot_terms``. At runtime the build
+# *measures* df and extends this list — a static list alone does not
+# survive corpus drift (SURVEY.md §7 hard part b). Aggregations over a hot
+# term rely on map-side partial aggregation; only the per-key top-N
+# (``operators/bm25.salted_topn``) salts.
 STATIC_HOT_TERMS = ("import", "def", "the", "class", "return", "self")
 
 
@@ -44,8 +47,6 @@ class EngineConfig:
     # top-k, merged globally. At 10^12 docs this is the axis that scales —
     # shards = O(cluster size), each shard's postings bounded by shard size.
     n_shards: int = 8
-    # Salting fan-out for heavy-hitter terms in the df/stats aggregation.
-    n_salts: int = 16
     # Terms whose measured df exceeds this fraction of N are treated as hot.
     hot_term_df_fraction: float = 0.05
     static_hot_terms: tuple[str, ...] = STATIC_HOT_TERMS

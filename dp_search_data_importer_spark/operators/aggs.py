@@ -22,30 +22,19 @@ matched, not the whole index):
 
 Scale shape, shared by all: hits⨝meta keys on doc_id (one shuffle), every
 bucket count / sum is a hash agg with map-side partials, and any top-N
-ordering goes through the salted two-phase window pattern from
-``operators/bm25.py`` so a high-cardinality bucket key never funnels
-through a single task. Sums that feed equality-checked outputs use exact
+ordering goes through :func:`~.bm25.salted_topn` so a high-cardinality
+bucket key never funnels through a single task. Sums that feed equality-checked outputs use exact
 integer arithmetic (BIGINT) so partial-agg order cannot change results.
 """
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame, Window
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-
-def _salted_topn(df: DataFrame, part_cols: list[str], order, n: int,
-                 salt_col: Column, n_salts: int = 32) -> DataFrame:
-    """Two-phase top-N per partition group: a salted pre-window keeps ≤ n
-    rows per (group, salt) slice in parallel; the final window ranks only
-    the ≤ n·n_salts survivors."""
-    w_pre = Window.partitionBy(
-        *part_cols, F.pmod(F.xxhash64(salt_col), F.lit(n_salts))
-    ).orderBy(*order)
-    pruned = (df.withColumn("_prn", F.row_number().over(w_pre))
-              .filter(F.col("_prn") <= n).drop("_prn"))
-    w = Window.partitionBy(*part_cols).orderBy(*order)
-    return (pruned.withColumn("_rn", F.row_number().over(w))
-            .filter(F.col("_rn") <= n).drop("_rn"))
+from dp_search_data_importer_spark.operators.bm25 import (
+    ROUND_DIGITS,
+    salted_topn,
+)
 
 
 def range_agg(hits: DataFrame, meta: DataFrame, field: str,
@@ -94,8 +83,7 @@ def range_agg(hits: DataFrame, meta: DataFrame, field: str,
 
 
 def percentiles_agg(hits: DataFrame, meta: DataFrame, field: str,
-                    percents: list[float],
-                    round_digits: int = 4) -> DataFrame:
+                    percents: list[float]) -> DataFrame:
     """ES ``percentiles`` aggregation over each query's hit set — the
     EXACT linear-interpolation definition (index p·(n−1) into the sorted
     values, interpolate between neighbors). ES's default t-digest is an
@@ -120,7 +108,7 @@ def percentiles_agg(hits: DataFrame, meta: DataFrame, field: str,
     return (agg.select("query_id", F.explode(pairs).alias("pv"))
             .select("query_id",
                     F.col("pv.percent").alias("percent"),
-                    F.round(F.col("pv.value"), round_digits).alias("value")))
+                    F.round(F.col("pv.value"), ROUND_DIGITS).alias("value")))
 
 
 def cardinality_agg(hits: DataFrame, meta: DataFrame, fields: list[str],
@@ -151,8 +139,8 @@ def cardinality_agg(hits: DataFrame, meta: DataFrame, fields: list[str],
     return out.select("query_id", "field", "value")
 
 
-def extended_stats_agg(hits: DataFrame, meta: DataFrame, field: str,
-                       round_digits: int = 4) -> DataFrame:
+def extended_stats_agg(hits: DataFrame, meta: DataFrame,
+                       field: str) -> DataFrame:
     """ES ``extended_stats`` aggregation over each query's hit set:
     count, min, max, sum, avg, sum_of_squares, variance (population, as
     ES defines it), std_deviation. All moments accumulate as exact
@@ -176,16 +164,16 @@ def extended_stats_agg(hits: DataFrame, meta: DataFrame, field: str,
     var = F.col("sum_sq") / n - mean * mean
     return agg.select(
         "query_id", "doc_count", "min_v", "max_v", "sum_v", "sum_sq",
-        F.round(mean, round_digits).alias("avg_v"),
-        F.round(var, round_digits).alias("variance"),
+        F.round(mean, ROUND_DIGITS).alias("avg_v"),
+        F.round(var, ROUND_DIGITS).alias("variance"),
         F.round(F.sqrt(F.greatest(var, F.lit(0.0))),
-                round_digits).alias("std_deviation"),
+                ROUND_DIGITS).alias("std_deviation"),
     )
 
 
 def top_hits_agg(hits: DataFrame, meta: DataFrame, bucket_field: str,
                  sort_field: str, hits_per_bucket: int = 2,
-                 ascending: bool = False, n_salts: int = 32) -> DataFrame:
+                 ascending: bool = False) -> DataFrame:
     """ES ``terms`` aggregation with a ``top_hits`` sub-aggregation: for
     each (query, bucket value) group, the top documents by a sort field
     (doc_id asc tie-break — total order). The ES shape behind "show the
@@ -194,24 +182,18 @@ def top_hits_agg(hits: DataFrame, meta: DataFrame, bucket_field: str,
 
     Output: (query_id, bucket, doc_id, <sort_field>, hit_rank).
 
-    Scale shape: per-(query, bucket) top-N via the salted two-phase
-    window — a skewed bucket (one value holding most docs) never ranks
-    through a single task."""
+    Scale shape: per-(query, bucket) top-N via
+    :func:`~.bm25.salted_topn` — a skewed bucket (one value holding most
+    docs) never ranks through a single task."""
     j = hits.join(meta, "doc_id")
     v = F.col(sort_field)
     order = (v.asc(), F.col("doc_id").asc()) if ascending else \
         (v.desc(), F.col("doc_id").asc())
     bucketed = j.withColumn("bucket",
                             F.col(bucket_field).cast("string"))
-    w_pre = Window.partitionBy(
-        "query_id", "bucket",
-        F.pmod(F.xxhash64(F.col("doc_id")), F.lit(n_salts))
-    ).orderBy(*order)
-    pruned = (bucketed.withColumn("_prn", F.row_number().over(w_pre))
-              .filter(F.col("_prn") <= hits_per_bucket).drop("_prn"))
-    w = Window.partitionBy("query_id", "bucket").orderBy(*order)
-    return (pruned.withColumn("hit_rank", F.row_number().over(w))
-            .filter(F.col("hit_rank") <= hits_per_bucket)
+    return (salted_topn(bucketed, ["query_id", "bucket"], order,
+                        hits_per_bucket, salt_col=F.col("doc_id"),
+                        rank_col="hit_rank")
             .select("query_id", "bucket", "doc_id", sort_field,
                     F.col("hit_rank").cast("int")))
 
@@ -235,7 +217,7 @@ def composite_page(hits: DataFrame, meta: DataFrame, keys: list[str],
     ordered by the key tuple ascending.
 
     Scale shape: one hash agg over (query, keys) with map-side partials,
-    then the salted two-phase top-N on the key order. The cursor
+    then :func:`~.bm25.salted_topn` on the key order. The cursor
     predicate prunes before the agg — deep pages get CHEAPER."""
     j = hits.join(meta, "doc_id")
     if after:
@@ -258,8 +240,8 @@ def composite_page(hits: DataFrame, meta: DataFrame, keys: list[str],
     buckets = j.groupBy("query_id", *keys).agg(
         F.count(F.lit(1)).cast("long").alias("doc_count"))
     order = [F.col(k).asc() for k in keys]
-    return _salted_topn(buckets, ["query_id"], order, size,
-                        salt_col=F.concat_ws("\x1f", *keys))
+    return salted_topn(buckets, ["query_id"], order, size,
+                       salt_col=F.concat_ws("\x1f", *keys))
 
 
 def composite_after_key(rows, keys: list[str]) -> dict[int, tuple]:

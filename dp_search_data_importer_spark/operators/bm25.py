@@ -126,8 +126,8 @@ def bm25_scores(
     tf branch (column pruning makes their exchanges non-identical, so the
     whole tokenize pipeline ran twice; measured in plans/r06). ONLY for
     term-PRUNED tf frames: a corpus-wide window by term funnels a hot
-    term into one partition — ``doc_freqs``' salted aggregation stays the
-    general-path answer (guide §2.5).
+    term into one partition — ``doc_freqs``' partially aggregated count
+    stays the general-path answer (guide §2.5).
 
     ``min_match`` (ES ``match`` operator=and / minimum_should_match):
     keep only docs matching ≥ that many DISTINCT query terms — the
@@ -160,6 +160,33 @@ def bm25_scores(
             .filter(F.col("_nm") >= int(min_match)).drop("_nm"))
 
 
+# Scores (and every other ranked float) round to ROUND_DIGITS before they
+# rank, so a rank is stable under float summation-order differences
+# between engines and paths (SURVEY.md §7 hard part a).
+ROUND_DIGITS = 4
+# Fan-out of the salted pre-window in :func:`salted_topn`.
+N_SALTS = 32
+
+
+def salted_topn(df: DataFrame, part_cols: list[str], order, n: int,
+                salt_col: Column, rank_col: str | None = None) -> DataFrame:
+    """Top ``n`` rows per ``part_cols`` group by ``order``, in two phases:
+    a pre-window keeps ≤ n rows per (group, hash(salt_col) mod N_SALTS)
+    slice in parallel, and the group window ranks only the ≤ n·N_SALTS
+    survivors, so a hot group never ranks all its rows in one task.
+    ``rank_col`` keeps the final 1-based rank under that name."""
+    w_pre = Window.partitionBy(
+        *part_cols, F.pmod(F.xxhash64(salt_col), F.lit(N_SALTS))
+    ).orderBy(*order)
+    pruned = (df.withColumn("_prn", F.row_number().over(w_pre))
+              .filter(F.col("_prn") <= n).drop("_prn"))
+    rank = rank_col or "_rn"
+    w = Window.partitionBy(*part_cols).orderBy(*order)
+    ranked = (pruned.withColumn(rank, F.row_number().over(w))
+              .filter(F.col(rank) <= n))
+    return ranked if rank_col else ranked.drop(rank)
+
+
 # The round-then-rank top-k as SQL text: the stored-index statements
 # (plans/query.py) and :func:`topk` compose these same pieces.
 RANK_SQL = ("row_number() OVER (PARTITION BY query_id "
@@ -183,20 +210,17 @@ def after_sql(cursor: str) -> str:
             f"(score = {cursor}.c_score AND doc_id > {cursor}.c_doc))")
 
 
-def cursor_rows(after: dict[int, tuple[float, int]],
-                round_digits: int = 4) -> list[dict]:
+def cursor_rows(after: dict[int, tuple[float, int]]) -> list[dict]:
     """``after`` as ``CURSOR_DDL`` rows, scores rounded like the ranking."""
     return [{"query_id": int(q), "page_end": {
-        "c_score": round(float(sc), round_digits), "c_doc": int(d)}}
+        "c_score": round(float(sc), ROUND_DIGITS), "c_doc": int(d)}}
         for q, (sc, d) in sorted(after.items())]
 
 
-def round_sql(round_digits: int = 4) -> str:
-    return f"round(score, {int(round_digits)})"
+ROUND_SQL = f"round(score, {ROUND_DIGITS})"
 
 
-def topk_sql(scores: str, k: str, round_digits: int = 4,
-             cursor_json: str | None = None) -> str:
+def topk_sql(scores: str, k: str, cursor_json: str | None = None) -> str:
     """Per-query top-k as SQL text over the query ``scores`` (query_id,
     doc_id, score): round, drop what is not strictly after the cursor,
     rank, keep ``rn <= k``. ``k`` and ``cursor_json`` are SQL expressions
@@ -207,11 +231,11 @@ def topk_sql(scores: str, k: str, round_digits: int = 4,
              if cursor_json is not None else "")
     return (f"SELECT query_id, doc_id, score FROM (SELECT query_id, doc_id, "
             f"score, {RANK_SQL} AS rn FROM (SELECT query_id, doc_id, "
-            f"{round_sql(round_digits)} AS score{cur} "
+            f"{ROUND_SQL} AS score{cur} "
             f"FROM ({scores})){where}) WHERE rn <= {k}")
 
 
-def topk(scores: DataFrame, k: int, round_digits: int = 4,
+def topk(scores: DataFrame, k: int,
          after: dict[int, tuple[float, int]] | None = None) -> DataFrame:
     """Per-query top-k, deterministically ordered by (round(score) desc,
     doc_id asc). Rounding before ranking makes rank stable under float
@@ -228,11 +252,11 @@ def topk(scores: DataFrame, k: int, round_digits: int = 4,
     materializes earlier pages. The cursor is one constant-folded plan
     literal looked up per query_id; queries absent from ``after``
     paginate from the top. Same SQL text as :func:`topk_sql`."""
-    rounded = scores.withColumn("score", F.expr(round_sql(round_digits)))
+    rounded = scores.withColumn("score", F.expr(ROUND_SQL))
     if after:
         rounded = (
             rounded.withColumn("_cursor_json", F.lit(json.dumps(
-                cursor_rows(after, round_digits))))
+                cursor_rows(after))))
             .withColumn("_cursor", F.expr(cursor_sql("_cursor_json")))
             .filter(F.expr(after_sql("_cursor")))
             .drop("_cursor_json", "_cursor"))
@@ -242,8 +266,7 @@ def topk(scores: DataFrame, k: int, round_digits: int = 4,
 
 def more_like_this_terms(tf: DataFrame, dfs: DataFrame, stats: DataFrame,
                          like_doc_id: int, max_query_terms: int = 25,
-                         min_doc_freq: int = 1,
-                         round_digits: int = 4) -> DataFrame:
+                         min_doc_freq: int = 1) -> DataFrame:
     """ES ``more_like_this`` term selection: the liked document's terms
     ranked by tf·idf, top ``max_query_terms`` kept (ES 7.10 default 25).
     The idf is the same BM25 idf the scorer uses; the weight is ROUNDED
@@ -260,7 +283,7 @@ def more_like_this_terms(tf: DataFrame, dfs: DataFrame, stats: DataFrame,
     idf = F.log(F.lit(1.0) + (F.col("n_docs") - F.col("df") + F.lit(0.5))
                 / (F.col("df") + F.lit(0.5)))
     weighted = cand.withColumn(
-        "w", F.round(idf * F.col("tf").cast("double"), round_digits))
+        "w", F.round(idf * F.col("tf").cast("double"), ROUND_DIGITS))
     # deterministic top-N selection via TakeOrdered (orderBy().limit()),
     # not an unpartitioned row_number window — same total order, no
     # single-partition funnel (the set is one doc's vocabulary anyway)
@@ -290,7 +313,7 @@ def more_like_this_topk(tf: DataFrame, dfs: DataFrame, stats: DataFrame,
     # re-attached after the limit
     ranked = (
         scores.filter(F.col("doc_id") != like_doc_id)
-        .withColumn("score", F.round(F.col("score"), 4))
+        .withColumn("score", F.round(F.col("score"), ROUND_DIGITS))
         .orderBy(F.col("score").desc(), F.col("doc_id").asc())
         .limit(k)
     )
@@ -300,7 +323,6 @@ def more_like_this_topk(tf: DataFrame, dfs: DataFrame, stats: DataFrame,
 
 def significant_terms(tf: DataFrame, fg_docs: DataFrame, dfs: DataFrame,
                       stats: DataFrame, min_fg_df: int = 3, top_n: int = 20,
-                      round_digits: int = 4,
                       broadcast_limit: int = 2_000_000) -> DataFrame:
     """ES ``significant_terms`` aggregation twin (JLH scoring, the ES
     default): terms over-represented in a FOREGROUND document set vs the
@@ -338,7 +360,7 @@ def significant_terms(tf: DataFrame, fg_docs: DataFrame, dfs: DataFrame,
     p_bg = F.col("df").cast("double") / F.col("n_docs").cast("double")
     scored = j.select(
         "term", "fg_df", F.col("df").alias("bg_df"),
-        F.round((p_fg - p_bg) * (p_fg / p_bg), round_digits).alias("jlh"),
+        F.round((p_fg - p_bg) * (p_fg / p_bg), ROUND_DIGITS).alias("jlh"),
     )
     # top-N via orderBy+limit = TakeOrdered (per-partition heaps + driver
     # merge) — a global row_number window would funnel every surviving
@@ -362,8 +384,7 @@ def page_cursor(rows) -> dict[int, tuple[float, int]]:
 
 def sort_topk(hits: DataFrame, sort_col: str, k: int,
               ascending: bool = False,
-              after: dict[int, tuple] | None = None,
-              n_salts: int = 32) -> DataFrame:
+              after: dict[int, tuple] | None = None) -> DataFrame:
     """ES sort-by-field twin (``"sort": [{field: desc}, {"_id": asc}]``):
     order a query's HIT SET by a metadata field instead of ``_score``
     (the reference's ES consumers sort on exactly such fields —
@@ -377,10 +398,8 @@ def sort_topk(hits: DataFrame, sort_col: str, k: int,
     applied as a pushed strict-after predicate, so page n never
     materializes pages 1..n−1.
 
-    Scale shape: the hit set of a broad query is unbounded, so the final
-    per-query window cannot see it raw — a salted pre-window keeps at
-    most k rows per (query, salt) slice in parallel and the query-level
-    window ranks ≤ k·n_salts survivors."""
+    Scale shape: the hit set of a broad query is unbounded, so the
+    per-query rank is :func:`salted_topn` salted by doc_id."""
     v = F.col(sort_col)
     direction = (v.asc(), F.col("doc_id").asc()) if ascending else \
         (v.desc(), F.col("doc_id").asc())
@@ -398,19 +417,12 @@ def sort_topk(hits: DataFrame, sort_col: str, k: int,
         strict = (v > c_v) if ascending else (v < c_v)
         hits = hits.filter(cur.isNull() | strict
                            | ((v == c_v) & (F.col("doc_id") > c_doc)))
-    w_pre = Window.partitionBy(
-        "query_id", F.pmod(F.xxhash64(F.col("doc_id")), F.lit(n_salts))
-    ).orderBy(*direction)
-    pruned = (hits.withColumn("prn", F.row_number().over(w_pre))
-              .filter(F.col("prn") <= k).drop("prn"))
-    w = Window.partitionBy("query_id").orderBy(*direction)
-    return (pruned.withColumn("rn", F.row_number().over(w))
-            .filter(F.col("rn") <= k).drop("rn"))
+    return salted_topn(hits, ["query_id"], direction, k,
+                       salt_col=F.col("doc_id"))
 
 
 def facet_terms(hits: DataFrame, docs_meta: DataFrame,
-                facet_fields: list[str], top_n: int = 5,
-                n_salts: int = 32) -> DataFrame:
+                facet_fields: list[str], top_n: int = 5) -> DataFrame:
     """ES query-scoped ``terms`` aggregation twin (faceted search): bucket
     counts of metadata fields over the HIT SET of each query — what
     nearly every ES search UI requests alongside the hits. ``hits`` is
@@ -420,8 +432,8 @@ def facet_terms(hits: DataFrame, docs_meta: DataFrame,
 
     Scale shape: one shuffle — the hits⨝meta join keys on doc_id and the
     bucket counts are hash aggs with map-side partials; the per-facet
-    top-N uses the salted two-phase window so a high-cardinality facet
-    (millions of distinct keys) never funnels through one task."""
+    top-N is :func:`salted_topn` salted by key, so a high-cardinality
+    facet (millions of distinct keys) never funnels through one task."""
     joined = hits.join(docs_meta, "doc_id")
     per_field = []
     for f in facet_fields:
@@ -435,14 +447,8 @@ def facet_terms(hits: DataFrame, docs_meta: DataFrame,
     for other in per_field[1:]:
         buckets = buckets.unionByName(other)
     order = (F.col("doc_count").desc(), F.col("key").asc())
-    w_pre = Window.partitionBy(
-        "query_id", "facet", F.pmod(F.xxhash64(F.col("key")), F.lit(n_salts))
-    ).orderBy(*order)
-    pruned = (buckets.withColumn("prn", F.row_number().over(w_pre))
-              .filter(F.col("prn") <= top_n).drop("prn"))
-    w = Window.partitionBy("query_id", "facet").orderBy(*order)
-    return (pruned.withColumn("rn", F.row_number().over(w))
-            .filter(F.col("rn") <= top_n).drop("rn")
+    return (salted_topn(buckets, ["query_id", "facet"], order, top_n,
+                        salt_col=F.col("key"))
             .select("query_id", "facet", "key", "doc_count"))
 
 
@@ -845,8 +851,7 @@ def dis_max_scores(branches: list[DataFrame],
 
 def rescore_topk(base: DataFrame, rescorer: DataFrame, window_size: int,
                  k: int, query_weight: float = 1.0,
-                 rescore_weight: float = 1.0,
-                 round_digits: int = 4) -> DataFrame:
+                 rescore_weight: float = 1.0) -> DataFrame:
     """ES ``rescore`` twin: re-rank only the top ``window_size`` hits of
     a cheap first-pass query with an expensive second query — the
     standard ES pattern for phrase-boosting a match query without paying
@@ -867,7 +872,7 @@ def rescore_topk(base: DataFrame, rescorer: DataFrame, window_size: int,
     only |queries|·window_size rows — the whole point of rescoring. At
     stored-index scale the rescorer runs over ONLY the window doc set
     (pushed semi-join), never the corpus."""
-    window = topk(base, window_size, round_digits=round_digits)
+    window = topk(base, window_size)
     joined = window.withColumnRenamed("score", "base_score").join(
         rescorer.withColumnRenamed("score", "re_score"),
         ["query_id", "doc_id"], "left")
@@ -876,4 +881,4 @@ def rescore_topk(base: DataFrame, rescorer: DataFrame, window_size: int,
         (F.lit(float(query_weight)) * F.col("base_score")
          + F.lit(float(rescore_weight))
          * F.coalesce(F.col("re_score"), F.lit(0.0))).alias("score"))
-    return topk(combined, k, round_digits=round_digits)
+    return topk(combined, k)

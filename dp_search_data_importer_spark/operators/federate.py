@@ -34,7 +34,10 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from dp_search_data_importer_spark.config import EngineConfig
-from dp_search_data_importer_spark.operators.bm25 import bm25_term_score
+from dp_search_data_importer_spark.operators.bm25 import (
+    ROUND_DIGITS,
+    bm25_term_score,
+)
 
 INDEX_COL = "index_name"
 
@@ -92,8 +95,7 @@ def federated_scores(tf: DataFrame, qterms: DataFrame, dfs: DataFrame,
         .agg(F.sum("term_score").alias("score")))
 
 
-def federated_topk(scores: DataFrame, k: int,
-                   round_digits: int = 4) -> DataFrame:
+def federated_topk(scores: DataFrame, k: int) -> DataFrame:
     """Global per-query top-k across indexes — the coordinating-node
     merge. Deterministic total order (round(score) desc, index_name asc,
     doc_id asc): the index tie-break mirrors ES's stable shard order and
@@ -104,7 +106,7 @@ def federated_topk(scores: DataFrame, k: int,
         F.col("score").desc(), F.col(INDEX_COL).asc(),
         F.col("doc_id").asc())
     return (scores
-            .withColumn("score", F.round(F.col("score"), round_digits))
+            .withColumn("score", F.round(F.col("score"), ROUND_DIGITS))
             .withColumn("rn", F.row_number().over(w))
             .filter(F.col("rn") <= k).drop("rn"))
 

@@ -36,11 +36,10 @@ from dp_search_data_importer_spark.functions.tokenize import (
 )
 
 
-# projected pruned-positions crossover (same rationale as the pruned-tf
-# projection in postings.py: per-term work scales with |vocab| × tokens,
-# the posexplode path is vocab-independent); env-overridable for re-tuning
-_PRUNED_POS_PROJECTED_MAX = int(
-    os.environ.get("SPARK_GRAFT_PRUNED_POS_PROJECTED_MAX", "48"))
+# projected pruned-positions crossover: the projected path's per-term
+# work scales with |vocab| × tokens, while the posexplode path is
+# vocab-independent, so a vocabulary above this size takes posexplode
+_PRUNED_POS_PROJECTED_MAX = 48
 
 _POS_TOKEN_SHAPE = re.compile(r"[a-z0-9]+\Z")
 

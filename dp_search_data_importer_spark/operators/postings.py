@@ -11,7 +11,10 @@ Dataflow (designed for 10^12 docs):
                                                             # shuffle carries
                                                             # pre-aggregated
                                                             # pairs, not tokens
-       --groupBy(term) [salted two-phase]--> df per term    # skew-safe
+       --groupBy(term) [partial count]--> df per term       # skew-safe:
+                                                            # each map task
+                                                            # sends a hot
+                                                            # term one row
        --repartition(shard) + sortWithinPartitions          # shard =
          (shard, term, doc_id)--> sorted runs               # hash(doc_id):
                                                             # a hot term
@@ -122,25 +125,12 @@ def corpus_stats_from_docs(docs: DataFrame, text_col: str = "text",
     )
 
 
-def doc_freqs(tf: DataFrame, cfg: EngineConfig | None = None,
-              salted: bool = False) -> DataFrame:
-    """(term, df). With ``salted=True``, a two-level aggregation: partial
-    counts per (term, salt) then a final sum — bounds any single reducer's
-    input for heavy-hitter terms ('import' appears in ~every doc at 10^12
-    scale). Spark's hash aggregate already does map-side partials, so salting
-    mainly guards the *final* reducer against a single hot key; AQE skew
-    handling complements it. Property-tested: salted ≡ unsalted.
-    """
-    if not salted:
-        return tf.groupBy("term").agg(F.count(F.lit(1)).alias("df"))
-    cfg = cfg or EngineConfig()
-    salt = F.pmod(F.xxhash64("doc_id"), F.lit(cfg.n_salts)).alias("salt")
-    partial = (
-        tf.select("term", salt)
-        .groupBy("term", "salt")
-        .agg(F.count(F.lit(1)).alias("pdf"))
-    )
-    return partial.groupBy("term").agg(F.sum("pdf").cast("long").alias("df"))
+def doc_freqs(tf: DataFrame) -> DataFrame:
+    """(term, df): one hash aggregation. Its map-side partial count sends
+    at most one row per map task to a term's reducer, so a heavy-hitter
+    term ('import' appears in ~every doc at 10^12 scale) costs its reducer
+    O(map tasks), not O(docs)."""
+    return tf.groupBy("term").agg(F.count(F.lit(1)).alias("df"))
 
 
 def hot_terms(df_table: DataFrame, n_docs: int, cfg: EngineConfig | None = None) -> list[str]:

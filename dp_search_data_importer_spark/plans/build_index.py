@@ -208,38 +208,20 @@ def signed_counts(rows: DataFrame, sign: int = 1) -> DataFrame:
 
 def tokenize_docs(docs: DataFrame, *, code_aware: bool = True,
                   text_col: str = "content",
-                  tokenizer: str = "arrow",
                   positions: bool = False) -> DataFrame:
-    """Map-side (doc_id, term, tf, dl[, positions]) extraction.
-    ``tokenizer="arrow"`` (default) is the Python/Arrow Counter path;
-    ``"sql"`` is the pure Catalyst twin — row-identical (property-tested),
-    preferable on JVM-only executors. Measured trade-off in
-    BENCH/ANALYSIS.md (round 2). ``positions=True`` adds each row's
-    ascending token positions (len == tf) for positional index builds."""
+    """Map-side (doc_id, term, tf, dl[, positions]) extraction on the
+    Python/Arrow Counter path. Its pure-Catalyst twins
+    (``postings.term_freqs_sql``, ``phrase.doc_positions``) are the
+    property-tested oracles of its rows. ``positions=True`` adds each
+    row's ascending token positions (len == tf) for positional index
+    builds."""
     if positions:
-        if tokenizer == "sql":
-            from dp_search_data_importer_spark.operators.phrase import (
-                doc_positions,
-            )
-
-            return doc_positions(
-                docs, code_aware=code_aware, text_col=text_col,
-            ).select("doc_id", "term",
-                     F.size("positions").cast("long").alias("tf"),
-                     "dl", "positions")
         from dp_search_data_importer_spark.functions.tokenize import (
             term_freqs_with_positions,
         )
 
         return term_freqs_with_positions(
             docs, code_aware=code_aware, text_col=text_col)
-    if tokenizer == "sql":
-        from dp_search_data_importer_spark.operators.postings import (
-            term_freqs_sql,
-        )
-
-        return term_freqs_sql(docs, id_col="doc_id", text_col=text_col,
-                              code_aware=code_aware)
     fn = code_term_freqs if code_aware else simple_term_freqs
     return fn(docs, id_col="doc_id", text_col=text_col)
 
@@ -252,7 +234,6 @@ def build_index(
     *,
     code_aware: bool = True,
     text_col: str = "content",
-    tokenizer: str = "arrow",
     waves: int | None = None,
     resume: bool = True,
     already_normalized: bool = False,
@@ -403,7 +384,7 @@ def build_index(
                 docs.filter(F.col("shard").isin(wave_shards))
                 .select("doc_id", text_col),
                 code_aware=code_aware, text_col=text_col,
-                tokenizer=tokenizer, positions=positions,
+                positions=positions,
             ).withColumn(
                 "shard",
                 F.pmod(F.col("doc_id"), F.lit(cfg.n_shards)).cast("int"))

@@ -109,9 +109,11 @@ def q_doc_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def q_term_df(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """B2: document frequency per term (salted two-phase agg)."""
+    """B2: document frequency per term: one hash aggregation whose
+    map-side partial count sends a hot term at most one row per map task
+    (no salting)."""
     tf = _docs_tf(spark, sf_dir)
-    return postings_ops.doc_freqs(tf, CFG, salted=True)
+    return postings_ops.doc_freqs(tf)
 
 
 def q_corpus_stats(spark: SparkSession, sf_dir: str) -> DataFrame:

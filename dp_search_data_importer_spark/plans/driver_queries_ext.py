@@ -170,28 +170,17 @@ def q_field_collapse(spark: SparkSession, sf_dir: str) -> DataFrame:
                                   postings_ops.corpus_stats_from_docs(docs))
     rounded = scores.select(
         "query_id", "doc_id",
-        F.round("score", 4).alias("score"),
+        F.round("score", bm25_ops.ROUND_DIGITS).alias("score"),
         F.pmod(F.col("doc_id"), F.lit(10)).alias("grp"))
-    w_in = Window.partitionBy("query_id", "grp").orderBy(
-        F.col("score").desc(), F.col("doc_id").asc())
+    order = (F.col("score").desc(), F.col("doc_id").asc())
+    w_in = Window.partitionBy("query_id", "grp").orderBy(*order)
     best = (rounded.withColumn("rn", F.row_number().over(w_in))
             .filter(F.col("rn") == 1).drop("rn"))
     # final ranking: collapse cardinality = #groups (sites/repos — can be
     # millions), so a single window over query_id would funnel every group
-    # winner through ONE task. Two-phase per-key top-N instead: a salted
-    # pre-window keeps at most k rows per (query, salt) slice in parallel,
-    # then the query-level window ranks ≤ k·n_salts survivors — the same
-    # bounded-input discipline as the significant_terms TakeOrdered fix.
-    n_salts = 32
-    w_pre = Window.partitionBy(
-        "query_id", F.pmod(F.xxhash64(F.col("grp")), F.lit(n_salts))
-    ).orderBy(F.col("score").desc(), F.col("doc_id").asc())
-    pruned = (best.withColumn("prn", F.row_number().over(w_pre))
-              .filter(F.col("prn") <= 5).drop("prn"))
-    w_out = Window.partitionBy("query_id").orderBy(
-        F.col("score").desc(), F.col("doc_id").asc())
-    return (pruned.withColumn("rn", F.row_number().over(w_out))
-            .filter(F.col("rn") <= 5)
+    # winner through ONE task; salted_topn salts it by group
+    return (bm25_ops.salted_topn(best, ["query_id"], order, 5,
+                                 salt_col=F.col("grp"))
             .select("query_id", "doc_id", "grp", "score"))
 
 

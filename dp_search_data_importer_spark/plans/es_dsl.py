@@ -61,7 +61,7 @@ bounded composition of scans the planner memoizes per field (one tf/dfs/
 stats/positions build per field per request, shared across clauses).
 Compound scoring is union → ONE hash agg (map-side partials); filter
 context applies as broadcast-or-shuffle semi-joins that never touch
-scores; ranking reuses the salted/two-phase top-k machinery. Aggregations
+scores; per-key ranking reuses ``operators/bm25.salted_topn``. Aggregations
 run over the hit SET (doc_id frame), exactly the ES execution model. At
 stored-index scale the same request compiles against ``plans/query``
 (``load_blocks``) — this dataflow form is the semantics reference and
@@ -75,6 +75,10 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from dp_search_data_importer_spark.config import EngineConfig
+from dp_search_data_importer_spark.operators.bm25 import (
+    ROUND_DIGITS,
+    salted_topn,
+)
 
 
 class EsDslError(ValueError):
@@ -2732,18 +2736,12 @@ class EsSearchPlanner:
                        <= max_edits))
                 .withColumn("dist", F.levenshtein("term", "token"))
                 .filter(F.col("dist") <= max_edits))
-        # top-n_cand per pos: salted two-phase so a huge candidate set
-        # never funnels through one task per token (the field_collapse
-        # treatment)
-        wp = Window.partitionBy(
-            "pos", F.pmod(F.xxhash64("term"), F.lit(32))).orderBy(
-            F.col("dist").asc(), F.col("df").desc(), F.col("term").asc())
-        w = Window.partitionBy("pos").orderBy(
-            F.col("dist").asc(), F.col("df").desc(), F.col("term").asc())
-        rows = (cand.withColumn("prn", F.row_number().over(wp))
-                .filter(F.col("prn") <= n_cand).drop("prn")
-                .withColumn("rn", F.row_number().over(w))
-                .filter(F.col("rn") <= n_cand)
+        # top-n_cand per pos, salted by term so a huge candidate set
+        # never funnels through one task per token
+        rows = (salted_topn(
+            cand, ["pos"],
+            (F.col("dist").asc(), F.col("df").desc(), F.col("term").asc()),
+            n_cand, salt_col=F.col("term"))
                 .select("pos", "term", "dist", "df").collect())
         by_pos: dict[int, list[tuple[str, int, int]]] = {}
         for r in rows:
@@ -2768,8 +2766,7 @@ class EsSearchPlanner:
 
     @staticmethod
     def _single_topk(scores: DataFrame, k: int,
-                     after: tuple[float, int] | None = None,
-                     round_digits: int = 4) -> DataFrame:
+                     after: tuple[float, int] | None = None) -> DataFrame:
         """Single-request top-k: round-then-rank like
         :func:`~.bm25.topk`, but via ``orderBy().limit()`` — Spark
         compiles it to TakeOrdered (distributed per-partition top-k +
@@ -2777,9 +2774,9 @@ class EsSearchPlanner:
         CONSTANT query_id would constant-fold to an unpartitioned window
         and funnel every candidate through one task; batch callers with
         real query_id data columns keep using ``topk``."""
-        r = scores.withColumn("score", F.round("score", round_digits))
+        r = scores.withColumn("score", F.round("score", ROUND_DIGITS))
         if after is not None:
-            s, d = round(float(after[0]), round_digits), int(after[1])
+            s, d = round(float(after[0]), ROUND_DIGITS), int(after[1])
             r = r.filter((F.col("score") < F.lit(s))
                          | ((F.col("score") == F.lit(s))
                             & (F.col("doc_id") > F.lit(d))))
@@ -2844,27 +2841,19 @@ class EsSearchPlanner:
         if collapse:
             fld = collapse["field"]
             meta = self.docs.select(F.col(self.id_col).alias("doc_id"), fld)
-            from pyspark.sql import Window
-
             j = scores.withColumn(
-                "score", F.round("score", 4)).join(meta, "doc_id")
-            # per-collapse-key winner: salted two-phase window on the
-            # REAL key column (no constant partition keys anywhere)
-            w = Window.partitionBy(
-                fld, F.pmod(F.xxhash64(F.col("doc_id")), F.lit(32))
-            ).orderBy(F.col("score").desc(), F.col("doc_id").asc())
-            wf = Window.partitionBy(fld).orderBy(
-                F.col("score").desc(), F.col("doc_id").asc())
-            winners = (j.withColumn("prn", F.row_number().over(w))
-                       .filter(F.col("prn") <= 1).drop("prn")
-                       .withColumn("rn", F.row_number().over(wf))
-                       .filter(F.col("rn") == 1).drop("rn"))
+                "score", F.round("score", ROUND_DIGITS)).join(meta, "doc_id")
+            order = (F.col("score").desc(), F.col("doc_id").asc())
+            # per-collapse-key winner, partitioned by the REAL key column
+            # (no constant partition keys anywhere)
+            winners = salted_topn(j, [fld], order, 1,
+                                  salt_col=F.col("doc_id"))
             hits = (winners.orderBy(F.col("score").desc(),
                                     F.col("doc_id").asc()).limit(size))
             if "inner_hits" in collapse:
                 # ES collapse.inner_hits: the top-N docs of each group
-                # that made the page. Same salted two-phase per-group
-                # rank as the winner pass (never one task per group);
+                # that made the page. Same salted per-group rank as the
+                # winner pass (never one task per group);
                 # the page's group keys are ≤ size rows — broadcast
                 # semi-join prunes the expansion to exactly those
                 # groups before the rank runs.
@@ -2881,16 +2870,9 @@ class EsSearchPlanner:
                 n_inner = int(ih.get("size", 3))
                 page_keys = hits.select(fld).distinct()
                 grp = j.join(F.broadcast(page_keys), fld, "left_semi")
-                iw = Window.partitionBy(
-                    fld, F.pmod(F.xxhash64(F.col("doc_id")), F.lit(32))
-                ).orderBy(F.col("score").desc(), F.col("doc_id").asc())
-                iwf = Window.partitionBy(fld).orderBy(
-                    F.col("score").desc(), F.col("doc_id").asc())
-                inner = (grp.withColumn("prn", F.row_number().over(iw))
-                         .filter(F.col("prn") <= n_inner).drop("prn")
-                         .withColumn("hit_rank",
-                                     F.row_number().over(iwf))
-                         .filter(F.col("hit_rank") <= n_inner)
+                inner = (salted_topn(grp, [fld], order, n_inner,
+                                     salt_col=F.col("doc_id"),
+                                     rank_col="hit_rank")
                          .select(fld, "doc_id", "score", "hit_rank"))
             else:
                 inner = None

@@ -482,7 +482,6 @@ def upsert_docs(
     new_docs: DataFrame,
     *,
     already_normalized: bool = False,
-    tokenizer: str = "arrow",
     text_col: str = "content",
 ) -> dict:
     """Apply a batch of new/changed documents to the index at ``out_dir``.
@@ -526,7 +525,7 @@ def upsert_docs(
         # docs, plus the batch's rows (the live index is only read)
         new_tf = tokenize_docs(
             batch, code_aware=bool(stats.get("code_aware", False)),
-            text_col=text_col, tokenizer=tokenizer,
+            text_col=text_col,
             positions=bool(stats.get("positions", False)))
         meta, new_stats = _stage_batch(
             spark, out_dir, stats, affected, batch.select("doc_id"),

@@ -1,4 +1,4 @@
-"""BM25 formula vs hand-computed values + salting equivalence (SURVEY.md §5)."""
+"""BM25 formula vs hand-computed values + df invariants (SURVEY.md §5)."""
 
 from __future__ import annotations
 
@@ -74,12 +74,26 @@ def test_bm25_repeated_query_terms_counted_once(spark):
     assert _spark_topk(spark, "spark spark spark") == _spark_topk(spark, "spark")
 
 
-def test_salted_df_equals_unsalted(spark, sf_dir):
+def test_doc_freqs_pruned_and_saturated(spark, sf_dir):
+    """df over a term-pruned tf equals the full df restricted to those
+    terms, and a term present in every doc (the hot-term case) gets
+    df = n_docs."""
+    from pyspark.sql import functions as F
+
     docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
-    tf = term_freqs_sql(docs)
-    a = doc_freqs(tf, CFG, salted=False)
-    b = doc_freqs(tf, CFG, salted=True)
-    assert a.exceptAll(b).union(b.exceptAll(a)).count() == 0
+    full = {r["term"]: r["df"]
+            for r in doc_freqs(term_freqs_sql(docs)).collect()}
+    terms = sorted(full, key=lambda t: (-full[t], t))[:5] + ["zzznope"]
+    pruned = {r["term"]: r["df"]
+              for r in doc_freqs(term_freqs_sql(docs, terms=terms)).collect()}
+    assert pruned == {t: full[t] for t in terms if t in full}
+    assert len(pruned) == 5
+
+    marked = docs.select("doc_id", F.concat_ws(
+        " ", F.col("text"), F.lit("everydoc")).alias("text"))
+    got = (doc_freqs(term_freqs_sql(marked))
+           .filter(F.col("term") == "everydoc").collect())
+    assert [(r["term"], r["df"]) for r in got] == [("everydoc", docs.count())]
 
 
 def test_corpus_stats_exact(spark):

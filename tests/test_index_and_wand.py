@@ -601,17 +601,20 @@ def test_positional_index_blocks_vs_sidecar(spark, corpus, built, tmp_path):
 
 
 def test_positional_tokenizer_twins_identical(spark, corpus):
-    """Arrow and SQL positions tokenizers produce identical
+    """The Arrow positions tokenizer and its Catalyst twin
+    (``phrase.doc_positions``) produce identical
     (doc, term, tf, dl, positions) rows."""
+    from dp_search_data_importer_spark.operators.phrase import doc_positions
     from dp_search_data_importer_spark.plans.build_index import tokenize_docs
 
     docs = normalize_repo_files(corpus).limit(40)
     a = {(r["doc_id"], r["term"]): (r["tf"], r["dl"], list(r["positions"]))
-         for r in tokenize_docs(docs, code_aware=True, positions=True,
-                                tokenizer="arrow").collect()}
-    s = {(r["doc_id"], r["term"]): (r["tf"], r["dl"], list(r["positions"]))
-         for r in tokenize_docs(docs, code_aware=True, positions=True,
-                                tokenizer="sql").collect()}
+         for r in tokenize_docs(docs, code_aware=True,
+                                positions=True).collect()}
+    s = {(r["doc_id"], r["term"]): (len(r["positions"]), r["dl"],
+                                     list(r["positions"]))
+         for r in doc_positions(docs, code_aware=True,
+                                text_col="content").collect()}
     assert a == s
 
 

@@ -4,6 +4,9 @@ tree may evolve, the *properties* must not."""
 
 from __future__ import annotations
 
+import re
+from collections import Counter, defaultdict
+
 import pytest
 
 from dp_search_data_importer_spark.config import EngineConfig
@@ -15,9 +18,9 @@ from dp_search_data_importer_spark.sources.repo_files import synthetic_repo_file
 CFG = EngineConfig(n_shards=4)
 
 
-def _explain(df) -> str:
+def _explain(df, mode: str = "formatted") -> str:
     return df._jdf.queryExecution().explainString(
-        df._sc._jvm.org.apache.spark.sql.execution.ExplainMode.fromString("formatted")
+        df._sc._jvm.org.apache.spark.sql.execution.ExplainMode.fromString(mode)
     )
 
 
@@ -170,10 +173,13 @@ def test_df_agg_is_two_phase(spark, sf_dir):
     )
 
     docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
-    plan = _explain(doc_freqs(term_freqs_sql(docs), CFG, salted=True))
-    # partial (map-side) aggregate before each exchange
-    assert plan.count("HashAggregate") >= 4
-    assert "Exchange" in plan
+    tree = _explain(doc_freqs(term_freqs_sql(docs)), "simple").splitlines()
+    # the df count's map-side partial runs right below the term exchange:
+    # a hot term's reducer gets at most one row per map task
+    ex = next(i for i, line in enumerate(tree)
+              if "Exchange hashpartitioning(term#" in line)
+    assert "HashAggregate" in tree[ex + 1], tree[ex + 1]
+    assert "partial_count" in tree[ex + 1], tree[ex + 1]
 
 
 def test_relational_joins_broadcast_dims(spark, sf_dir):
@@ -283,37 +289,126 @@ def test_cross_fields_no_sort_merge(spark, sf_dir):
     assert "BroadcastHashJoin" in plan
 
 
-def test_field_collapse_final_rank_is_two_phase(spark):
-    """The collapse final ranking must NOT push every group winner through
-    one task per query: a salted pre-window bounds the query-level window's
-    input to k·n_salts rows (the significant_terms TakeOrdered treatment,
-    adapted per-key). Assert the plan carries the salted window and the
-    result still equals a brute-force reference."""
+def _assert_salted_topn(plan: str) -> None:
+    """The plan ranks through ``salted_topn``: a row_number window
+    partitioned by the group keys plus the salt (``pmod(xxhash64(…), 32)``
+    projected as ``_wN``), then one partitioned by the group keys alone."""
+    assert re.search(r"pmod\(xxhash64\([^)]*\), 32\) AS (_w\d+)", plan)
+    parts = re.findall(r"Arguments: \[row_number\(\) windowspecdefinition"
+                       r".*? AS \w+#\d+\], \[([^\]]*)\]", plan)
+    salted = [p.split(", ") for p in parts if "_w" in p]
+    assert salted, parts
+    assert any([c for c in keys if not c.startswith("_w")] == p.split(", ")
+               for keys in salted for p in parts), parts
+
+
+def _sf_hits(spark, sf):
+    """Brute-force inputs: the SRT_QUERIES hit set and the docs meta."""
     from dp_search_data_importer_spark.plans.driver_queries_ext import (
-        q_field_collapse,
+        SRT_QUERIES,
+        _match_hits_df,
     )
 
-    df = q_field_collapse(spark, "/root/testdata/sf0.001")
-    plan = _explain(df)
-    # the salt expression (pmod(xxhash64(grp), 32)) appears in a window
-    # partition spec — three windows total: best-in-group, salted prune,
-    # final rank
-    assert plan.count("Window") >= 3
-    assert "pmod" in plan and "xxhash64" in plan
+    docs, hits = _match_hits_df(spark, sf, SRT_QUERIES)
+    meta = {r["doc_id"]: r for r in
+            docs.select("doc_id", "n_chars", "lang", "source").collect()}
+    return [(r["query_id"], meta[r["doc_id"]]) for r in hits.collect()]
 
-    rows = df.collect()
-    # brute-force reference: best per (query, grp), then top-5 per query
-    from collections import defaultdict
 
+def _case_sort_topk(spark, sf):
+    from dp_search_data_importer_spark.plans.driver_queries_ext import (
+        q_sorted_search,
+    )
+
+    df = q_sorted_search(spark, sf)
+    per_q = defaultdict(list)
+    for qid, m in _sf_hits(spark, sf):
+        per_q[qid].append((-m["n_chars"], m["doc_id"]))
+    expect = {(q, d, -negv) for q, lst in per_q.items()
+              for negv, d in sorted(lst)[:10]}
+    got = {(r["query_id"], r["doc_id"], r["n_chars"]) for r in df.collect()}
+    return [df], got, expect
+
+
+def _case_facet_terms(spark, sf):
+    from dp_search_data_importer_spark.plans.driver_queries_ext import (
+        q_facet_counts,
+    )
+
+    df = q_facet_counts(spark, sf)
+    counts = Counter()
+    for qid, m in _sf_hits(spark, sf):
+        for f in ("lang", "source"):
+            counts[(qid, f, str(m[f]))] += 1
+    per = defaultdict(list)
+    for (qid, f, key), n in counts.items():
+        per[(qid, f)].append((-n, key))
+    expect = {(q, f, key, -negn) for (q, f), lst in per.items()
+              for negn, key in sorted(lst)[:5]}
+    got = {(r["query_id"], r["facet"], r["key"], r["doc_count"])
+           for r in df.collect()}
+    return [df], got, expect
+
+
+def _case_top_hits_agg(spark, sf):
+    from dp_search_data_importer_spark.plans.driver_queries_ext import (
+        q_facet_top_hits,
+    )
+
+    df = q_facet_top_hits(spark, sf)
+    per = defaultdict(list)
+    for qid, m in _sf_hits(spark, sf):
+        per[(qid, str(m["lang"]))].append((-m["n_chars"], m["doc_id"]))
+    expect = {(q, b, d, -negv, i + 1) for (q, b), lst in per.items()
+              for i, (negv, d) in enumerate(sorted(lst)[:2])}
+    got = {(r["query_id"], r["bucket"], r["doc_id"], r["n_chars"],
+            r["hit_rank"]) for r in df.collect()}
+    return [df], got, expect
+
+
+def _case_collapse(spark, sf):
+    """Planner ``collapse`` with ``inner_hits``: both the winner pass and
+    the inner-hits rank."""
+    from dp_search_data_importer_spark.plans.es_dsl import EsSearchPlanner
+    from dp_search_data_importer_spark.sources.tables import load_table
+
+    planner = EsSearchPlanner(spark, load_table(spark, sf, "documents"))
+    res = planner.search({"query": {"match": {"text": "hash"}}, "size": 10,
+                          "collapse": {"field": "lang",
+                                       "inner_hits": {"name": "g",
+                                                      "size": 2}}})
+    scores = {r["doc_id"]: round(r["score"], 4) for r in
+              planner.score({"match": {"text": "hash"}}).collect()}
+    langs = {r["doc_id"]: r["lang"] for r in
+             planner.docs.select("doc_id", "lang").collect()}
+    by_grp = defaultdict(list)
+    for d, sc in scores.items():
+        by_grp[langs[d]].append((-sc, d))
+    page = {g for _, g in sorted((min(v), g) for g, v in by_grp.items())[:10]}
+    expect = ({("hit", sorted(by_grp[g])[0][1]) for g in page}
+              | {("inner", g, d, -negsc, i + 1) for g in page
+                 for i, (negsc, d) in enumerate(sorted(by_grp[g])[:2])})
+    got = ({("hit", r["doc_id"]) for r in res.hits.collect()}
+           | {("inner", r["lang"], r["doc_id"], r["score"], r["hit_rank"])
+              for r in res.inner_hits.collect()})
+    return [res.hits, res.inner_hits], got, expect
+
+
+def _case_field_collapse(spark, sf):
+    """``q_field_collapse``: best per (query, doc_id % 10), then top-5
+    per query."""
     from pyspark.sql import functions as F
+
     from dp_search_data_importer_spark.operators import bm25 as bm25_ops
     from dp_search_data_importer_spark.operators import postings as po
     from dp_search_data_importer_spark.plans.driver_queries_ext import (
         CLP_QUERIES,
+        q_field_collapse,
     )
     from dp_search_data_importer_spark.sources.tables import load_table
 
-    docs = load_table(spark, "/root/testdata/sf0.001", "documents")
+    df = q_field_collapse(spark, sf)
+    docs = load_table(spark, sf, "documents")
     tf = po.term_freqs_sql(docs, id_col="doc_id", text_col="text")
     qdf = local_df(spark, CLP_QUERIES, "query_id long, query_text string")
     scores = bm25_ops.bm25_scores(
@@ -330,12 +425,28 @@ def test_field_collapse_final_rank_is_two_phase(spark):
     per_q = defaultdict(list)
     for (qid, grp), (negs, did) in best.items():
         per_q[qid].append((negs, did, grp))
-    expect = set()
-    for qid, lst in per_q.items():
-        for negs, did, grp in sorted(lst)[:5]:
-            expect.add((qid, did, grp, -negs))
-    got = {(r["query_id"], r["doc_id"], r["grp"], r["score"]) for r in rows}
-    assert got == expect
+    expect = {(qid, did, grp, -negs) for qid, lst in per_q.items()
+              for negs, did, grp in sorted(lst)[:5]}
+    got = {(r["query_id"], r["doc_id"], r["grp"], r["score"])
+           for r in df.collect()}
+    return [df], got, expect
+
+
+@pytest.mark.parametrize("case", [
+    _case_field_collapse, _case_sort_topk, _case_facet_terms,
+    _case_top_hits_agg, _case_collapse,
+], ids=["q_field_collapse", "sort_topk", "facet_terms", "top_hits_agg",
+        "collapse"])
+def test_field_collapse_final_rank_is_two_phase(spark, case):
+    """Every per-key top-N must NOT push a whole group through one task:
+    each ranks through ``salted_topn`` — a salted pre-window bounds the
+    group window's input to n·32 rows. Assert each plan carries the
+    salted window and the final window, and that the result still equals
+    a brute-force reference."""
+    frames, got, expect = case(spark, "/root/testdata/sf0.001")
+    for df in frames:
+        _assert_salted_topn(_explain(df))
+    assert got and got == expect
 
 
 def test_lm_perplexity_broadcasts_small_lm(spark, sf_dir):

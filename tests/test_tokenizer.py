@@ -86,8 +86,8 @@ def test_tokenizer_no_rowwise_udf():
 
 def test_code_aware_arrow_equals_sql(spark, corpus):
     """Code-aware variants too: Arrow Counter path ≡ Catalyst
-    regexp_replace+explode path (this equality is what lets build_index
-    switch tokenizer= per deployment)."""
+    regexp_replace+explode path (the Catalyst twin is the oracle of the
+    Arrow tokenizer that build_index and upsert_docs run)."""
     from dp_search_data_importer_spark.functions.tokenize import code_term_freqs
     from dp_search_data_importer_spark.operators.ingest import (
         normalize_repo_files,
