@@ -112,7 +112,6 @@ def bm25_scores(
     dfs: DataFrame | None,
     stats: DataFrame | dict,
     cfg: EngineConfig | None = None,
-    min_match: int | None = None,
 ) -> DataFrame:
     """(query_id, doc_id, score) for every candidate doc.
 
@@ -127,16 +126,9 @@ def bm25_scores(
     whole tokenize pipeline ran twice; measured in plans/r06). ONLY for
     term-PRUNED tf frames: a corpus-wide window by term funnels a hot
     term into one partition — ``doc_freqs``' partially aggregated count
-    stays the general-path answer (guide §2.5).
-
-    ``min_match`` (ES ``match`` operator=and / minimum_should_match):
-    keep only docs matching ≥ that many DISTINCT query terms — the
-    matched-term count rides the SAME single hash aggregation as the
-    score (one extra count column, no second join/shuffle). Terms absent
-    from the corpus drop at the dfs join (or simply have no tf rows on
-    the window path), so an unseen term under operator=and
-    (min_match = n_terms) yields no hits, as in ES.
-    ``None``/≤1 keeps the plan byte-identical to the OR form.
+    stays the general-path answer (guide §2.5). Terms absent from the
+    corpus drop at the dfs join (or simply have no tf rows on the window
+    path).
     """
     cfg = cfg or EngineConfig()
     if dfs is None:
@@ -150,14 +142,9 @@ def bm25_scores(
         "term_score",
         bm25_term_score("tf", "dl", "df", "n_docs", "avgdl", cfg),
     )
-    if min_match is None or min_match <= 1:
-        return scored.groupBy("query_id", "doc_id").agg(
-            F.sum("term_score").alias("score")
-        )
-    return (scored.groupBy("query_id", "doc_id")
-            .agg(F.sum("term_score").alias("score"),
-                 F.count(F.lit(1)).alias("_nm"))
-            .filter(F.col("_nm") >= int(min_match)).drop("_nm"))
+    return scored.groupBy("query_id", "doc_id").agg(
+        F.sum("term_score").alias("score")
+    )
 
 
 # Scores (and every other ranked float) round to ROUND_DIGITS before they
@@ -637,7 +624,8 @@ def bool_clauses(specs: list[BoolSpec],
 def bool_scores_sql(cfg: EngineConfig, tf: str, dfs: str | None,
                     terms: str, clauses: str, n_docs: str, avgdl: str,
                     stats: str | None = None,
-                    df_map: str | None = None) -> str:
+                    df_map: str | None = None,
+                    query_id: str = "c.query_id") -> str:
     """SQL text of :func:`bool_topk`'s kept (query_id, doc_id, score) rows
     before ranking, over the relations ``tf`` (doc_id, term, tf, dl) and
     ``dfs`` (term, df). With no ``dfs``, df is looked up in ``df_map``, a
@@ -645,7 +633,10 @@ def bool_scores_sql(cfg: EngineConfig, tf: str, dfs: str | None,
     stored path), or else counted in-plan by a window over the
     term-pruned tf. ``terms`` is the clause term list (empty: no rows),
     ``clauses`` a ``CLAUSES_DDL`` JSON value; ``stats`` an optional 1-row
-    relation that ``n_docs``/``avgdl`` read as ``s``."""
+    relation that ``n_docs``/``avgdl`` read as ``s``. ``query_id`` is the
+    row's query id: the clause's by default, or one query's id as a
+    literal, so that a single-query ranking needs no query-keyed
+    exchange."""
     if df_map is not None:
         # ``terms`` holds only terms the dictionary has: an unseen
         # clause term has no postings, the same drop the dfs join makes
@@ -676,8 +667,8 @@ def bool_scores_sql(cfg: EngineConfig, tf: str, dfs: str | None,
         "count(CASE WHEN role = 'should' THEN clause_id END) AS ns, "
         "max(CAST(role = 'not' AS INT)) AS has_not, "
         "max(n_must) AS n_must, max(msm) AS msm FROM ("
-        f"SELECT {hint}t.doc_id, c.query_id, c.clause_id, c.role, "
-        "c.n_must, c.msm, CASE WHEN c.role <> 'not' "
+        f"SELECT {hint}t.doc_id, {query_id} AS query_id, c.clause_id, "
+        "c.role, c.n_must, c.msm, CASE WHEN c.role <> 'not' "
         f"THEN c.boost * ({score}) ELSE 0.0D END AS term_score "
         f"FROM {src} LATERAL VIEW inline(element_at(from_json({clauses}, "
         f"'{CLAUSES_DDL}'), t.term)) c) GROUP BY query_id, doc_id) "

@@ -696,7 +696,7 @@ def q_completion_suggest(spark: SparkSession, sf_dir: str) -> DataFrame:
     """ES completion/term-suggester twin: per prefix, the dictionary
     terms completing it ranked by popularity (df desc, term asc), top 5 —
     the dataflow form of `plans/query.py::expand_terms` (whose stored
-    form pushes a StartsWith filter into the term_df parquet scan).
+    form reads the prefix's term range of term_df on the driver).
     Oracle: LIKE-prefix join + the same window."""
     from dp_search_data_importer_spark.operators.postings import (
         doc_freqs,
@@ -2839,9 +2839,9 @@ MATCH_MSM_BODY = {"query": {"match": {"text": {
 def q_match_msm_search(spark: SparkSession, sf_dir: str) -> DataFrame:
     """ES ``match`` with ``minimum_should_match``: docs matching ≥2 of
     the 3 query terms, OR-sum scored. The distinct-matched-term gate is
-    one count column on the SAME hash aggregation that sums the score —
-    no second join (``bm25_scores(min_match=...)``). Oracle counts
-    matched terms in the same grouped pass."""
+    a sum of per-row term-count flags in the planner's one scoring
+    statement — no second join (``EsSearchPlanner._score_terms``).
+    Oracle counts matched terms in the same grouped pass."""
     res = _dsl_planner(spark, sf_dir).search(MATCH_MSM_BODY)
     return res.hits.select("doc_id", "score")
 

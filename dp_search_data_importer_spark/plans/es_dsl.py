@@ -58,8 +58,11 @@ Documented divergences (each chosen for scale-sane Spark semantics):
 
 Scale shape: a request has a BOUNDED clause count, so the plan is a
 bounded composition of scans the planner memoizes per field (one tf/dfs/
-stats/positions build per field per request, shared across clauses).
-Compound scoring is union → ONE hash agg (map-side partials); filter
+stats/positions build per field per request, shared across clauses). A
+text clause over a literal term set scores in one statement that
+tokenizes each row once and takes df from one keyless aggregate
+(``EsSearchPlanner._score_terms``). Compound scoring is union → ONE
+hash agg (map-side partials); filter
 context applies as broadcast-or-shuffle semi-joins that never touch
 scores; per-key ranking reuses ``operators/bm25.salted_topn``. Aggregations
 run over the hit SET (doc_id frame), exactly the ES execution model. At
@@ -144,7 +147,14 @@ class EsSearchPlanner:
     they are lazy plans, so nothing executes until the caller acts, with
     one exception: the first BM25-scored search on a field runs one job
     that collects its (n_docs, avgdl) row (:meth:`stats_row`), which every
-    later scored plan on that field carries as literals."""
+    later scored plan on that field carries as literals.
+
+    Every text clause that reduces to a literal term set — ``match``
+    (operator and, minimum_should_match, fuzziness), ``match_bool_prefix``,
+    ``query_string`` and the prefix/wildcard/regexp/fuzzy leaves, and so
+    the bool/highlight/aggs requests built on them — scores through
+    :meth:`_score_terms`: one statement that reads each row's per-term
+    counts and one keyless df aggregate, never a (doc, term) table."""
 
     def __init__(self, spark: SparkSession, docs: DataFrame,
                  cfg: EngineConfig | None = None,
@@ -162,6 +172,7 @@ class EsSearchPlanner:
         self._stats: dict[str, DataFrame] = {}
         self._stats_row: dict[str, tuple[int, float]] = {}
         self._pos: dict[str, DataFrame] = {}
+        self._toks: dict[str, DataFrame] = {}
         self._qid = 0
 
     # ---------------------------------------------------------------- stats
@@ -231,41 +242,78 @@ class EsSearchPlanner:
     def _score_terms(self, field: str, terms: list[str],
                      boost: float = 1.0,
                      min_match: int | None = None) -> DataFrame:
-        """BM25 OR-score a literal term set against one field;
-        ``min_match`` gates on distinct matched terms (same single agg —
-        the ES match operator=and / minimum_should_match path). The tf
-        rows are term-pruned below their aggregation, df is a
-        ``groupBy("term")`` count over that pruned tf (partial count
-        before its exchange, no term-keyed window), and (n_docs, avgdl)
-        are literals from the memoized :meth:`stats_row`. The df count
-        reads the ``tf`` column (every row has tf ≥ 1), so column
-        pruning leaves the tf aggregate's exchange whole and the df
-        branch reuses it (``ReusedExchange``): the corpus is tokenized
-        once."""
-        from dp_search_data_importer_spark.operators.bm25 import bm25_scores
-        from dp_search_data_importer_spark.operators.postings import (
-            term_freqs_sql,
+        """BM25 OR-score a literal term set against one field, as one
+        parameterized statement over the docs (a frame argument) with the
+        terms as markers. Each row is tokenized once (``tokenize_expr``):
+        ``dl`` is its token count and ``tf<i>`` the count of query term i
+        in its token array, pruned to the query terms first; a row holding
+        none of them emits nothing. The candidate rows pass ONE exchange
+        that the scorer and the df aggregate both read (the second read
+        is a ``ReusedExchange``): df is a single keyless aggregate,
+        ``count_if(tf<i> > 0)`` per term, partial per task, bound into the
+        score as a scalar subquery — no token explode, no (doc, term)
+        aggregation, no term-keyed exchange, so a hot term has no key to
+        skew. (n_docs, avgdl) are literals from the memoized
+        :meth:`stats_row`. ``min_match`` (ES match operator=and /
+        minimum_should_match) keeps rows with ≥ that many distinct matched
+        terms; an unseen term has tf 0 on every row, so under
+        operator=and nothing matches, as in ES.
+
+        Both gates are one-row-or-none generators, not ``WHERE`` filters:
+        Catalyst pushes a filter through the projections into the scan,
+        re-tokenizing the text once per term, and a gate above the
+        exchange would push below it and split the exchange the df side
+        reads. ``dl`` rides in the exchange's key for the same reason:
+        column pruning would drop it from the df side's copy."""
+        from dp_search_data_importer_spark.functions.tokenize import (
+            tokenize_expr,
         )
+        from dp_search_data_importer_spark.operators.bm25 import (
+            bm25_term_sql,
+            sql_number,
+        )
+        from dp_search_data_importer_spark.plans.query import _Statement
         from dp_search_data_importer_spark.session import local_df
 
         if not terms:
             return local_df(self.spark, [], "doc_id long, score double")
         terms = sorted(set(terms))
-        qid = self._next_qid()
-        qt = local_df(self.spark, [(qid, t) for t in terms],
-                      "query_id long, term string")
-        tf = term_freqs_sql(self.docs, id_col=self.id_col, text_col=field,
-                            terms=terms)
-        dfs = tf.groupBy("term").agg(
-            F.count_if(F.col("tf") > 0).alias("df"))
         n_docs, avgdl = self.stats_row(field)
-        # an empty table's avgdl is null, and it has no tf rows to score
-        s = bm25_scores(tf, qt, dfs,
-                        {"n_docs": n_docs, "avgdl": avgdl or 0.0}, self.cfg,
-                        min_match=min_match).drop("query_id")
+        if field not in self._toks:
+            self._toks[field] = self.docs.select(
+                F.col(self.id_col).alias("doc_id"),
+                tokenize_expr(field).alias("toks"))
+        st = _Statement(self.spark)
+        st.frames["docs"] = self._toks[field]
+        marks = [st.bind("t", t) for t in terms]
+        tfs = [f"tf{i}" for i in range(len(terms))]
+        # an empty table's avgdl is null, and it has no rows to score
+        n, avg = sql_number(int(n_docs)), sql_number(float(avgdl or 0.0))
+        score = " + ".join(
+            f"IF({tf} > 0, "
+            f"{bm25_term_sql(self.cfg, tf, 'dl', 'd.' + tf, n, avg)}, 0.0D)"
+            for tf in tfs)
         if boost != 1.0:
-            s = s.withColumn("score", F.col("score") * F.lit(float(boost)))
-        return s
+            score = f"({score}) * {sql_number(float(boost))}"
+        text = (
+            f"WITH cand AS (SELECT doc_id, dl, "
+            + ", ".join(f"size(filter(q, x -> x = {m})) AS {tf}"
+                        for m, tf in zip(marks, tfs))
+            + f" FROM (SELECT doc_id, toks, filter(toks, x -> x IN "
+            f"({', '.join(marks)})) AS q FROM {{docs}}) LATERAL VIEW "
+            f"explode(IF(size(q) > 0, array(size(toks)), array())) AS dl "
+            f"DISTRIBUTE BY doc_id, dl), "
+            f"scored AS (SELECT doc_id, {score} AS score, "
+            + " + ".join(f"CAST({tf} > 0 AS INT)" for tf in tfs)
+            + " AS matched FROM (SELECT *, (SELECT named_struct("
+            + ", ".join(f"'{tf}', count_if({tf} > 0)" for tf in tfs)
+            + ") FROM cand) AS d FROM cand)) ")
+        if min_match is None or min_match <= 1:
+            return st.run(text + "SELECT doc_id, score FROM scored")
+        return st.run(
+            text + f"SELECT doc_id, s AS score FROM scored LATERAL VIEW "
+            f"explode(IF(matched >= {st.bind('need', int(min_match))}, "
+            f"array(score), array())) AS s")
 
     def _expand(self, field: str, pattern: str, mode: str,
                 max_edits: int = 1) -> list[str]:

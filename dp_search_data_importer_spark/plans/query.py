@@ -20,7 +20,8 @@ Each stored request compiles to ONE parameterized Spark SQL statement
 (:func:`exact_topk`, :func:`filtered_topk`, :func:`bool_topk_indexed`,
 the prefix/wildcard/regexp/fuzzy expansions and :func:`_match_hits`)
 write SQL text over the index's ``postings`` and ``docs`` readers
-(``term_df`` only where the dictionary is enumerated: the expansions),
+(``term_df`` only where the dictionary is scanned: the wildcard, regexp
+and fuzzy expansions; a prefix is one term range, read on the driver),
 which are registered as temp views once per index ``version`` under one
 view name per index path (a new version replaces the view set, so the
 catalog stays bounded across an ingest stream). No request value is
@@ -100,20 +101,38 @@ def load_term_df(spark: SparkSession, out_dir: str,
     return df
 
 
-def term_dfs(out_dir: str, terms: list[str]) -> dict[str, int]:
-    """{term: df} of the ``terms`` the stored dictionary holds, read on
-    the driver with pyarrow, after any interrupted commit has rolled
-    forward (``recover_for_read``). The term filter pushes into the read:
-    ``term_df`` is written term-ordered with bounded row groups
+def _term_df_groups(out_dir: str, overlaps):
+    """The stored dictionary's (term, df) row groups whose ``term``
+    min/max range passes ``overlaps(min, max)``, read on the driver with
+    pyarrow. ``term_df`` is written term-ordered with bounded row groups
     (``build_index.write_term_df``), so each file and row group holds a
-    disjoint term range, and only the row groups whose min/max range
-    holds a query term are read — at most one per distinct term, however
-    large the dictionary."""
-    import bisect
+    disjoint term range and a term lookup or a prefix reads only the row
+    groups its range meets, however large the dictionary. Callers roll an
+    interrupted commit forward first (``recover_for_read``)."""
     import glob
 
-    import pyarrow.compute as pc
     import pyarrow.parquet as pq
+
+    for path in sorted(glob.glob(os.path.join(out_dir, "term_df",
+                                              "*.parquet"))):
+        f = pq.ParquetFile(path)
+        col = f.schema_arrow.get_field_index("term")
+        for rg in range(f.metadata.num_row_groups):
+            st = f.metadata.row_group(rg).column(col).statistics
+            # str order is code point order, which is the UTF-8 byte
+            # order parquet's min/max statistics use
+            if (st is None or not st.has_min_max
+                    or overlaps(st.min, st.max)):
+                yield f.read_row_group(rg, columns=["term", "df"])
+
+
+def term_dfs(out_dir: str, terms: list[str]) -> dict[str, int]:
+    """{term: df} of the ``terms`` the stored dictionary holds, read on
+    the driver (:func:`_term_df_groups`) after any interrupted commit has
+    rolled forward: at most one row group per distinct term."""
+    import bisect
+
+    import pyarrow.compute as pc
 
     from dp_search_data_importer_spark.plans.update_index import (
         recover_for_read,
@@ -124,24 +143,31 @@ def term_dfs(out_dir: str, terms: list[str]) -> dict[str, int]:
     found: dict[str, int] = {}
     if not want:
         return found
-    for path in sorted(glob.glob(os.path.join(out_dir, "term_df",
-                                              "*.parquet"))):
-        f = pq.ParquetFile(path)
-        col = f.schema_arrow.get_field_index("term")
-        for rg in range(f.metadata.num_row_groups):
-            st = f.metadata.row_group(rg).column(col).statistics
-            lo, hi = ((st.min, st.max) if st is not None and st.has_min_max
-                      else (want[0], want[-1]))
-            # str order is code point order, which is the UTF-8 byte
-            # order parquet's min/max statistics use
-            keys = want[bisect.bisect_left(want, lo):
-                        bisect.bisect_right(want, hi)]
-            if keys:
-                t = f.read_row_group(rg, columns=["term", "df"]).filter(
-                    pc.field("term").isin(keys))
-                found.update(zip(t["term"].to_pylist(),
-                                 t["df"].to_pylist()))
+    for t in _term_df_groups(out_dir, lambda lo, hi: bisect.bisect_left(
+            want, lo) < bisect.bisect_right(want, hi)):
+        t = t.filter(pc.field("term").isin(want))
+        found.update(zip(t["term"].to_pylist(), t["df"].to_pylist()))
     return found
+
+
+def _prefix_expansions(out_dir: str, prefix: str, n: int) -> list[str]:
+    """The top ``n`` dictionary terms starting with ``prefix`` by (df
+    desc, term asc), read on the driver (:func:`_term_df_groups`): a
+    prefix is the one contiguous term range [prefix, prefix + U+10FFFF),
+    so only the row groups it meets are read, and the running top ``n``
+    is all that is kept between them."""
+    import heapq
+
+    import pyarrow.compute as pc
+
+    end = prefix + "\U0010ffff"
+    best: list[tuple[int, str]] = []
+    for t in _term_df_groups(out_dir,
+                             lambda lo, hi: hi >= prefix and lo < end):
+        t = t.filter(pc.starts_with(t["term"], prefix))
+        best = heapq.nsmallest(n, [*best, *zip(
+            [-d for d in t["df"].to_pylist()], t["term"].to_pylist())])
+    return [term for _, term in best]
 
 
 def load_docs(spark: SparkSession, out_dir: str) -> DataFrame:
@@ -349,21 +375,23 @@ def expand_terms(spark: SparkSession, out_dir: str, pattern: str,
                  mode: str = "prefix", max_edits: int = 1,
                  max_expansions: int = 50) -> list[str]:
     """Expand a query token against the term dictionary — the ES
-    prefix/fuzzy query families. ``prefix`` pushes a StartsWith filter into
-    the term_df parquet scan (PushedFilters — the dictionary is never fully
-    materialized); ``fuzzy`` filters by Catalyst ``levenshtein`` with an
-    early length-window prune. Expansion is capped like ES's
-    ``max_expansions`` (highest-df terms win: most selective rankings need
-    the common completions first)."""
+    prefix/fuzzy/wildcard/regexp query families. Expansion is capped like
+    ES's ``max_expansions`` (highest-df terms win, then term order: most
+    selective rankings need the common completions first). ``prefix`` is
+    one term range of the term-ordered dictionary, read on the driver
+    (:func:`_prefix_expansions`), so it runs no Spark job; the other
+    modes scan the dictionary in one statement — ``fuzzy`` by Catalyst
+    ``levenshtein`` with an early length-window prune, ``wildcard`` and
+    ``regexp`` by Java regex ``RLIKE``."""
     from dp_search_data_importer_spark.plans.update_index import (
         recover_for_read,
     )
 
     recover_for_read(out_dir)  # never expand against a mid-commit term_df
-    st = _Statement(spark)
     if mode == "prefix":
-        pred = f"startswith(term, {st.bind('p', pattern)})"
-    elif mode == "fuzzy":
+        return _prefix_expansions(out_dir, pattern, int(max_expansions))
+    st = _Statement(spark)
+    if mode == "fuzzy":
         pred = (f"length(term) >= {st.bind('lo', len(pattern) - max_edits)}"
                 f" AND length(term) <= {st.bind('hi', len(pattern) + max_edits)}"
                 f" AND levenshtein(term, {st.bind('p', pattern)})"
@@ -513,11 +541,16 @@ def bool_topk_indexed(spark: SparkSession, out_dir: str, specs,
     # a should-only spec under a filter defaults to msm=0 (ES 7.10), not 1
     clauses = bool_clauses(specs, has_filter=doc_filter is not None)
     dfs = term_dfs(out_dir, terms)
+    # one query's id binds as a literal, as a match's does
+    # (_query_id_sql): its ranking then needs no query-keyed exchange
+    qids = sorted({s.query_id for s in specs})
+    qid = (f"CAST({st.bind('q', qids[0])} AS BIGINT)" if len(qids) == 1
+           else "c.query_id")
     scores = bool_scores_sql(
         cfg, tf, None, st.terms(sorted(dfs)),
         st.bind("clauses", json.dumps(clauses)),
         sql_number(int(stats["n_docs"])), sql_number(float(stats["avgdl"])),
-        df_map=st.bind("dfs", json.dumps(dfs)))
+        df_map=st.bind("dfs", json.dumps(dfs)), query_id=qid)
     return st.run(topk_sql(scores, st.bind("k", int(k or cfg.k))))
 
 

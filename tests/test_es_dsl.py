@@ -1805,6 +1805,94 @@ def test_match_operator_and_msm(spark, planner):
             "query": q, "operator": "xor"}}}, "size": 1})
 
 
+def _levenshtein(a: str, b: str) -> int:
+    row = list(range(len(b) + 1))
+    for i, ca in enumerate(a, 1):
+        prev, row[0] = row[0], i
+        for j, cb in enumerate(b, 1):
+            prev, row[j] = row[j], min(row[j] + 1, row[j - 1] + 1,
+                                       prev + (ca != cb))
+    return row[-1]
+
+
+def test_match_scores_equal_bruteforce_bm25(spark):
+    """The scan-class term scorer against a brute-force Python BM25 over
+    a small table in which one term is appended to every doc (df =
+    n_docs): plain OR, boost, operator=and (with an unseen term: no
+    hits), minimum_should_match and fuzziness each score every hit, and
+    only the hits, as the formula says."""
+    import math
+    import random
+
+    from dp_search_data_importer_spark.config import EngineConfig
+    from dp_search_data_importer_spark.functions.tokenize import (
+        _simple_tokens_py,
+    )
+
+    rng = random.Random(13)
+    words = ["hash", "join", "merge", "sort", "scan", "window", "shard",
+             "token", "stream", "block", "hashes", "jion", "merges"]
+    rows = [(i, " ".join(rng.choice(words) for _ in range(rng.randint(
+        3, 30))) + " everydoc", "py") for i in range(1, 61)]
+    docs = spark.createDataFrame(rows, "doc_id long, text string, "
+                                       "lang string")
+    cfg = EngineConfig()
+    planner = EsSearchPlanner(spark, docs, cfg)
+    toks = {d: _simple_tokens_py(t) for d, t, _ in rows}
+    n = len(toks)
+    avgdl = sum(len(t) for t in toks.values()) / n
+    df = {}
+    for ts in toks.values():
+        for t in set(ts):
+            df[t] = df.get(t, 0) + 1
+    assert df["everydoc"] == n
+
+    def bm25(terms, need=1, boost=1.0):
+        out = []
+        for d, ts in toks.items():
+            hit = [t for t in set(terms) if t in ts]
+            if hit and len(hit) >= need:
+                s = sum(math.log(1 + (n - df[t] + 0.5) / (df[t] + 0.5))
+                        * ts.count(t) * (cfg.k1 + 1)
+                        / (ts.count(t) + cfg.k1 * (1 - cfg.b + cfg.b
+                                                   * len(ts) / avgdl))
+                        for t in hit)
+                out.append((d, round(s * boost, 4)))
+        return sorted(out, key=lambda t: (-t[1], t[0]))
+
+    def fuzzy(tok, edits):
+        near = sorted((-c, t) for t, c in df.items()
+                      if _levenshtein(t, tok) <= edits)
+        return [t for _, t in near[:planner.max_expansions]]
+
+    def search(spec):
+        return _ranked(planner.search({"query": {"match": {"text": spec}},
+                                       "size": 1000}).hits)
+
+    assert search("everydoc") == bm25(["everydoc"])
+    assert len(search("everydoc")) == n
+    assert search("hash everydoc zzznope") == bm25(
+        ["hash", "everydoc", "zzznope"])
+    assert search({"query": "join everydoc", "boost": 2.5}) == bm25(
+        ["join", "everydoc"], boost=2.5)
+    assert search({"query": "hash join everydoc",
+                   "operator": "and"}) == bm25(
+        ["hash", "join", "everydoc"], need=3)
+    assert search({"query": "hash everydoc zzznope",
+                   "operator": "and"}) == []
+    got = search({"query": "hash join merge everydoc",
+                  "minimum_should_match": 3})
+    assert got == bm25(["hash", "join", "merge", "everydoc"], need=3)
+    assert 0 < len(got) < n
+    assert search({"query": "hash joim", "fuzziness": 1}) == bm25(
+        fuzzy("hash", 1) + fuzzy("joim", 1))
+    assert set(fuzzy("hash", 1)) == {"hash"} and \
+        set(fuzzy("joim", 1)) == {"join"}
+    assert search({"query": "merge", "fuzziness": 1}) == bm25(
+        fuzzy("merge", 1))
+    assert fuzzy("merge", 1) == ["merge", "merges"]
+
+
 def test_match_bool_prefix(spark, planner):
     """match_bool_prefix ≡ OR-match over (leading tokens ∪ prefix
     expansion of the last token) — the search-as-you-type shape."""

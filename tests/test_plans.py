@@ -156,6 +156,32 @@ def test_stored_read_path_runs_no_python(spark, idx, pos_idx, kind,
         assert pushed.search(_explain(df)), (kind, _explain(df))
 
 
+@pytest.mark.parametrize("kind", ["match_and", "bool", "prefix"])
+def test_stored_classes_run_two_jobs(spark, idx, kind):
+    """A stored match with operator and, a single-query bool and a prefix
+    each run at most two Spark jobs, the postings scan and the ranking:
+    the one query's id is a literal, so no query-keyed exchange and
+    window add a stage, and the prefix expands on the driver
+    (``query.expand_terms``), so no job scans the dictionary."""
+    import uuid
+
+    from dp_search_data_importer_spark.plans.es_dsl import search_indexed
+
+    sc = spark.sparkContext
+    group = f"{kind}-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, "read-path job budget")
+    try:
+        res = search_indexed(spark, idx, _STORED_BODIES[kind], CFG)
+        assert res.hits.collect()
+    finally:
+        sc.setJobGroup(None, None)
+    jobs = sc.statusTracker().getJobIdsForGroup(group)
+    assert len(jobs) <= 2, (kind, len(jobs))
+    plan = _explain(res.hits)
+    assert "hashpartitioning(query_id" not in plan, plan
+    assert "term_df" not in plan
+
+
 def test_resolution_reads_pruned_docs(spark, idx):
     queries = local_df(spark, [(1, "import")],
                        "query_id long, query_text string")
@@ -562,41 +588,55 @@ def test_stored_construct_py4j_budget(spark, idx, kind, monkeypatch):
     res.hits.collect()
 
 
-def test_dsl_match_scores_term_pruned_tf(spark, sf_dir):
-    """The dataflow planner's term scorer aggregates only the query
-    terms' tf rows (the term filter sits below the tf aggregation), takes
-    df from a two-phase ``groupBy("term")`` count over that pruned tf (no
-    term-keyed window), and reads (n_docs, avgdl) as literals — no
-    cross join against a stats frame."""
-    import re
+def _final_trees(plan: str) -> tuple[str, str]:
+    """(final plan tree of the query, final plan trees of its
+    subqueries) of a formatted AQE explain, and the node details."""
+    main, _, subs = plan.partition("===== Subqueries =====")
 
+    def finals(section: str) -> str:
+        return "\n".join(part.split("== Initial Plan ==")[0]
+                         for part in section.split("== Final Plan ==")[1:])
+
+    return finals(main), finals(subs)
+
+
+def test_dsl_match_scores_term_pruned_tf(spark, sf_dir):
+    """The dataflow planner's term scorer reads and tokenizes ``text``
+    once per row: one scan and one tokenize feed one exchange of
+    candidate rows, which the keyless df aggregate (a scalar subquery)
+    reuses (``ReusedExchange``). No term-keyed exchange, no window, no
+    cross join, and no driver-built table is broadcast; (n_docs, avgdl)
+    are literals."""
     from dp_search_data_importer_spark.plans.es_dsl import EsSearchPlanner
 
     planner = EsSearchPlanner(spark, spark.read.parquet(
         f"{sf_dir}/documents.parquet"), CFG)
     hits = planner.search({"query": {"match": {"text": "hash join"}}}).hits
     assert hits.collect()
-    plan = hits._jdf.queryExecution().executedPlan().toString()
+    plan = _explain(hits)
+    assert "hashpartitioning(term" not in plan
     assert "Window" not in plan
     assert "BroadcastNestedLoopJoin" not in plan
     assert "CartesianProduct" not in plan
-    lines = plan.splitlines()
-    tf_partial = [i for i, ln in enumerate(lines) if re.search(
-        r"HashAggregate\(keys=\[doc_id#\d+L, dl#\d+L, term#\d+\], "
-        r"functions=\[partial_count\(1\)\]", ln)]
-    term_filter = [i for i, ln in enumerate(lines)
-                   if re.search(r"Filter term#\d+ IN \(hash,join\)", ln)]
-    assert tf_partial and term_filter
-    assert term_filter[0] > tf_partial[0]
-    assert re.search(r"HashAggregate\(keys=\[term#\d+\], "
-                     r"functions=\[partial_count\(", plan)
-    assert re.search(r"Exchange hashpartitioning\(term#\d+, ", plan)
-    # the df count reuses the tf aggregate's exchange: ``text`` is
-    # scanned and tokenized once
-    final = plan.split("== Initial Plan ==")[0]
-    scans = [ln for ln in final.splitlines() if "FileScan parquet" in ln]
-    assert len(scans) == 1 and "text#" in scans[0], scans
-    assert "ReusedExchange" in final
+    assert not _broadcasts_local_table(plan)
+    main, subs = _final_trees(plan)
+    assert main.count("Scan parquet") == 1, main
+    assert "Scan parquet" not in subs and "ReusedExchange" in subs, subs
+    details = dict(re.findall(r"^\((\d+)\) (.*?)(?=^\(\d+\) |\Z)",
+                              plan, re.S | re.M))
+    executed = set(re.findall(r"\((\d+)\)", main + subs))
+    # df: a keyless aggregate, partial before its one-row exchange
+    aggs = [details[n] for n in executed
+            if details.get(n, "").startswith("HashAggregate")]
+    assert aggs and all("Keys: []" in a for a in aggs), aggs
+    assert any("partial_count" in a for a in aggs), aggs
+    # exactly one executed node evaluates the tokenizer
+    tokenizing = [n for n in executed
+                  if "split(lower(text" in details.get(n, "")]
+    assert len(tokenizing) == 1, tokenizing
+    scan = next(d for n, d in details.items()
+                if n in executed and d.startswith("Scan parquet"))
+    assert "text:string" in scan
 
 
 def test_sorted_topk_cursor_is_a_literal(spark, idx):

@@ -100,6 +100,66 @@ def test_term_dfs_reads_one_row_group_per_term(spark, tmp_path, monkeypatch,
         top["score"], abs=1e-3)
 
 
+def test_prefix_expansion_reads_its_range_on_the_driver(spark, tmp_path,
+                                                        monkeypatch,
+                                                        small_row_groups):
+    """``expand_terms(mode="prefix")`` equals the dictionary statement
+    (startswith, df desc, term asc, limit) across several files and row
+    groups, on a range no term falls in, and where df ties straddle the
+    ``max_expansions`` cut; it reads only the row groups its range meets
+    and runs no Spark job."""
+    import uuid
+
+    from pyspark.sql import functions as F
+
+    d = str(tmp_path / "idx")
+    bi.build_index(spark, synthetic_repo_files(spark, 200, seed=1), d, CFG,
+                   resume=False)
+    ranges = _row_group_ranges(d)
+    assert len(ranges) > 1
+
+    def statement(p, n):
+        return [r["term"] for r in q.load_term_df(spark, d)
+                .filter(F.col("term").startswith(p))
+                .orderBy(F.col("df").desc(), F.col("term").asc())
+                .limit(n).collect()]
+
+    vocab = sorted(_load(spark, d, None).items())
+    firsts = sorted({t[:1] for t, _ in vocab})
+    cases = [("", 50), ("", 7), ("zzzz-absent", 5), ("0000", 5)]
+    cases += [(c, n) for c in firsts[:: max(1, len(firsts) // 4)]
+              for n in (1, 3, 50)]
+    ties = 0
+    for p, n in cases:
+        full = sorted(((-df, t) for t, df in vocab if t.startswith(p)))
+        ties += 0 < n < len(full) and full[n - 1][0] == full[n][0]
+        assert q.expand_terms(spark, d, p, "prefix",
+                              max_expansions=n) == statement(p, n), (p, n)
+    assert ties, "no case puts equal df on both sides of the cut"
+
+    reads = []
+    real = pq.ParquetFile.read_row_group
+
+    def counted(self, i, *a, **kw):
+        reads.append(i)
+        return real(self, i, *a, **kw)
+
+    sc = spark.sparkContext
+    group = f"prefix-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, "driver-side prefix expansion")
+    monkeypatch.setattr(pq.ParquetFile, "read_row_group", counted)
+    try:
+        assert q.expand_terms(spark, d, "zzzz-absent", "prefix") == []
+        assert reads == []
+        narrow = ranges[len(ranges) // 2][0]
+        assert q.expand_terms(spark, d, narrow, "prefix")
+        assert 0 < len(reads) < len(ranges), (reads, len(ranges))
+    finally:
+        monkeypatch.undo()
+        sc.setJobGroup(None, None)
+    assert not sc.statusTracker().getJobIdsForGroup(group)
+
+
 def _rows(n, tag=""):
     words = ["import", "def", "merge", "hash", "join", "scan", "sort",
              "window", "agg", "stream", "token", "shard", "block"]

@@ -2,9 +2,11 @@
 regression check for tests/test_plans.py).
 
 Each stored ``_search`` class (match, match with operator and, bool,
-prefix, match + terms agg) is printed as the compiled Spark SQL
-statement(s) its plan was built from — the text and its parameter marker
-names, never their values — next to the physical plan.
+prefix, match + terms agg), and the scan-class ``match`` of
+``EsSearchPlanner`` (plain, operator and, minimum_should_match), is
+printed as the compiled Spark SQL statement(s) its plan was built from —
+the text and its parameter marker names, never their values — next to
+the physical plan.
 
 What to look for (SURVEY.md §4):
 - postings scan: ``PushedFilters: [In(term, …)]`` — term pruning reaches
@@ -16,6 +18,9 @@ What to look for (SURVEY.md §4):
   it, with column pruning (no content column anywhere at query time).
 - tf/df aggs: partial_ hash aggregates before the exchange (map-side
   combine).
+- scan-class match: one scan and one tokenize feed one exchange of
+  candidate rows; the keyless df aggregate reads it again as a
+  ``ReusedExchange`` (no term-keyed exchange, no window).
 
 Usage: python tools/explain_plans.py [index_dir]
 """
@@ -49,11 +54,18 @@ STORED_BODIES = {
 }
 
 
-def compiled_statements(spark, out: str, body: dict, cfg):
-    """Run ``search_indexed`` on ``body`` while recording every
-    ``spark.sql`` statement it compiles: ([(text, parameter names)],
-    the SearchResult)."""
-    from dp_search_data_importer_spark.plans.es_dsl import search_indexed
+SCAN_BODIES = {
+    "match": {"query": {"match": {"content": "import def"}}},
+    "match_and": {"query": {"match": {"content": {
+        "query": "import def", "operator": "and"}}}},
+    "match_msm": {"query": {"match": {"content": {
+        "query": "import def class", "minimum_should_match": 2}}}},
+}
+
+
+def compiled_statements(spark, search):
+    """Run ``search()`` while recording every ``spark.sql`` statement it
+    compiles: ([(text, parameter names)], the SearchResult)."""
     from dp_search_data_importer_spark.session import _PLAN_CACHE
 
     _PLAN_CACHE.clear()  # a cached plan would compile nothing
@@ -66,15 +78,31 @@ def compiled_statements(spark, out: str, body: dict, cfg):
 
     spark.sql = recording
     try:
-        res = search_indexed(spark, out, body, cfg)
+        res = search()
     finally:
         del spark.sql
     return seen, res
 
 
+def print_statements(label: str, statements, res) -> None:
+    print("=" * 70)
+    print(f"== {label}: {len(statements)} compiled statement(s)")
+    for text, names in statements:
+        print(f"-- parameters: {', '.join(names) or '(none)'}")
+        print(text)
+    print("-- physical plan of the hits")
+    print(explain_str(res.hits))
+
+
 def main() -> None:
+    from pyspark.sql import functions as F
+
     from dp_search_data_importer_spark.config import EngineConfig
     from dp_search_data_importer_spark.plans import query as qp
+    from dp_search_data_importer_spark.plans.es_dsl import (
+        EsSearchPlanner,
+        search_indexed,
+    )
     from dp_search_data_importer_spark.plans.build_index import build_index
     from dp_search_data_importer_spark.session import get_spark, local_df
     from dp_search_data_importer_spark.sources.repo_files import synthetic_repo_files
@@ -92,15 +120,19 @@ def main() -> None:
                        "query_id long, query_text string")
 
     for kind, body in STORED_BODIES.items():
-        statements, res = compiled_statements(spark, out, body, cfg)
-        print("=" * 70)
-        print(f"== stored _search class {kind!r}: {len(statements)} "
-              "compiled statement(s)")
-        for text, names in statements:
-            print(f"-- parameters: {', '.join(names) or '(none)'}")
-            print(text)
-        print("-- physical plan of the hits")
-        print(explain_str(res.hits))
+        print_statements(f"stored _search class {kind!r}",
+                         *compiled_statements(spark, lambda: search_indexed(
+                             spark, out, body, cfg)))
+
+    planner = EsSearchPlanner(
+        spark, synthetic_repo_files(spark, 500, seed=42).withColumn(
+            "doc_id", F.xxhash64("repo", "path", "commit")),
+        cfg, text_fields=("content",))
+    planner.stats_row("content")  # the one memoized stats job
+    for kind, body in SCAN_BODIES.items():
+        print_statements(f"scan-class (EsSearchPlanner) {kind!r}",
+                         *compiled_statements(spark, lambda: planner.search(
+                             body)))
 
     print("=" * 70)
     print("== exact BM25 over the index")
@@ -138,8 +170,6 @@ def main() -> None:
     from dp_search_data_importer_spark.operators.spans import (
         span_matches_batch,
     )
-
-    from pyspark.sql import functions as F
 
     docs = synthetic_repo_files(spark, 500, seed=42).withColumn(
         "doc_id", F.xxhash64("repo", "path", "commit"))
