@@ -590,7 +590,7 @@ def test_stored_construct_py4j_budget(spark, idx, kind, monkeypatch):
 
 def _final_trees(plan: str) -> tuple[str, str]:
     """(final plan tree of the query, final plan trees of its
-    subqueries) of a formatted AQE explain, and the node details."""
+    subqueries) of a formatted AQE explain."""
     main, _, subs = plan.partition("===== Subqueries =====")
 
     def finals(section: str) -> str:

@@ -130,9 +130,11 @@ def main() -> None:
         cfg, text_fields=("content",))
     planner.stats_row("content")  # the one memoized stats job
     for kind, body in SCAN_BODIES.items():
+        statements, res = compiled_statements(
+            spark, lambda: planner.search(body))
+        res.hits.collect()  # the executed plan shows the reused exchange
         print_statements(f"scan-class (EsSearchPlanner) {kind!r}",
-                         *compiled_statements(spark, lambda: planner.search(
-                             body)))
+                         statements, res)
 
     print("=" * 70)
     print("== exact BM25 over the index")
